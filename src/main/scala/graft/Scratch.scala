@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Scratch-directory root for query-local fixtures, sinks, and
   * checkpoints (the `target/graft_io` tree). Derived from the
   * `SPARK_GRAFT_SCRATCH` env var (the Bench `SPARK_GRAFT_BENCH_OUT`
@@ -20,11 +24,54 @@ object Scratch {
   /** `root`/`name` as a String path (convenience for query bodies). */
   def dir(name: String): String = s"$root/$name"
 
+  /** The one freshness policy for persisted fixture-derived state (a
+    * store whose input is the fixture `table` under `dir`): runs
+    * `build` unless the marker `root`/`name`_marker holds this
+    * fixture's stamp — the source dir plus [[fingerprint]] of the
+    * table, so a fixture regenerated in place (same path, new bytes)
+    * forces a rebuild instead of a stale-state red row — and `present`
+    * holds (catalog-table stores pass their `tableExists` check: a
+    * session without the catalog entry re-registers). The marker is
+    * deleted BEFORE `build` starts: a rebuild that fails after an
+    * overwrite has already removed the old output must not leave the
+    * previous fixture's marker vouching for a torn store. A marker torn
+    * by a crash mid-write never equals a stamp, so a plain write is
+    * enough. Reuse costs one fingerprint walk and one marker read. */
+  def stamped(name: String, dir: String, table: String,
+              present: Boolean = true)(build: => Unit): Unit = {
+    val marker = Paths.get(s"$root/${name}_marker")
+    val stamp = dir + "\n" + fingerprint(s"$dir/$table.parquet")
+    val fresh = present && Files.exists(marker) &&
+      new String(Files.readAllBytes(marker), "UTF-8") == stamp
+    if (!fresh) {
+      Files.deleteIfExists(marker)
+      build
+      Files.createDirectories(marker.getParent)
+      Files.write(marker, stamp.getBytes("UTF-8"))
+    }
+  }
+
+  /** [[stamped]] parquet materialization at `root`/`name`: build `mk`
+    * once per fixture generation of `table`, read it back from parquet.
+    * Consumers share the dominating build cost (typically a similarity
+    * join) instead of re-running it per declared query. */
+  def stampedStore(s: SparkSession, dir: String, name: String,
+                   table: String)(mk: => DataFrame): DataFrame = {
+    val out = s"$root/$name"
+    stamped(name, dir, table)(mk.write.mode("overwrite").parquet(out))
+    // The session's FileStatusCache may hold a listing of the store
+    // path from BEFORE a rewrite (its own, or a sibling process's in a
+    // dev loop) — a stale listing fails the scan with FileNotFound on
+    // the overwritten part files. Drop any cached listing before the
+    // read; O(1) driver metadata, never data work.
+    s.catalog.refreshByPath(out)
+    s.read.parquet(out)
+  }
+
   /** Cheap content fingerprint of a local file tree: every regular
     * file's (relative name, size, mtime) PLUS the first, middle and
     * last 64 bytes of its content, and the overall file count, folded
-    * into one string. Used by the idempotent-fixture markers (q75's
-    * signature store, q95's blob store, q106's ANN index) so that
+    * into one string. Used by [[stamped]]'s fixture markers so that
     * REGENERATING an input table in place — same path, new bytes —
     * invalidates the persisted derived state instead of silently
     * reusing it (a stale store would still fail the oracle, but as a
@@ -39,13 +86,12 @@ object Scratch {
     * file — the same class as a checkpoint-directory existence
     * probe. */
   def fingerprint(path: String): String = {
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.exists(p)) "absent"
+    val p = Paths.get(path)
+    if (!Files.exists(p)) "absent"
     else {
-      val s = java.nio.file.Files.walk(p)
+      val s = Files.walk(p)
       try {
-        val it = s.filter(java.nio.file.Files.isRegularFile(_))
-          .sorted().iterator()
+        val it = s.filter(Files.isRegularFile(_)).sorted().iterator()
         var h = 1125899906842597L // large prime; stable across JVMs
         var nFiles = 0L
         def fold(bytes: Array[Byte], n: Int): Unit = {
@@ -55,11 +101,11 @@ object Scratch {
         while (it.hasNext) {
           val f = it.next()
           nFiles += 1
-          val size = java.nio.file.Files.size(f)
+          val size = Files.size(f)
           val line = s"${p.relativize(f)}:$size:" +
-            s"${java.nio.file.Files.getLastModifiedTime(f).toMillis}:"
+            s"${Files.getLastModifiedTime(f).toMillis}:"
           for (c <- line) h = 31 * h + c
-          val ch = java.nio.file.Files.newByteChannel(f)
+          val ch = Files.newByteChannel(f)
           try {
             val buf = java.nio.ByteBuffer.allocate(64)
             val nHead = ch.read(buf)

@@ -246,17 +246,11 @@ object SparkEntry {
     // duplicated, or corrupted blob fails the row.
     "q95_binary_ingest" -> ((s, dir) => {
       val out = Scratch.dir("bin_docs")
-      // Idempotent fixture prep: the blob store is the query's INPUT
-      // (like /root/testdata), so it is written once per source dir and
-      // reused — a marker records which sfDir produced it, and a stale
-      // or missing marker forces a full rewrite. Repeat passes (bench
-      // warm/timed) therefore measure the binaryFile READ, not 5000
-      // file creations.
-      val marker = java.nio.file.Paths.get(s"$out/_marker")
-      val stamp = dir + "\n" + Scratch.fingerprint(s"$dir/documents.parquet")
-      val fresh = java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == stamp
-      if (!fresh) {
+      // Idempotent fixture prep (Scratch.stamped): the blob store is
+      // the query's INPUT, so it is written once per fixture and
+      // reused. Repeat passes (bench warm/timed) therefore measure the
+      // binaryFile READ, not 5000 file creations.
+      Scratch.stamped("bin_docs", dir, "documents") {
         val outPath = new org.apache.hadoop.fs.Path(out)
         outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
           .delete(outPath, true)
@@ -270,7 +264,6 @@ object SparkEntry {
                 r.getString(1).getBytes("UTF-8"))
             }
           }
-        java.nio.file.Files.write(marker, stamp.getBytes("UTF-8"))
       }
       // 500 blobs at any SF: the blob COUNT is a fixture bound (the
       // per-file open cost is the small-files problem q63 addresses,
@@ -1081,10 +1074,20 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    textQueries ++ rel.Queries.queries ++ llm.Queries.queries
+    disjointUnion(textQueries, rel.Queries.queries, llm.Queries.queries)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    textOracles ++ rel.Queries.oracles ++ llm.Queries.oracles
+    disjointUnion(textOracles, rel.Queries.oracles, llm.Queries.oracles)
+
+  /** Merges the per-family registries, failing on a key defined twice —
+    * `++` would silently keep the later family's entry. */
+  private[graft] def disjointUnion[V](maps: Map[String, V]*): Map[String, V] =
+    maps.reduce { (a, b) =>
+      val dup = a.keySet.intersect(b.keySet)
+      require(dup.isEmpty,
+        s"registry key defined twice: ${dup.toSeq.sorted.mkString(", ")}")
+      a ++ b
+    }
 }

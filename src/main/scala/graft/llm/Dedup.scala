@@ -1188,11 +1188,13 @@ object Dedup {
     // its CC fixpoint loop of small jobs — run them from driver
     // threads so one rung's jobs back-fill the others' tails. Result
     // order is pinned by the map-then-reduce over the threshold list
-    // (Future.sequence preserves it) + the closing orderBy.
-    import scala.concurrent.{Await, Future}
+    // (Future.sequence preserves it) + the closing orderBy. `blocking`
+    // lets the global EC add threads while rungs wait on their jobs, so
+    // a long threshold list cannot starve it.
+    import scala.concurrent.{Await, Future, blocking}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val rungs = Future.sequence(thresholds.map { t => Future {
+    val rungs = Future.sequence(thresholds.map { t => Future { blocking {
       val p = pairs.where(col("jaccard") >= t)
       val stats = connectedComponents(p)
         .agg(count(lit(1)).as("n_dup_docs"),
@@ -1206,7 +1208,7 @@ object Dedup {
         femit((lit(total).cast("double") -
           (col("n_dup_docs") - col("n_components")).cast("double")) /
           lit(total).cast("double")).as("retained_share"))
-    }})
+    }}})
     Await.result(rungs, Duration.Inf).reduce(_ unionAll _)
       .orderBy("threshold")
   }

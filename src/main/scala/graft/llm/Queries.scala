@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.Scratch.stampedStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -109,27 +110,16 @@ object Queries {
       val docs = tbl(s, dir, "documents")
       val history = docs.where(col("doc_id") % 2 === 0)
       val fresh = docs.where(col("doc_id") % 2 === 1)
-      // Idempotent store build (the q95 marker pattern): batch N−1's
-      // store is PERSISTED state — rebuilding it per pass would both
-      // misstate the bench (the query demonstrates the probe, and a
-      // crawl pipeline never re-shingles history per increment) and
-      // contradict the operator's own contract. The marker records the
-      // source dir PLUS a metadata fingerprint of the documents table —
-      // a fixture regenerated in place (same path, new bytes) forces a
-      // store rebuild instead of a stale-state red row. A session
-      // without the catalog entry re-registers.
-      val marker = java.nio.file.Paths.get(
-        graft.Scratch.dir("minhash_store_marker"))
-      val stamp = dir + "\n" + graft.Scratch.fingerprint(s"$dir/documents.parquet")
-      val fresh_? = s.catalog.tableExists("minhash_store_bkt") &&
-        java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == stamp
-      if (!fresh_?) {
+      // Idempotent store build (Scratch.stamped): batch N−1's store is
+      // PERSISTED state — rebuilding it per pass would both misstate
+      // the bench (the query demonstrates the probe, and a crawl
+      // pipeline never re-shingles history per increment) and
+      // contradict the operator's own contract.
+      graft.Scratch.stamped("minhash_store", dir, "documents",
+          s.catalog.tableExists("minhash_store_bkt")) {
         graft.rel.Layout.writeBucketedBy(
           Dedup.minhashSignatureStore(history, "doc_id", "text"),
           "minhash_store_bkt", 8, "band", "bkey")
-        java.nio.file.Files.createDirectories(marker.getParent)
-        java.nio.file.Files.write(marker, stamp.getBytes("UTF-8"))
       }
       Dedup.incrementalNearDups(fresh, s.table("minhash_store_bkt"),
         history, "doc_id", "text", threshold = 0.1)
@@ -154,18 +144,11 @@ object Queries {
       val gen0 = docs.where(col("doc_id") % 3 === 0)
       val gen1 = docs.where(col("doc_id") % 3 === 1)
       val gen2 = docs.where(col("doc_id") % 3 === 2)
-      val marker = java.nio.file.Paths.get(
-        graft.Scratch.dir("minhash_store_g0_marker"))
-      val stamp = dir + "\n" + graft.Scratch.fingerprint(s"$dir/documents.parquet")
-      val fresh_? = s.catalog.tableExists("minhash_store_g0") &&
-        java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == stamp
-      if (!fresh_?) {
+      graft.Scratch.stamped("minhash_store_g0", dir, "documents",
+          s.catalog.tableExists("minhash_store_g0")) {
         graft.rel.Layout.writeBucketedBy(
           Dedup.minhashSignatureStore(gen0, "doc_id", "text"),
           "minhash_store_g0", 8, "band", "bkey")
-        java.nio.file.Files.createDirectories(marker.getParent)
-        java.nio.file.Files.write(marker, stamp.getBytes("UTF-8"))
       }
       graft.rel.Layout.writeBucketedBy(
         Dedup.mergeSignatureStore(s.table("minhash_store_g0"), gen1,
@@ -197,18 +180,11 @@ object Queries {
     // bucketed-write loss, or probe drift turns the row red.
     "q106_ivf_persisted" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
-      val marker = java.nio.file.Paths.get(
-        graft.Scratch.dir("ivf_index_marker"))
-      val stamp = dir + "\n" + graft.Scratch.fingerprint(s"$dir/embeddings.parquet")
-      val fresh_? = s.catalog.tableExists("ivf_assign") &&
-        s.catalog.tableExists("ivf_centroids") &&
-        java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == stamp
-      if (!fresh_?) {
+      graft.Scratch.stamped("ivf_index", dir, "embeddings",
+          s.catalog.tableExists("ivf_assign") &&
+            s.catalog.tableExists("ivf_centroids")) {
         Sim.ivfIndexWrite(emb, nlist = 16, "ivf_assign", "ivf_centroids",
           buckets = 8)
-        java.nio.file.Files.createDirectories(marker.getParent)
-        java.nio.file.Files.write(marker, stamp.getBytes("UTF-8"))
       }
       Sim.ivfKnnFromIndex(emb, nQuery = 10, k = 5, nprobe = 4,
         "ivf_assign", "ivf_centroids")
@@ -231,20 +207,13 @@ object Queries {
       val emb = tbl(s, dir, "embeddings")
       val base = emb.where(col("vec_id") % 5 =!= 4)
       val batch = emb.where(col("vec_id") % 5 === 4)
-      val marker = java.nio.file.Paths.get(
-        graft.Scratch.dir("ivf_update_marker"))
-      val stamp = dir + "\n" + graft.Scratch.fingerprint(s"$dir/embeddings.parquet")
-      val fresh_? = s.catalog.tableExists("ivf_assign_upd") &&
-        s.catalog.tableExists("ivf_centroids_upd") &&
-        java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == stamp
-      if (!fresh_?) {
+      graft.Scratch.stamped("ivf_update", dir, "embeddings",
+          s.catalog.tableExists("ivf_assign_upd") &&
+            s.catalog.tableExists("ivf_centroids_upd")) {
         Sim.ivfIndexWrite(base, nlist = 16, "ivf_assign_upd",
           "ivf_centroids_upd", buckets = 8)
         Sim.ivfIndexAppend(batch, "ivf_assign_upd", "ivf_centroids_upd",
           buckets = 8)
-        java.nio.file.Files.createDirectories(marker.getParent)
-        java.nio.file.Files.write(marker, stamp.getBytes("UTF-8"))
       }
       Sim.ivfKnnFromIndex(emb, nQuery = 10, k = 5, nprobe = 4,
         "ivf_assign_upd", "ivf_centroids_upd")
@@ -1700,18 +1669,11 @@ object Queries {
       val docs = tbl(s, dir, "documents")
       val history = docs.where(col("doc_id") % 2 === 0)
       val fresh = docs.where(col("doc_id") % 2 === 1)
-      val marker = java.nio.file.Paths.get(
-        graft.Scratch.dir("phash_store_marker"))
-      val stamp = dir + "\n" + graft.Scratch.fingerprint(s"$dir/documents.parquet")
-      val fresh_? = s.catalog.tableExists("phash_store_bkt") &&
-        java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == stamp
-      if (!fresh_?) {
+      graft.Scratch.stamped("phash_store", dir, "documents",
+          s.catalog.tableExists("phash_store_bkt")) {
         graft.rel.Layout.writeBucketedBy(
           Multimodal.perceptualSignatureStore(history, maxDist = 3),
           "phash_store_bkt", 8, "band", "bval")
-        java.nio.file.Files.createDirectories(marker.getParent)
-        java.nio.file.Files.write(marker, stamp.getBytes("UTF-8"))
       }
       Multimodal.perceptualIncrementalNearDups(fresh,
         s.table("phash_store_bkt"), maxDist = 3)
@@ -1728,18 +1690,11 @@ object Queries {
       val docs = tbl(s, dir, "documents")
       val history = docs.where(col("doc_id") % 2 === 0)
       val fresh = docs.where(col("doc_id") % 2 === 1)
-      val marker = java.nio.file.Paths.get(
-        graft.Scratch.dir("frame_store_marker"))
-      val stamp = dir + "\n" + graft.Scratch.fingerprint(s"$dir/documents.parquet")
-      val fresh_? = s.catalog.tableExists("frame_store_bkt") &&
-        java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == stamp
-      if (!fresh_?) {
+      graft.Scratch.stamped("frame_store", dir, "documents",
+          s.catalog.tableExists("frame_store_bkt")) {
         graft.rel.Layout.writeBucketedBy(
           Multimodal.frameSignatureStore(history),
           "frame_store_bkt", 8, "sig")
-        java.nio.file.Files.createDirectories(marker.getParent)
-        java.nio.file.Files.write(marker, stamp.getBytes("UTF-8"))
       }
       Multimodal.frameIncrementalNearDups(fresh, s.table("frame_store_bkt"))
         .orderBy("doc_id", "dup_of")
@@ -1851,28 +1806,19 @@ object Queries {
     // persisted gram-bucketed history store — the q75 lifecycle for
     // the exact member of the dedup family (even = history, odd =
     // batch; see Dedup.incrementalExactSubstr). Store build is
-    // idempotent per fixture (the q75 marker pattern).
+    // idempotent per fixture (Scratch.stamped).
     "q448_incremental_exact_substr" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents")
       val history = docs.where(col("doc_id") % 2 === 0)
       val batch = docs.where(col("doc_id") % 2 === 1)
-      val marker = java.nio.file.Paths.get(
-        graft.Scratch.dir("exact_substr_store_marker"))
       // v2: 128-bit-hash store (g1, g2, n_hist) at L=6 — the version
-      // tag in the stamp forces a rebuild over any r14 literal-gram
-      // store left on disk
-      val stamp = "v2:L6\n" + dir + "\n" +
-        graft.Scratch.fingerprint(s"$dir/documents.parquet")
-      val fresh_? = s.catalog.tableExists("exact_substr_store_bkt") &&
-        java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker),
-          "UTF-8") == stamp
-      if (!fresh_?) {
+      // tag in the store name forces a rebuild over any r14
+      // literal-gram store left on disk
+      graft.Scratch.stamped("exact_substr_store_v2_l6", dir, "documents",
+          s.catalog.tableExists("exact_substr_store_bkt")) {
         graft.rel.Layout.writeBucketedBy(
           Dedup.exactSubstrStore(history, "doc_id", "text", windowL = 6),
           "exact_substr_store_bkt", 8, "g1", "g2")
-        java.nio.file.Files.createDirectories(marker.getParent)
-        java.nio.file.Files.write(marker, stamp.getBytes("UTF-8"))
       }
       Dedup.incrementalExactSubstr(batch,
         s.table("exact_substr_store_bkt"), "doc_id", "text", windowL = 6)
@@ -3090,35 +3036,6 @@ object Queries {
        |SELECT cid, rnk, tok, tf, df, score FROM r
        |WHERE rnk <= 3 ORDER BY cid, rnk""".stripMargin
 
-  /** q132's lossless exact-Jaccard pair table, materialized ONCE per
-    * fixture and reused by every consumer (q218's sweep, q222's source
-    * matrix) — the similarity join dominates those queries' cost, and
-    * a pipeline never re-joins the corpus per report. Marker-cached by
-    * content fingerprint (the q75/q100 idempotent-fixture pattern): a
-    * regenerated fixture invalidates the store; q132 itself stays the
-    * from-scratch declaration. */
-  /** Generic fingerprint-stamped parquet materialization (the
-    * [[exactPairStore]] pattern, factored): build `mk` once per fixture
-    * generation of `table`, rewrite only when the content fingerprint
-    * changes, read back from parquet. Consumers share the dominating
-    * similarity-join cost instead of re-running it per declared query
-    * (VERDICT r9 item 3 — q94 ran both pair pipelines per pass). */
-  private[graft] def stampedStore(s: SparkSession, dir: String, name: String,
-                                  table: String)(mk: => DataFrame): DataFrame = {
-    val out = graft.Scratch.dir(name)
-    val marker = java.nio.file.Paths.get(graft.Scratch.dir(name + "_marker"))
-    val stamp = dir + "\n" + graft.Scratch.fingerprint(s"$dir/$table.parquet")
-    val fresh_? = java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == stamp
-    if (!fresh_?) {
-      mk.write.mode("overwrite").parquet(out)
-      java.nio.file.Files.createDirectories(marker.getParent)
-      java.nio.file.Files.write(marker, stamp.getBytes("UTF-8"))
-    }
-    s.catalog.refreshByPath(out)
-    s.read.parquet(out)
-  }
-
   /** q18's MinHash near-dup pair table (k=3, 64 buckets, band 4,
     * τ=0.1), materialized once per fixture and reused by q94's
     * consensus join and q276's cluster histogram — q18/q65 stay the
@@ -3166,28 +3083,15 @@ object Queries {
       Dedup.exactSubstrNamed(tbl(s, dir, "documents"), "doc_id", "text",
         windowL = 6))
 
-  private def exactPairStore(s: SparkSession, dir: String): DataFrame = {
-    val out = graft.Scratch.dir("exact_pair_store")
-    val marker = java.nio.file.Paths.get(
-      graft.Scratch.dir("exact_pair_store_marker"))
-    val stamp = dir + "\n" + graft.Scratch.fingerprint(s"$dir/documents.parquet")
-    val fresh_? = java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == stamp
-    if (!fresh_?) {
+  /** q132's lossless exact-Jaccard pair table, materialized ONCE per
+    * fixture and reused by every consumer (q218's sweep, q222's source
+    * matrix) — the similarity join dominates those queries' cost, and
+    * a pipeline never re-joins the corpus per report. q132 itself stays
+    * the from-scratch declaration. */
+  private def exactPairStore(s: SparkSession, dir: String): DataFrame =
+    stampedStore(s, dir, "exact_pair_store", "documents")(
       Dedup.prefixFilterJoin(tbl(s, dir, "documents"), "doc_id", "text",
-          k = 3, tauNum = 1, tauDen = 2)
-        .write.mode("overwrite").parquet(out)
-      java.nio.file.Files.createDirectories(marker.getParent)
-      java.nio.file.Files.write(marker, stamp.getBytes("UTF-8"))
-    }
-    // The session's FileStatusCache may hold a listing of the store
-    // path from BEFORE a rewrite (its own, or a sibling process's in a
-    // dev loop) — a stale listing fails the scan with FileNotFound on
-    // the overwritten part files. Drop any cached listing before the
-    // read; O(1) driver metadata, never data work.
-    s.catalog.refreshByPath(out)
-    s.read.parquet(out)
-  }
+        k = 3, tauNum = 1, tauDen = 2))
 
   /** Shared truth for q139 (batch-built posting index) and q216 (the
     * streaming-maintained one): the conjunctive probe's exact result,

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the marker-cache invalidation contract of [[Scratch.fingerprint]]:
@@ -49,6 +51,22 @@ class ScratchSpec extends AnyFunSuite {
       val after = Scratch.fingerprint(d.toString)
       assert(before != after)
     }
+  }
+
+  test("fixture markers are read and written only by Scratch.stamped") {
+    val main = java.nio.file.Paths.get("src/main/scala")
+    assert(Files.isDirectory(main), s"run from the repo root, not ${main.toAbsolutePath}")
+    val markerIo = """(?i)\b(read|write)\w*\(\s*[\w.]*marker""".r
+    val offenders = Files.walk(main).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "Scratch.scala")
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if line.contains("_marker") || markerIo.findFirstIn(line).nonEmpty =>
+            s"$p:${i + 1}: ${line.trim}"
+        }
+      }.toList
+    assert(offenders.isEmpty,
+      "fixture-store freshness goes through Scratch.stamped:\n" + offenders.mkString("\n"))
   }
 
   test("file count and stability") {

@@ -807,7 +807,7 @@ class Round10OpsSpec extends SparkSpec {
       java.nio.file.Files.write(fix, ("A" * 128).getBytes("UTF-8"))
       var builds = 0
       val name = s"stamp_spec_store_${System.nanoTime()}"
-      def read() = Queries.stampedStore(spark, d.toString, name,
+      def read() = graft.Scratch.stampedStore(spark, d.toString, name,
         "documents") { builds += 1; Seq((1L, "x")).toDF("id", "v") }
       read(); read()
       assert(builds == 1, "second read must ride the marker cache")
@@ -816,6 +816,24 @@ class Round10OpsSpec extends SparkSpec {
       java.nio.file.Files.write(fix, ("A" * 64 + "B" + "A" * 63).getBytes("UTF-8"))
       read()
       assert(builds == 2, "fixture content change must invalidate the store")
+      // torn rebuild: a rebuild for fixture B whose job fails after the
+      // overwrite has removed the store must not leave A's marker valid
+      val b = java.nio.file.Files.createDirectories(d.resolve("b"))
+      java.nio.file.Files.write(b.resolve("documents.parquet"), "B".getBytes("UTF-8"))
+      val boom = udf { (i: Long) =>
+        if (i >= 0) throw new IllegalStateException("build failed"); i }
+      intercept[Exception](graft.Scratch.stampedStore(spark, b.toString, name,
+        "documents") { builds += 1; spark.range(1).select(boom(col("id")).as("id")) })
+      assert(read().as[(Long, String)].collect().toSeq == Seq((1L, "x")),
+        "the read after a failed rebuild must rebuild A, not read the torn store")
+      assert(builds == 4)
+      // catalog-table branch: `present = false` (the table is gone from
+      // the session catalog) rebuilds even under a matching marker
+      var tableBuilds = 0
+      graft.Scratch.stamped(name, d.toString, "documents")(tableBuilds += 1)
+      graft.Scratch.stamped(name, d.toString, "documents",
+        present = false)(tableBuilds += 1)
+      assert(tableBuilds == 1, "only the absent table may force a rebuild")
     } finally {
       java.nio.file.Files.walk(d).sorted(java.util.Comparator.reverseOrder())
         .forEach(p => java.nio.file.Files.delete(p))

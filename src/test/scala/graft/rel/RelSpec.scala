@@ -25,7 +25,7 @@ class RelSpec extends SparkSpec {
 
   test("every declared oracle key has a query and every query runs at sf0.001") {
     val qs = SparkEntry.queries
-    SparkEntry.oracleSql.keys.foreach(k => assert(qs.contains(k), s"oracle without query: $k"))
+    assert(SparkEntry.oracleSql.keySet == qs.keySet, "every query has exactly one oracle twin")
     qs.foreach { case (name, fn) =>
       val n = fn(spark, sf0001).count()
       assert(n >= 0, name)
