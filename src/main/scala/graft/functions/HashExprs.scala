@@ -133,14 +133,18 @@ object HashExprs {
     * The derandomized bootstrap operators explode each row ×B and
     * hashed `concat(id, ':', b, ...)` per replicate; with this fold
     * the id prefix hashes once per ROW and each replicate pays 1-2
-    * long ops (r15, guide §4). Caller contract: 0 <= i < 100. */
+    * long ops (r15, guide §4). An `i` outside [0, 100) fails the query
+    * (`raise_error`) instead of returning a hash that silently differs
+    * from the concat form. */
   def fnvFoldSmallInt(h: Column, i: Column): Column = {
-    import org.apache.spark.sql.functions.{floor, lit, when}
+    import org.apache.spark.sql.functions.{concat, floor, lit, raise_error, when}
     def step(acc: Column, c: Column): Column =
       (acc.bitwiseXOR(c) * lit(16777619L)).bitwiseAND(lit(0xFFFFFFFFL))
     val tens = (floor(i / lit(10)) + lit(48)).cast("long")
     val ones = (i % lit(10) + lit(48)).cast("long")
-    when(i < 10, step(h, (i + lit(48)).cast("long")))
+    when(i < 0 || i >= 100, raise_error(concat(
+        lit("fnvFoldSmallInt: value outside [0, 100): "), i.cast("string"))))
+      .when(i < 10, step(h, (i + lit(48)).cast("long")))
       .otherwise(step(step(h, tens), ones))
   }
 }

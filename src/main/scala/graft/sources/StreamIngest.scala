@@ -21,22 +21,41 @@ import org.apache.spark.sql.types.StructType
   */
 object StreamIngest {
 
-  /** Run `body` with `spark.sql.shuffle.partitions` temporarily set to
-    * `n`, restoring the session value after. Stateful streaming queries
-    * create one state-store instance per shuffle partition PER STORE
-    * PER MICRO-BATCH (each with its own delta/snapshot files and
-    * fsyncs); at the gate's micro-batch sizes the session default of 32
-    * is pure commit overhead — 8 stores cut the q109 drain 1.9× with
-    * byte-identical results (state partitioning never affects
-    * semantics, only placement). The partition count is baked into the
-    * checkpoint at first start, so it must wrap the WHOLE drain —
-    * which also keeps q101's two-start resume consistent. A production
-    * deployment sizes this to its real per-batch state volume instead. */
-  private def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, old)
+  /** Run one drain — `body` starts a streaming query and awaits it —
+    * under the session settings every drain needs, restoring the
+    * session values after. The settings are read at query start (the
+    * first two are baked into the checkpoint), so the scope wraps the
+    * WHOLE drain, which also keeps q101's two-start resume consistent:
+    *  - `spark.sql.shuffle.partitions` = 8. A stateful query creates
+    *    one state-store instance per shuffle partition PER STORE PER
+    *    MICRO-BATCH, and each commits its own delta file; at the gate's
+    *    micro-batch sizes the session default of 32 is pure commit
+    *    overhead — 8 stores cut the q109 drain 1.9× with byte-identical
+    *    results (state partitioning never affects semantics, only
+    *    placement). A production deployment sizes this to its real
+    *    per-batch state volume instead.
+    *  - the state-store provider, when `provider` is given.
+    *  - `fs.AbstractFileSystem.file.impl` = [[LocalCheckpointFs]]. The
+    *    per-file commit cost on a host without libhadoop is not I/O
+    *    (the local filesystem does not fsync) but child processes:
+    *    the stock local `AbstractFileSystem` spawns a `chmod` for every
+    *    file it creates and `readlink`s for every rename, about 680
+    *    processes per q102 drain, 94% of them from the checkpoint file
+    *    manager (state deltas, offsets, commits, source and sink logs,
+    *    and their `.crc` sidecars). The replacement writes the same
+    *    files, modes and checksums with JDK calls. The key names only
+    *    the `file` scheme; every other scheme keeps its stock class. */
+  private def drain[T](spark: SparkSession, provider: Option[String] = None)(body: => T): T = {
+    val settings = Seq(
+      "spark.sql.shuffle.partitions" -> "8",
+      "fs.AbstractFileSystem.file.impl" -> classOf[LocalCheckpointFs].getName) ++
+      provider.map("spark.sql.streaming.stateStore.providerClass" -> _)
+    val saved = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   private def rm(spark: SparkSession, p: String): Unit = {
@@ -79,7 +98,7 @@ object StreamIngest {
     * events straddle the two runs must be emitted once, complete. */
   def windowedAggParquetResume(spark: SparkSession, in: String,
                                schema: StructType, out: String, ckpt: String,
-                               filesPerTrigger: Int = 2): DataFrame = withStatePartitions(spark, 8) {
+                               filesPerTrigger: Int = 2): DataFrame = drain(spark) {
     import org.apache.spark.sql.functions._
     val q = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", filesPerTrigger.toString)
@@ -99,21 +118,6 @@ object StreamIngest {
     spark.read.parquet(out)
   }
 
-  /** Run `body` with the streaming state-store provider temporarily
-    * set to `provider`, restoring the session value after. The provider
-    * is read at query start and baked into the checkpoint, so the
-    * override must wrap the whole drain. */
-  private def withStateProvider[T](spark: SparkSession, provider: String)(
-      body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, provider)
-    try body finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   /** RocksDB state-store provider class name (shipped in the Spark 4
     * distribution): the disk-backed state backend production stateful
     * streaming runs — state volume is bounded by local disk + an
@@ -130,7 +134,7 @@ object StreamIngest {
   def windowedAggParquetRocksDb(spark: SparkSession, in: String,
                                 schema: StructType, out: String,
                                 ckpt: String): DataFrame =
-    withStateProvider(spark, RocksDbProvider) {
+    drain(spark, Some(RocksDbProvider)) {
       windowedAggParquet(spark, in, schema, out, ckpt)
     }
 
@@ -147,7 +151,7 @@ object StreamIngest {
     * read-back — q144's rule). */
   def sessionWindowParquet(spark: SparkSession, in: String,
                            schema: StructType, out: String,
-                           ckpt: String): DataFrame = withStatePartitions(spark, 8) {
+                           ckpt: String): DataFrame = drain(spark) {
     rm(spark, out); rm(spark, ckpt)
     val sess = graft.streaming.Sessions.sessionAgg(
       spark.readStream.schema(schema)
@@ -169,21 +173,19 @@ object StreamIngest {
   def twsSessionizeParquet(spark: SparkSession, in: String,
                            schema: StructType, out: String,
                            ckpt: String): DataFrame =
-    withStateProvider(spark, RocksDbProvider) {
-      withStatePartitions(spark, 8) {
-        rm(spark, out); rm(spark, ckpt)
-        val sessions = graft.streaming.Sessions.sessionizeTws(
-            spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "2").parquet(in))
-          .toDF("user_id", "sess_start_us", "sess_end_us", "n_events")
-        val q = sessions.writeStream.format("parquet")
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start(out)
-        q.awaitTermination()
-        spark.read.parquet(out)
-      }
+    drain(spark, Some(RocksDbProvider)) {
+      rm(spark, out); rm(spark, ckpt)
+      val sessions = graft.streaming.Sessions.sessionizeTws(
+          spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "2").parquet(in))
+        .toDF("user_id", "sess_start_us", "sess_end_us", "n_events")
+      val q = sessions.writeStream.format("parquet")
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(Trigger.AvailableNow())
+        .start(out)
+      q.awaitTermination()
+      spark.read.parquet(out)
     }
 
   /** The MapState profile accumulator at the gate
@@ -212,20 +214,18 @@ object StreamIngest {
   def userProfilesParquetResume(spark: SparkSession, in: String,
                                 schema: StructType, out: String,
                                 ckpt: String, flushMs: Long): DataFrame =
-    withStateProvider(spark, RocksDbProvider) {
-      withStatePartitions(spark, 8) {
-        val profiles = graft.streaming.Sessions.userProfilesTws(
-            spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "2").parquet(in), flushMs)
-          .toDF("event_type", "user_id", "n_events", "sum_vu")
-        val q = profiles.writeStream.format("parquet")
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start(out)
-        q.awaitTermination()
-        spark.read.parquet(out)
-      }
+    drain(spark, Some(RocksDbProvider)) {
+      val profiles = graft.streaming.Sessions.userProfilesTws(
+          spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "2").parquet(in), flushMs)
+        .toDF("event_type", "user_id", "n_events", "sum_vu")
+      val q = profiles.writeStream.format("parquet")
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(Trigger.AvailableNow())
+        .start(out)
+      q.awaitTermination()
+      spark.read.parquet(out)
     }
 
   /** The q87 stateful drain instrumented for OBSERVABILITY: returns
@@ -241,7 +241,7 @@ object StreamIngest {
     * windows that already closed). Returns (sink rows, dropped). */
   def windowedAggParquetWithLateMetrics(
       spark: SparkSession, in: String, schema: StructType, out: String,
-      ckpt: String): (DataFrame, Long) = withStatePartitions(spark, 8) {
+      ckpt: String): (DataFrame, Long) = drain(spark) {
     import org.apache.spark.sql.functions._
     rm(spark, out); rm(spark, ckpt)
     val q = spark.readStream.schema(schema)
@@ -284,7 +284,7 @@ object StreamIngest {
     * stay open and are discarded at drain end. */
   def sessionizeParquet(spark: SparkSession, in: String,
                         schema: StructType, out: String,
-                        ckpt: String): DataFrame = withStatePartitions(spark, 8) {
+                        ckpt: String): DataFrame = drain(spark) {
     rm(spark, out); rm(spark, ckpt)
     val sessions = graft.streaming.Sessions.sessionizeWithState(
         spark.readStream.schema(schema)
@@ -312,7 +312,7 @@ object StreamIngest {
     * which is what the q102 layout (originals first, duplicate copies
     * in a LATER file) exercises. */
   def dedupParquet(spark: SparkSession, in: String, schema: StructType,
-                   out: String, ckpt: String): DataFrame = withStatePartitions(spark, 8) {
+                   out: String, ckpt: String): DataFrame = drain(spark) {
     rm(spark, out); rm(spark, ckpt)
     val q = graft.streaming.Sessions.streamingDedup(
         spark.readStream.schema(schema)
@@ -347,7 +347,7 @@ object StreamIngest {
     * ordered-layout contract exists to prevent). */
   def streamJoinParquet(spark: SparkSession, in: String,
                         schema: StructType, out: String, ckpt: String,
-                        filesPerTrigger: Int = 2): DataFrame = withStatePartitions(spark, 8) {
+                        filesPerTrigger: Int = 2): DataFrame = drain(spark) {
     import org.apache.spark.sql.functions._
     rm(spark, out); rm(spark, ckpt)
     val src = spark.readStream.schema(schema)
@@ -399,7 +399,7 @@ object StreamIngest {
     * window on both sides; keyed shuffles are per micro-batch. */
   def streamOuterJoinParquet(spark: SparkSession, in: String,
                              schema: StructType, out: String, ckpt: String,
-                             filesPerTrigger: Int = 2): DataFrame = withStatePartitions(spark, 8) {
+                             filesPerTrigger: Int = 2): DataFrame = drain(spark) {
     import org.apache.spark.sql.functions._
     rm(spark, out); rm(spark, ckpt)
     val src = spark.readStream.schema(schema)
@@ -465,7 +465,7 @@ object StreamIngest {
     * write is identical. */
   def cdcUpsertParquet(spark: SparkSession, in: String, schema: StructType,
                        stateRoot: String, ckpt: String,
-                       filesPerTrigger: Int = 2): DataFrame = withStatePartitions(spark, 8) {
+                       filesPerTrigger: Int = 2): DataFrame = drain(spark) {
     import org.apache.spark.sql.functions._
     rm(spark, stateRoot); rm(spark, ckpt)
     val root = new org.apache.hadoop.fs.Path(stateRoot)
@@ -543,7 +543,7 @@ object StreamIngest {
     * without watermark). */
   def ingestParquet(spark: SparkSession, in: String, glob: String,
                     schema: StructType, out: String, ckpt: String,
-                    transform: DataFrame => DataFrame): DataFrame = {
+                    transform: DataFrame => DataFrame): DataFrame = drain(spark) {
     rm(spark, out); rm(spark, ckpt)
     val q = transform(
         spark.readStream.schema(schema)
@@ -573,7 +573,7 @@ object StreamIngest {
   def matviewParquet(spark: SparkSession, in: String, schema: StructType,
                      out: String, ckpt: String,
                      agg: DataFrame => DataFrame,
-                     filesPerTrigger: Int = 2): DataFrame = withStatePartitions(spark, 8) {
+                     filesPerTrigger: Int = 2): DataFrame = drain(spark) {
     rm(spark, out); rm(spark, ckpt)
     val q = agg(
         spark.readStream.schema(schema)

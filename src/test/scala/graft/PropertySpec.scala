@@ -72,6 +72,13 @@ class PropertySpec extends SparkSpec {
       functions.HashExprs
         .fnv1a32("concat(t, ':', cast(b as string))").as("whole"))
     assert(got.where(col("fold") =!= col("whole")).isEmpty)
+    // outside the domain the fold would diverge, so it must fail loudly
+    Seq(-1, 100).foreach { b =>
+      val e = intercept[Exception](Seq(("ev", b)).toDF("t", "b")
+        .select(functions.HashExprs.fnvFoldSmallInt(hpre, col("b"))).collect())
+      assert(e.getMessage.contains("fnvFoldSmallInt: value outside [0, 100): " + b),
+        s"b=$b: ${e.getMessage}")
+    }
   }
 
   // The emission-canonicalization property (VERDICT r8 item 2): femit
