@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Benchmark main: runs every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line {"metric":"total","value":…,"queries":{…}}.
   *
@@ -10,18 +9,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Default to the actual core count (capped at 32) rather than a
-    // hard-coded 32 — SPARK_GRAFT_CPUS still overrides.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val only = sys.env.get("SPARK_GRAFT_QUERIES")
       .map(_.split(",").map(_.trim).toSet)
     val selected = SparkEntry.queries

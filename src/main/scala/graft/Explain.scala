@@ -1,17 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Plan inspector: prints the formatted physical plan for named queries.
   * Usage: runMain graft.Explain <sfDir> <query1,query2,...> */
 object Explain {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, names) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     names.split(",").foreach { n =>
       println(s"===== $n =====")
       SparkEntry.queries(n.trim)(spark, sfDir).explain("formatted")

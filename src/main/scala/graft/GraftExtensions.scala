@@ -6,19 +6,18 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 import graft.functions.{CmsSketch, CosineSim, Fnv1a32, HashExprs, KmvSketch, ShingleArray, SignBands, SketchAggs, TextExprs, TopKAgg, VectorExprs}
 
-/** Library entry point for Spark's extension mechanism: makes every
-  * graft native function available in plain `spark.sql(...)` without any
-  * imperative registration call —
+/** The one wiring path for graft's native functions: injects each
+  * builder into the session's function registry when the session state
+  * is built, so the column handles (`HashExprs.fnv1a32`, …) and plain
+  * `spark.sql(...)` resolve them with no registration call.
+  *
+  * Every graft session comes from [[Session.local]], which installs this
+  * extension. A session built elsewhere needs it configured, or the
+  * native functions fail with `UNRESOLVED_ROUTINE` —
   *
   * {{{
   * spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
-  * // or
-  * SparkSession.builder().withExtensions(new GraftExtensions) ...
   * }}}
-  *
-  * The query-path code uses the same builders via the per-session
-  * `register()` helpers (idempotent), so both wiring styles produce
-  * identical expressions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -91,15 +91,9 @@ object HashExprs {
   val fnv1a32Builder: Seq[Expression] => Expression =
     exprs => Fnv1a32(exprs.head, litLong(exprs(1)))
 
-  /** Register `fnv1a32(text, seed)` in the session function registry.
-    * Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fnv1a32", fnv1a32Builder, "built-in")
-
-  /** Column-level handle (after [[register]]). `sqlExpr` is any SQL
-    * expression string (a column name, or a lambda variable inside a
-    * higher-order function body). */
+  /** Column-level handle (via [[graft.GraftExtensions]]). `sqlExpr` is
+    * any SQL expression string (a column name, or a lambda variable
+    * inside a higher-order function body). */
   def fnv1a32(sqlExpr: String, seed: Long = Fnv1a32.Seed): Column =
     expr(s"fnv1a32($sqlExpr, ${seed}L)")
 

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -223,20 +223,11 @@ object SketchAggs {
   val kmvSketchBuilder: Seq[Expression] => Expression =
     exprs => KmvSketch(exprs.head, litInt(exprs(1)))
 
-  /** Register `cms_sketch(col, depth, width)` and `kmv_sketch(col, k)`.
-    * Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cms_sketch", cmsSketchBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kmv_sketch", kmvSketchBuilder, "built-in")
-  }
-
-  /** Column-level handle (after [[register]]). */
+  /** Column-level handle (via [[graft.GraftExtensions]]). */
   def cmsSketch(sqlExpr: String, depth: Int, width: Int): Column =
     expr(s"cms_sketch($sqlExpr, $depth, $width)")
 
-  /** Column-level handle (after [[register]]). */
+  /** Column-level handle (via [[graft.GraftExtensions]]). */
   def kmvSketch(sqlExpr: String, k: Int): Column =
     expr(s"kmv_sketch($sqlExpr, $k)")
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -83,12 +83,6 @@ object TextExprs {
   val shinglesBuilder: Seq[Expression] => Expression =
     exprs => ShingleArray(exprs.head, litInt(exprs(1)))
 
-  /** Register `shingles(text, k)` in the session function registry.
-    * Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingles", shinglesBuilder, "built-in")
-
-  /** Column-level handle (after [[register]]). */
+  /** Column-level handle (via [[graft.GraftExtensions]]). */
   def shingles(textCol: String, k: Int): Column = expr(s"shingles($textCol, $k)")
 }

@@ -2,7 +2,7 @@ package graft.functions
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, RowOrdering, UnsafeProjection, UnsafeRow}
@@ -142,12 +142,7 @@ object TopKAgg {
   val topkRowsBuilder: Seq[Expression] => Expression =
     exprs => TopKAgg(exprs.head, litInt(exprs(1)))
 
-  /** Register `topk_rows(struct_col, k)`. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_rows", topkRowsBuilder, "built-in")
-
-  /** Column-level handle (after [[register]]). */
+  /** Column-level handle (via [[graft.GraftExtensions]]). */
   def topkRows(structSqlExpr: String, k: Int): Column =
     expr(s"topk_rows($structSqlExpr, $k)")
 }

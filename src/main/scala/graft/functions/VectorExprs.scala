@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -200,30 +200,18 @@ object VectorExprs {
       s"lsh_bands expects literal integer parameters, got $other")
   }
 
-  /** Expression builders — shared by [[register]] (imperative, per
-    * session) and [[graft.GraftExtensions]] (declarative, via
-    * `spark.sql.extensions`). */
+  /** Expression builders — injected by [[graft.GraftExtensions]]. */
   val cosineSimBuilder: Seq[Expression] => Expression =
     exprs => CosineSim(exprs.head, exprs(1))
   val lshBandsBuilder: Seq[Expression] => Expression =
     exprs => SignBands(exprs.head, litInt(exprs(1)), litInt(exprs(2)), litInt(exprs(3)))
 
-  /** Register `cosine_sim(a, b)` and `lsh_bands(v, nTables, bandPlanes,
-    * dim)` in the session's function registry so they are usable from
-    * `expr(...)` and `spark.sql(...)`. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", cosineSimBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lsh_bands", lshBandsBuilder, "built-in")
-  }
-
-  /** Column-level handle (after [[register]]): cosine_sim of two columns
-    * that must already be array&lt;double&gt;. */
+  /** Column-level handle (via [[graft.GraftExtensions]]): cosine_sim of
+    * two columns that must already be array&lt;double&gt;. */
   def cosineSim(a: String, b: String): Column = expr(s"cosine_sim($a, $b)")
 
-  /** Column-level handle (after [[register]]): per-table LSH bucket ids
-    * of an array&lt;double&gt; column. */
+  /** Column-level handle (via [[graft.GraftExtensions]]): per-table LSH
+    * bucket ids of an array&lt;double&gt; column. */
   def lshBands(v: String, nTables: Int, bandPlanes: Int, dim: Int): Column =
     expr(s"lsh_bands($v, $nTables, $bandPlanes, $dim)")
 }

@@ -34,7 +34,6 @@ object Curation {
     * PlanSpec. */
   def decontaminate(docs: DataFrame, idCol: String, textCol: String,
                     evalPred: Column, k: Int): DataFrame = {
-    graft.functions.TextExprs.register(docs.sparkSession)
     val sh = docs.select(col(idCol),
       graft.functions.TextExprs.shingles(textCol, k).as("sh"))
     val evalGrams = sh.where(evalPred)
@@ -74,7 +73,6 @@ object Curation {
                     weights: Seq[(String, Int)],
                     denom: Int): DataFrame = {
     val s = docs.sparkSession
-    graft.functions.HashExprs.register(s)
     import s.implicits._
     val w = weights.toDF(groupCol, "keep_lt")
     docs.join(broadcast(w), Seq(groupCol))
@@ -137,7 +135,6 @@ object Curation {
     * partition) — at this k the plain window is the right plan. */
   def stratumSample(docs: DataFrame, idCol: String, groupCol: String,
                     k: Int): DataFrame = {
-    graft.functions.HashExprs.register(docs.sparkSession)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(groupCol).orderBy(col("h"), col(idCol))
     docs.select(col(idCol), col(groupCol))
@@ -169,7 +166,6 @@ object Curation {
     * q58/q79 parity class) and the output key carries round(6). */
   def weightedSample(docs: DataFrame, idCol: String, groupCol: String,
                      wCol: String, k: Int): DataFrame = {
-    graft.functions.HashExprs.register(docs.sparkSession)
     val u = (graft.functions.HashExprs.fnv1a32(
       s"concat(cast($idCol as string), ':wsamp')") + lit(1L))
       .cast("double") / lit(4294967296.0)
@@ -209,8 +205,6 @@ object Curation {
     * AQE-skew-splittable. */
   def repeatedNgrams(docs: DataFrame, idCol: String, textCol: String,
                      k: Int, minDocs: Int): DataFrame = {
-    graft.functions.TextExprs.register(docs.sparkSession)
-    graft.functions.HashExprs.register(docs.sparkSession)
     val sh = docs.select(col(idCol).as("doc_id"),
       graft.functions.TextExprs.shingles(textCol, k).as("sh"))
     val ex = sh.select(col("doc_id"), explode(col("sh")).as("g"))
@@ -400,7 +394,6 @@ object Curation {
                epsilons: Seq[(Int, Double)] = Seq((1, 0.1), (2, 1.0))): DataFrame = {
     import graft.rel.Queries.femit
     val s = docs.sparkSession
-    graft.functions.HashExprs.register(s)
     val eps = s.createDataFrame(epsilons).toDF("eps_id", "eps")
     val g = docs.groupBy("lang", "source").agg(count(lit(1)).as("n"))
     val keyed = g.crossJoin(broadcast(eps))
@@ -439,7 +432,6 @@ object Curation {
   def dsirWeights(docs: DataFrame, targetLang: String = "en",
                   nBuckets: Int = 256, topK: Int = 20): DataFrame = {
     import graft.rel.Queries.{dsum, femit}
-    graft.functions.HashExprs.register(docs.sparkSession)
     val tok = docs.select(col("doc_id"), col("lang"),
         explode(split(col("text"), " ", -1)).as("tok"))
       .where(col("tok") =!= "")
@@ -630,7 +622,6 @@ object Curation {
     * Scale: one user-grain agg + a 1-row combine. */
   def randomizedResponse(ev: DataFrame, p: Double = 0.75): DataFrame = {
     import graft.rel.Queries.femit
-    graft.functions.HashExprs.register(ev.sparkSession)
     val per = ev.groupBy("user_id")
       .agg(max(when(col("event_type") === "purchase", 1L).otherwise(0L))
         .as("truth"))
@@ -709,7 +700,6 @@ object Curation {
     import graft.rel.Queries.{dsum, femit}
     import org.apache.spark.sql.expressions.Window
     val s = docs.sparkSession
-    graft.functions.HashExprs.register(s)
     require(nPerms >= 40, "CI order statistics need >= 40 draws")
     val ts = expr("filter(split(text, ' ', -1), t -> t != '')")
     val stopList = graft.llm.TextAnalysis.Stopwords
@@ -776,8 +766,6 @@ object Curation {
     * corpus streams once. */
   def shapleyReweight(docs: DataFrame, nPerms: Int = 200,
                       denom: Int = 1000): DataFrame = {
-    val s = docs.sparkSession
-    graft.functions.HashExprs.register(s)
     val shap = dataShapley(docs, nPerms)
       .select(col("source"), col("n_docs"),
         floor(greatest(col("shapley"), lit(0.0)) * 1e6 + 0.5)

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.TextExprs
 
 /** Near-duplicate detection for large text corpora: token-shingling,
   * MinHash + LSH banding, SimHash, and exact n-gram Jaccard.
@@ -52,13 +53,6 @@ object Dedup {
   def shingles(text: Column, k: Int): Column =
     element_at(transform(array(split(text, " ", -1)), ts => shinglesOf(ts, k)), 1)
 
-  /** The native fused-loop shingle expression as a Column over `df`'s
-    * session (registers the function on first use). */
-  private def nativeShingles(df: DataFrame, textCol: String, k: Int): Column = {
-    graft.functions.TextExprs.register(df.sparkSession)
-    graft.functions.TextExprs.shingles(textCol, k)
-  }
-
   /** LSH candidate pairs via one-permutation-style MinHash (Li et al.,
     * "One Permutation Hashing", NIPS 2012 — flavor, not a port): each
     * shingle is hashed once; the 64-bucket partition of the hash space
@@ -77,7 +71,7 @@ object Dedup {
                         k: Int = 3, nBuckets: Int = 64, bandSize: Int = 4,
                         maxBucket: Int = 1000): DataFrame =
     minhashCandidatesFromShingles(
-      docs.select(col(idCol).as("doc_id"), nativeShingles(docs, textCol, k).as("sh")),
+      docs.select(col(idCol).as("doc_id"), TextExprs.shingles(textCol, k).as("sh")),
       nBuckets, bandSize, maxBucket)
 
   /** [[minhashCandidates]] over a pre-computed (doc_id, sh) shingle
@@ -120,7 +114,6 @@ object Dedup {
     * verify; bit-identical in DuckDB). */
   def bandKeysFromShingles(sh: DataFrame, nBuckets: Int = 64,
                            bandSize: Int = 4): DataFrame = {
-    graft.functions.HashExprs.register(sh.sparkSession)
     val hashed = sh
       .select(col("doc_id"), explode(col("sh")).as("s"))
       .select(col("doc_id"), graft.functions.HashExprs.fnv1a32("s").as("h"))
@@ -147,7 +140,7 @@ object Dedup {
                             k: Int = 3, nBuckets: Int = 64, bandSize: Int = 4,
                             maxBucket: Int = 1000): DataFrame = {
     val sh = docs.select(col(idCol).as("doc_id"),
-      nativeShingles(docs, textCol, k).as("sh"))
+      TextExprs.shingles(textCol, k).as("sh"))
     bandKeysFromShingles(sh, nBuckets, bandSize)
       .groupBy("band", "bkey")
       .agg(collect_list(col("doc_id")).as("ids"))
@@ -178,7 +171,7 @@ object Dedup {
                           maxBucket: Int = 1000,
                           storeBuckets: Int = 0): DataFrame = {
     val freshSh = fresh.select(col(idCol).as("doc_id"),
-      nativeShingles(fresh, textCol, k).as("sh"))
+      TextExprs.shingles(textCol, k).as("sh"))
     val rawKeys = bandKeysFromShingles(freshSh, nBuckets, bandSize)
     // Pre-partition the new keys to the store's bucket COUNT (the
     // caller wrote the store, so it knows): the groupBy then reuses
@@ -222,18 +215,17 @@ object Dedup {
                           k: Int = 3, nBuckets: Int = 64, bandSize: Int = 4,
                           threshold: Double = 0.5): DataFrame = {
     val freshSh = fresh.select(col(idCol).as("doc_id"),
-      nativeShingles(fresh, textCol, k).as("sh"))
+      TextExprs.shingles(textCol, k).as("sh"))
     val cands = bandKeysFromShingles(freshSh, nBuckets, bandSize)
       .join(store, Seq("band", "bkey"))
       .select(col("doc_id"), explode(col("ids")).as("dup_of"))
       .distinct()
-    graft.functions.TextExprs.register(fresh.sparkSession)
     cands
       .join(fresh.select(col(idCol).as("doc_id"), col(textCol).as("__tf")), "doc_id")
       .join(history.select(col(idCol).as("dup_of"), col(textCol).as("__th")), "dup_of")
       .select(col("doc_id"), col("dup_of"),
-        graft.functions.TextExprs.shingles("__tf", k).as("shf"),
-        graft.functions.TextExprs.shingles("__th", k).as("shh"))
+        TextExprs.shingles("__tf", k).as("shf"),
+        TextExprs.shingles("__th", k).as("shh"))
       .select(col("doc_id"), col("dup_of"),
         size(array_intersect(col("shf"), col("shh"))).cast("double").as("inter"),
         (size(col("shf")) + size(col("shh"))).cast("double").as("total"))
@@ -256,16 +248,15 @@ object Dedup {
                       threshold: Double = 0.5,
                       maxBucket: Int = 1000): DataFrame = {
     val sh = docs.select(col(idCol).as("doc_id"),
-      nativeShingles(docs, textCol, k).as("sh"))
+      TextExprs.shingles(textCol, k).as("sh"))
     val cands = minhashCandidatesFromShingles(sh, nBuckets, bandSize, maxBucket)
     val txt = docs.select(col(idCol).as("doc_id"), col(textCol).as("__t"))
-    graft.functions.TextExprs.register(docs.sparkSession)
     cands
       .join(txt.select(col("doc_id").as("d1"), col("__t").as("__t1")), "d1")
       .join(txt.select(col("doc_id").as("d2"), col("__t").as("__t2")), "d2")
       .select(col("d1"), col("d2"),
-        graft.functions.TextExprs.shingles("__t1", k).as("sh1"),
-        graft.functions.TextExprs.shingles("__t2", k).as("sh2"))
+        TextExprs.shingles("__t1", k).as("sh1"),
+        TextExprs.shingles("__t2", k).as("sh2"))
       .select(col("d1"), col("d2"),
         size(array_intersect(col("sh1"), col("sh2"))).cast("double").as("inter"),
         (size(col("sh1")) + size(col("sh2"))).cast("double").as("total"))
@@ -308,7 +299,6 @@ object Dedup {
     * folds measured several × slower). One shuffle keyed by doc id with
     * map-side partial aggregation; scales like any count-style agg. */
   def simhashAgg(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.HashExprs.register(docs.sparkSession)
     def votes(h: String, p: String) = (0 until 32).map(j =>
       sum(when(shiftright(col(h), j).bitwiseAND(lit(1L)) === 1L, lit(1L))
         .otherwise(lit(-1L))).as(s"$p$j"))
@@ -588,7 +578,7 @@ object Dedup {
                        k: Int = 3, tauNum: Int = 1, tauDen: Int = 2,
                        maxBucket: Int = 1000): DataFrame = {
     val sh = docs.select(col(idCol).as("doc_id"),
-        nativeShingles(docs, textCol, k).as("sh"))
+        TextExprs.shingles(textCol, k).as("sh"))
       .where(size(col("sh")) > 0)
     val ex = sh.select(col("doc_id"), explode(col("sh")).as("g"))
     val dfreq = ex.groupBy("g").agg(count(lit(1)).as("df"))
@@ -780,7 +770,7 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         k: Int, maxId: Long): DataFrame = {
     val sh = docs.where(col(idCol) < maxId)
-      .select(col(idCol).as("doc_id"), nativeShingles(docs, textCol, k).as("sh"))
+      .select(col(idCol).as("doc_id"), TextExprs.shingles(textCol, k).as("sh"))
       .where(size(col("sh")) > 0)
     val a = sh.select(col("doc_id").as("d1"), col("sh").as("sh1"))
     val b = sh.select(col("doc_id").as("d2"), col("sh").as("sh2"))
@@ -816,9 +806,8 @@ object Dedup {
   def minhashAccuracy(docs: DataFrame, idCol: String, textCol: String,
                       k: Int = 3, nBuckets: Int = 64, bandSize: Int = 4,
                       maxBucket: Int = 1000): DataFrame = {
-    graft.functions.HashExprs.register(docs.sparkSession)
     val sh = docs.select(col(idCol).as("doc_id"),
-        nativeShingles(docs, textCol, k).as("sh"))
+        TextExprs.shingles(textCol, k).as("sh"))
       .where(size(col("sh")) > 0).localCheckpoint()
     val cands = minhashCandidatesFromShingles(sh, nBuckets, bandSize, maxBucket)
     val hashed = sh.select(col("doc_id"), explode(col("sh")).as("s"))
@@ -887,9 +876,8 @@ object Dedup {
                   k: Int = 3, nBuckets: Int = 64, bandSize: Int = 4,
                   maxBucket: Int = 1000): DataFrame = {
     import graft.rel.Queries.femit
-    graft.functions.HashExprs.register(docs.sparkSession)
     val sh = docs.select(col(idCol).as("doc_id"),
-        nativeShingles(docs, textCol, k).as("sh"))
+        TextExprs.shingles(textCol, k).as("sh"))
       .where(size(col("sh")) > 0).localCheckpoint()
     val cands = minhashCandidatesFromShingles(sh, nBuckets, bandSize, maxBucket)
     val bm = sh.select(col("doc_id"), explode(col("sh")).as("s"))
@@ -963,7 +951,7 @@ object Dedup {
                        k: Int = 3, dfCap: Long = 20L,
                        threshold: Double = 0.5): DataFrame = {
     val sh = docs.select(col(idCol).as("doc_id"),
-      explode(nativeShingles(docs, textCol, k)).as("sh"))
+      explode(TextExprs.shingles(textCol, k)).as("sh"))
     val dfTbl = sh.groupBy("sh").agg(count(lit(1)).as("df"))
       .where(col("df") <= dfCap)
     val posting = sh.join(dfTbl.select("sh"), "sh").localCheckpoint()
@@ -1005,7 +993,7 @@ object Dedup {
                        k: Int = 3, dfCap: Long = 20L,
                        topK: Int = 20): DataFrame = {
     val sh = docs.select(col(idCol).as("doc_id"),
-        explode(nativeShingles(docs, textCol, k)).as("sh"))
+        explode(TextExprs.shingles(textCol, k)).as("sh"))
     val dfTbl = sh.groupBy("sh").agg(count(lit(1)).as("df"))
       .where(col("df") <= dfCap)
     val n = docs.agg(count(lit(1)).cast("double").as("nd"))
@@ -1108,10 +1096,9 @@ object Dedup {
               maxId: Long = 200L): DataFrame = {
     import graft.rel.Queries.{dsum, femit}
     val s = docs.sparkSession
-    graft.functions.TextExprs.register(s)
     val sh = docs.where(col("doc_id") < maxId)
       .select(col("doc_id"),
-        graft.functions.TextExprs.shingles("text", 3).as("sh"))
+        TextExprs.shingles("text", 3).as("sh"))
       .where(size(col("sh")) > 0)
     val pairs = sh.as("a").join(sh.as("b"),
         col("a.doc_id") < col("b.doc_id"))
@@ -1231,7 +1218,7 @@ object Dedup {
   def sourceOverlapMatrix(docs: DataFrame): DataFrame = {
     import graft.rel.Queries.femit
     val ss = docs.select(col("source"),
-        explode(nativeShingles(docs, "text", 3)).as("g"))
+        explode(TextExprs.shingles("text", 3)).as("g"))
       .distinct()
       .localCheckpoint() // feeds the per-source totals AND the pair join
     val base = ss.groupBy("source").agg(count(lit(1)).as("n_sh"))

@@ -204,7 +204,6 @@ object Multimodal {
     * unlike q38's JVM-hash stub the WHOLE pipeline is DuckDB-oracled
     * (q61); a real decoder swaps into the same row shape. */
   def frameSample(docs: DataFrame, stride: Int = 4): DataFrame = {
-    graft.functions.HashExprs.register(docs.sparkSession)
     docs
       .select(col("doc_id"), col("text"),
         (lit(1L) + pmod(graft.functions.HashExprs.fnv1a32("text"), lit(32L)))
@@ -241,7 +240,6 @@ object Multimodal {
     * formulation — no dim× row explosion; the shuffle carries
     * doc-grain partial sums only). */
   def perceptualCoeffs(docs: DataFrame, dim: Int = 64): DataFrame = {
-    graft.functions.HashExprs.register(docs.sparkSession)
     // One full token hash + the ':p' prefix folded once per row; each
     // of the 64 suffixed hashes is then a 1-2-step constant fold on
     // that shared state — bit-identical to fnv1a32(concat(tok,':pj'))
@@ -428,7 +426,6 @@ object Multimodal {
     * way overlapping videos share frame hashes. A real decoder swaps
     * in at this one projection. */
   def frameFingerprints(docs: DataFrame, seg: Int = 4): DataFrame = {
-    graft.functions.HashExprs.register(docs.sparkSession)
     docs
       .select(col("doc_id"),
         expr("filter(split(text, ' ', -1), t -> t != '')").as("ts"))

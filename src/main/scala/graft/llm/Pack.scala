@@ -206,7 +206,6 @@ object Pack {
     * compact row per doc before the exchange. */
   def rendezvousShards(docs: DataFrame, nShards: Int = 8,
                        dropId: Int = 3): DataFrame = {
-    graft.functions.HashExprs.register(docs.sparkSession)
     val scored = docs.select(col("doc_id"),
         explode(sequence(lit(0L), lit(nShards - 1L))).as("s"))
       .select(col("doc_id"), col("s"),

@@ -407,8 +407,6 @@ object Queries {
     // pins the sketch's actual cells and its overestimates — not just
     // a collision-free projection.
     "q117_cms_freq" -> ((s, dir) => {
-      graft.functions.SketchAggs.register(s)
-      graft.functions.HashExprs.register(s)
       val tok = tbl(s, dir, "documents")
         .select(explode(split(col("text"), " ", -1)).as("tok"))
         .where(col("tok") =!= "")
@@ -437,7 +435,6 @@ object Queries {
     // integer inputs, so they match bit-for-bit (round(6) is belt and
     // braces on the ratio only).
     "q123_kmv_distinct" -> ((s, dir) => {
-      graft.functions.SketchAggs.register(s)
       val k = 32
       val ev = graft.rel.Queries.events(s, dir)
         .select(col("event_type"), col("user_id").cast("string").as("uid"))
@@ -473,7 +470,6 @@ object Queries {
     // list math on already-reduced data. All hashes portable FNV, so
     // DuckDB recomputes every kept set and estimate bit-for-bit.
     "q135_kmv_set_ops" -> ((s, dir) => {
-      graft.functions.SketchAggs.register(s)
       val k = 32
       val ev = graft.rel.Queries.events(s, dir)
         .select(col("event_type"), col("user_id").cast("string").as("uid"))

@@ -493,8 +493,6 @@ object Sim {
     * bit-identical results as [[cosineKnn]], with the per-pair math in a
     * fused whole-stage-codegen loop instead of interpreted HOF lambdas. */
   def cosineKnnNative(emb: DataFrame, nQuery: Int, k: Int): DataFrame = {
-    val spark = emb.sparkSession
-    graft.functions.VectorExprs.register(spark)
     val v = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val q = v.select(col("vec_id").as("qid"), col("v").as("qv"))
       .where(col("qid") < nQuery)
@@ -524,7 +522,6 @@ object Sim {
   /** Single-table sign-bit LSH bucket id via the native fused-loop
     * expression (= first table of [[graft.functions.SignBands]]). */
   def lshBucket(df: DataFrame, v: String, nPlanes: Int, dim: Int): Column = {
-    graft.functions.VectorExprs.register(df.sparkSession)
     element_at(graft.functions.VectorExprs.lshBands(v, 1, nPlanes, dim), 1)
   }
 
@@ -542,7 +539,6 @@ object Sim {
     * paths. One narrow codegen'd projection, no shuffle. */
   private def banded(emb: DataFrame, nTables: Int, bandPlanes: Int,
                      dim: Int): DataFrame = {
-    graft.functions.VectorExprs.register(emb.sparkSession)
     emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
       .select(col("vec_id"), col("v"),
         posexplode(graft.functions.VectorExprs.lshBands("v", nTables, bandPlanes, dim))
@@ -1505,7 +1501,6 @@ object Sim {
                        maxId: Long = 30): DataFrame = {
     import graft.rel.Queries.femit
     val s = emb.sparkSession
-    graft.functions.HashExprs.register(s)
     val seed = graft.functions.Fnv1a32.Seed
     // sign = whether bit 19 of the hash falls low — NOT parity: the
     // low bit of FNV-1a is the XOR of the input characters' low bits
@@ -2589,7 +2584,6 @@ object Sim {
   def coresetKmeans(emb: DataFrame, nlist: Int = 4, m: Int = 64)
       : DataFrame = {
     import graft.rel.Queries.{dsum, femit}
-    graft.functions.HashExprs.register(emb.sparkSession)
     val v = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
       .withColumn("norm", norm(col("v")))
       .localCheckpoint() // mean agg + d2 pass + both assignments
@@ -2653,7 +2647,6 @@ object Sim {
     * what keeps q378 a full value oracle. A real multi-vector encoder
     * swaps in at this one relation; every consumer is unchanged. */
   def tokenVectors(emb: DataFrame, maxTok: Int = 8): DataFrame = {
-    graft.functions.HashExprs.register(emb.sparkSession)
     emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
       .withColumn("n_tok", lit(1L) + pmod(
         graft.functions.HashExprs

@@ -891,7 +891,6 @@ object TextAnalysis {
     * the 100 TB fingerprinter. Output: (doc_id, n_kgrams, n_fps,
     * density). */
   def winnow(docs: DataFrame, k: Int = 3, w: Int = 4): DataFrame = {
-    graft.functions.HashExprs.register(docs.sparkSession)
     val seed = graft.functions.Fnv1a32.Seed
     val kg = docs
       .select(col("doc_id"), toks(col("text")).as("ts"))
@@ -1604,7 +1603,6 @@ object TextAnalysis {
   def negativeSamplingTable(docs: DataFrame, power: Double = 0.75,
                             nDraws: Int = 10000): DataFrame = {
     import graft.rel.Queries.femit
-    graft.functions.HashExprs.register(docs.sparkSession)
     val tf = docs.select(explode(toks(col("text"))).as("t"))
       .groupBy("t").agg(count(lit(1)).as("cnt"))
     val celled = tf
@@ -1678,7 +1676,6 @@ object TextAnalysis {
   def noveltyCurve(docs: DataFrame, nBuckets: Int = 10): DataFrame = {
     import graft.rel.Queries.{dsum, femit}
     val maxId = docs.agg(max(col("doc_id"))).head.getLong(0) + 1
-    graft.functions.TextExprs.register(docs.sparkSession)
     val sh = docs.select(col("doc_id"),
         explode(graft.functions.TextExprs.shingles("text", 3)).as("g"))
       .localCheckpoint() // feeds the first-occurrence agg AND the per-doc join
@@ -1894,8 +1891,6 @@ object TextAnalysis {
     * never activate), and shingle-space size is the statistic the
     * dedup planners (q323's histogram, bucket sizing) actually need. */
   private def kmvHashes(docs: DataFrame): DataFrame = {
-    graft.functions.HashExprs.register(docs.sparkSession)
-    graft.functions.TextExprs.register(docs.sparkSession)
     docs.select(col("source"),
         explode(graft.functions.TextExprs.shingles("text", 3)).as("tok"))
       .distinct()
@@ -2280,7 +2275,6 @@ object TextAnalysis {
   def bloomFilter(docs: DataFrame, memberLang: String = "en",
                   mBits: Int = 32768, kHash: Int = 4): DataFrame = {
     import graft.rel.Queries.femit
-    graft.functions.HashExprs.register(docs.sparkSession)
     require(mBits % 32 == 0, "mBits must pack into 32-bit words")
     val tok = docs.select(col("lang"), explode(toks(col("text"))).as("t"))
       .distinct()
@@ -2646,7 +2640,6 @@ object TextAnalysis {
     * pair audit touches the bounded probe slice only. */
   def featureHashing(docs: DataFrame, dBuckets: Int = 16,
                      nPairs: Int = 25): DataFrame = {
-    graft.functions.HashExprs.register(docs.sparkSession)
     val tok = docs.select(col("doc_id"), explode(toks(col("text"))).as("tok"))
     val bucketOf = pmod(graft.functions.HashExprs
       .fnv1a32("concat(tok, ':fh')"), lit(dBuckets.toLong))

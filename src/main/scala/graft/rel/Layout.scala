@@ -203,7 +203,6 @@ object Layout {
     * integer math), so the pruned set itself is reproducible. */
   def bloomPrune(fact: DataFrame, factKey: String, dim: DataFrame,
                  dimKey: String, bits: Int = 1 << 16, k: Int = 3): DataFrame = {
-    graft.functions.HashExprs.register(fact.sparkSession)
     def posSql(key: String, i: Int): String =
       s"pmod(fnv1a32(CAST($key AS STRING), ${graft.functions.Fnv1a32.Seed}L) " +
         s"+ ${i}L * fnv1a32(CAST($key AS STRING), ${graft.functions.Fnv1a32.Seed2}L), ${bits}L)"
@@ -309,8 +308,6 @@ object Layout {
   def joinSizeEstimate(left: DataFrame, leftKey: String,
                        right: DataFrame, rightKey: String,
                        k: Int = 64): DataFrame = {
-    val s = left.sparkSession
-    graft.functions.HashExprs.register(s)
     val full = lit(4294967296L)
     def side(df: DataFrame, key: String, cn: String): DataFrame =
       df.groupBy(col(key).cast("string").as("key"))

@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 
-/** GraftExtensions must make the native functions reachable from plain
-  * `spark.sql` with no imperative registration — the spark.sql.extensions
-  * wiring a library user would configure. */
+/** GraftExtensions is the only wiring path for the native functions:
+  * all seven must be reachable from plain `spark.sql` in a session that
+  * installs nothing but the extension. */
 class ExtensionsSpec extends SparkSpec {
 
   test("GraftExtensions wires native functions into plain spark.sql") {
@@ -19,10 +19,26 @@ class ExtensionsSpec extends SparkSpec {
       val r = s2.sql(
         "SELECT cosine_sim(array(3.0d, 4.0d), array(3.0d, 4.0d)) AS c, " +
           "shingles('a b c d', 3) AS sh, " +
-          "lsh_bands(array(1.0d), 2, 4, 1) AS bands").head()
+          "lsh_bands(array(1.0d), 2, 4, 1) AS bands, " +
+          "fnv1a32('abc', 2166136261L) AS h, " +
+          "cms_sketch(t, 2, 8) AS cms, kmv_sketch(t, 4) AS kmv, " +
+          "topk_rows(named_struct('v', v, 't', t), 2) AS top " +
+          "FROM VALUES ('x', 3L), ('y', 1L), ('x', 2L) AS tab(t, v)").head()
       assert(math.abs(r.getDouble(0) - 1.0) < 1e-15)
       assert(r.getSeq[String](1) == Seq("a b c", "b c d"))
       assert(r.getSeq[Long](2).length == 2)
+      // PropertySpec's independent per-code-point FNV-1a fold
+      def fnv(s: String): Long = s.codePoints().toArray.foldLeft(
+        functions.Fnv1a32.Seed)((h, c) => ((h ^ c) * 16777619L) & 0xFFFFFFFFL)
+      assert(r.getLong(3) == fnv("abc"))
+      // depth x width grid; each of the 3 rows adds 1 to one cell per row
+      val cms = r.getSeq[Long](4)
+      assert(cms.length == 2 * 8 && cms.grouped(8).forall(_.sum == 3))
+      // 2 distinct values < k: the exact distinct hash set, ascending
+      assert(r.getSeq[Long](5) == Seq(fnv("x"), fnv("y")).sorted)
+      // the k smallest structs, ascending
+      val top = r.getSeq[Row](6).map(t => (t.getLong(0), t.getString(1)))
+      assert(top == Seq((1L, "y"), (2L, "x")))
     } finally {
       SparkSession.setActiveSession(base)
       SparkSession.setDefaultSession(base)

@@ -47,7 +47,6 @@ class PropertySpec extends SparkSpec {
     val texts = Seq("", "a", "tok", "ä日😀", "x:y|z", "𝔘𝔘𝔘")
     val rows = for (t <- texts; sfx <- suffixes) yield (t, t + sfx, sfx)
     val df = rows.toDF("t", "cat", "sfx").localCheckpoint()
-    functions.HashExprs.register(spark)
     suffixes.foreach { sfx =>
       val got = df.where(col("sfx") === sfx).select(
         functions.HashExprs.fnvFoldConst(
@@ -63,7 +62,6 @@ class PropertySpec extends SparkSpec {
   // the exact expression the bootstrap operators replaced.
   test("fnvFoldSmallInt(h, b) == fnv1a32(concat(x, ':', b)) for b in 0..99 (r15)") {
     import spark.implicits._
-    functions.HashExprs.register(spark)
     val df = (0 until 100).map(b => ("ev" + (b * 37) + "x", b)).toDF("t", "b")
     val hpre = functions.HashExprs.fnvFoldConst(
       functions.HashExprs.fnv1a32("t"), ":")

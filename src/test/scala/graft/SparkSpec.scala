@@ -3,21 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all specs (one JVM-wide session). */
+/** Shared local SparkSession for all specs (one JVM-wide session).
+  * Pinned to 4 cores whatever `$SPARK_GRAFT_CPUS` says, with a
+  * throwaway warehouse. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val warehouse = java.nio.file.Files.createTempDirectory("graft-warehouse")
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", warehouse.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session.local(4,
+    java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
 }
 
 abstract class SparkSpec extends AnyFunSuite {

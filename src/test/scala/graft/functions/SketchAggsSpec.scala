@@ -13,7 +13,6 @@ class SketchAggsSpec extends SparkSpec {
   private val W = 64
 
   private def sketchOf(df: org.apache.spark.sql.DataFrame): Array[Long] = {
-    SketchAggs.register(spark)
     df.agg(SketchAggs.cmsSketch("tok", D, W).as("sk"))
       .collect().head.getSeq[Long](0).toArray
   }
@@ -70,7 +69,6 @@ class SketchAggsSpec extends SparkSpec {
   private val K = 16
 
   private def kmvOf(df: org.apache.spark.sql.DataFrame): Seq[Long] = {
-    SketchAggs.register(spark)
     df.agg(SketchAggs.kmvSketch("tok", K).as("mins"))
       .collect().head.getSeq[Long](0)
   }

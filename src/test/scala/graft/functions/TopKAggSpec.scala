@@ -12,7 +12,6 @@ class TopKAggSpec extends SparkSpec {
   private def orders = spark.read.parquet(s"$sf0001/orders.parquet")
 
   private def viaAgg(df: org.apache.spark.sql.DataFrame, k: Int) = {
-    TopKAgg.register(spark)
     df.groupBy("o_orderpriority")
       .agg(TopKAgg.topkRows(
         "named_struct('negprice', -o_totalprice, 'o_orderkey', o_orderkey)", k)

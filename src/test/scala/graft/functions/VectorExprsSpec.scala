@@ -26,7 +26,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("cosine_sim participates in whole-stage codegen") {
-    VectorExprs.register(spark)
     // spark.range (not a local Seq, which constant-folds to LocalTableScan)
     val df = spark.range(1, 100)
       .select(array((col("id") + 1).cast("double"), lit(2.0), lit(3.0)).as("v"))
@@ -40,7 +39,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("cosine_sim is SQL-callable after registration") {
-    VectorExprs.register(spark)
     val r = spark.sql(
       "SELECT cosine_sim(CAST(array(1.0, 0.0) AS ARRAY<DOUBLE>), CAST(array(0.0, 1.0) AS ARRAY<DOUBLE>)) AS s")
       .collect().head.getDouble(0)

@@ -26,7 +26,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("native ShingleArray equals the HOF shingle form on the real corpus") {
-    graft.functions.TextExprs.register(spark)
     val real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val edge = Seq((9001L, ""), (9002L, "a b"), (9003L, "a  b c "), (9004L, "x y x y x y"))
       .toDF("doc_id", "text")
@@ -68,7 +67,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhashAgg (codegen form) equals the per-row fold form") {
-    graft.functions.HashExprs.register(spark)
     val perRow = docs
       .select(col("doc_id"),
         Dedup.tokenHashes("text", graft.functions.Fnv1a32.Seed2).as("hh"),
@@ -190,7 +188,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("fnv1a32 matches published FNV-1a vectors and stays in [0, 2^32)") {
-    graft.functions.HashExprs.register(spark)
     val got = Seq((0L, ""), (1L, "a"), (2L, "abc"), (3L, "the quick brown"),
       (4L, "42 dozen -7 +3."))
       .toDF("id", "s")

@@ -616,7 +616,6 @@ class Round10OpsSpec extends SparkSpec {
     val out = TextAnalysis.noveltyCurve(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getDouble(4))).sortBy(_._1)
-    graft.functions.TextExprs.register(spark)
     val distinctShingles = docs
       .select(explode(graft.functions.TextExprs.shingles("text", 3)).as("g"))
       .distinct().count()

@@ -872,7 +872,6 @@ class RelSpec extends SparkSpec {
     }
     // pin the derandomized draw's marginal: over events x replicates,
     // mean(w) ~ 1 and P(w = 0) ~ e^-1 (the Poisson(1) signature)
-    graft.functions.HashExprs.register(spark)
     val u = graft.functions.HashExprs.fnv1a32(
       "concat(cast(event_id as string), ':', cast(b as string), ':boot')")
       .cast("double") / lit(4294967296.0)
