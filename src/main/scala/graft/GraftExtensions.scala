@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{CmsSketch, CosineSim, Fnv1a32, HashExprs, KmvSketch, ShingleArray, SignBands, SketchAggs, TextExprs, TopKAgg, VectorExprs}
+import graft.functions.{CmsSketch, CoPairs, CosineSim, Fnv1a32, HashExprs, KmvSketch, ShingleArray, SignBands, SketchAggs, TextExprs, TokCats, TopKAgg, VectorExprs}
 
 /** The one wiring path for graft's native functions: injects each
   * builder into the session's function registry when the session state
@@ -50,5 +50,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("topk_rows"),
       new ExpressionInfo(classOf[TopKAgg].getName, "topk_rows"),
       TopKAgg.topkRowsBuilder))
+    ext.injectFunction((
+      FunctionIdentifier("tok_cats"),
+      new ExpressionInfo(classOf[TokCats].getName, "tok_cats"),
+      TextExprs.tokCatsBuilder))
+    ext.injectFunction((
+      FunctionIdentifier("co_pairs"),
+      new ExpressionInfo(classOf[CoPairs].getName, "co_pairs"),
+      TextExprs.coPairsBuilder))
   }
 }

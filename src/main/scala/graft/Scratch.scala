@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * checkpoints (the `target/graft_io` tree). Derived from the
   * `SPARK_GRAFT_SCRATCH` env var (the Bench `SPARK_GRAFT_BENCH_OUT`
   * pattern) so the repo location is not baked into the code; the
-  * default keeps the historical path.
+  * default is `target/graft_io` under the working directory.
   *
   * Local-mode assumption, stated once: several fixtures write blobs or
   * sliced source files to this root from executor code (q95's
@@ -19,7 +19,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Scratch {
   val root: String =
-    sys.env.getOrElse("SPARK_GRAFT_SCRATCH", "/root/repo/target/graft_io")
+    sys.env.getOrElse("SPARK_GRAFT_SCRATCH",
+      Paths.get(sys.props("user.dir"), "target", "graft_io").toString)
 
   /** `root`/`name` as a String path (convenience for query bodies). */
   def dir(name: String): String = s"$root/$name"

@@ -1,34 +1,37 @@
 package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.functions.TextExprs
 
 /** Word-count / pairs / stripes operators (reference parity, SURVEY.md §2
   * O5, O7–O11).
   *
-  * Two interchangeable pair-generation strategies, cross-checked against
-  * each other and a plain-Scala reference in the test suite:
+  * Rows are generated inside the scan task, as the reference mapper
+  * does: the native `tok_cats` (tokens with their categories) and
+  * `co_pairs` (forward same-category pairs) are one whole-stage-
+  * codegen'd call per line, and the counting groupBy's map-side partial
+  * aggregation is the reference's combiner (`HadoopWordCount.java:119`).
+  * No token row is shuffled, so no single long line turns into a
+  * straggler. Both kernels need [[graft.GraftExtensions]] in the session.
   *
-  *  - [[pairsViaWindow]] (default): posexplode + window `lead(d)` —
-  *    whole-stage-codegen'd end to end; one shuffle partitioned by line
-  *    id (horizontally scalable; skew only on pathological single lines),
-  *    then the counting groupBy with map-side partial aggregation (the
-  *    reference's combiner, `HadoopWordCount.java:119`, for free).
-  *  - [[pairsViaArrays]]: generation inside each source row with
-  *    higher-order array functions — zero pre-aggregation shuffle, but
-  *    Spark evaluates HOF lambdas interpreted (measured 6–8× slower),
-  *    so it serves as the independent oracle rather than the default.
+  * [[pairsViaArrays]] generates the same pairs with higher-order array
+  * functions over [[Tokenize.tokCats]]; Spark evaluates those
+  * interpreted, so it is the independent test oracle for [[pairs]],
+  * never a production path.
   */
 object CoOccur {
-  import Tokenize.{category, tokCats}
+
+  private def text(textCol: String, lowercase: Boolean): Column =
+    if (lowercase) lower(col(textCol)) else col(textCol)
 
   /** O5: per-category token frequency: (category, tok, cnt).
     * Reference: `HadoopWordCount.java:66-79` (reduce = sum of ones). */
   def wordCount(lines: DataFrame, textCol: String,
                 lowercase: Boolean = false): DataFrame =
     lines
-      .select(explode(tokCats(col(textCol), lowercase)).as("t"))
+      .select(explode(TextExprs.tokCats(text(textCol, lowercase))).as("t"))
       .select(col("t.tok").as("tok"), col("t.cat").as("category"))
       .where(col("category").isNotNull)
       .groupBy("category", "tok")
@@ -45,13 +48,15 @@ object CoOccur {
       .select("tok", "cnt")
       .limit(k)
 
-  /** Forward windowed pair array for one line: all (w1=tok[i], w2=tok[j])
-    * with i &lt; j ≤ i+m, both tokens in the *same* category (cross-
-    * category and category-less neighbors are skipped but still occupy
-    * positions). m=1 is O7 (`HadoopWordPairs.java:30-81`), general m is
-    * O8 (`HadoopWordPairs2.java:28-79`: partner indices i+1..min(i+m,
+  /** Forward windowed pair array for one line, in higher-order array
+    * functions: all (w1=tok[i], w2=tok[j]) with i &lt; j ≤ i+m, both
+    * tokens in the *same* category (cross-category and category-less
+    * neighbors are skipped but still occupy positions). m=1 is O7
+    * (`HadoopWordPairs.java:30-81`), general m is O8
+    * (`HadoopWordPairs2.java:28-79`: partner indices i+1..min(i+m,
     * len-1), same-regex check at :61-62). Pairs are ordered (left:right),
-    * never canonicalized, and never cross line boundaries. */
+    * never canonicalized, and never cross line boundaries. The oracle
+    * twin of the native `co_pairs`. */
   def pairArray(text: Column, m: Int): Column = {
     // Bind the token-category array once: lambda bodies referencing an
     // outer *expression* re-evaluate it per element (O(len²) tokenization
@@ -62,74 +67,27 @@ object CoOccur {
         filter(slice(ts, i + lit(2), lit(m)),
           y => x("cat").isNotNull && y("cat") === x("cat")),
         y => struct(x("tok").as("w1"), y("tok").as("w2")))))
-    element_at(transform(array(tokCats(text)), ts => pairsOf(ts)), 1)
+    element_at(transform(array(Tokenize.tokCats(text)), ts => pairsOf(ts)), 1)
   }
 
-  /** O7/O8 aggregated: (w1, w2, cnt) over all lines.
-    *
-    * Default implementation is [[pairsViaWindow]] (codegen'd posexplode +
-    * window-lead: measured 6–8× faster than the higher-order-function
-    * array form, which Spark evaluates interpreted). A synthetic line id
-    * is attached only as the window partition key. */
-  def pairs(lines: DataFrame, textCol: String, m: Int,
-            lowercase: Boolean = false): DataFrame =
-    pairsViaWindow(
-      lines.withColumn("__line_id", monotonically_increasing_id()),
-      "__line_id", textCol, m, lowercase)
-
-  /** Array-combinator pair generation — zero pre-aggregation shuffle
-    * (generation happens inside each source row), at the cost of
-    * interpreted higher-order-function evaluation. Kept as the
-    * independent implementation oracle for [[pairsViaWindow]] and as the
-    * shape to revisit if Spark ever codegens HOFs. */
-  def pairsViaArrays(lines: DataFrame, textCol: String, m: Int,
-                     lowercase: Boolean = false): DataFrame = {
-    val txt = if (lowercase) lower(col(textCol)) else col(textCol)
+  private def countPairs(lines: DataFrame, gen: Column): DataFrame =
     lines
-      .select(explode(pairArray(txt, m)).as("p"))
+      .select(explode(gen).as("p"))
       .select(col("p.w1").as("w1"), col("p.w2").as("w2"))
       .groupBy("w1", "w2")
       .agg(count(lit(1)).as("cnt"))
-  }
 
-  /** Pair generation via one window shuffle + lead(d) per distance
-    * d ∈ 1..m. Whole-stage-codegen'd end to end.
-    *
-    * Skew guard: the window partitions by (line id, chunk) where
-    * chunk = pos DIV chunkSize. A token within m positions of a chunk
-    * start is ALSO emitted into the preceding chunk as a carry row —
-    * a lead candidate only, filtered before pair emission — so every
-    * pair is produced exactly once (positions within a partition stay
-    * dense and unique) while a pathological multi-gigabyte line spreads
-    * over len/chunkSize window partitions instead of serializing into
-    * one straggler task (SURVEY.md §7.4). The default chunkSize keeps
-    * ordinary corpora at one chunk per line — same partitioning as the
-    * unchunked form; chunked≡unchunked is property-tested against the
-    * plain-Scala reference in CoOccurSpec. */
-  def pairsViaWindow(lines: DataFrame, idCol: String, textCol: String,
-                     m: Int, lowercase: Boolean = false,
-                     chunkSize: Int = 1 << 15): DataFrame = {
-    require(chunkSize > m, s"chunkSize ($chunkSize) must exceed m ($m)")
-    val base = struct(expr(s"pos DIV $chunkSize").as("c"), lit(false).as("carry"))
-    val dup = struct(expr(s"pos DIV $chunkSize - 1").as("c"), lit(true).as("carry"))
-    val t = Tokenize.tokens(lines, idCol, textCol, lowercase)
-      .select(col("line_id"), col("pos"), col("tok"), col("category"),
-        explode(when(col("pos") % chunkSize < m && col("pos") >= chunkSize,
-          array(base, dup)).otherwise(array(base))).as("a"))
-      .select(col("line_id"), col("pos"), col("tok"), col("category"),
-        col("a.c").as("chunk"), col("a.carry").as("carry"))
-    val w = Window.partitionBy("line_id", "chunk").orderBy("pos")
-    val leads = (1 to m).map(d =>
-      lead(struct(col("tok"), col("category")), d).over(w).as(s"lead_$d"))
-    t.select((col("tok") +: col("category") +: col("carry") +: leads): _*)
-      .where(!col("carry"))
-      .select(col("tok").as("w1"), col("category").as("cat"),
-        explode(array((1 to m).map(d => col(s"lead_$d")): _*)).as("y"))
-      .where(col("cat").isNotNull && col("y.category") === col("cat"))
-      .select(col("w1"), col("y.tok").as("w2"))
-      .groupBy("w1", "w2")
-      .agg(count(lit(1)).as("cnt"))
-  }
+  /** O7/O8 aggregated: (w1, w2, cnt) over all lines — `co_pairs` per
+    * line, then the counting groupBy. */
+  def pairs(lines: DataFrame, textCol: String, m: Int,
+            lowercase: Boolean = false): DataFrame =
+    countPairs(lines, TextExprs.coPairs(text(textCol, lowercase), m))
+
+  /** [[pairs]] through [[pairArray]]: the independent oracle of the
+    * native pair kernel (interpreted, test use only). */
+  def pairsViaArrays(lines: DataFrame, textCol: String, m: Int,
+                     lowercase: Boolean = false): DataFrame =
+    countPairs(lines, pairArray(text(textCol, lowercase), m))
 
   /** O9/O10 exploded stripes: (word, neighbor, cnt) where cnt counts
     * occurrences of `neighbor` within m positions of `word` on EITHER
@@ -163,9 +121,8 @@ object CoOccur {
     * goldens instead. */
   def stripesMap(lines: DataFrame, textCol: String, m: Int,
                  lowercase: Boolean = false): DataFrame = {
-    val txt = if (lowercase) lower(col(textCol)) else col(textCol)
     val words = lines
-      .select(explode(tokCats(txt)).as("t"))
+      .select(explode(TextExprs.tokCats(text(textCol, lowercase))).as("t"))
       .where(col("t.cat").isNotNull)
       .select(col("t.tok").as("word"))
       .distinct()

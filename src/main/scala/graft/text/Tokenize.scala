@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextExprs
+
 /** Tokenization + 2-way token classification core (reference parity).
   *
   * Semantics derived from the reference corpus (see SURVEY.md §1–2):
@@ -14,18 +16,21 @@ import org.apache.spark.sql.functions._
   *  - every token is classified whole-match into exactly one of two
   *    disjoint categories (reference `HadoopWordCount.java:39-40`):
   *      alpha: ^[a-z-_]+$   num: ^[-+]?[0-9]+[.]{0,1}[0-9]*$
-  *    Non-matching tokens (uppercase, `2.5.5`, `.5`, punctuation, "")
+  *    Non-matching tokens (uppercase, `2.5.5`, `.5`, punctuation, "",
+  *    and a token ending in a line terminator such as "abc\n")
   *    belong to no category (`category` is NULL).
   *  - case folding is an explicit parameter: the five Hadoop jobs never
   *    lowercase, `SparkWordCount.scala:29` does (SURVEY.md §7.4a).
   *
-  * Scale posture: everything here is a narrow, codegen'd projection over
-  * the source rows — no shuffle is introduced before the first aggregate,
-  * so the work distributes trivially across any number of executors and
-  * partial aggregation (the reference's "combiner") applies downstream.
+  * The production operators ([[tokens]], [[CoOccur]]) run the native
+  * `tok_cats` / `co_pairs` kernels of [[graft.functions.TextExprs]]: one
+  * codegen'd call per line, no shuffle before the first aggregate.
+  * [[category]] and [[tokCats]] are their column-expression twins, kept
+  * as the independent test oracle.
   */
 object Tokenize {
-  /** Alpha-word category regex — reference `HadoopWordCount.java:39`. */
+  /** Alpha-word category regex — reference `HadoopWordCount.java:39`.
+    * Whole-match semantics (`matches()`, DuckDB `regexp_full_match`). */
   val AlphaRe = "^[a-z-_]+$"
   /** Number category regex — reference `HadoopWordCount.java:40`. We use
     * the standard variant everywhere; the `HadoopWordStripes.java:40`
@@ -33,21 +38,25 @@ object Tokenize {
     * (SURVEY.md §2 O9) that we intentionally do not reproduce. */
   val NumRe = "^[-+]?[0-9]+[.]{0,1}[0-9]*$"
 
-  /** Category of a token: "alpha", "num", or NULL (no category).
-    * `rlike` uses java.util.regex — the same engine as the reference —
-    * and the patterns are ^$-anchored, so find() ≡ full match. */
-  def category(tok: Column): Column =
-    when(tok.rlike(AlphaRe), "alpha").when(tok.rlike(NumRe), "num")
+  // `rlike` calls `find()`, where `$` also matches before a final line
+  // terminator; anchoring at `\z` (the very end) makes find() ≡ whole
+  // match. The oracle SQL keeps the `$` forms for `regexp_full_match`.
+  private val AlphaFind = AlphaRe.stripSuffix("$") + "\\z"
+  private val NumFind = NumRe.stripSuffix("$") + "\\z"
 
-  /** Split a line into its token array (literal single-space delimiter,
-    * keep empty tokens: limit -1 ≈ Java split except trailing empties,
-    * which are category-less and therefore semantically inert). */
+  /** Category of a token: "alpha", "num", or NULL (no category). */
+  def category(tok: Column): Column =
+    when(tok.rlike(AlphaFind), "alpha").when(tok.rlike(NumFind), "num")
+
+  /** Split a line into its token array: literal single-space delimiter,
+    * Java `split(" ", -1)` semantics — empty tokens kept, trailing ones
+    * included. */
   def toks(text: Column, lowercase: Boolean = false): Column =
     split(if (lowercase) lower(text) else text, " ", -1)
 
   /** Token array zipped with per-token category:
-    * array&lt;struct&lt;tok,cat&gt;&gt;. The building block for the
-    * shuffle-free co-occurrence generators in [[CoOccur]]. */
+    * array&lt;struct&lt;tok,cat&gt;&gt;, in higher-order functions —
+    * the oracle twin of the native `tok_cats`. */
   def tokCats(text: Column, lowercase: Boolean = false): Column =
     transform(toks(text, lowercase), t => struct(t.as("tok"), category(t).as("cat")))
 
@@ -57,9 +66,12 @@ object Tokenize {
     * reference where `lastWord` advances over every token,
     * `HadoopWordPairs.java:78`). */
   def tokens(lines: DataFrame, idCol: String, textCol: String,
-             lowercase: Boolean = false): DataFrame =
+             lowercase: Boolean = false): DataFrame = {
+    val text = if (lowercase) lower(col(textCol)) else col(textCol)
     lines
       .select(col(idCol).as("line_id"),
-        posexplode(toks(col(textCol), lowercase)).as(Seq("pos", "tok")))
-      .withColumn("category", category(col("tok")))
+        posexplode(TextExprs.tokCats(text)).as(Seq("pos", "t")))
+      .select(col("line_id"), col("pos"), col("t.tok").as("tok"),
+        col("t.cat").as("category"))
+  }
 }

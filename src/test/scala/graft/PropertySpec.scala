@@ -6,9 +6,10 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Generative properties for the invariants the example-based specs
   * can't sweep: hash portability across the full unicode range, and
-  * partitioning-parameter invariance of the chunked/salted operators
-  * (results must be IDENTICAL for every legal chunk size / salt
-  * factor — the parameters exist for scale, not semantics). */
+  * partitioning-parameter invariance of the salted operators (results
+  * must be IDENTICAL for every legal salt factor — the parameter exists
+  * for scale, not semantics), and the native text kernels against
+  * their independent twins. */
 class PropertySpec extends SparkSpec {
 
   private def check(label: String, trials: Int, p: Prop): Unit = {
@@ -114,21 +115,47 @@ class PropertySpec extends SparkSpec {
     })
   }
 
-  test("chunked pair generation is chunk-size invariant (≡ reference)") {
+  test("co_pairs equals the reference on long random lines, m in 1..4") {
     import spark.implicits._
     val vocab = Seq("am", "big", "7", "42", "Zz", "", "x-y", "q_r")
-    check("chunks", 6, Prop.forAll(
-      Gen.chooseNum(5, 9), // chunkSize — small so chunking engages
+    check("co_pairs", 6, Prop.forAll(
       Gen.chooseNum(1, 4), // m
-      Gen.chooseNum(1L, 10000L)) { (c, m, seed) =>
+      Gen.chooseNum(1L, 10000L)) { (m, seed) =>
       val rnd = new scala.util.Random(seed)
       val line = Seq.fill(60 + rnd.nextInt(60))(
         vocab(rnd.nextInt(vocab.size))).mkString(" ")
       val df = Seq((0L, line)).toDF("id", "text")
-      val got = text.CoOccur
-        .pairsViaWindow(df, "id", "text", m, chunkSize = c)
+      val got = text.CoOccur.pairs(df, "text", m)
         .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
       got == RefImpl.pairs(Seq(line), m)
+    })
+  }
+
+  // Tokens drawn to hit both category scanners, the regex fallback
+  // (uppercase, non-ASCII, astral code points) and the line terminators
+  // that `$` alone would accept at a token's end; joining with one or
+  // two spaces, plus empty tokens, yields leading/inner/trailing empties.
+  private val genTok: Gen[String] = Gen.frequency(
+    4 -> Gen.listOf(Gen.oneOf("abz-_".toSeq)).map(_.mkString),
+    3 -> Gen.listOf(Gen.oneOf("0123456789.+-".toSeq)).map(_.mkString),
+    3 -> Gen.listOf(Gen.oneOf("aZ9.-+\u00e4\u65e5\n\r\u0085\u2028\u2029".toSeq))
+      .map(_.mkString),
+    1 -> Gen.oneOf("", "\ud83d\ude00", "abc\n", "12\r\n", "abc\u2028", "-7.", "I"))
+  private val genLine: Gen[Option[String]] = Gen.frequency(
+    1 -> Gen.const(None),
+    1 -> Gen.const(Some("")),
+    12 -> Gen.listOf(genTok).flatMap(ts =>
+      Gen.oneOf(" ", "  ").map(sep => Some(ts.mkString(sep)))))
+
+  test("tok_cats equals the higher-order-function tokCats row for row") {
+    import spark.implicits._
+    check("tok_cats", 20, Prop.forAll(Gen.listOfN(25, genLine)) { lines =>
+      def cats(c: org.apache.spark.sql.Column) = lines.toDF("text")
+        .select(c.as("tc")).collect().toSeq.map(r =>
+          Option(r.getSeq[org.apache.spark.sql.Row](0)).map(_.map(t =>
+            (t.getString(0), Option(t.getString(1))))))
+      cats(functions.TextExprs.tokCats(col("text"))) ==
+        cats(text.Tokenize.tokCats(col("text")))
     })
   }
 

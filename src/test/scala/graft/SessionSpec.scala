@@ -40,4 +40,15 @@ class SessionSpec extends AnyFunSuite {
     assert(bad.isEmpty,
       "inject native functions in GraftExtensions, not per session:\n" + bad.mkString("\n"))
   }
+
+  test("every function GraftExtensions injects is called by ExtensionsSpec") {
+    def read(p: String) = new String(Files.readAllBytes(Paths.get(p)), "UTF-8")
+    val injected = """FunctionIdentifier\("([^"]+)"\)""".r
+      .findAllMatchIn(read("src/main/scala/graft/GraftExtensions.scala")).map(_.group(1)).toList
+    val spec = read("src/test/scala/graft/ExtensionsSpec.scala")
+    assert(injected.nonEmpty)
+    val missing = injected.filterNot(f => s"""\\b$f\\(""".r.findFirstIn(spec).nonEmpty)
+    assert(missing.isEmpty, "call these in ExtensionsSpec's plain-session query: " +
+      missing.mkString(", "))
+  }
 }

@@ -91,8 +91,8 @@ class LayoutSpec extends SparkSpec {
     graft.SparkEntry.queries("q63_compaction")(spark, sf0001).collect()
     def parts(p: String) = new java.io.File(p).listFiles()
       .count(f => f.getName.startsWith("part-"))
-    assert(parts("/root/repo/target/graft_io/docs_fragmented") == 64)
-    assert(parts("/root/repo/target/graft_io/docs_compacted") == 4)
+    assert(parts(graft.Scratch.dir("docs_fragmented")) == 64)
+    assert(parts(graft.Scratch.dir("docs_compacted")) == 4)
   }
 
   test("bloom prune: no false negatives, >=4x pruning on the selective dim") {

@@ -15,15 +15,21 @@ class TokenizeSpec extends SparkSpec {
     "20" -> Some("num"), "2.5" -> Some("num"),
     "" -> None, ".5" -> None, "2.5.5" -> None, "am." -> None,
     "I" -> None, "In" -> None, "A" -> None, "a1" -> None,
-    "Weight" -> None, "+" -> None, "-" -> Some("alpha"))
+    "Weight" -> None, "+" -> None, "-" -> Some("alpha"),
+    // whole match: `$` alone would also accept a final line terminator
+    "abc\n" -> None, "abc\r\n" -> None, "abc\u2028" -> None, "12\n" -> None,
+    "12\r" -> None, "-\u0085" -> None, "x\u2029" -> None)
 
   test("category classification matches the reference regexes token-by-token") {
     import spark.implicits._
     val df = cases.map(_._1).toDF("tok")
       .select(col("tok"), category(col("tok")).as("cat"))
-    val got = df.collect().map(r => r.getString(0) -> Option(r.getString(1))).toMap
+      .withColumn("native", graft.functions.TextExprs.tokCats(col("tok"))(0)("cat"))
+    val got = df.collect().map(r =>
+      r.getString(0) -> (Option(r.getString(1)), Option(r.getString(2)))).toMap
     cases.foreach { case (t, expected) =>
-      assert(got(t) == expected, s"token '$t'")
+      assert(got(t)._1 == expected, s"token '$t'")
+      assert(got(t)._2 == expected, s"tok_cats token '$t'")
       assert(RefImpl.cat(t) == expected, s"RefImpl token '$t'")
     }
   }
@@ -98,26 +104,23 @@ class CoOccurSpec extends SparkSpec {
     }
   }
 
-  test("chunked window pairs equal unchunked on a pathological single line") {
-    // One 3000-token line: chunkSize=97 forces ~31 window partitions
-    // with carry rows at every boundary; the result must be identical to
-    // the plain-Scala reference (and the chunking must actually engage).
+  test("co_pairs equals the reference on a pathological 3000-token line") {
+    // One 3000-token line: pairs are generated inside the line's own
+    // row, so the line is never spread over (or skewed into) a shuffle.
     val rnd = new scala.util.Random(13)
     val vocab = Seq("alpha", "beta", "gamma", "7", "42", "Mixed", "", "x-y")
     val giant = Seq.fill(3000)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
-    val df = linesDf(Seq(giant)).withColumn("__line_id", lit(0L))
+    val df = linesDf(Seq(giant))
     for (m <- Seq(1, 3)) {
-      val chunked = pairsMap(
-        CoOccur.pairsViaWindow(df, "__line_id", "text", m, chunkSize = 97))
-      assert(chunked == RefImpl.pairs(Seq(giant), m), s"m=$m")
-      val nChunks = Tokenize.tokens(df, "__line_id", "text")
-        .select((col("pos") / 97).cast("long")).distinct().count()
-      assert(nChunks > 20, s"chunking did not engage: $nChunks")
+      val p = CoOccur.pairs(df, "text", m)
+      assert(pairsMap(p) == RefImpl.pairs(Seq(giant), m), s"m=$m")
+      val plan = p.queryExecution.executedPlan.toString
+      assert(!plan.contains("Window"), plan)
     }
   }
 
-  test("array-combinator pairs equal window-lead pairs (independent implementations)") {
-    for (m <- Seq(1, 3)) {
+  test("array-combinator pairs equal co_pairs pairs, m in 1..4") {
+    for (m <- 1 to 4) {
       val df = linesDf(randomLines(7, 30))
       val a = pairsMap(CoOccur.pairsViaArrays(df, "text", m))
       val b = pairsMap(CoOccur.pairs(df, "text", m))
@@ -140,5 +143,26 @@ class CoOccurSpec extends SparkSpec {
     val wc = CoOccur.wordCount(df, "text")
     val top = CoOccur.topK(wc, "alpha", 2).collect().map(r => (r.getString(0), r.getLong(1)))
     assert(top.toSeq == Seq(("a", 3L), ("b", 3L)))
+  }
+
+  test("pairs_m1 and hadoop_wordcount run with codegen fallback off (sf0.001)") {
+    // A generated-code compile error would otherwise fall back to
+    // interpreted evaluation silently.
+    val key = "spark.sql.codegen.fallback"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+      val lines = docs.select("text").collect().flatMap(r => Option(r.getString(0))).toSeq
+      val p = graft.SparkEntry.queries("pairs_m1")(spark, sf0001)
+      assert(p.collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap ==
+        RefImpl.pairs(lines, 1))
+      val wc = graft.SparkEntry.queries("hadoop_wordcount")(spark, sf0001)
+      assert(wc.collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap ==
+        RefImpl.wordCount(lines, lowercase = false))
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 }
