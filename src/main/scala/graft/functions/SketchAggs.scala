@@ -208,20 +208,14 @@ case class KmvSketch(
 }
 
 object SketchAggs {
-  private def litInt(e: Expression): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-    case other => throw new IllegalArgumentException(
-      s"cms_sketch expects literal integer depth/width, got $other")
-  }
-
   /** Builder shared with [[graft.GraftExtensions]]. */
   val cmsSketchBuilder: Seq[Expression] => Expression =
-    exprs => CmsSketch(exprs.head, litInt(exprs(1)), litInt(exprs(2)))
+    exprs => CmsSketch(exprs.head, litInt("cms_sketch", exprs(1)),
+      litInt("cms_sketch", exprs(2)))
 
   /** Builder shared with [[graft.GraftExtensions]]. */
   val kmvSketchBuilder: Seq[Expression] => Expression =
-    exprs => KmvSketch(exprs.head, litInt(exprs(1)))
+    exprs => KmvSketch(exprs.head, litInt("kmv_sketch", exprs(1)))
 
   /** Column-level handle (via [[graft.GraftExtensions]]). */
   def cmsSketch(sqlExpr: String, depth: Int, width: Int): Column =

@@ -255,13 +255,6 @@ object CoPairs {
 }
 
 object TextExprs {
-  private def litInt(fn: String, e: Expression): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-    case other => throw new IllegalArgumentException(
-      s"$fn expects a literal integer, got $other")
-  }
-
   /** Builders shared with [[graft.GraftExtensions]]. */
   val shinglesBuilder: Seq[Expression] => Expression =
     exprs => ShingleArray(exprs.head, litInt("shingles", exprs(1)))

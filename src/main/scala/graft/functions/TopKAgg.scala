@@ -131,16 +131,9 @@ case class TopKAgg(
 }
 
 object TopKAgg {
-  private def litInt(e: Expression): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-    case other => throw new IllegalArgumentException(
-      s"topk_rows expects a literal integer k, got $other")
-  }
-
   /** Builder shared with [[graft.GraftExtensions]]. */
   val topkRowsBuilder: Seq[Expression] => Expression =
-    exprs => TopKAgg(exprs.head, litInt(exprs(1)))
+    exprs => TopKAgg(exprs.head, litInt("topk_rows", exprs(1)))
 
   /** Column-level handle (via [[graft.GraftExtensions]]). */
   def topkRows(structSqlExpr: String, k: Int): Column =

@@ -193,18 +193,12 @@ case class SignBands(child: Expression, nTables: Int, bandPlanes: Int, dim: Int)
 }
 
 object VectorExprs {
-  private def litInt(e: Expression): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-    case other => throw new IllegalArgumentException(
-      s"lsh_bands expects literal integer parameters, got $other")
-  }
-
   /** Expression builders — injected by [[graft.GraftExtensions]]. */
   val cosineSimBuilder: Seq[Expression] => Expression =
     exprs => CosineSim(exprs.head, exprs(1))
   val lshBandsBuilder: Seq[Expression] => Expression =
-    exprs => SignBands(exprs.head, litInt(exprs(1)), litInt(exprs(2)), litInt(exprs(3)))
+    exprs => SignBands(exprs.head, litInt("lsh_bands", exprs(1)),
+      litInt("lsh_bands", exprs(2)), litInt("lsh_bands", exprs(3)))
 
   /** Column-level handle (via [[graft.GraftExtensions]]): cosine_sim of
     * two columns that must already be array&lt;double&gt;. */

@@ -1767,7 +1767,7 @@ object Queries {
     // inner-product-preservation audit (see TextAnalysis.featureHashing)
     "q440_feature_hashing" -> ((s, dir) =>
       TextAnalysis.featureHashing(tbl(s, dir, "documents"))),
-    // SentencePiece-style unigram-LM Viterbi tokenization, DP unrolled
+    // SentencePiece-style unigram-LM Viterbi tokenization, DP folded
     // in-plan over per-word lookup maps (see TextAnalysis.unigramTokenize)
     "q442_unigram_tokenize" -> ((s, dir) =>
       TextAnalysis.unigramTokenize(tbl(s, dir, "documents"))),

@@ -2340,26 +2340,24 @@ object TextAnalysis {
     * systems train): the piece vocabulary is every 1..`maxPiece`-char
     * substring of the corpus words with its occurrence count weighted
     * by word frequency, p(piece) = cnt/Σcnt, and the DP
-    * dp[i] = max_j (dp[j] + ln p(word[j:i])) unrolls to `maxLen`
-    * positions ENTIRELY IN-PLAN: each word carries its (j,i)→lp
-    * lookup map (one explode + one piece join + map_from_entries —
-    * never a per-word UDF), and each unrolled step is a ≤maxPiece-way
-    * strict-greater fold over (score, segmentation, n_pieces) structs
-    * (ties keep the smaller j — the longer trailing piece — by fold
-    * order). Emits per word: the segmentation, piece count, and the
-    * femit'd Viterbi log-likelihood, so the gate hash-pins the entire
-    * DP trajectory including tie behavior.
+    * dp[i] = max_j (dp[j] + ln p(word[j:i])) runs ENTIRELY IN-PLAN as
+    * one [[viterbiSegment]] fold per word (each word carries its
+    * (j,i)→lp lookup map — one explode + one piece join +
+    * map_from_entries, never a per-word UDF). Emits per word: the
+    * segmentation, piece count, and the femit'd Viterbi
+    * log-likelihood, so the gate hash-pins the entire DP trajectory
+    * including tie behavior.
     *
     * Scale: vocab and word tables are token-grain aggregates (the tf
-    * shuffle family); the DP itself is a per-row expression chain over
-    * the word table — no shuffle, no iteration over the corpus, and
-    * word length is capped (longer words would chunk first, the q113
-    * convention). */
+    * shuffle family); the DP itself is a per-row expression over the
+    * word table — no shuffle, no iteration over the corpus, and word
+    * length is capped at `maxLen` (longer words would chunk first, the
+    * q113 convention). */
   def unigramTokenize(docs: DataFrame, maxPiece: Int = 4,
                       maxLen: Int = 8): DataFrame = {
     import graft.rel.Queries.femit
     val (posPieces, _, lpTbl) = unigramRound1(docs, maxPiece, maxLen)
-    viterbiSegment(posPieces, lpTbl, maxPiece, maxLen)
+    viterbiSegment(posPieces, lpTbl, maxPiece)
       .select(col("t").as("word"), col("freq"),
         length(col("t")).cast("long").as("n_chars"),
         col("fin.np").as("n_pieces"),
@@ -2369,7 +2367,7 @@ object TextAnalysis {
   }
 
   /** The round-1 artifacts shared by [[unigramTokenize]] and
-    * [[unigramHardEm]]: (posPieces, vocab, lpTbl) — the word table with
+    * [[unigramEmRounds]]: (posPieces, vocab, lpTbl) — the word table with
     * its exploded (span, piece) rows, the frequency-weighted substring
     * vocabulary, and its log-prob table. */
   private def unigramRound1(docs: DataFrame, maxPiece: Int, maxLen: Int)
@@ -2409,54 +2407,20 @@ object TextAnalysis {
     * probabilities; M-step = re-estimate p(piece) from the
     * segmentation counts; prune the bottom-`pruneShare` of the
     * multi-char vocabulary by re-estimated count; re-segment under the
-    * new table). Hard-count re-estimation already collapses the vocab
-    * to pieces the Viterbi path actually uses; the explicit prune then
-    * drops the weakest survivors, and — as in SentencePiece — ALL
-    * single-character pieces are kept unconditionally (floor count 1
-    * when unused) so every word stays segmentable; round-2 candidates
-    * touching a pruned piece carry a NaN score and lose the DP fold
-    * (the [[viterbiSegment]] OOV rule, exercised for real here).
+    * new table). It is [[unigramEmRounds]] with `rounds = 1`, projected
+    * to q443's columns (`changed_r2` is `changed`).
     *
     * Per word: both rounds' segmentations and piece counts, the femit'd
     * round-2 Viterbi log-likelihood, a changed flag, and both vocab
     * sizes carried on every row — the gate pins the E-step, the count
     * M-step, the prune boundary (count-then-piece order), and the
-    * round-2 DP including its OOV behavior in one hash.
-    *
-    * Determinism: counts are exact integers; the prune rank orders by
-    * (cnt2, piece) — total order, no engine ties; round-2 log-probs are
-    * the same ln-ratio lattice as round 1.
-    *
-    * Scale: both E-steps are the per-row in-plan DP (no shuffle beyond
-    * the tf family); the M-step is one explode + hash-agg at piece
-    * grain; the prune rank is two-phased over the O(distinct counts)
-    * offset grid (column `cell` — the q300/q192 discipline), never a
-    * vocab-grain global sort. */
+    * round-2 DP including its out-of-vocabulary rule in one hash. */
   def unigramHardEm(docs: DataFrame, maxPiece: Int = 4, maxLen: Int = 8,
-                    pruneShare: Double = 0.2): DataFrame = {
-    import graft.rel.Queries.femit
-    val (posPieces, vocab, lpTbl) = unigramRound1(docs, maxPiece, maxLen)
-    val seg1 = viterbiSegment(posPieces, lpTbl, maxPiece, maxLen)
-      .select(col("t"), col("freq"), col("fin.seg").as("seg_r1"),
-        col("fin.np").as("np_r1"))
-      .localCheckpoint() // M-step counts + the final per-word join
-    val singles = vocab.where(length(col("piece")) === 1).select("piece")
-    val kept = emStep(seg1, "seg_r1", singles, pruneShare)
-    val lp2 = lpFrom(kept)
-    val seg2 = viterbiSegment(posPieces, lp2, maxPiece, maxLen)
-      .select(col("t"), col("freq"), col("fin.seg").as("seg_r2"),
-        col("fin.np").as("np_r2"), col("fin.s").as("s_r2"))
-    val v1 = vocab.agg(count(lit(1)).as("n_vocab_r1"))
-    val v2 = kept.agg(count(lit(1)).as("n_vocab_r2"))
-    seg1.join(seg2, Seq("t", "freq"))
-      .crossJoin(broadcast(v1)).crossJoin(broadcast(v2))
-      .select(col("t").as("word"), col("freq"),
-        col("np_r1"), col("seg_r1"), col("np_r2"), col("seg_r2"),
-        (col("seg_r1") =!= col("seg_r2")).as("changed"),
-        femit(col("s_r2")).as("viterbi_logp_r2"),
-        col("n_vocab_r1"), col("n_vocab_r2"))
-      .orderBy("word")
-  }
+                    pruneShare: Double = 0.2): DataFrame =
+    unigramEmRounds(docs, 1, maxPiece, maxLen, pruneShare)
+      .select(col("word"), col("freq"), col("np_r1"), col("seg_r1"),
+        col("np_r2"), col("seg_r2"), col("changed_r2").as("changed"),
+        col("viterbi_logp_r2"), col("n_vocab_r1"), col("n_vocab_r2"))
 
   /** One hard-EM M-STEP + PRUNE from a segmentation frame (t, freq,
     * `segCol`): piece usage counts weighted by word frequency,
@@ -2507,15 +2471,17 @@ object TextAnalysis {
           .as("lp"))
   }
 
-  /** R-ROUND hard-EM unigram-LM tokenizer training ([[unigramHardEm]]'s
-    * single round generalized — SentencePiece iterates
-    * EM-with-prune toward a vocabulary target, it never stops after
-    * one round): round r Viterbi-segments every word under lp_r (the
-    * in-plan DP), re-estimates piece counts from those segmentations,
-    * prunes the bottom-share multi-char pieces, and hands lp_{r+1} to
-    * round r+1 — R prune rounds, R+1 E-steps, segmentations
-    * seg_r1..seg_r{R+1}. Pieces pruned in round r can never reappear:
-    * the DP scores them NaN and the fold yields (the OOV rule).
+  /** R-ROUND hard-EM unigram-LM tokenizer training (SentencePiece
+    * iterates EM-with-prune toward a vocabulary target; [[unigramHardEm]]
+    * is this with `rounds = 1`): round r Viterbi-segments every word
+    * under lp_r (one [[viterbiSegment]] fold per word), re-estimates
+    * piece counts from those segmentations, prunes the bottom-share
+    * multi-char pieces (ALL single-char pieces are kept, floor count 1
+    * when unused, so every word stays segmentable — `emStep`), and
+    * hands lp_{r+1} to round r+1 — R prune rounds, R+1 E-steps,
+    * segmentations seg_r1..seg_r{R+1}. Pieces pruned in round r can
+    * never reappear: their spans score NaN and lose the DP fold (the
+    * out-of-vocabulary rule).
     *
     * The CONVERGENCE REPORT is carried on every row: per-round vocab
     * sizes (n_vocab_r1..r{R+1}) and changed-word counts
@@ -2523,13 +2489,15 @@ object TextAnalysis {
     * previous round) — the two curves a training pipeline watches to
     * stop early.
     *
-    * Determinism/scale: exactly the q443 lattice per round — the
-    * E-step DP is in-plan (no shuffle beyond the tf family), the
-    * M-step one explode + hash-agg at piece grain, the prune two-phased
-    * over the O(distinct-counts) offset grid, never a vocab-grain
-    * global sort; per-round frames are localCheckpointed so round r+1
-    * never replays round r's DP; the scalar census/changed counts ride
-    * broadcast crossJoins. */
+    * Determinism/scale: counts are exact integers, the prune rank
+    * orders by (cnt2, piece) — a total order — and every round's
+    * log-probs are the same ln-ratio lattice. The E-step DP is in-plan
+    * (no shuffle beyond the tf family), the M-step one explode +
+    * hash-agg at piece grain, the prune two-phased over the
+    * O(distinct-counts) offset grid, never a vocab-grain global sort;
+    * per-round frames are localCheckpointed so round r+1 never replays
+    * round r's DP; the scalar census/changed counts ride broadcast
+    * crossJoins. */
   def unigramEmRounds(docs: DataFrame, rounds: Int = 2, maxPiece: Int = 4,
                       maxLen: Int = 8, pruneShare: Double = 0.2): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
@@ -2541,7 +2509,7 @@ object TextAnalysis {
     var vocabSizes = List(vocab.agg(count(lit(1)).as("n_vocab_r1")))
     var segs = List.empty[DataFrame]
     for (r <- 1 to rounds + 1) {
-      val seg = viterbiSegment(posPieces, lp, maxPiece, maxLen)
+      val seg = viterbiSegment(posPieces, lp, maxPiece)
         .select(col("t"), col("freq"), col("fin.seg").as(s"seg_r$r"),
           col("fin.np").as(s"np_r$r"), col("fin.s").as(s"s_r$r"))
         .localCheckpoint() // M-step + the final multi-way join
@@ -2579,45 +2547,54 @@ object TextAnalysis {
       .orderBy("word")
   }
 
-  /** The unrolled Viterbi DP shared by [[unigramTokenize]] and
-    * [[unigramHardEm]]: joins `posPieces` (t, freq, k, piece) against
-    * a piece log-prob table, folds per position with the NULL-SAFE
-    * strict-greater rule (a span whose piece left the vocabulary — the
-    * hard-EM round-2 case — carries a null score and never wins; a
-    * null accumulator yields to the first scorable candidate), and
-    * returns (t, freq, fin(s, seg, np)). */
+  /** The Viterbi DP shared by [[unigramTokenize]] and
+    * [[unigramEmRounds]]: joins `posPieces` (t, freq, k = 100·j + i,
+    * piece) against a piece log-prob table and returns
+    * (t, freq, fin(s, seg, np)), `fin` = dp[length(t)].
+    *
+    * The DP is ONE nested `aggregate` fold, so the plan holds a single
+    * copy of the step however long the word (an unrolled dp1..dpN
+    * column chain grows exponentially under CollapseProject and
+    * overflows janino's 64 KB method limit). The outer fold over
+    * i = 1..length(t) appends dp[i] to the array dp[0..i-1]; the inner
+    * fold runs over the candidates j = max(0, i−maxPiece)..i−1 with the
+    * strict-greater rule, so a tie keeps the smaller j (the longer
+    * trailing piece). A span whose piece is out of the vocabulary (the
+    * hard-EM pruned case) scores NaN — collected as a real map entry so
+    * map_from_entries never sees a null clash — and NaN + x = NaN. Spark
+    * orders NaN above every double, so the step tests `isnan` itself: a
+    * NaN candidate never replaces a scored accumulator, and the fold
+    * starts from a NaN accumulator that yields to the first candidate.
+    * A word with no scorable segmentation gets s = NaN. */
   private[llm] def viterbiSegment(posPieces: DataFrame, lpTbl: DataFrame,
-                                  maxPiece: Int, maxLen: Int): DataFrame = {
+                                  maxPiece: Int): DataFrame = {
     val wmap = posPieces.join(broadcast(lpTbl), Seq("piece"), "left")
       .groupBy("t", "freq")
       .agg(map_from_entries(collect_list(struct(col("k"),
         coalesce(col("lp"), lit(Double.NaN)))))
         .as("mp"))
-    var df = wmap.withColumn("dp0",
-      struct(lit(0.0).as("s"), lit("").as("seg"), lit(0L).as("np")))
-    for (i <- 1 to maxLen) {
-      val cands = (math.max(0, i - maxPiece) until i).map { j =>
-        // an out-of-vocabulary span maps to NaN (collected as a real
-        // map entry so map_from_entries never sees a null clash);
-        // NaN + x = NaN and NaN comparisons are false, so the fold
-        // skips it exactly like SQL NULL — but deterministically
-        val lpx = element_at(col("mp"), lit(j * 100 + i))
-        struct((col(s"dp$j.s") + lpx).as("s"),
-          concat(col(s"dp$j.seg"),
-            when(col(s"dp$j.np") > 0L, lit(" ")).otherwise(lit("")),
-            substring(col("t"), j + 1, i - j)).as("seg"),
-          (col(s"dp$j.np") + 1L).as("np"))
-      }
-      val best = cands.reduceLeft((a, b) =>
-        when(isnan(a.getField("s")), b)
-          .when(!isnan(b.getField("s"))
-            && b.getField("s") > a.getField("s"), b)
+    def cell(s: Column, seg: Column, np: Column): Column =
+      struct(s.as("s"), seg.as("seg"), np.as("np"))
+    def step(dp: Column, i: Column): Column = {
+      val cands = transform(sequence(greatest(lit(0), i - maxPiece), i - 1),
+        j => {
+          val prev = element_at(dp, j + 1) // dp[j]
+          cell(prev("s") + element_at(col("mp"), j * 100 + i),
+            concat(prev("seg"),
+              when(prev("np") > 0L, lit(" ")).otherwise(lit("")),
+              substring(col("t"), j + 1, i - j)),
+            prev("np") + 1L)
+        })
+      aggregate(cands, cell(lit(Double.NaN), lit(""), lit(0L)),
+        (a, b) => when(isnan(a("s")), b)
+          .when(!isnan(b("s")) && b("s") > a("s"), b)
           .otherwise(a))
-      df = df.withColumn(s"dp$i", when(length(col("t")) >= i, best))
     }
-    val fin = (1 to maxLen).map(i =>
-      when(length(col("t")) === i, col(s"dp$i"))).reduce(coalesce(_, _))
-    df.withColumn("fin", fin).select("t", "freq", "fin")
+    val dp = aggregate(sequence(lit(1), length(col("t"))),
+      array(cell(lit(0.0), lit(""), lit(0L))),
+      (dp, i) => concat(dp, array(step(dp, i))))
+    wmap.select(col("t"), col("freq"),
+      element_at(dp, length(col("t")) + 1).as("fin"))
   }
 
   /** FEATURE HASHING (the hashing trick — Weinberger et al., ICML

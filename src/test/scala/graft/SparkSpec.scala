@@ -5,10 +5,16 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one JVM-wide session).
   * Pinned to 4 cores whatever `$SPARK_GRAFT_CPUS` says, with a
-  * throwaway warehouse. */
+  * throwaway warehouse. Whole-stage codegen may not fall back: a
+  * generated-code compile error (janino's 64 KB method limit) fails the
+  * test instead of silently running the stage interpreted. */
 object TestSpark {
-  lazy val spark: SparkSession = Session.local(4,
-    java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+  lazy val spark: SparkSession = {
+    val s = Session.local(4,
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+    s.conf.set("spark.sql.codegen.fallback", "false")
+    s
+  }
 }
 
 abstract class SparkSpec extends AnyFunSuite {

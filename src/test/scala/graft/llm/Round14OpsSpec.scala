@@ -17,9 +17,12 @@ class Round14OpsSpec extends SparkSpec {
 
   /** Viterbi DP matching [[TextAnalysis.viterbiSegment]]'s fold rules:
     * candidates ascending j, strict greater (ties keep the smaller j),
-    * OOV spans skipped, an unscorable accumulator yields. */
+    * OOV spans skipped, an unscorable accumulator yields.
+    * `laterWinsTie` flips only the tie rule, to tell whether a tie
+    * decided a word's segmentation. */
   private def viterbiRef(word: String, lp: Map[String, Double],
-                         maxPiece: Int): Option[(Double, List[String])] = {
+                         maxPiece: Int, laterWinsTie: Boolean = false)
+      : Option[(Double, List[String])] = {
     val n = word.length
     val dp = Array.fill[Option[(Double, List[String])]](n + 1)(None)
     dp(0) = Some((0.0, Nil))
@@ -30,7 +33,9 @@ class Round14OpsSpec extends SparkSpec {
           case (Some((s, segs)), Some(p)) =>
             val cand = (s + p, segs :+ piece)
             dp(i) match {
-              case Some((best, _)) if cand._1 > best => dp(i) = Some(cand)
+              case Some((best, _))
+                  if cand._1 > best || (laterWinsTie && cand._1 == best) =>
+                dp(i) = Some(cand)
               case None => dp(i) = Some(cand)
               case _ => ()
             }
@@ -200,12 +205,52 @@ class Round14OpsSpec extends SparkSpec {
         (("ab"), 1L, 2, "ab"))
       .toDF("t", "freq", "k", "piece")
     val lp = Seq(("a", -1.0), ("b", -2.0)).toDF("piece", "lp")
-    val out = TextAnalysis.viterbiSegment(pos, lp, 4, 8).collect()
+    val out = TextAnalysis.viterbiSegment(pos, lp, 4).collect()
     assert(out.length == 1)
     val fin = out.head.getAs[org.apache.spark.sql.Row]("fin")
     assert(fin.getAs[String]("seg") == "a b")
     assert(math.abs(fin.getAs[Double]("s") - (-3.0)) < 1e-12)
     assert(fin.getAs[Long]("np") == 2L)
+  }
+
+  test("viterbiSegment equals viterbiRef on random words and maps (ties, NaN spans)") {
+    // log-probs from {-1, -2, -3} make exact ties common; about a fifth
+    // of the pieces stay out of the map, so their spans score NaN
+    val maxPiece = 4
+    var (unsegmentable, tieDecided) = (0, 0)
+    (1 to 4).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      val words = Seq.fill(60)(
+        Seq.fill(1 + rnd.nextInt(8))("abc"(rnd.nextInt(3))).mkString).distinct
+      val spans = for {
+        w <- words; i <- 1 to w.length; j <- math.max(0, i - maxPiece) until i
+      } yield (w, 1L, j * 100 + i, w.substring(j, i))
+      val lp = spans.map(_._4).distinct.filter(_ => rnd.nextInt(5) > 0)
+        .map(p => p -> -(1 + rnd.nextInt(3)).toDouble).toMap
+      val got = TextAnalysis.viterbiSegment(spans.toDF("t", "freq", "k", "piece"),
+          lp.toSeq.toDF("piece", "lp"), maxPiece).collect()
+        .map(r => r.getAs[String]("t") -> r.getAs[org.apache.spark.sql.Row]("fin"))
+        .toMap
+      assert(got.keySet == words.toSet, s"seed $seed word set")
+      words.foreach { w =>
+        val fin = got(w)
+        val s = fin.getAs[Double]("s")
+        viterbiRef(w, lp, maxPiece) match {
+          case Some((ref, segs)) =>
+            assert(java.lang.Double.doubleToRawLongBits(s) ==
+              java.lang.Double.doubleToRawLongBits(ref), s"seed $seed $w s")
+            assert(fin.getAs[String]("seg") == segs.mkString(" "), s"seed $seed $w seg")
+            assert(fin.getAs[Long]("np") == segs.size.toLong, s"seed $seed $w np")
+            if (viterbiRef(w, lp, maxPiece, laterWinsTie = true).get._2 != segs)
+              tieDecided += 1
+          case None =>
+            assert(s.isNaN, s"seed $seed $w unsegmentable but s = $s")
+            unsegmentable += 1
+        }
+      }
+    }
+    assert(unsegmentable > 0, "no word lost every segmentation — weak fixture")
+    assert(tieDecided > 0, "no tie decided a segmentation — weak fixture")
   }
 
   // ---- q444 exact-substring runs ----

@@ -146,23 +146,16 @@ class CoOccurSpec extends SparkSpec {
   }
 
   test("pairs_m1 and hadoop_wordcount run with codegen fallback off (sf0.001)") {
-    // A generated-code compile error would otherwise fall back to
-    // interpreted evaluation silently.
-    val key = "spark.sql.codegen.fallback"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try {
-      val docs = spark.read.parquet(s"$sf0001/documents.parquet")
-      val lines = docs.select("text").collect().flatMap(r => Option(r.getString(0))).toSeq
-      val p = graft.SparkEntry.queries("pairs_m1")(spark, sf0001)
-      assert(p.collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap ==
-        RefImpl.pairs(lines, 1))
-      val wc = graft.SparkEntry.queries("hadoop_wordcount")(spark, sf0001)
-      assert(wc.collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap ==
-        RefImpl.wordCount(lines, lowercase = false))
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    // TestSpark sets spark.sql.codegen.fallback=false, so a
+    // generated-code compile error fails here instead of falling back
+    // to interpreted evaluation silently.
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+    val lines = docs.select("text").collect().flatMap(r => Option(r.getString(0))).toSeq
+    val p = graft.SparkEntry.queries("pairs_m1")(spark, sf0001)
+    assert(p.collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap ==
+      RefImpl.pairs(lines, 1))
+    val wc = graft.SparkEntry.queries("hadoop_wordcount")(spark, sf0001)
+    assert(wc.collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap ==
+      RefImpl.wordCount(lines, lowercase = false))
   }
 }
