@@ -519,10 +519,12 @@ object Queries {
       TextAnalysis.bigramLogProb(tbl(s, dir, "documents"))),
     // Iterative graph analytics: weighted PageRank over the bigram
     // token graph, 3 rounds, dangling-mass redistribution — the fixed-
-    // iteration shuffle-on-key composition declared as ONE Catalyst
-    // plan with zero driver actions (see rel.Graph.pageRank's scaladoc
-    // for the float-parity and 100 TB analysis). Ranks are bit-
-    // identical across engines at every round via the dsum route.
+    // iteration shuffle-on-key composition: inputs and rounds 0..2 are
+    // checkpointed stages whose scalars (node count, dangling mass) are
+    // observed on the staging job, and round 3 is the final plan (see
+    // rel.Graph.pageRank's scaladoc for the float-parity and 100 TB
+    // analysis). Ranks are bit-identical across engines at every round
+    // via the dsum route.
     "q124_pagerank" -> ((s, dir) => {
       val base = tbl(s, dir, "documents")
         .select(expr("filter(split(text, ' '), t -> t <> '')").as("ts"))
@@ -538,8 +540,8 @@ object Queries {
     // pinned to the long-token seed set (length ≥ 8), so rank measures
     // proximity to the seeds — the seed-expansion primitive behind
     // "find documents like these" relevance propagation (see
-    // rel.Graph.personalizedPageRank; same fixed-iteration plan shape
-    // and dsum float discipline as q124).
+    // rel.Graph.personalizedPageRank; the same round loop and dsum
+    // float discipline as q124).
     "q270_personalized_pagerank" -> ((s, dir) => {
       val base = tbl(s, dir, "documents")
         .select(expr("filter(split(text, ' '), t -> t <> '')").as("ts"))
@@ -600,7 +602,7 @@ object Queries {
       hist.unionAll(singletons).orderBy("cluster_size")
     }),
     // HITS hubs & authorities over the directed weighted bigram graph,
-    // 2 mutual-reinforcement rounds as one declarative plan — the
+    // 2 mutual-reinforcement rounds as checkpointed stages — the
     // second eigen-centrality family next to q124's PageRank (a node
     // can be a strong HUB without being an authority; PageRank cannot
     // separate the two roles). L1 normalization per round keeps every

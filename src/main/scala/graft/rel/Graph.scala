@@ -1,6 +1,7 @@
 package graft.rel
 
-import org.apache.spark.sql.DataFrame
+import graft.Iterate
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -11,21 +12,19 @@ import org.apache.spark.sql.functions._
   *
   * Complements [[graft.llm.Dedup.connectedComponents]] (data-dependent
   * fixpoint, driver checks convergence): PageRank runs a FIXED iteration
-  * count, so the whole computation is declared as ONE Catalyst plan with
-  * zero driver-side actions — Catalyst sees every round, reuses the
-  * edge/out-weight exchanges across rounds, and AQE re-plans each round's
-  * join at runtime. For deep iteration counts (say &gt; 10) production
-  * would insert `localCheckpoint` every few rounds to bound plan depth
-  * (the q47 Lloyd's-iteration pattern); at the typical 3–10 analytic
-  * rounds the single declarative plan is strictly better.
+  * count. Loop-invariant inputs are checkpointed once and each round's
+  * frame once, so the executed work stays linear in the round count (a
+  * round that reads its predecessor twice would otherwise copy the
+  * whole prefix per reference). A round that needs scalars (counts,
+  * totals) reads them off the job that checkpoints it
+  * ([[graft.Iterate.stage]]).
   */
 object Graph {
 
   /** Single-source BFS shortest-path distances over an UNDIRECTED edge
-    * set, `iters` fixed relaxation rounds declared as ONE Catalyst plan
-    * (the [[pageRank]] discipline — zero driver actions): round t+1's
-    * frontier is round t's distance table unioned with every neighbor
-    * at dist+1, re-minimized per node. With iters ≥ graph diameter the
+    * set, `iters` fixed relaxation rounds: round t+1's frontier is
+    * round t's distance table unioned with every neighbor at dist+1,
+    * re-minimized per node. With iters ≥ graph diameter the
     * result IS the exact shortest-path distance (the gate corpus's
     * bigram graph has diameter ≪ 6; the oracle's recursive CTE computes
     * the true minimum, so the gate row also certifies the iteration
@@ -34,10 +33,9 @@ object Graph {
     * Scale: per round one equi-join on the frontier key + one min-agg
     * — shuffle O(edges), the BFS round a Pregel system runs; row count
     * is bounded by |reachable nodes| after every round thanks to the
-    * per-round re-min. Deep graphs would localCheckpoint every few
-    * rounds (the q47/q65 pattern); at analytic depths the single
-    * declarative plan lets Catalyst reuse the edge exchange across all
-    * rounds. Output: (node, dist) for nodes within `iters` hops. */
+    * per-round re-min. The edge set and each round's distance table
+    * are checkpointed (the q47/q65 pattern). Output: (node, dist) for
+    * nodes within `iters` hops. */
   def bfs(edges: DataFrame, source: String, iters: Int): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
@@ -62,54 +60,6 @@ object Graph {
     d
   }
 
-  /** Weighted PageRank with dangling-mass redistribution
-    * (Page et al., "The PageRank citation ranking", Stanford 1999):
-    *
-    *   r_{t+1}(j) = (1-d)/N + d · (Σ_{i→j} r_t(i)·w_ij/outw_i + D_t/N)
-    *
-    * where `D_t` is the rank mass sitting on dangling nodes (no
-    * out-edges). Per round: one equi-join of edges to ranks on `src`
-    * (shuffle O(edges) — at 100 TB both sides hash-partition on the
-    * join key and a bucketed edge layout makes the edge side
-    * exchange-free, the q53 contract), one hash-agg on `dst`, and a
-    * 1-row dangling aggregate broadcast back — never a driver scalar.
-    *
-    * Cross-engine float parity: per-node contribution sums go through
-    * [[Queries.dsum]] (order-independent DECIMAL(38,12) accumulation);
-    * every other step is a correctly-rounded IEEE op on identical
-    * inputs, so ranks stay bit-identical across engines at EVERY
-    * iteration, and the final `round(.,6)` is cosmetic. The teleport
-    * constant is passed to the oracle via Scala's shortest-round-trip
-    * double printing, so `1.0 - damping`'s ulp (0.15000000000000002)
-    * is faithfully shared rather than silently diverging from a
-    * hand-written `0.15` literal.
-    *
-    * @param edges columns `src`, `dst` (any equatable type), `weight`
-    *              (integral — summed exactly as LONG)
-    */
-  /** Per-node triangle counts + local clustering coefficient via
-    * DEGREE-ORDERED ORIENTATION (the standard distributed-triangle
-    * trick — Cohen, "Graph Twiddling in a MapReduce World", CiSE 2009;
-    * Suri &amp; Vassilvitskii, WWW 2011): orient every undirected edge
-    * from its (degree, node)-smaller endpoint, enumerate wedges only at
-    * the smallest vertex of each triangle, and close them with one
-    * equi-join. Each triangle is found EXACTLY once (its vertices are
-    * totally ordered by (deg, node), and only the minimum generates the
-    * wedge), so no distinct is needed; and because wedges form only at
-    * a vertex's oriented out-neighborhood — max out-degree is O(√edges)
-    * under this orientation — the wedge explosion around hubs that
-    * kills the naive formulation never happens: a star's center has
-    * huge degree but zero out-edges to order below its leaves.
-    *
-    * Scale: degree agg O(edges); orientation is a projection; wedge
-    * join + closing join are equi-joins with shuffle O(wedges) =
-    * O(edges^1.5) worst case — the algorithmic optimum for exact
-    * counting. Input `edges` (src, dst) may carry duplicates or
-    * self-loops; they are normalized away first.
-    *
-    * Output: (node, deg, tri, clustering) — clustering =
-    * 2·tri / (deg·(deg−1)), 0 for deg &lt; 2; one IEEE division on
-    * exact integers, bit-identical across engines. */
   /** Synchronous weighted label propagation (Raghavan et al., Phys.
     * Rev. E 2007) — community detection in `iters` fixed rounds, each
     * declared work the same shuffle-on-key shape as [[pageRank]]: every
@@ -209,6 +159,29 @@ object Graph {
       .orderBy("label")
   }
 
+  /** Per-node triangle counts + local clustering coefficient via
+    * DEGREE-ORDERED ORIENTATION (the standard distributed-triangle
+    * trick — Cohen, "Graph Twiddling in a MapReduce World", CiSE 2009;
+    * Suri &amp; Vassilvitskii, WWW 2011): orient every undirected edge
+    * from its (degree, node)-smaller endpoint, enumerate wedges only at
+    * the smallest vertex of each triangle, and close them with one
+    * equi-join. Each triangle is found EXACTLY once (its vertices are
+    * totally ordered by (deg, node), and only the minimum generates the
+    * wedge), so no distinct is needed; and because wedges form only at
+    * a vertex's oriented out-neighborhood — max out-degree is O(√edges)
+    * under this orientation — the wedge explosion around hubs that
+    * kills the naive formulation never happens: a star's center has
+    * huge degree but zero out-edges to order below its leaves.
+    *
+    * Scale: degree agg O(edges); orientation is a projection; wedge
+    * join + closing join are equi-joins with shuffle O(wedges) =
+    * O(edges^1.5) worst case — the algorithmic optimum for exact
+    * counting. Input `edges` (src, dst) may carry duplicates or
+    * self-loops; they are normalized away first.
+    *
+    * Output: (node, deg, tri, clustering) — clustering =
+    * 2·tri / (deg·(deg−1)), 0 for deg &lt; 2; one IEEE division on
+    * exact integers, bit-identical across engines. */
   def triangles(edges: DataFrame): DataFrame = {
     val und = edges.select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
@@ -245,98 +218,105 @@ object Graph {
           .otherwise(lit(0.0)).as("clustering"))
   }
 
-  def pageRank(edges: DataFrame, iters: Int, damping: Double): DataFrame = {
-    require(iters >= 1, s"pageRank needs iters >= 1, got $iters")
-    // r15: e/nodes/outw are loop-invariant, and each round reads the
-    // previous ranks frame TWICE (contribution join + dangling-mass
-    // anti-join) — un-checkpointed, the plan duplicated the whole
-    // prefix per reference (2^iters subtree copies; the q124 explain
-    // carried 162 parquet scans). Invariants checkpoint once, ranks
-    // once per round — executed work now linear in iters (guide
-    // §2.4/§5). Values unchanged: every float sum rides dsum.
-    val e = edges.select(col("src"), col("dst"), col("weight"))
-      .localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().localCheckpoint()
-    val nc = nodes.agg(count(lit(1)).cast("double").as("n"))
-    val outw = e.groupBy("src").agg(sum(col("weight")).as("outw"))
-      .localCheckpoint()
-    var ranks = nodes.crossJoin(broadcast(nc))
-      .select(col("node"), (lit(1.0) / col("n")).as("rank"))
-    for (it <- 1 to iters) {
-      val sums = e.join(ranks.withColumnRenamed("node", "src"), "src")
-        .join(outw, "src")
-        .select(col("dst").as("node"),
-          (col("rank") * col("weight") / col("outw")).as("term"))
-        .groupBy("node").agg(Queries.dsum(col("term")).as("s"))
-      val dang = ranks
-        .join(outw, ranks("node") === outw("src"), "left_anti")
-        .agg(coalesce(Queries.dsum(col("rank")), lit(0.0)).as("dmass"))
-      ranks = nodes.join(sums, Seq("node"), "left")
-        .crossJoin(broadcast(dang)).crossJoin(broadcast(nc))
-        .select(col("node"),
-          (lit(1.0 - damping) / col("n")
-            + lit(damping)
-              * (coalesce(col("s"), lit(0.0)) + col("dmass") / col("n")))
-            .as("rank"))
-      if (it < iters) ranks = ranks.localCheckpoint()
-    }
-    ranks.select(col("node"), Queries.femit(col("rank")).as("rank"))
-  }
+  /** Weighted PageRank with dangling-mass redistribution
+    * (Page et al., "The PageRank citation ranking", Stanford 1999):
+    *
+    *   r_{t+1}(j) = (1-d)/N + d · (Σ_{i→j} r_t(i)·w_ij/outw_i + D_t/N)
+    *
+    * where `D_t` is the rank mass sitting on dangling nodes (no
+    * out-edges). Per round: one equi-join of edges to ranks on `src`
+    * (shuffle O(edges) — at 100 TB both sides hash-partition on the
+    * join key and a bucketed edge layout makes the edge side
+    * exchange-free, the q53 contract) and one hash-agg on the target
+    * node. `N` and each round's `D_t` are scalars observed on
+    * the job that materializes their frame ([[graft.Iterate.stage]]),
+    * so no round runs an extra action or broadcasts a 1-row aggregate.
+    *
+    * Cross-engine float parity: per-node contribution sums go through
+    * [[Queries.dsum]] (order-independent DECIMAL(38,12) accumulation);
+    * every other step is a correctly-rounded IEEE op on identical
+    * inputs, so ranks stay bit-identical across engines at EVERY
+    * iteration, and the final `round(.,6)` is cosmetic. The teleport
+    * constant is passed to the oracle via Scala's shortest-round-trip
+    * double printing, so `1.0 - damping`'s ulp (0.15000000000000002)
+    * is faithfully shared rather than silently diverging from a
+    * hand-written `0.15` literal.
+    *
+    * @param edges columns `src`, `dst` (any equatable type), `weight`
+    *              (integral — summed exactly as LONG)
+    */
+  def pageRank(edges: DataFrame, iters: Int, damping: Double): DataFrame =
+    emitRanks(rankRounds("pageRank", edges, None, iters, damping))
 
   /** Personalized PageRank: [[pageRank]] with the teleport vector
     * concentrated on a seed set instead of uniform — rank mass measures
     * proximity TO THE SEEDS, the primitive behind "related items" and
     * seed-expansion labeling (Haveliwala, WWW 2002). restart_i = 1/|S|
-    * on seeds, 0 elsewhere; each round
+    * on seeds, 0 elsewhere (|S| counts every distinct seed, in the
+    * graph or not); each round
     * rank' = (1−d)·restart + d·(inbound + danglingMass·restart), so
-    * dangling mass also teleports to the seeds and total mass stays 1.
-    * Same fixed-iteration single-plan shape, same shuffle-on-key
-    * O(edges) rounds, same dsum DECIMAL route for every per-node sum —
+    * dangling mass also teleports to the seeds. Same round loop as
+    * [[pageRank]], same dsum DECIMAL route for every per-node sum —
     * bit-identical cross-engine at every round. */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
-                           iters: Int, damping: Double): DataFrame = {
-    require(iters >= 1, s"personalizedPageRank needs iters >= 1, got $iters")
-    // r15: same exponential-lineage fix as [[pageRank]] — invariants
-    // checkpoint once, ranks once per round; dsum keeps values exact.
-    val e = edges.select(col("src"), col("dst"), col("weight"))
+                           iters: Int, damping: Double): DataFrame =
+    emitRanks(rankRounds("personalizedPageRank", edges, Some(seeds), iters, damping))
+
+  private def emitRanks(ranks: DataFrame): DataFrame =
+    ranks.select(col("node"), Queries.femit(col("rank")).as("rank"))
+
+  /** The round loop of [[pageRank]] (`seeds` = None: uniform restart)
+    * and [[personalizedPageRank]]; ranks unrounded. The adjacency (src,
+    * dst, weight, outw) and the node table are staged once, the latter
+    * observing N and |S|; each ranks stage observes the dangling mass
+    * the next round spreads. A round is one node-keyed aggregation over
+    * the edge terms plus a zero term per node carrying its columns
+    * (dsum(terms ∪ {0}) is exactly coalesce(dsum(terms), 0.0)). The
+    * scalars combine in Scala in each operator's IEEE order (N = 0
+    * gives infinite literals over zero rows, never a constant-folded
+    * DIVIDE_BY_ZERO). */
+  private[rel] def rankRounds(op: String, edges: DataFrame,
+      seeds: Option[DataFrame], iters: Int, damping: Double): DataFrame = {
+    require(iters >= 1, s"$op needs iters >= 1, got $iters")
+    val adj = edges.select(col("src"), col("dst"), col("weight"),
+        sum(col("weight")).over(Window.partitionBy("src")).as("outw"))
       .localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    val sd = seeds.select(col("node")).distinct()
-    val ns = sd.agg(count(lit(1)).cast("double").as("ns"))
-    // The restart vector appears twice per round (rank base + teleport
-    // term); checkpoint it once so the nodes-distinct + seed join does
-    // not re-execute 2×iters times (the q266 staging move).
-    val restart = nodes
-      .join(sd.withColumn("is_seed", lit(true)), Seq("node"), "left")
-      .crossJoin(broadcast(ns))
-      .select(col("node"),
-        when(col("is_seed"), lit(1.0) / col("ns"))
-          .otherwise(lit(0.0)).as("restart"))
-      .localCheckpoint()
-    val outw = e.groupBy("src").agg(sum(col("weight")).as("outw"))
-      .localCheckpoint()
-    var ranks = restart.select(col("node"), col("restart").as("rank"))
+    val inGraph = adj.select(col("src").as("node"), lit(true).as("has_out"))
+      .unionAll(adj.select(col("dst").as("node"), lit(false).as("has_out")))
+      .withColumn("is_seed", lit(false))
+    // a seed outside the graph: null has_out, counted in |S|, filtered out
+    val tagged = seeds.fold(inGraph)(sd => inGraph.unionAll(sd.select(col("node"),
+        lit(null).cast("boolean").as("has_out"), lit(true).as("is_seed"))))
+      .groupBy("node")
+      .agg(max(col("has_out")).as("has_out"), max(col("is_seed")).as("is_seed"))
+    val (nodeTab, counts) = Iterate.stage(tagged,
+      count(col("has_out")).cast("double"), count_if(col("is_seed")).cast("double"))
+    val n = counts.getDouble(0)
+    val restart = if (seeds.isEmpty) lit(1.0 / n)
+      else when(col("is_seed"), lit(1.0 / counts.getDouble(1))).otherwise(lit(0.0))
+    def update(s: Column, dmass: Double): Column =
+      if (seeds.isEmpty) lit((1.0 - damping) / n) + lit(damping) * (s + lit(dmass / n))
+      else lit(1.0 - damping) * col("restart") +
+        lit(damping) * (s + lit(dmass) * col("restart"))
+    val dangling = coalesce(Queries.dsum(when(!col("has_out"), col("rank"))), lit(0.0))
+    var (ranks, obs) = Iterate.stage(nodeTab.where(col("has_out").isNotNull)
+      .select(col("node"), col("has_out"), restart.as("restart"), restart.as("rank")),
+      dangling)
     for (it <- 1 to iters) {
-      val sums = e.join(ranks.withColumnRenamed("node", "src"), "src")
-        .join(outw, "src")
+      val round = adj.join(ranks.select(col("node").as("src"), col("rank")), "src")
         .select(col("dst").as("node"),
           (col("rank") * col("weight") / col("outw")).as("term"))
-        .groupBy("node").agg(Queries.dsum(col("term")).as("s"))
-      val dang = ranks
-        .join(outw, ranks("node") === outw("src"), "left_anti")
-        .agg(coalesce(Queries.dsum(col("rank")), lit(0.0)).as("dmass"))
-      ranks = restart.join(sums, Seq("node"), "left")
-        .crossJoin(broadcast(dang))
-        .select(col("node"),
-          (lit(1.0 - damping) * col("restart")
-            + lit(damping)
-              * (coalesce(col("s"), lit(0.0)) + col("dmass") * col("restart")))
-            .as("rank"))
-      if (it < iters) ranks = ranks.localCheckpoint()
+        .unionByName(ranks.select(col("node"), lit(0.0).as("term"), col("has_out"),
+          col("restart")), allowMissingColumns = true)
+        .groupBy("node")
+        .agg(Queries.dsum(col("term")).as("s"), max(col("has_out")).as("has_out"),
+          max(col("restart")).as("restart"))
+        .select(col("node"), col("has_out"), col("restart"),
+          update(col("s"), obs.getDouble(0)).as("rank"))
+      if (it < iters) { val (r, o) = Iterate.stage(round, dangling); ranks = r; obs = o }
+      else ranks = round
     }
-    ranks.select(col("node"), Queries.femit(col("rank")).as("rank"))
+    ranks.select("node", "rank")
   }
 
   /** Degree assortativity coefficient (Newman, PRL 2002): the Pearson
@@ -382,10 +362,9 @@ object Graph {
   }
 
   /** HITS hubs &amp; authorities (Kleinberg, JACM 1999) over a DIRECTED
-    * weighted edge set, `iters` fixed mutual-reinforcement rounds as
-    * ONE declarative plan (the [[pageRank]] discipline — zero driver
-    * actions): a(j) = Σ_{i→j} w·h(i), h(i) = Σ_{i→j} w·a(j), each
-    * vector L1-normalized per round. L1 replaces the textbook's L2
+    * weighted edge set, `iters` fixed mutual-reinforcement rounds: a(j)
+    * = Σ_{i→j} w·h(i), h(i) = Σ_{i→j} w·a(j), each vector L1-normalized
+    * per round. L1 replaces the textbook's L2
     * normalization deliberately: the scores' RANKING is identical
     * under any positive rescaling, and an L1 total runs through
     * [[Queries.dsum]] — order-independent DECIMAL accumulation — so
@@ -393,43 +372,36 @@ object Graph {
     * sqrt over a float sum-of-squares would not be order-safe.
     *
     * Scale: per round two edge equi-joins + two hash-aggs (shuffle
-    * O(edges), keyed by dst then src) and two 1-row total broadcasts —
-    * never a driver scalar. Output: (node, auth, hub) for every node,
-    * zeros where a side never reinforces. */
+    * O(edges), keyed by dst then src); each raw vector is staged with
+    * its L1 total observed on the same job ([[graft.Iterate.stage]]),
+    * and the total enters the normalization as a literal. Output:
+    * (node, auth, hub) for every node, zeros where a side never
+    * reinforces. */
   def hits(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"hits needs iters >= 1, got $iters")
-    // r15: same exponential-lineage fix as [[pageRank]] — e/nodes are
-    // loop-invariant, and each round's vector is read twice (raw agg +
-    // its own L1 total, then the next round's join), so the
-    // un-checkpointed plan re-executed the whole prefix per reference
-    // (the q233 explain carried 276 parquet scans). One checkpoint per
-    // vector per round; dsum keeps every total order-independent.
+    // r15: e/nodes are loop-invariant and each vector feeds the next
+    // round's join, so one checkpoint per vector per round keeps the
+    // plan linear in iters (the q233 explain once carried 276 parquet
+    // scans); dsum keeps every total order-independent.
     val e = edges.select(col("src"), col("dst"), col("weight"))
       .localCheckpoint()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct().localCheckpoint()
+    def normalized(raw: DataFrame, out: String): DataFrame = {
+      val (r, tot) = Iterate.stage(raw, Queries.dsum(col("raw")))
+      nodes.join(r, Seq("node"), "left")
+        .select(col("node"), coalesce(col("raw") / lit(tot.get(0)), lit(0.0)).as(out))
+    }
     var hubs = nodes.withColumn("h", lit(1.0))
     var auths: DataFrame = null
     for (it <- 1 to iters) {
-      val aRaw = e.join(hubs.withColumnRenamed("node", "src"), "src")
+      auths = normalized(e.join(hubs.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"), (col("weight") * col("h")).as("t"))
-        .groupBy("node").agg(Queries.dsum(col("t")).as("ar"))
-        .localCheckpoint() // read twice: L1 total + normalize join
-      val aTot = aRaw.agg(Queries.dsum(col("ar")).as("tot"))
-      auths = nodes.join(aRaw, Seq("node"), "left")
-        .crossJoin(broadcast(aTot))
-        .select(col("node"),
-          coalesce(col("ar") / col("tot"), lit(0.0)).as("a"))
+        .groupBy("node").agg(Queries.dsum(col("t")).as("raw")), "a")
         .localCheckpoint()
-      val hRaw = e.join(auths.withColumnRenamed("node", "dst"), "dst")
+      hubs = normalized(e.join(auths.withColumnRenamed("node", "dst"), "dst")
         .select(col("src").as("node"), (col("weight") * col("a")).as("t"))
-        .groupBy("node").agg(Queries.dsum(col("t")).as("hr"))
-        .localCheckpoint() // read twice: L1 total + normalize join
-      val hTot = hRaw.agg(Queries.dsum(col("hr")).as("tot"))
-      hubs = nodes.join(hRaw, Seq("node"), "left")
-        .crossJoin(broadcast(hTot))
-        .select(col("node"),
-          coalesce(col("hr") / col("tot"), lit(0.0)).as("h"))
+        .groupBy("node").agg(Queries.dsum(col("t")).as("raw")), "h")
       if (it < iters) hubs = hubs.localCheckpoint()
     }
     nodes.join(auths, Seq("node"), "left").join(hubs, Seq("node"), "left")
@@ -501,7 +473,7 @@ object Graph {
     * q47/q65 discipline). Output: surviving (node, deg) — degrees
     * WITHIN the core, all exact integers. */
   def kcore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    var und = edges.select(least(col("src"), col("dst")).as("a"),
+    val und = edges.select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .where(col("a") =!= col("b")).distinct()
     def degrees(e: DataFrame): DataFrame =
@@ -513,23 +485,22 @@ object Graph {
     // (two semi-joins), so an unchanged count proves an unchanged set
     // and every later round is a no-op recount of the same edges. The
     // declared result — the k-core at `rounds` rounds — is identical;
-    // the per-round count rides the already-materialized checkpoint.
-    und = und.localCheckpoint()
-    var prev = und.count()
+    // the per-round count is observed on the job that checkpoints it.
+    var (cur, m) = Iterate.stage(und, count(lit(1)))
+    var prev = m.getLong(0)
     var r = 1
     var fixed = false
     while (r <= rounds && !fixed) {
-      val keep = degrees(und).where(col("deg") >= k).select("node")
-      und = und
+      val keep = degrees(cur).where(col("deg") >= k).select("node")
+      val (next, mc) = Iterate.stage(cur
         .join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
-        .join(keep.select(col("node").as("b")), Seq("b"), "left_semi")
-        .localCheckpoint()
-      val c = und.count()
-      fixed = c == prev
-      prev = c
+        .join(keep.select(col("node").as("b")), Seq("b"), "left_semi"), count(lit(1)))
+      cur = next
+      fixed = mc.getLong(0) == prev
+      prev = mc.getLong(0)
       r += 1
     }
-    degrees(und).where(col("deg") >= k)
+    degrees(cur).where(col("deg") >= k)
       .select(col("node"), col("deg")).orderBy("node")
   }
 
@@ -548,27 +519,26 @@ object Graph {
     * node-keyed agg per round), O(nodes·log log n) state instead of
     * O(pairs). The gate pins the exact values; the sketch swap changes
     * the agg payload, not the plan. Per-round localCheckpoint keeps
-    * the plan linear in rounds (the q47/q65 discipline); the per-round
-    * count is the one driver action, the same tiny fixpoint probe
-    * connectedComponents performs. Output: (h, n_pairs, n_nodes,
-    * avg_ball). */
+    * the plan linear in rounds (the q47/q65 discipline); each round's
+    * count is observed on the job that stages it. Output: (h, n_pairs,
+    * n_nodes, avg_ball). */
   def neighborhoodFunction(edges: DataFrame, iters: Int): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
     val e = edges.select(col("src"), col("dst"))
       .where(col("src") =!= col("dst")).distinct().localCheckpoint()
-    val nodes = e.select(col("src").as("n"))
+    var (reach, m) = Iterate.stage(e.select(col("src").as("n"))
       .unionAll(e.select(col("dst").as("n"))).distinct()
-    val nNodes = nodes.count()
-    var reach = nodes.select(col("n").as("u"), col("n").as("v"))
-      .localCheckpoint()
-    val curve = scala.collection.mutable.Buffer((0, reach.count()))
+      .select(col("n").as("u"), col("n").as("v")), count(lit(1)))
+    val nNodes = m.getLong(0)
+    val curve = scala.collection.mutable.Buffer((0, nNodes))
     for (h <- 1 to iters) {
-      reach = reach
+      val (next, mh) = Iterate.stage(reach
         .unionAll(reach.join(e, reach("v") === e("src"))
           .select(reach("u"), e("dst").as("v")))
-        .distinct().localCheckpoint()
-      curve += ((h, reach.count()))
+        .distinct(), count(lit(1)))
+      reach = next
+      curve += ((h, mh.getLong(0)))
     }
     curve.toSeq.toDF("h", "n_pairs")
       .select(col("h").cast("long").as("h"), col("n_pairs"),
@@ -615,7 +585,7 @@ object Graph {
     // Early exit once the live set empties (r15 optimization): every
     // remaining round selects from an empty frame — two joins, a
     // checkpoint and an agg per round that provably produce zero MIS
-    // rows. The emptiness probe rides the just-checkpointed live set.
+    // rows. The live count is observed on the job that stages the set.
     var r = 1
     var drained = false
     while (r <= rounds && !drained) {
@@ -631,8 +601,10 @@ object Graph {
       val gone = sel.select(col("n"))
         .unionAll(dirE.join(sel.select(col("n").as("u")), Seq("u"),
           "left_semi").select(col("v").as("n")))
-      live = live.join(gone, Seq("n"), "left_anti").localCheckpoint()
-      drained = live.isEmpty
+      val (next, m) = Iterate.stage(live.join(gone, Seq("n"), "left_anti"),
+        count(lit(1)))
+      live = next
+      drained = m.getLong(0) == 0L
       r += 1
     }
     mis.orderBy("n")
@@ -670,10 +642,10 @@ object Graph {
   def ktrussPeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
-    var e = edges.select(least(col("src"), col("dst")).as("a"),
+    var (e, m) = Iterate.stage(edges.select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
-      .where(col("a") =!= col("b")).distinct().localCheckpoint()
-    val curve = scala.collection.mutable.Buffer((0L, e.count()))
+      .where(col("a") =!= col("b")).distinct(), count(lit(1)))
+    val curve = scala.collection.mutable.Buffer((0L, m.getLong(0)))
     // Early exit at the fixpoint (r15 optimization): peeling only
     // removes edges, so an unchanged count proves an unchanged set —
     // every later round re-enumerates the same wedges (the expensive
@@ -692,9 +664,10 @@ object Graph {
         .unionAll(tri.select(col("y").as("a"), col("z").as("b")))
         .groupBy("a", "b").agg(count(lit(1)).as("s"))
         .where(col("s") >= (k - 2).toLong)
-      e = e.join(sup.select("a", "b"), Seq("a", "b"), "left_semi")
-        .localCheckpoint()
-      val c = e.count()
+      val (next, mr) = Iterate.stage(
+        e.join(sup.select("a", "b"), Seq("a", "b"), "left_semi"), count(lit(1)))
+      e = next
+      val c = mr.getLong(0)
       fixed = c == curve(r - 1)._2
       curve += ((r.toLong, c))
       r += 1

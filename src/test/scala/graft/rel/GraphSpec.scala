@@ -1,10 +1,15 @@
 package graft.rel
 
 import graft.SparkSpec
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 
 /** Graph.pageRank: closed-form fixtures (uniform cycle, hand-computed
-  * dangling redistribution) and the mass-conservation invariant on the
-  * real bigram graph. */
+  * dangling redistribution), the mass-conservation invariant on the
+  * real bigram graph, bitwise agreement of the shared rank loop with
+  * the broadcast-scalar formulation on random graphs, and its job
+  * budget per round. */
 class GraphSpec extends SparkSpec {
 
   import org.apache.spark.sql.functions._
@@ -44,6 +49,132 @@ class GraphSpec extends SparkSpec {
     // weighted: a higher-in-degree hub must outrank a leaf
     val n = ranks.count()
     assert(n > 10, s"bigram graph unexpectedly small: $n nodes")
+  }
+
+  /** The broadcast-scalar formulation the shared rank loop replaced:
+    * N and each round's dangling mass are 1-row aggregates cross-joined
+    * back, ranks come from a node join plus a dangling anti-join.
+    * `seeds` = None is pageRank, Some is personalizedPageRank; ranks
+    * are unrounded. */
+  private def refRanks(edges: DataFrame, seeds: Option[DataFrame], iters: Int,
+                       damping: Double): DataFrame = {
+    val e = edges.select(col("src"), col("dst"), col("weight")).localCheckpoint()
+    val nodes = e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct().localCheckpoint()
+    val nc = nodes.agg(count(lit(1)).cast("double").as("n"))
+    val outw = e.groupBy("src").agg(sum(col("weight")).as("outw")).localCheckpoint()
+    val restart = seeds.map { sd0 =>
+      val sd = sd0.select(col("node")).distinct()
+      val ns = sd.agg(count(lit(1)).cast("double").as("ns"))
+      nodes.join(sd.withColumn("is_seed", lit(true)), Seq("node"), "left")
+        .crossJoin(broadcast(ns))
+        .select(col("node"),
+          when(col("is_seed"), lit(1.0) / col("ns")).otherwise(lit(0.0)).as("restart"))
+        .localCheckpoint()
+    }
+    var ranks = restart match {
+      case None => nodes.crossJoin(broadcast(nc))
+        .select(col("node"), (lit(1.0) / col("n")).as("rank"))
+      case Some(r) => r.select(col("node"), col("restart").as("rank"))
+    }
+    for (it <- 1 to iters) {
+      val sums = e.join(ranks.withColumnRenamed("node", "src"), "src")
+        .join(outw, "src")
+        .select(col("dst").as("node"),
+          (col("rank") * col("weight") / col("outw")).as("term"))
+        .groupBy("node").agg(Queries.dsum(col("term")).as("s"))
+      val dang = ranks
+        .join(outw, ranks("node") === outw("src"), "left_anti")
+        .agg(coalesce(Queries.dsum(col("rank")), lit(0.0)).as("dmass"))
+      ranks = restart match {
+        case None => nodes.join(sums, Seq("node"), "left")
+          .crossJoin(broadcast(dang)).crossJoin(broadcast(nc))
+          .select(col("node"),
+            (lit(1.0 - damping) / col("n")
+              + lit(damping)
+                * (coalesce(col("s"), lit(0.0)) + col("dmass") / col("n")))
+              .as("rank"))
+        case Some(r) => r.join(sums, Seq("node"), "left")
+          .crossJoin(broadcast(dang))
+          .select(col("node"),
+            (lit(1.0 - damping) * col("restart")
+              + lit(damping)
+                * (coalesce(col("s"), lit(0.0)) + col("dmass") * col("restart")))
+              .as("rank"))
+      }
+      if (it < iters) ranks = ranks.localCheckpoint()
+    }
+    ranks
+  }
+
+  private def rankBits(df: DataFrame): Map[String, Long] =
+    df.collect().map(r =>
+      r.getString(0) -> java.lang.Double.doubleToRawLongBits(r.getDouble(1))).toMap
+
+  test("rank loop is bitwise-equal to the broadcast-scalar formulation (random graphs)") {
+    var dangling, isolatedSeeds = 0
+    for (seed <- 1 to 10) {
+      val rnd = new scala.util.Random(seed)
+      val nNodes = 2 + rnd.nextInt(13)
+      val rows = Seq.fill(1 + rnd.nextInt(25))((s"n${rnd.nextInt(nNodes)}",
+        s"n${rnd.nextInt(nNodes)}", 1L + rnd.nextInt(5)))
+      val used = rows.flatMap(r => Seq(r._1, r._2)).toSet
+      // seed ids run past the graph's, so some seeds are isolated
+      val seedIds = (0 to nNodes + 1).map(i => s"n$i").filter(_ => rnd.nextBoolean())
+      if ((rows.map(_._2).toSet -- rows.map(_._1)).nonEmpty) dangling += 1
+      if (seedIds.exists(!used(_))) isolatedSeeds += 1
+      val e = edgesOf(rows)
+      val seeds = spark.createDataFrame(seedIds.map(Tuple1(_))).toDF("node")
+      val iters = 1 + rnd.nextInt(4)
+      val d = 0.5 + rnd.nextInt(50) / 100.0
+      for (sd <- Seq(None, Some(seeds))) {
+        val got = rankBits(Graph.rankRounds("rank", e, sd, iters, d))
+        val want = rankBits(refRanks(e, sd, iters, d))
+        assert(got == want, s"seed $seed, iters $iters, damping $d, seeds ${sd.map(_ => seedIds)}")
+      }
+    }
+    assert(dangling >= 3 && isolatedSeeds >= 3,
+      s"vacuous: $dangling graphs with dangling nodes, $isolatedSeeds with isolated seeds")
+  }
+
+  test("pageRank, personalizedPageRank and hits return no rows on an empty edge set") {
+    val e = edgesOf(Seq.empty)
+    val seeds = spark.createDataFrame(Seq(Tuple1("a"))).toDF("node")
+    assert(Graph.pageRank(e, iters = 3, damping = 0.85).collect().isEmpty)
+    assert(Graph.personalizedPageRank(e, seeds, iters = 3, damping = 0.85)
+      .collect().isEmpty)
+    assert(Graph.hits(e, iters = 2).collect().isEmpty)
+  }
+
+  test("pageRank: one more round costs at most 3 jobs, and no nested-loop join") {
+    val e = edgesOf(Seq(("a", "b", 1L), ("b", "c", 2L), ("c", "a", 1L),
+      ("a", "c", 1L), ("c", "d", 1L)))
+    val sc = spark.sparkContext
+    // jobs of the whole operator — build plus the final write
+    def jobs(iters: Int): Int = {
+      val group = s"graph-spec-pagerank-$iters"
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val l = new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit =
+          if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+            n.incrementAndGet()
+      }
+      sc.addSparkListener(l)
+      sc.setJobGroup(group, "pageRank job budget")
+      try {
+        val ranks = Graph.pageRank(e, iters, damping = 0.85)
+        ranks.write.format("noop").mode("overwrite").save()
+        val plan = ranks.queryExecution.executedPlan.toString
+        assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
+        ListenerBusDrain(sc)
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(l)
+      }
+      n.get
+    }
+    val (j3, j4) = (jobs(3), jobs(4))
+    assert(j4 > j3 && j4 - j3 <= 3, s"iters 3: $j3 jobs, iters 4: $j4 jobs")
   }
 
   test("triangles: hand fixture — K4 plus a pendant edge") {
