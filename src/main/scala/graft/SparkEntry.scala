@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.rel.Tables
 import graft.text.{CoOccur, Tokenize}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -18,9 +19,6 @@ import graft.text.{CoOccur, Tokenize}
   */
 object SparkEntry {
 
-  private def tbl(spark: SparkSession, dir: String, name: String): DataFrame =
-    rel.Queries.normalizeTs(spark.read.parquet(s"$dir/$name.parquet"))
-
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Revenue by region/nation — exercises scan, broadcast joins, agg, sort. */
   def entry(spark: SparkSession): DataFrame =
@@ -30,20 +28,20 @@ object SparkEntry {
   private val textQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // O1-O5, O11 (Spark-variant: lowercase + top-1000, SparkWordCount.scala:28-35)
     "wordcount_alpha" -> ((s, dir) =>
-      CoOccur.topK(CoOccur.wordCount(tbl(s, dir, "documents"), "text", lowercase = true), "alpha", 1000)),
+      CoOccur.topK(CoOccur.wordCount(Tables.read(s, dir, "documents"), "text", lowercase = true), "alpha", 1000)),
     "wordcount_num" -> ((s, dir) =>
-      CoOccur.topK(CoOccur.wordCount(tbl(s, dir, "documents"), "text", lowercase = true), "num", 1000)),
+      CoOccur.topK(CoOccur.wordCount(Tables.read(s, dir, "documents"), "text", lowercase = true), "num", 1000)),
     // O1-O6 (Hadoop variant: no lowercase, both categories, category column = the
     // reference's categorical partition routing re-expressed as data)
     "hadoop_wordcount" -> ((s, dir) =>
-      CoOccur.wordCount(tbl(s, dir, "documents"), "text")
+      CoOccur.wordCount(Tables.read(s, dir, "documents"), "text")
         .orderBy("category", "tok")),
     // O7: adjacent pairs
     "pairs_m1" -> ((s, dir) =>
-      CoOccur.pairs(tbl(s, dir, "documents"), "text", 1).orderBy("w1", "w2")),
+      CoOccur.pairs(Tables.read(s, dir, "documents"), "text", 1).orderBy("w1", "w2")),
     // O8: windowed pairs, m=4
     "pairs_m4" -> ((s, dir) =>
-      CoOccur.pairs(tbl(s, dir, "documents"), "text", 4).orderBy("w1", "w2")),
+      CoOccur.pairs(Tables.read(s, dir, "documents"), "text", 4).orderBy("w1", "w2")),
     // O9 in the reference's ACTUAL output shape: map-typed stripes
     // (MapWritable per word, including the EMPTY stripes the reference
     // writes unconditionally for category words). Map columns can't be
@@ -51,7 +49,7 @@ object SparkEntry {
     // §3), so the declared row renders each map as its key-sorted
     // "neighbor:cnt|…" string — order-canonical on both engines.
     "q74_stripes_map" -> ((s, dir) =>
-      CoOccur.stripesMap(tbl(s, dir, "documents"), "text", 1)
+      CoOccur.stripesMap(Tables.read(s, dir, "documents"), "text", 1)
         .select(col("word"),
           concat_ws("|", transform(array_sort(map_entries(col("stripe"))),
             e => concat_ws(":", e.getField("key"), e.getField("value"))))
@@ -59,10 +57,10 @@ object SparkEntry {
         .orderBy("word")),
     // O9: stripes m=1 (exploded oracle form, FIXTURES.md §3)
     "stripes_m1" -> ((s, dir) =>
-      CoOccur.stripesExploded(tbl(s, dir, "documents"), "text", 1).orderBy("word", "neighbor")),
+      CoOccur.stripesExploded(Tables.read(s, dir, "documents"), "text", 1).orderBy("word", "neighbor")),
     // O10: windowed stripes m=4
     "stripes_m4" -> ((s, dir) =>
-      CoOccur.stripesExploded(tbl(s, dir, "documents"), "text", 4).orderBy("word", "neighbor")),
+      CoOccur.stripesExploded(Tables.read(s, dir, "documents"), "text", 4).orderBy("word", "neighbor")),
     // O1+O12 end-to-end: the reference's literal text I/O contract —
     // read a raw text FILE (`sc.textFile`/`TextInputFormat`), word-count
     // both categories, write the tab-separated text sink
@@ -86,7 +84,7 @@ object SparkEntry {
     "pairs_m1_keyed" -> ((s, dir) => {
       val out = Scratch.dir("pairs_m1_keyed")
       sources.TextLines.writeTsv(
-        CoOccur.pairs(tbl(s, dir, "documents"), "text", 1)
+        CoOccur.pairs(Tables.read(s, dir, "documents"), "text", 1)
           .select(concat(col("w1"), lit(":"), col("w2")).as("pair"), col("cnt")), out)
       sources.TextLines.readTsv(s, out, "pair", "cnt")
         .withColumn("cnt", col("cnt").cast("long"))
@@ -102,7 +100,7 @@ object SparkEntry {
     "q56_category_sink" -> ((s, dir) => {
       val out = Scratch.dir("category_sink")
       sources.TextLines.writeByCategory(
-        CoOccur.wordCount(tbl(s, dir, "documents"), "text"), out)
+        CoOccur.wordCount(Tables.read(s, dir, "documents"), "text"), out)
       s.read.parquet(out)
         .select(col("category").cast("string").as("category"),
           col("tok"), col("cnt"))
@@ -117,7 +115,7 @@ object SparkEntry {
       import org.apache.spark.sql.types._
       val out = Scratch.dir("json_docs")
       sources.TextLines.writeJsonl(
-        tbl(s, dir, "documents").select("doc_id", "lang", "text"), out)
+        Tables.read(s, dir, "documents").select("doc_id", "lang", "text"), out)
       val schema = StructType(Seq(
         StructField("doc_id", LongType), StructField("lang", StringType),
         StructField("text", StringType)))
@@ -137,7 +135,7 @@ object SparkEntry {
       import org.apache.spark.sql.types._
       val out = Scratch.dir("csv_docs")
       sources.TextLines.writeCsv(
-        tbl(s, dir, "documents").select("doc_id", "lang", "text"), out)
+        Tables.read(s, dir, "documents").select("doc_id", "lang", "text"), out)
       val schema = StructType(Seq(
         StructField("doc_id", LongType), StructField("lang", StringType),
         StructField("text", StringType)))
@@ -170,7 +168,7 @@ object SparkEntry {
       import org.apache.spark.sql.types._
       val out = Scratch.dir("orc_docs")
       sources.TextLines.writeOrc(
-        tbl(s, dir, "documents").select("doc_id", "lang", "text"), out)
+        Tables.read(s, dir, "documents").select("doc_id", "lang", "text"), out)
       val schema = StructType(Seq(
         StructField("doc_id", LongType), StructField("lang", StringType),
         StructField("text", StringType)))
@@ -189,7 +187,7 @@ object SparkEntry {
     "q445_avro_roundtrip" -> ((s, dir) => {
       val out = Scratch.dir("avro_docs")
       sources.AvroBlob.writeAvro(
-        tbl(s, dir, "documents").select("doc_id", "lang", "text"), out)
+        Tables.read(s, dir, "documents").select("doc_id", "lang", "text"), out)
       sources.AvroBlob.readAvro(s, out)
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"),
@@ -206,7 +204,7 @@ object SparkEntry {
     "q447_avro_evolution" -> ((s, dir) => {
       val out = Scratch.dir("avro_docs_evo")
       sources.AvroBlob.writeAvro(
-        tbl(s, dir, "documents").select("doc_id", "lang", "text"), out)
+        Tables.read(s, dir, "documents").select("doc_id", "lang", "text"), out)
       sources.AvroBlob.readAvroEvolved(s, out)
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"),
@@ -226,7 +224,7 @@ object SparkEntry {
       val out = Scratch.dir("stream_ingest")
       val ingested = sources.StreamIngest.ingestParquet(
         s, dir, "documents.parquet",
-        tbl(s, dir, "documents").schema, out, out + "_ckpt",
+        Tables.read(s, dir, "documents").schema, out, out + "_ckpt",
         df => df.where(length(col("text")) >= 100)
           .select(col("doc_id"), col("lang"),
             size(split(col("text"), " ", -1)).cast("long").as("n_tokens")))
@@ -255,7 +253,7 @@ object SparkEntry {
         outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
           .delete(outPath, true)
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-        tbl(s, dir, "documents").select("doc_id", "text")
+        Tables.read(s, dir, "documents").select("doc_id", "text")
           .where(col("doc_id") < 500)
           .foreachPartition { rows: java.util.Iterator[org.apache.spark.sql.Row] =>
             rows.forEachRemaining { r =>
@@ -275,7 +273,7 @@ object SparkEntry {
             .cast("long").as("doc_id"),
           col("length").as("n_bytes"),
           col("content").cast("string").as("decoded"))
-        .join(tbl(s, dir, "documents").select(col("doc_id"), col("text"))
+        .join(Tables.read(s, dir, "documents").select(col("doc_id"), col("text"))
           .where(col("doc_id") < 500), "doc_id")
         .select(col("doc_id"), col("n_bytes"),
           (col("decoded") === col("text")).as("roundtrip_ok"))
@@ -391,7 +389,7 @@ object SparkEntry {
       // streaming operator's cross-micro-batch drop decision is still
       // fully exercised by the injected copies arriving in a LATER
       // file against checkpointed state.
-      val docs = tbl(s, dir, "documents").select("doc_id", "text", "lang")
+      val docs = Tables.read(s, dir, "documents").select("doc_id", "text", "lang")
         .withColumn("__rn", row_number().over(
           org.apache.spark.sql.expressions.Window
             .partitionBy("text").orderBy("doc_id")))
@@ -497,7 +495,7 @@ object SparkEntry {
         .select(col("event_id"), col("user_id"), col("ts"),
           col("event_type"), col("value"))
       writeTimeSlices(ev, src, 6, 0 until 6, clean = true)
-      val dim = tbl(s, dir, "customer")
+      val dim = Tables.read(s, dir, "customer")
         .select(col("c_custkey").as("user_id"),
           col("c_mktsegment").as("segment"))
       val enriched = sources.StreamIngest.ingestParquet(
@@ -572,7 +570,7 @@ object SparkEntry {
     "q243_xml_roundtrip" -> ((s, dir) => {
       import org.apache.spark.sql.types._
       val out = Scratch.dir("xml_docs")
-      tbl(s, dir, "documents").select("doc_id", "lang", "text")
+      Tables.read(s, dir, "documents").select("doc_id", "lang", "text")
         .write.mode("overwrite").format("xml").option("rowTag", "doc")
         .save(out)
       val schema = StructType(Seq(
@@ -808,9 +806,6 @@ object SparkEntry {
       |WHERE (win_start + 3600) * 1000 <= mxus // 1000 - 3600000
       |GROUP BY win_start ORDER BY win_start""".stripMargin
 
-  /** The gap-session truth (q16's boundary semantics reduced to the
-    * streaming operators' emitted columns), shared verbatim by
-    * q90/q239/q241. */
   /** Batch truth for the MapState profile drains (q278 single-run,
     * q282 stop/restart): per-(type, user) count and exact micro-unit
     * value sum. */
@@ -819,6 +814,9 @@ object SparkEntry {
       |  CAST(sum(CAST(round(value * 1000000) AS BIGINT)) AS BIGINT) AS sum_vu
       |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
+  /** The gap-session truth (q16's boundary semantics reduced to the
+    * streaming operators' emitted columns), shared verbatim by
+    * q90/q239/q241. */
   private val sessionTruthOracle: String =
     """WITH x AS (
       |  SELECT user_id, event_id, epoch_us(ts) AS us,

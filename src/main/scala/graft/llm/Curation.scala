@@ -224,18 +224,6 @@ object Curation {
           .otherwise(lit(0.0)).as("dup_frac"))
   }
 
-  /** Sliding-window chunking: split each doc's token stream into
-    * fixed-`size` windows advancing by `stride` (overlap = size −
-    * stride), the context-window prep for training/embedding when docs
-    * exceed the model's sequence length. Every token is covered: the
-    * number of chunks is 1 + ceil(max(len − size, 0) / stride), so the
-    * final window always reaches the last token (and is the only one
-    * that may be short). Emits (id, chunk_idx, n_tokens, chunk).
-    *
-    * Scale: pure per-row generate — split once, one `sequence` ×
-    * `slice` expansion, all inside whole-stage codegen; NO shuffle
-    * (PlanSpec-pinned). Output rows ≈ input tokens / stride, the
-    * shape that feeds q39/q70's packing. */
   /** Distributed BPE tokenizer training (Sennrich et al., ACL 2016;
     * the Gage 1994 byte-pair idea): `rounds` merge steps over the
     * corpus word-frequency table, returning the learned merge table
@@ -352,6 +340,18 @@ object Curation {
       .orderBy("lang")
   }
 
+  /** Sliding-window chunking: split each doc's token stream into
+    * fixed-`size` windows advancing by `stride` (overlap = size −
+    * stride), the context-window prep for training/embedding when docs
+    * exceed the model's sequence length. Every token is covered: the
+    * number of chunks is 1 + ceil(max(len − size, 0) / stride), so the
+    * final window always reaches the last token (and is the only one
+    * that may be short). Emits (id, chunk_idx, n_tokens, chunk).
+    *
+    * Scale: pure per-row generate — split once, one `sequence` ×
+    * `slice` expansion, all inside whole-stage codegen; NO shuffle
+    * (PlanSpec-pinned). Output rows ≈ input tokens / stride, the
+    * shape that feeds q39/q70's packing. */
   def chunk(docs: DataFrame, idCol: String, textCol: String,
             window: Int, stride: Int): DataFrame = {
     require(window > 0 && stride > 0 && stride <= window,
@@ -647,25 +647,6 @@ object Curation {
           .as("abs_err"))
   }
 
-  /** Leave-one-source-out ABLATION report (the sufficient-statistics
-    * special case of data valuation — Ghorbani &amp; Zou's Data
-    * Shapley asks this with retraining; a curation pipeline first asks
-    * it for metrics that decompose, where the answer is EXACT and
-    * free): for each source, what happens to the corpus mean quality
-    * score (q24's blend) and the language-distribution entropy if that
-    * source is dropped? Both metrics decompose over rows, so every
-    * ablation is algebra on totals — (Q−Q_s)/(N−n_s) and the 5×5
-    * (source × lang) cell grid — with NO second pass over the data:
-    * the whole report costs one scan + two tiny aggs regardless of
-    * source count, which is why this report is the cheap screen run
-    * BEFORE any retraining-based valuation.
-    *
-    * Determinism: quality is q24's per-row IEEE chain; sums ride dsum;
-    * entropy terms −p·ln p are fixed-order with p&gt;0 guards; deltas
-    * femit.
-    *
-    * Scale: one corpus scan → (source, lang)-cell hash-agg; the
-    * ablation algebra runs on |sources|·|langs| cells. */
   /** Sampled-permutation DATA Shapley source valuation (Ghorbani &amp;
     * Zou, ICML 2019, "Data Shapley", at source granularity — the
     * axiomatic upgrade of [[sourceAblation]]'s leave-one-out deltas:
@@ -786,6 +767,25 @@ object Curation {
       .orderBy("source")
   }
 
+  /** Leave-one-source-out ABLATION report (the sufficient-statistics
+    * special case of data valuation — Ghorbani &amp; Zou's Data
+    * Shapley asks this with retraining; a curation pipeline first asks
+    * it for metrics that decompose, where the answer is EXACT and
+    * free): for each source, what happens to the corpus mean quality
+    * score (q24's blend) and the language-distribution entropy if that
+    * source is dropped? Both metrics decompose over rows, so every
+    * ablation is algebra on totals — (Q−Q_s)/(N−n_s) and the 5×5
+    * (source × lang) cell grid — with NO second pass over the data:
+    * the whole report costs one scan + two tiny aggs regardless of
+    * source count, which is why this report is the cheap screen run
+    * BEFORE any retraining-based valuation.
+    *
+    * Determinism: quality is q24's per-row IEEE chain; sums ride dsum;
+    * entropy terms −p·ln p are fixed-order with p&gt;0 guards; deltas
+    * femit.
+    *
+    * Scale: one corpus scan → (source, lang)-cell hash-agg; the
+    * ablation algebra runs on |sources|·|langs| cells. */
   def sourceAblation(docs: DataFrame): DataFrame = {
     import graft.rel.Queries.{dsum, femit}
     val ts = expr("filter(split(text, ' ', -1), t -> t != '')")

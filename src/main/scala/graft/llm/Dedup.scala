@@ -1311,41 +1311,6 @@ object Dedup {
     }.reduce(_ unionByName _).orderBy("scheme")
   }
 
-  /** TRUE EXACT-SUBSTRING duplicate spans via prefix-doubling position
-    * naming (Lee et al., "Deduplicating Training Data Makes Language
-    * Models Better", ACL 2022 — ExactSubstr; the naming step is
-    * Manber–Myers prefix doubling): a position's name for window 2m is
-    * an INJECTIVE renaming of (name_m(p), name_m(p+m)), so log2(L)
-    * rounds of one equi-join + one keyed aggregate each decide EXACTLY
-    * which L-token windows repeat anywhere in the corpus — no hashing,
-    * no collisions, no false positives at any L (q271's winnowed
-    * windows are the probabilistic cousin; this is the exact member of
-    * the family). Names are min-(doc_id, pos) labels: grouping needs
-    * injectivity, not suffix ORDER, so no global sort ever happens —
-    * the classic suffix-array rank sort is replaced by min-label
-    * aggregation, the CC-loop trick applied to naming. Arbitrary L is
-    * reached by COMPOSITE naming: after doubling to m = 2^floor(log2 L),
-    * one extra round pairs name_m(p) with name_m(p + L - m) — the two
-    * m-windows overlap (L - m < m), so the pair stays injective for the
-    * full L-window; Lee et al.'s published L=50 is compose(name_32, 18).
-    *
-    * Per document: L-window count, duplicated-window count, maximal
-    * duplicated runs (gaps-and-islands over consecutive duplicated
-    * positions — a shared span of S >= L tokens appears as a run of
-    * S-L+1 consecutive duplicated windows, so runs recover EVERY
-    * maximal shared span exactly), the longest shared span in tokens,
-    * and the merged-interval covered-token count (adjacent runs'
-    * coverage can overlap by up to L-2 tokens; a running-max interval
-    * merge keeps the count exact).
-    *
-    * Determinism: naming is min() over exact integers/structs; run
-    * algebra is integer; the only doubles are the femit'd share.
-    *
-    * Scale: each naming round shuffles by (doc_id, pos) for the
-    * neighbor fetch and by the (name, name) pair for renaming — both
-    * corpus-grain equi-joins with map-side partials, never pairwise;
-    * runs/merge ride doc-partitioned windows. log2(L) fixed rounds
-    * (Lee et al. use L=50 → 6 rounds at web scale). */
   /** The prefix-doubling naming chain shared by [[exactSubstrRuns]] and
     * [[exactSubstrCut]]: (doc_id, pos, nm) for every position with a
     * full L-token window, where nm is an injective min-position label
@@ -1402,6 +1367,41 @@ object Dedup {
       .withColumn("n_windows",
         greatest(col("n_tokens") - lit(windowL - 1L), lit(0L)))
 
+  /** TRUE EXACT-SUBSTRING duplicate spans via prefix-doubling position
+    * naming (Lee et al., "Deduplicating Training Data Makes Language
+    * Models Better", ACL 2022 — ExactSubstr; the naming step is
+    * Manber–Myers prefix doubling): a position's name for window 2m is
+    * an INJECTIVE renaming of (name_m(p), name_m(p+m)), so log2(L)
+    * rounds of one equi-join + one keyed aggregate each decide EXACTLY
+    * which L-token windows repeat anywhere in the corpus — no hashing,
+    * no collisions, no false positives at any L (q271's winnowed
+    * windows are the probabilistic cousin; this is the exact member of
+    * the family). Names are min-(doc_id, pos) labels: grouping needs
+    * injectivity, not suffix ORDER, so no global sort ever happens —
+    * the classic suffix-array rank sort is replaced by min-label
+    * aggregation, the CC-loop trick applied to naming. Arbitrary L is
+    * reached by COMPOSITE naming: after doubling to m = 2^floor(log2 L),
+    * one extra round pairs name_m(p) with name_m(p + L - m) — the two
+    * m-windows overlap (L - m < m), so the pair stays injective for the
+    * full L-window; Lee et al.'s published L=50 is compose(name_32, 18).
+    *
+    * Per document: L-window count, duplicated-window count, maximal
+    * duplicated runs (gaps-and-islands over consecutive duplicated
+    * positions — a shared span of S >= L tokens appears as a run of
+    * S-L+1 consecutive duplicated windows, so runs recover EVERY
+    * maximal shared span exactly), the longest shared span in tokens,
+    * and the merged-interval covered-token count (adjacent runs'
+    * coverage can overlap by up to L-2 tokens; a running-max interval
+    * merge keeps the count exact).
+    *
+    * Determinism: naming is min() over exact integers/structs; run
+    * algebra is integer; the only doubles are the femit'd share.
+    *
+    * Scale: each naming round shuffles by (doc_id, pos) for the
+    * neighbor fetch and by the (name, name) pair for renaming — both
+    * corpus-grain equi-joins with map-side partials, never pairwise;
+    * runs/merge ride doc-partitioned windows. log2(L) fixed rounds
+    * (Lee et al. use L=50 → 6 rounds at web scale). */
   def exactSubstrRuns(docs: DataFrame, idCol: String, textCol: String,
                       windowL: Int = 4): DataFrame = {
     import graft.rel.Queries.femit

@@ -280,28 +280,6 @@ object Multimodal {
     withMed.select(col("doc_id"), word(32).as("ph_hi"), word(0).as("ph_lo"))
   }
 
-  /** Perceptual near-dup pairs over the media feature path — the
-    * multimodal member of the dedup family (text MinHash = q18,
-    * embedding sign-LSH = q36, perceptual = this): a MULTI-INDEX
-    * HAMMING band join (Norouzi, Punjani &amp; Fleet, "Fast Search in
-    * Hamming Space with Multi-Index Hashing", CVPR 2012) over the two
-    * pHash words generates candidates, exact bit_count(xor) verifies
-    * Hamming ≤ maxDist. The 64 bits split into maxDist+1 contiguous
-    * substrings, so by pigeonhole any pair within maxDist agrees
-    * EXACTLY on ≥1 band — the banding is LOSSLESS at every radius
-    * (q54's 4-band rule is the maxDist=3 special case), which is why
-    * the q373 oracle is the BRUTE-FORCE distance join: the gate row
-    * certifies losslessness, not just parity.
-    *
-    * Scale: the MIH cost curve is explicit — a larger radius means
-    * more, shorter bands, i.e. denser buckets (band width 64/(r+1)
-    * bits ⇒ ~N/2^(64/(r+1)) docs per bucket); candidates come from
-    * ONE grouped shuffle on (band, bval) (the q36/prefixFilterJoin
-    * discipline), buckets up to `maxBucket` expand in-task, LARGER
-    * buckets spill through the lossless salted (band, bval, salt)
-    * self-join so a degenerate band value (exact-dup-heavy corpora)
-    * fans its quadratic step over [[graft.llm.Dedup.SpillSalts]]
-    * tasks instead of dropping pairs or OOMing one task. */
   /** MIH band values: band b = bits [64b/m, 64(b+1)/m) rebuilt from
     * the two pHash words — pure integer shifts/masks, codegen-
     * friendly; for m=4 this is exactly the historical lo&amp;0xFFFF /
@@ -325,6 +303,28 @@ object Multimodal {
     perceptualHash(docs).select(col("doc_id"), col("ph_hi"), col("ph_lo"),
       posexplode(array(mihBands(nBands): _*)).as(Seq("band", "bval")))
 
+  /** Perceptual near-dup pairs over the media feature path — the
+    * multimodal member of the dedup family (text MinHash = q18,
+    * embedding sign-LSH = q36, perceptual = this): a MULTI-INDEX
+    * HAMMING band join (Norouzi, Punjani &amp; Fleet, "Fast Search in
+    * Hamming Space with Multi-Index Hashing", CVPR 2012) over the two
+    * pHash words generates candidates, exact bit_count(xor) verifies
+    * Hamming ≤ maxDist. The 64 bits split into maxDist+1 contiguous
+    * substrings, so by pigeonhole any pair within maxDist agrees
+    * EXACTLY on ≥1 band — the banding is LOSSLESS at every radius
+    * (q54's 4-band rule is the maxDist=3 special case), which is why
+    * the q373 oracle is the BRUTE-FORCE distance join: the gate row
+    * certifies losslessness, not just parity.
+    *
+    * Scale: the MIH cost curve is explicit — a larger radius means
+    * more, shorter bands, i.e. denser buckets (band width 64/(r+1)
+    * bits ⇒ ~N/2^(64/(r+1)) docs per bucket); candidates come from
+    * ONE grouped shuffle on (band, bval) (the q36/prefixFilterJoin
+    * discipline), buckets up to `maxBucket` expand in-task, LARGER
+    * buckets spill through the lossless salted (band, bval, salt)
+    * self-join so a degenerate band value (exact-dup-heavy corpora)
+    * fans its quadratic step over [[graft.llm.Dedup.SpillSalts]]
+    * tasks instead of dropping pairs or OOMing one task. */
   def perceptualNearDups(docs: DataFrame, maxDist: Int = 3,
                          maxBucket: Int = 10000): DataFrame = {
     import graft.llm.Dedup.SpillSalts

@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.Scratch.stampedStore
+import graft.rel.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,9 +16,6 @@ import org.apache.spark.sql.functions._
   * recomputes as a plain SQL fold (see [[fnvSql]]).
   */
 object Queries {
-
-  private def tbl(s: SparkSession, dir: String, name: String): DataFrame =
-    graft.rel.Queries.normalizeTs(s.read.parquet(s"$dir/$name.parquet"))
 
   /** Local alias of the hash-portable float-emission oracle twin —
     * see [[graft.rel.Queries.femitSql]]. */
@@ -48,13 +46,13 @@ object Queries {
     // verify). Fully DuckDB-oracled since round 4: every hash in the
     // pipeline is the portable Fnv1a32, recomputed by the oracle SQL.
     "q18_minhash_neardup" -> ((s, dir) =>
-      Dedup.minhashNearDups(tbl(s, dir, "documents"), "doc_id", "text",
+      Dedup.minhashNearDups(Tables.read(s, dir, "documents"), "doc_id", "text",
         k = 3, nBuckets = 64, bandSize = 4, threshold = 0.1)
         .orderBy("d1", "d2")),
     // E15: SimHash fingerprints as two portable 32-bit words — fully
     // DuckDB-oracled since round 4 (see Dedup.simhashAgg scaladoc).
     "q19_simhash" -> ((s, dir) =>
-      Dedup.simhashAgg(tbl(s, dir, "documents"), "doc_id", "text")
+      Dedup.simhashAgg(Tables.read(s, dir, "documents"), "doc_id", "text")
         .orderBy("doc_id")),
     // E15: the SimHash near-dup *decision* — 4×16-bit band join +
     // exact Hamming verify. maxDist 16 keeps the declared row non-vacuous
@@ -62,7 +60,7 @@ object Queries {
     // SF); the oracle replicates the identical banding, so the row
     // checks operator parity at any maxDist.
     "q54_simhash_neardup" -> ((s, dir) =>
-      Dedup.simhashNearDups(tbl(s, dir, "documents"), "doc_id", "text",
+      Dedup.simhashNearDups(Tables.read(s, dir, "documents"), "doc_id", "text",
         maxDist = 16)
         .orderBy("d1", "d2")),
     // E15 closure: near-dup PAIRS -> dedup GROUPS via distributed
@@ -70,7 +68,7 @@ object Queries {
     // oracle transitive-closes the same pair set with a recursive CTE
     "q65_dedup_components" -> ((s, dir) =>
       Dedup.connectedComponents(
-        Dedup.minhashNearDups(tbl(s, dir, "documents"), "doc_id", "text",
+        Dedup.minhashNearDups(Tables.read(s, dir, "documents"), "doc_id", "text",
           k = 3, nBuckets = 64, bandSize = 4, threshold = 0.1))
         .orderBy("doc_id")),
     // E15 production shape: INCREMENTAL connected components — fold a
@@ -81,7 +79,7 @@ object Queries {
     // VERBATIM (one shared SQL string) — the incremental path must
     // reproduce the from-scratch labels exactly, merges included.
     "q141_incremental_cc" -> ((s, dir) => {
-      val pairs = Dedup.minhashNearDups(tbl(s, dir, "documents"),
+      val pairs = Dedup.minhashNearDups(Tables.read(s, dir, "documents"),
           "doc_id", "text", k = 3, nBuckets = 64, bandSize = 4,
           threshold = 0.1)
         .localCheckpoint() // one LSH pass feeds both generation splits
@@ -107,7 +105,7 @@ object Queries {
     // end to end, so loss or duplication across the persist/read-back
     // boundary fails the row.
     "q75_incremental_dedup" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
+      val docs = Tables.read(s, dir, "documents")
       val history = docs.where(col("doc_id") % 2 === 0)
       val fresh = docs.where(col("doc_id") % 2 === 1)
       // Idempotent store build (Scratch.stamped): batch N−1's store is
@@ -140,7 +138,7 @@ object Queries {
     // pattern); the merge + rewrite + probe run per pass: they ARE the
     // operator.
     "q100_store_update" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
+      val docs = Tables.read(s, dir, "documents")
       val gen0 = docs.where(col("doc_id") % 3 === 0)
       val gen1 = docs.where(col("doc_id") % 3 === 1)
       val gen2 = docs.where(col("doc_id") % 3 === 2)
@@ -179,7 +177,7 @@ object Queries {
     // rows pin to ONE oracle value — index-store corruption, a
     // bucketed-write loss, or probe drift turns the row red.
     "q106_ivf_persisted" -> ((s, dir) => {
-      val emb = tbl(s, dir, "embeddings")
+      val emb = Tables.read(s, dir, "embeddings")
       graft.Scratch.stamped("ivf_index", dir, "embeddings",
           s.catalog.tableExists("ivf_assign") &&
             s.catalog.tableExists("ivf_centroids")) {
@@ -204,7 +202,7 @@ object Queries {
     // lost or duplicated append file, a mis-assigned batch vector, or
     // any bucketed-append corruption fails the row.
     "q114_ivf_update" -> ((s, dir) => {
-      val emb = tbl(s, dir, "embeddings")
+      val emb = Tables.read(s, dir, "embeddings")
       val base = emb.where(col("vec_id") % 5 =!= 4)
       val batch = emb.where(col("vec_id") % 5 === 4)
       graft.Scratch.stamped("ivf_update", dir, "embeddings",
@@ -226,7 +224,7 @@ object Queries {
     // catch before training. Eval gram set broadcast; corpus streams
     // once (PlanSpec-pinned).
     "q111_decontaminate" -> ((s, dir) =>
-      Curation.decontaminate(tbl(s, dir, "documents"), "doc_id", "text",
+      Curation.decontaminate(Tables.read(s, dir, "documents"), "doc_id", "text",
         evalPred = col("doc_id") % 17 === 0, k = 5)
         .orderBy("doc_id")),
     // Deterministic MIXTURE sampling: per-language curriculum weights
@@ -234,7 +232,7 @@ object Queries {
     // partitioning, retry, or corpus growth. Weights ride a broadcast
     // table (the q104 discipline); no shuffle (PlanSpec-pinned).
     "q112_mixture_sample" -> ((s, dir) =>
-      Curation.mixtureSample(tbl(s, dir, "documents"), "doc_id", "lang",
+      Curation.mixtureSample(Tables.read(s, dir, "documents"), "doc_id", "lang",
         Curation.MixtureWeights, Curation.MixtureDenom)
         .orderBy("doc_id")),
     // Sliding-window CHUNKING (size 32, stride 24): the context-window
@@ -242,7 +240,7 @@ object Queries {
     // expansion, no shuffle (PlanSpec-pinned); every token covered,
     // final short window reaches the last token.
     "q113_chunk_overlap" -> ((s, dir) =>
-      Curation.chunk(tbl(s, dir, "documents"), "doc_id", "text",
+      Curation.chunk(Tables.read(s, dir, "documents"), "doc_id", "text",
         window = 32, stride = 24)
         .orderBy("doc_id", "chunk_idx")),
     // WEIGHTED sampling without replacement (Efraimidis–Spirakis A-ES
@@ -263,7 +261,7 @@ object Queries {
     // oracle recomputes the identical fold (see
     // Curation.repeatedNgrams's scaladoc).
     "q133_repeated_ngrams" -> ((s, dir) =>
-      Curation.repeatedNgrams(tbl(s, dir, "documents"), "doc_id", "text",
+      Curation.repeatedNgrams(Tables.read(s, dir, "documents"), "doc_id", "text",
         k = 3, minDocs = 2)
         .orderBy("doc_id")),
     // E15/E16 ensemble: CONSENSUS dedup — near-dup pairs flagged by
@@ -293,7 +291,7 @@ object Queries {
     // Levenshtein matching over derived 5-token titles; the edit-
     // distance complement to the set-based (Jaccard) near-dup family
     "q86_fuzzy_join" -> ((s, dir) => {
-      val titled = tbl(s, dir, "documents").select(col("doc_id"),
+      val titled = Tables.read(s, dir, "documents").select(col("doc_id"),
         concat_ws(" ", slice(split(col("text"), " ", -1), 1, 5)).as("title"))
       Dedup.fuzzyJoin(titled, "doc_id", "title", maxDist = 10)
         .orderBy("d1", "d2")
@@ -306,7 +304,7 @@ object Queries {
     // distributed form reproduces it exactly on this corpus (see
     // Dedup.sortedNeighborhood).
     "q165_sorted_neighborhood" -> ((s, dir) => {
-      val titled = tbl(s, dir, "documents").select(col("doc_id"),
+      val titled = Tables.read(s, dir, "documents").select(col("doc_id"),
         concat_ws(" ", slice(split(col("text"), " ", -1), 1, 5)).as("title"))
       Dedup.sortedNeighborhood(titled, "doc_id", "title", w = 4, maxDist = 10)
         .orderBy("d1", "d2")
@@ -321,7 +319,7 @@ object Queries {
     // the oracle); content-derived quality would tie on identical text
     // by construction. One tiny window per text group.
     "q97_keep_best" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents").select("doc_id", "text", "lang")
+      val docs = Tables.read(s, dir, "documents").select("doc_id", "text", "lang")
       val copies = docs.where(col("doc_id") < 25)
         .select((col("doc_id") + 10000).as("doc_id"), col("text"), col("lang"))
       val all = docs.unionAll(copies)
@@ -349,7 +347,7 @@ object Queries {
     // fixpoint; the window shuffles only docs that appear in a pair
     // (the non-dup bulk never enters), one partition per cluster.
     "q103_component_keep_best" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
+      val docs = Tables.read(s, dir, "documents")
       val comps = Dedup.connectedComponents(
         Dedup.minhashNearDups(docs, "doc_id", "text",
           k = 3, nBuckets = 64, bandSize = 4, threshold = 0.1))
@@ -368,7 +366,7 @@ object Queries {
     // history (anti join on q75's matched pairs) — what actually flows
     // downstream after the incremental dedup pass. Composition only.
     "q98_incremental_keep" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
+      val docs = Tables.read(s, dir, "documents")
       val history = docs.where(col("doc_id") % 2 === 0)
       val fresh = docs.where(col("doc_id") % 2 === 1)
       val store = Dedup.minhashSignatureStore(history, "doc_id", "text")
@@ -388,7 +386,7 @@ object Queries {
     // table; production runs it at k ≪ distinct where the counts go
     // approximate but the dataflow is identical.
     "q99_approx_topk" -> ((s, dir) => {
-      val tok = tbl(s, dir, "documents")
+      val tok = Tables.read(s, dir, "documents")
         .select(explode(split(col("text"), " ", -1)).as("tok"))
         .where(col("tok") =!= "")
       tok.agg(expr("approx_top_k(tok, 100, 10000)").as("tk"))
@@ -407,7 +405,7 @@ object Queries {
     // pins the sketch's actual cells and its overestimates — not just
     // a collision-free projection.
     "q117_cms_freq" -> ((s, dir) => {
-      val tok = tbl(s, dir, "documents")
+      val tok = Tables.read(s, dir, "documents")
         .select(explode(split(col("text"), " ", -1)).as("tok"))
         .where(col("tok") =!= "")
       val sk = tok.agg(
@@ -516,7 +514,7 @@ object Queries {
     // TextAnalysis.bigramLogProb's scaladoc): per-row pair generation,
     // two hash-aggs, one skew-splittable equi-join.
     "q120_bigram_logprob" -> ((s, dir) =>
-      TextAnalysis.bigramLogProb(tbl(s, dir, "documents"))),
+      TextAnalysis.bigramLogProb(Tables.read(s, dir, "documents"))),
     // Iterative graph analytics: weighted PageRank over the bigram
     // token graph, 3 rounds, dangling-mass redistribution — the fixed-
     // iteration shuffle-on-key composition: inputs and rounds 0..2 are
@@ -526,7 +524,7 @@ object Queries {
     // analysis). Ranks are bit-identical across engines at every round
     // via the dsum route.
     "q124_pagerank" -> ((s, dir) => {
-      val base = tbl(s, dir, "documents")
+      val base = Tables.read(s, dir, "documents")
         .select(expr("filter(split(text, ' '), t -> t <> '')").as("ts"))
       val prs = base.select(explode(expr(
           "filter(transform(ts, (t, i) -> struct(t AS src, try_element_at(ts, i + 2) AS dst)), " +
@@ -543,7 +541,7 @@ object Queries {
     // rel.Graph.personalizedPageRank; the same round loop and dsum
     // float discipline as q124).
     "q270_personalized_pagerank" -> ((s, dir) => {
-      val base = tbl(s, dir, "documents")
+      val base = Tables.read(s, dir, "documents")
         .select(expr("filter(split(text, ' '), t -> t <> '')").as("ts"))
       val prs = base.select(explode(expr(
           "filter(transform(ts, (t, i) -> struct(t AS src, try_element_at(ts, i + 2) AS dst)), " +
@@ -562,7 +560,7 @@ object Queries {
     // Dedup.substringDupCoverage — interval-union coverage, no
     // pairwise expansion).
     "q271_substring_dedup" -> ((s, dir) =>
-      Dedup.substringDupCoverage(tbl(s, dir, "documents"), k = 8)),
+      Dedup.substringDupCoverage(Tables.read(s, dir, "documents"), k = 8)),
     // Near-dup cluster SIZE DISTRIBUTION — the curation dashboard row
     // that decides dedup policy: a long tail of pairs is survivable,
     // one giant boilerplate cluster means the corpus needs template
@@ -575,18 +573,18 @@ object Queries {
     // weights + effective epochs (see Curation.mixtureTemperature — the
     // recipe q112's deterministic sampler would then execute).
     "q283_mixture_temperature" -> ((s, dir) =>
-      Curation.mixtureTemperature(tbl(s, dir, "documents"), "source", "text")),
+      Curation.mixtureTemperature(Tables.read(s, dir, "documents"), "source", "text")),
     // E16 spectral primitive: top principal component of the embedding
     // cloud by in-plan power iteration (see Sim.pcaPower — two
     // matrix-vector products per round as dim-/vec-keyed shuffles, no
     // covariance matrix, dsum-stable loadings).
     "q279_pca_power" -> ((s, dir) =>
-      Sim.pcaPower(tbl(s, dir, "embeddings"), iters = 2)),
+      Sim.pcaPower(Tables.read(s, dir, "embeddings"), iters = 2)),
     // Rides the stamped MinHash pair store (same params as q18/q65) —
     // the histogram is a report over the pair table, not a reason to
     // re-run the MinHash join per pass.
     "q276_dup_cluster_sizes" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
+      val docs = Tables.read(s, dir, "documents")
       val comp = Dedup.connectedComponents(minhashPairStore(s, dir))
       val hist = comp.groupBy("component").agg(count(lit(1)).as("sz"))
         .groupBy("sz").agg(count(lit(1)).as("n_clusters"),
@@ -609,7 +607,7 @@ object Queries {
     // score on the dsum DECIMAL route — bit-identical cross-engine at
     // every round (see rel.Graph.hits).
     "q233_hits" -> ((s, dir) => {
-      val base = tbl(s, dir, "documents")
+      val base = Tables.read(s, dir, "documents")
         .select(expr("filter(split(text, ' '), t -> t <> '')").as("ts"))
       val prs = base.select(explode(expr(
           "filter(transform(ts, (t, i) -> struct(t AS src, try_element_at(ts, i + 2) AS dst)), " +
@@ -626,7 +624,7 @@ object Queries {
     // (fires at gate scale: sf0.01 has middles of degree up to 13;
     // mirrored in the oracle so the capped semantics are gate-checked).
     "q234_link_prediction" -> ((s, dir) => {
-      val items = tbl(s, dir, "lineitem")
+      val items = Tables.read(s, dir, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .distinct()
       val bounded = items
@@ -650,7 +648,7 @@ object Queries {
     // the same rel.Graph.pageRank, fed the symmetrized doubling of
     // the co-occurrence edge set; top-20 keywords by rank.
     "q235_textrank" -> ((s, dir) => {
-      val base = tbl(s, dir, "documents")
+      val base = Tables.read(s, dir, "documents")
         .select(expr("filter(split(text, ' '), t -> t <> '')").as("ts"))
       val prs = base.select(explode(expr(
           "flatten(transform(ts, (t, i) -> filter(array(" +
@@ -674,7 +672,7 @@ object Queries {
     // collapses to one label, textbook behavior, so the declared row
     // is pinned just before the collapse to stay non-vacuous.
     "q177_label_propagation" -> ((s, dir) => {
-      val base = tbl(s, dir, "documents")
+      val base = Tables.read(s, dir, "documents")
         .select(expr("filter(split(text, ' '), t -> t <> '')").as("ts"))
       val prs = base.select(explode(expr(
           "filter(transform(ts, (t, i) -> struct(t AS src, try_element_at(ts, i + 2) AS dst)), " +
@@ -690,7 +688,7 @@ object Queries {
     // integer aggregates off one edge-labeling join; per-community
     // terms fixed-order IEEE, TOTAL row via dsum.
     "q251_modularity" -> ((s, dir) => {
-      val base = tbl(s, dir, "documents")
+      val base = Tables.read(s, dir, "documents")
         .select(expr("filter(split(text, ' '), t -> t <> '')").as("ts"))
       val prs = base.select(explode(expr(
           "filter(transform(ts, (t, i) -> struct(t AS src, try_element_at(ts, i + 2) AS dst)), " +
@@ -705,7 +703,7 @@ object Queries {
     // recursive CTE computes the TRUE minimum, so the gate row also
     // certifies 6 rounds covered the diameter (see rel.Graph.bfs).
     "q145_bfs" -> ((s, dir) => {
-      val base = tbl(s, dir, "documents")
+      val base = Tables.read(s, dir, "documents")
         .select(expr("filter(split(text, ' '), t -> t <> '')").as("ts"))
       val prs = base.select(explode(expr(
           "filter(transform(ts, (t, i) -> struct(t AS src, try_element_at(ts, i + 2) AS dst)), " +
@@ -720,7 +718,7 @@ object Queries {
     // orientation-free (lexicographic 3-way join) — the two
     // enumeration orders must agree on every per-node count.
     "q137_triangles" -> ((s, dir) => {
-      val base = tbl(s, dir, "documents")
+      val base = Tables.read(s, dir, "documents")
         .select(expr("filter(split(text, ' '), t -> t <> '')").as("ts"))
       val prs = base.select(explode(expr(
           "filter(transform(ts, (t, i) -> struct(t AS src, try_element_at(ts, i + 2) AS dst)), " +
@@ -732,7 +730,7 @@ object Queries {
     // hub-to-leaf mixing in one Pearson scalar from exact integer
     // moment sums (see rel.Graph.assortativity).
     "q195_assortativity" -> ((s, dir) => {
-      val base = tbl(s, dir, "documents")
+      val base = Tables.read(s, dir, "documents")
         .select(expr("filter(split(text, ' '), t -> t <> '')").as("ts"))
       val prs = base.select(explode(expr(
           "filter(transform(ts, (t, i) -> struct(t AS src, try_element_at(ts, i + 2) AS dst)), " +
@@ -744,14 +742,14 @@ object Queries {
     // top-k most-similar DIFFERENT-label vectors (see
     // Sim.hardNegatives; q21's broadcast shape + label inequality).
     "q196_hard_negatives" -> ((s, dir) =>
-      Sim.hardNegatives(tbl(s, dir, "embeddings"), nQuery = 10, k = 5)
+      Sim.hardNegatives(Tables.read(s, dir, "embeddings"), nQuery = 10, k = 5)
         .orderBy("qid", "rnk")),
     // Fixed-size per-stratum sample: EXACTLY min(k, |group|) rows per
     // language by (content hash, id) rank — the eval-set constructor
     // q112's fraction-threshold rule can't express (see
     // Curation.stratumSample's scaladoc for the trade).
     "q121_stratum_sample" -> ((s, dir) =>
-      Curation.stratumSample(tbl(s, dir, "documents"), "doc_id", "lang",
+      Curation.stratumSample(Tables.read(s, dir, "documents"), "doc_id", "lang",
         k = 20)
         .orderBy("lang", "rnk")),
     // E16 dimension-reduction axis: matryoshka/truncated kNN — exact
@@ -760,7 +758,7 @@ object Queries {
     // before exact rerank; complements q108's precision axis). Both
     // rankings deterministic, so the recall flag value-oracles too.
     "q122_matryoshka_knn" -> ((s, dir) =>
-      Sim.truncatedKnn(tbl(s, dir, "embeddings"), nQuery = 10, k = 5,
+      Sim.truncatedKnn(Tables.read(s, dir, "embeddings"), nQuery = 10, k = 5,
         dims = 16)
         .orderBy("qid", "rnk")),
     // Distributed BPE tokenizer training: 4 merge rounds over the
@@ -770,14 +768,14 @@ object Queries {
     // driver actions (q124 discipline). The oracle replays the exact
     // greedy fold, so merge choices AND weights value-oracle.
     "q174_bpe_train" -> ((s, dir) =>
-      Curation.bpeTrain(tbl(s, dir, "documents"), "text", rounds = 4)),
+      Curation.bpeTrain(Tables.read(s, dir, "documents"), "text", rounds = 4)),
     // BPE ENCODE with q174's merges: tokenizer application as a
     // per-language compression report — encoding rides the vocabulary,
     // the corpus is touched twice, and the greedy fold's data-dependent
     // token counts value-oracle (same fold replay as q174's oracle,
     // carried down to word level and joined back per language).
     "q206_bpe_encode" -> ((s, dir) =>
-      Curation.bpeEncode(tbl(s, dir, "documents"), "doc_id", "text",
+      Curation.bpeEncode(Tables.read(s, dir, "documents"), "doc_id", "text",
         "lang", rounds = 4)),
     // Centroid-based silhouette over the q35/q46 coarse quantizer:
     // cluster-separation report from ONE broadcast centroid pass +
@@ -785,24 +783,24 @@ object Queries {
     // the same ranking (the O(n·k) silhouette; the textbook O(n²)
     // form is unreachable at scale).
     "q204_silhouette" -> ((s, dir) =>
-      Sim.silhouette(tbl(s, dir, "embeddings"), nlist = 16)),
+      Sim.silhouette(Tables.read(s, dir, "embeddings"), nlist = 16)),
     // Zipf rank-frequency fit over the top-1000 vocabulary: corpus →
     // (token, count) hash-agg → TakeOrderedAndProject(1000) → 1000-row
     // rank window + OLS reduce through the DECIMAL dsum route.
     "q205_zipf_slope" -> ((s, dir) =>
-      TextAnalysis.zipfSlope(tbl(s, dir, "documents"), topK = 1000)),
+      TextAnalysis.zipfSlope(Tables.read(s, dir, "documents"), topK = 1000)),
     // MMR diversified top-k rerank: greedy λ-tradeoff between query
     // relevance and redundancy vs the already-picked set, unrolled as
     // 5 declarative rounds over the checkpointed top-20 pool; the
     // corpus is touched once (the pool stage).
     "q175_mmr_diversify" -> ((s, dir) =>
-      Sim.mmrDiversify(tbl(s, dir, "embeddings"), nQuery = 10, pool = 20,
+      Sim.mmrDiversify(Tables.read(s, dir, "embeddings"), nQuery = 10, pool = 20,
         k = 5)),
     // Hybrid dense+sparse retrieval: RRF-fuse the cosine ranking with
     // the lexical token-overlap ranking for the same query docs
     // (doc_id = vec_id identity, q93).
     "q176_rrf_fusion" -> ((s, dir) =>
-      Sim.rrfFusion(tbl(s, dir, "embeddings"), tbl(s, dir, "documents"),
+      Sim.rrfFusion(Tables.read(s, dir, "embeddings"), Tables.read(s, dir, "documents"),
         nQuery = 10, pool = 20, k = 10)),
     // Cluster labeling: top TF-IDF tokens per embedding cluster — the
     // "what is this cluster about" report right after the quantizer
@@ -810,12 +808,12 @@ object Queries {
     // composition like q93: clusters from embeddings, labels from the
     // joined documents' text).
     "q173_cluster_labels" -> ((s, dir) =>
-      TextAnalysis.clusterLabels(tbl(s, dir, "documents"),
-        Sim.ivfAssign(tbl(s, dir, "embeddings"), nlist = 16)
+      TextAnalysis.clusterLabels(Tables.read(s, dir, "documents"),
+        Sim.ivfAssign(Tables.read(s, dir, "embeddings"), nlist = 16)
           .select("vec_id", "cid"))),
     // E15: exact n-gram Jaccard brute-force baseline (bounded id range)
     "q20_ngram_jaccard" -> ((s, dir) =>
-      Dedup.ngramJaccardPairs(tbl(s, dir, "documents"), "doc_id", "text",
+      Dedup.ngramJaccardPairs(Tables.read(s, dir, "documents"), "doc_id", "text",
         k = 3, maxId = 150)
         .orderBy("d1", "d2")),
     // E15: EXACT set-similarity self-join via prefix filtering (the
@@ -825,7 +823,7 @@ object Queries {
     // brute-force all-pairs join: a candidate the prefix filter loses
     // is a missing row (see Dedup.prefixFilterJoin's scaladoc).
     "q132_prefix_jaccard" -> ((s, dir) =>
-      Dedup.prefixFilterJoin(tbl(s, dir, "documents"), "doc_id", "text",
+      Dedup.prefixFilterJoin(Tables.read(s, dir, "documents"), "doc_id", "text",
         k = 3, tauNum = 1, tauDen = 2)
         .orderBy("d1", "d2")),
     // Dedup threshold-sensitivity sweep — the tuning report run BEFORE
@@ -847,7 +845,7 @@ object Queries {
     // builds it, the rest read parquet. A regenerated fixture (same
     // path, new bytes) invalidates the marker and forces a rebuild.
     "q222_crosssource_dups" -> ((s, dir) => {
-      val src = tbl(s, dir, "documents").select(col("doc_id"), col("source"))
+      val src = Tables.read(s, dir, "documents").select(col("doc_id"), col("source"))
       exactPairStore(s, dir)
         .join(src.select(col("doc_id").as("d1"), col("source").as("s1")), "d1")
         .join(src.select(col("doc_id").as("d2"), col("source").as("s2")), "d2")
@@ -868,7 +866,7 @@ object Queries {
     // One corpus scan, one (label, half, dim) hash-agg, a label-grain
     // reduce.
     "q223_embedding_drift" -> ((s, dir) => {
-      val e = tbl(s, dir, "embeddings")
+      val e = Tables.read(s, dir, "embeddings")
         .select(col("label").cast("long").as("label"),
           (col("vec_id") % 2L === 0L).as("even"),
           posexplode(Sim.asDouble(col("embedding"))).as(Seq("dim", "x")))
@@ -909,7 +907,7 @@ object Queries {
     }),
     // E16: exact cosine top-k (brute force baseline)
     "q21_cosine_knn" -> ((s, dir) =>
-      Sim.cosineKnn(tbl(s, dir, "embeddings"), nQuery = 10, k = 5)
+      Sim.cosineKnn(Tables.read(s, dir, "embeddings"), nQuery = 10, k = 5)
         .orderBy("qid", "rnk")),
     // Retrieval-quality eval: P@5 / MRR@10 / NDCG@5 of the exact
     // cosine ranking under label-match relevance — the ranking-eval
@@ -917,56 +915,56 @@ object Queries {
     // Sim.retrievalMetrics for the ln-discount and shared-literal
     // ideal-DCG parity analysis).
     "q231_ndcg" -> ((s, dir) =>
-      Sim.retrievalMetrics(tbl(s, dir, "embeddings"),
+      Sim.retrievalMetrics(Tables.read(s, dir, "embeddings"),
         nQuery = 10, k = 5, mrrK = 10)),
     // Cascade-model ranking eval: graded label-distance relevance,
     // dyadic stop probabilities, one fixed arithmetic chain per query
     // (see Sim.errAtK).
     "q412_err" -> ((s, dir) =>
-      Sim.errAtK(tbl(s, dir, "embeddings"), nQuery = 10, k = 5)),
+      Sim.errAtK(Tables.read(s, dir, "embeddings"), nQuery = 10, k = 5)),
     // One NN-descent co-neighbor round over the IVF-seeded kNN graph,
     // with the recall-vs-exact convergence audit on the bounded
     // audit slice (see Sim.nnDescent). The stage chain itself is the
     // stamped nn_graph_store build (once per fixture); the declared
     // query is the store-fed audit (VERDICT r13 item 3).
     "q417_nn_descent" -> ((s, dir) =>
-      Sim.nnDescentAudit(tbl(s, dir, "embeddings"), nnGraphStore(s, dir))),
+      Sim.nnDescentAudit(Tables.read(s, dir, "embeddings"), nnGraphStore(s, dir))),
     // Team-draft interleaving of the full vs 4-dim-truncated cosine
     // rankers with a derandomized per-round coin (see
     // Sim.teamDraftInterleave).
     "q418_team_draft" -> ((s, dir) =>
-      Sim.teamDraftInterleave(tbl(s, dir, "embeddings"))),
+      Sim.teamDraftInterleave(Tables.read(s, dir, "embeddings"))),
     // Kendall's W concordance of three document-criterion rankings
     // with midranks and tie correction (see TextAnalysis.kendallW).
     "q419_kendall_w" -> ((s, dir) =>
-      TextAnalysis.kendallW(tbl(s, dir, "documents"))),
+      TextAnalysis.kendallW(Tables.read(s, dir, "documents"))),
     // Exposure-fairness audit of the q231 retrieval surface: label-
     // group exposure share vs corpus share (see Sim.exposureFairness).
     "q421_exposure_fairness" -> ((s, dir) =>
-      Sim.exposureFairness(tbl(s, dir, "embeddings"), nQuery = 10, k = 10)),
+      Sim.exposureFairness(Tables.read(s, dir, "embeddings"), nQuery = 10, k = 10)),
     // Rank-biased precision with dyadic persistence p = 1/2 (see
     // Sim.rbpAtK).
     "q424_rbp" -> ((s, dir) =>
-      Sim.rbpAtK(tbl(s, dir, "embeddings"), nQuery = 10, k = 10)),
+      Sim.rbpAtK(Tables.read(s, dir, "embeddings"), nQuery = 10, k = 10)),
     // Inter-rater reliability of three deterministic quality
     // heuristics over documents (see TextAnalysis.krippendorffAlpha —
     // integer coincidence matrix, two final ratios).
     "q413_krippendorff" -> ((s, dir) =>
-      TextAnalysis.krippendorffAlpha(tbl(s, dir, "documents"))),
+      TextAnalysis.krippendorffAlpha(Tables.read(s, dir, "documents"))),
     // 2-D radius self-join via grid cells over the first two embedding
     // dims — the spatial-join shape (q43/q136's covering-cell
     // discipline applied to points): equi-join on cell keys, 3×3
     // neighborhood probe, exact-distance verify, 4096-point cell cap
     // ahead of the quadratic step.
     "q232_grid_radius_join" -> ((s, dir) =>
-      Sim.gridRadiusJoin(tbl(s, dir, "embeddings"), r = GridR,
+      Sim.gridRadiusJoin(Tables.read(s, dir, "embeddings"), r = GridR,
         maxCell = 4096)),
     // Per-dimension embedding standardization + outlier census — the
     // z-score feature-scaling pass before scale-sensitive models (see
     // Sim.standardize for the one-agg/broadcast-back shape and the
     // E[x²]−E[x]² dsum-route parity argument).
     "q265_standardize" -> ((s, dir) =>
-      Sim.standardize(tbl(s, dir, "embeddings"))),
+      Sim.standardize(Tables.read(s, dir, "embeddings"))),
     // WEIGHTED set-similarity join: tf-idf shingle cosine, top-20
     // pairs — the importance-weighted complement of q132's unweighted
     // Jaccard (rare shared shingles count more than boilerplate);
@@ -974,7 +972,7 @@ object Queries {
     // where max df is 25) bound the pair work at Σ df² (see
     // Dedup.tfidfCosinePairs).
     "q252_tfidf_cosine" -> ((s, dir) =>
-      Dedup.tfidfCosinePairs(tbl(s, dir, "documents"), "doc_id", "text")),
+      Dedup.tfidfCosinePairs(Tables.read(s, dir, "documents"), "doc_id", "text")),
     // Grid-density clustering (cell-granular DBSCAN): core cells ≥ 3
     // points, clusters = 8-connected components of core cells via the
     // q65 min-label fixpoint — density clustering with NO pairwise
@@ -983,27 +981,27 @@ object Queries {
     // component — the data-dependent fixpoint loop handles both, where
     // a fixed-round unroll could not.
     "q250_grid_density" -> ((s, dir) =>
-      Sim.gridDensityClusters(tbl(s, dir, "embeddings"), r = GridR,
+      Sim.gridDensityClusters(Tables.read(s, dir, "embeddings"), r = GridR,
         minPts = 3L)),
     // E16 production shape: FILTERED kNN — top-k cosine restricted by
     // a label predicate and a cross-modal lang predicate BEFORE the
     // rank window (pre-filter semantics: k survivors guaranteed, scan
     // pruned ahead of the cosine).
     "q228_filtered_knn" -> ((s, dir) =>
-      Sim.filteredKnn(tbl(s, dir, "embeddings"), tbl(s, dir, "documents"),
+      Sim.filteredKnn(Tables.read(s, dir, "embeddings"), Tables.read(s, dir, "documents"),
         nQuery = 10, k = 5, langs = Seq("en", "de"), labelMod = 2L)
         .orderBy("qid", "rnk")),
     // E16: exact cosine top-k via the native codegen CosineSim expression
     "q32_cosine_knn_native" -> ((s, dir) =>
-      Sim.cosineKnnNative(tbl(s, dir, "embeddings"), nQuery = 10, k = 5)
+      Sim.cosineKnnNative(Tables.read(s, dir, "embeddings"), nQuery = 10, k = 5)
         .orderBy("qid", "rnk")),
     // E15/E16: embedding-cosine near-dup, exact baseline (bounded ids)
     "q33_embed_neardup" -> ((s, dir) =>
-      Sim.cosineNearDups(tbl(s, dir, "embeddings"), maxId = 300, threshold = 0.35)
+      Sim.cosineNearDups(Tables.read(s, dir, "embeddings"), maxId = 300, threshold = 0.35)
         .orderBy("v1", "v2")),
     // E16: IVF-flat approximate kNN (coarse quantizer + probed lists)
     "q35_ivf_knn" -> ((s, dir) =>
-      Sim.ivfKnn(tbl(s, dir, "embeddings"), nQuery = 10, k = 5)
+      Sim.ivfKnn(Tables.read(s, dir, "embeddings"), nQuery = 10, k = 5)
         .orderBy("qid", "rnk")),
     // E16 compression axis: int8 scalar-quantized kNN (SQ8 codes +
     // integer-dot candidate pass + exact rerank of the top-20). The
@@ -1011,7 +1009,7 @@ object Queries {
     // estimate are all cross-engine bit-reproducible, so the WHOLE
     // pipeline — candidate set included — is value-oracled.
     "q108_sq8_knn" -> ((s, dir) =>
-      Sim.sq8Knn(tbl(s, dir, "embeddings"), nQuery = 10, k = 5)
+      Sim.sq8Knn(Tables.read(s, dir, "embeddings"), nQuery = 10, k = 5)
         .orderBy("qid", "rnk")),
     // E16 capstone: IVF-PQ — the coarse-pruning × residual-compression
     // COMPOSITION (FAISS IndexIVFPQ design): nprobe=4 of 16 lists per
@@ -1023,7 +1021,7 @@ object Queries {
     // LlmSpec floor now 0.7); the oracle replays the identical
     // iteration so the row stays hash-green.
     "q164_ivfpq_knn" -> ((s, dir) =>
-      Sim.ivfpqKnn(tbl(s, dir, "embeddings"), nQuery = 10, k = 5)
+      Sim.ivfpqKnn(Tables.read(s, dir, "embeddings"), nQuery = 10, k = 5)
         .orderBy("qid", "rnk")),
     // E16: PRODUCT-QUANTIZATION kNN (8 subspaces × 16 centroids, ADC
     // lookup-table scan, exact rerank of the top-40) — the third
@@ -1035,62 +1033,62 @@ object Queries {
     // floor now 0.7); the oracle replays the identical iteration so
     // the row stays hash-green.
     "q140_pq_knn" -> ((s, dir) =>
-      Sim.pqKnn(tbl(s, dir, "embeddings"), nQuery = 10, k = 5)
+      Sim.pqKnn(Tables.read(s, dir, "embeddings"), nQuery = 10, k = 5)
         .orderBy("qid", "rnk")),
     // E16: LSH bucket histogram (the ANN scale path's partition shape)
     "q22_lsh_buckets" -> ((s, dir) =>
-      Sim.lshBuckets(tbl(s, dir, "embeddings"), nPlanes = 16, dim = EmbeddingDim)
+      Sim.lshBuckets(Tables.read(s, dir, "embeddings"), nPlanes = 16, dim = EmbeddingDim)
         .orderBy("bucket")),
     // E15/E16 scale twin of q33: multi-table banded sign-LSH near-dup
     // over the FULL corpus (no id bound) — the 100-TB path, fully
     // DuckDB-oracled via the plane-matrix SQL literal
     "q36_lsh_neardup" -> ((s, dir) =>
-      Sim.cosineNearDupsLsh(tbl(s, dir, "embeddings"), threshold = 0.35,
+      Sim.cosineNearDupsLsh(Tables.read(s, dir, "embeddings"), threshold = 0.35,
         nTables = 16, bandPlanes = 4, dim = EmbeddingDim)
         .orderBy("v1", "v2")),
     // E16 scale twin of q21: banded-LSH approximate kNN, same oracle style
     "q37_ann_knn" -> ((s, dir) =>
-      Sim.annKnn(tbl(s, dir, "embeddings"), nQuery = 10, k = 5,
+      Sim.annKnn(Tables.read(s, dir, "embeddings"), nQuery = 10, k = 5,
         nTables = 16, bandPlanes = 4, dim = EmbeddingDim)
         .orderBy("qid", "rnk")),
     // E17: token counting
-    "q23_token_stats" -> ((s, dir) => TextAnalysis.tokenStats(tbl(s, dir, "documents"))),
+    "q23_token_stats" -> ((s, dir) => TextAnalysis.tokenStats(Tables.read(s, dir, "documents"))),
     // E17: quality scoring
-    "q24_quality_score" -> ((s, dir) => TextAnalysis.qualityScore(tbl(s, dir, "documents"))),
+    "q24_quality_score" -> ((s, dir) => TextAnalysis.qualityScore(Tables.read(s, dir, "documents"))),
     // E17: language-ID heuristic
-    "q25_lang_id" -> ((s, dir) => TextAnalysis.langId(tbl(s, dir, "documents"))),
+    "q25_lang_id" -> ((s, dir) => TextAnalysis.langId(Tables.read(s, dir, "documents"))),
     // q25's hard classifier EVALUATED against the labeled lang column:
     // one confusion-matrix cell per (label, prediction) with per-label
     // recall — the classifier-eval companion to q166/q180's ranking
     // evals. One corpus scan, one tiny hash-agg.
     "q211_langid_confusion" -> ((s, dir) =>
-      TextAnalysis.langIdConfusion(tbl(s, dir, "documents"))),
+      TextAnalysis.langIdConfusion(Tables.read(s, dir, "documents"))),
     // E17: per-language top terms
-    "q26_lang_top_terms" -> ((s, dir) => TextAnalysis.langTopTerms(tbl(s, dir, "documents"), 5)),
+    "q26_lang_top_terms" -> ((s, dir) => TextAnalysis.langTopTerms(Tables.read(s, dir, "documents"), 5)),
     // E17: TF-IDF
-    "q27_tfidf" -> ((s, dir) => TextAnalysis.tfidf(tbl(s, dir, "documents"))),
+    "q27_tfidf" -> ((s, dir) => TextAnalysis.tfidf(Tables.read(s, dir, "documents"))),
     // E17 (VERDICT r5 item 5): Okapi BM25 at DOCUMENT granularity — the
     // per-doc retrieval score a curation pipeline ranks with (q27's
     // document unit is the language)
-    "q76_bm25" -> ((s, dir) => TextAnalysis.bm25(tbl(s, dir, "documents"))),
+    "q76_bm25" -> ((s, dir) => TextAnalysis.bm25(Tables.read(s, dir, "documents"))),
     // E17: the retrieval lookup over that index — top-20 docs by summed
     // BM25 for a fixed query term set (TakeOrderedAndProject top-k; only
     // the k survivors pay the rank window)
     "q79_bm25_topk" -> ((s, dir) =>
-      TextAnalysis.bm25TopK(tbl(s, dir, "documents"), Bm25QueryTerms, 20)),
+      TextAnalysis.bm25TopK(Tables.read(s, dir, "documents"), Bm25QueryTerms, 20)),
     // E17: collocation scoring — PMI + Dunning LLR over adjacent
     // bigrams (min count 5), the relative-frequency upgrade of the
     // reference's co-occurrence counts (Lin & Dyer ch. 3's own
     // progression; see TextAnalysis.collocations).
     "q143_collocations" -> ((s, dir) =>
-      TextAnalysis.collocations(tbl(s, dir, "documents"), "text",
+      TextAnalysis.collocations(Tables.read(s, dir, "documents"), "text",
         minCount = 5)
         .orderBy("w1", "w2")),
     // E17: out-of-vocabulary rate vs the corpus top-16 vocabulary
     // (count-desc, token-asc tiebreak — deterministic in both engines).
     // The tokenizer-coverage check run before committing to a vocab.
     "q138_oov_rate" -> ((s, dir) =>
-      TextAnalysis.oovRate(tbl(s, dir, "documents"), "doc_id", "text",
+      TextAnalysis.oovRate(Tables.read(s, dir, "documents"), "doc_id", "text",
         vocabSize = 16)
         .orderBy("doc_id")),
     // E17: persisted INVERTED INDEX (flat postings bucketed+sorted by
@@ -1099,7 +1097,7 @@ object Queries {
     // bucket-pruned to the query terms' buckets (PlanSpec pins
     // SelectedBucketsCount < total); shuffle is O(matched postings).
     "q139_posting_index" -> ((s, dir) => {
-      TextAnalysis.postingIndexWrite(tbl(s, dir, "documents"), "doc_id",
+      TextAnalysis.postingIndexWrite(Tables.read(s, dir, "documents"), "doc_id",
         "text", "q139_postings", buckets = 8)
       TextAnalysis.conjunctiveQuery(s, "q139_postings",
         Seq("spark", "join"))
@@ -1121,7 +1119,7 @@ object Queries {
     "q216_stream_index" -> ((s, dir) => {
       val out = graft.Scratch.dir("stream_postings")
       val postings = graft.sources.StreamIngest.ingestParquet(
-        s, dir, "documents.parquet", tbl(s, dir, "documents").schema,
+        s, dir, "documents.parquet", Tables.read(s, dir, "documents").schema,
         out, out + "_ckpt",
         df => df
           .select(col("doc_id"),
@@ -1145,7 +1143,7 @@ object Queries {
     // its own full value oracle (weights as a VALUES CTE).
     "q104_weighted_score" -> ((s, dir) => {
       import s.implicits._
-      TextAnalysis.linearScoreWeighted(tbl(s, dir, "documents"),
+      TextAnalysis.linearScoreWeighted(Tables.read(s, dir, "documents"),
         TextAnalysis.LinearWeights.toDF("feature", "weight"))
     }),
     // E17: q79's retrieval lookup with the query terms as a TABLE
@@ -1153,14 +1151,14 @@ object Queries {
     // must equal q79 exactly (oracle carries the terms as a CTE).
     "q105_bm25_term_table" -> ((s, dir) => {
       import s.implicits._
-      TextAnalysis.bm25TopKTerms(tbl(s, dir, "documents"),
+      TextAnalysis.bm25TopKTerms(Tables.read(s, dir, "documents"),
         Bm25QueryTerms.toDF("tok"), 20)
     }),
     // E16: per-label class centroids — the nearest-class-mean building
     // block over the embeddings table's label column (exact-decimal
     // means, bit-identical cross-engine like q47)
     "q80_label_centroids" -> ((s, dir) =>
-      Sim.labelCentroids(tbl(s, dir, "embeddings"))),
+      Sim.labelCentroids(Tables.read(s, dir, "embeddings"))),
     // Cross-modal join: the documents and embeddings tables relate 1:1
     // on doc_id = vec_id — the text↔vector linkage every curation
     // pipeline maintains. Per-(lang, label) corpus stats: doc counts,
@@ -1169,8 +1167,8 @@ object Queries {
     // plain equi-join (both sides shuffle on the shared id; bucketing
     // both tables by it would make it exchange-free, the q53 layout).
     "q93_crossmodal" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      val emb = tbl(s, dir, "embeddings")
+      val docs = Tables.read(s, dir, "documents")
+      val emb = Tables.read(s, dir, "embeddings")
         .select(col("vec_id"), col("label").cast("long").as("label"),
           Sim.norm(Sim.asDouble(col("embedding"))).as("nrm"))
       docs.join(emb, docs("doc_id") === emb("vec_id"))
@@ -1181,9 +1179,9 @@ object Queries {
         .orderBy("lang", "label")
     }),
     // E17: rolling-hash fingerprint
-    "q28_fingerprint" -> ((s, dir) => TextAnalysis.fingerprint(tbl(s, dir, "documents"))),
+    "q28_fingerprint" -> ((s, dir) => TextAnalysis.fingerprint(Tables.read(s, dir, "documents"))),
     // multimodal metadata projection (real part of the stubbed pipeline)
-    "q29_multimodal_meta" -> ((s, dir) => Multimodal.metadata(tbl(s, dir, "documents"))),
+    "q29_multimodal_meta" -> ((s, dir) => Multimodal.metadata(Tables.read(s, dir, "documents"))),
     // multimodal decode + feature-extract through the batched
     // mapPartitions pipeline. FULLY DuckDB-oracled since round 5: the
     // ==STUB== decode derives every value from the portable Fnv1a32
@@ -1195,7 +1193,7 @@ object Queries {
     // raw-array schema stays pinned in MultimodalSpec.
     "q38_multimodal_features" -> ((s, dir) => {
       implicit val sp: SparkSession = s
-      Multimodal.extractFeatures(Multimodal.ingest(tbl(s, dir, "documents")))
+      Multimodal.extractFeatures(Multimodal.ingest(Tables.read(s, dir, "documents")))
         .toDF()
         .withColumn("feature_sig",
           expr("aggregate(transform(feature, x -> CAST(x AS BIGINT)), " +
@@ -1208,18 +1206,18 @@ object Queries {
     // signature — fully DuckDB-oracled via the portable Fnv1a32 stub
     // decode (see Multimodal.frameSample)
     "q61_frame_sample" -> ((s, dir) =>
-      Multimodal.frameSample(tbl(s, dir, "documents"), stride = 4)
+      Multimodal.frameSample(Tables.read(s, dir, "documents"), stride = 4)
         .orderBy("doc_id", "frame_idx")),
     // Corpus prep: token-budget sequence packing ("concatenate and cut"
     // shard assignment) via the distributed two-phase prefix sum
     "q39_shard_pack" -> ((s, dir) =>
-      Pack.shardPack(tbl(s, dir, "documents"), budget = 4096)
+      Pack.shardPack(Tables.read(s, dir, "documents"), budget = 4096)
         .orderBy("doc_id")),
     // Corpus prep end-to-end: quality filter -> exact dedup -> shard
     // pack — the composed training-data cleaning pipeline, every stage
     // deterministic and the whole chain oracle-checked
     "q41_corpus_clean" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
+      val docs = Tables.read(s, dir, "documents")
       val keep = TextAnalysis.qualityScore(docs)
         .where(col("quality") >= 0.9)
         .select("doc_id")
@@ -1231,19 +1229,19 @@ object Queries {
     // Corpus prep: deterministic stratified sampling (per-lang rates,
     // multiplicative-hash membership — reproducible on any engine)
     "q40_stratified_sample" -> ((s, dir) =>
-      Pack.stratifiedSample(tbl(s, dir, "documents"),
+      Pack.stratifiedSample(Tables.read(s, dir, "documents"),
         Map("en" -> 50, "de" -> 30), defaultRate = 10)
         .select("doc_id", "lang")
         .orderBy("doc_id")),
     // Corpus prep: the materialized "concatenate and cut" sequences —
     // shard assignment joined back to text, concatenated in id order
     "q70_pack_sequences" -> ((s, dir) =>
-      Pack.packSequences(tbl(s, dir, "documents"), budget = 4096)
+      Pack.packSequences(Tables.read(s, dir, "documents"), budget = 4096)
         .orderBy("shard")),
     // Corpus prep: deterministic train/val/test split (hash-range
     // buckets — a doc never migrates splits as the corpus grows)
     "q69_split" -> ((s, dir) =>
-      Pack.assignSplit(tbl(s, dir, "documents"))
+      Pack.assignSplit(Tables.read(s, dir, "documents"))
         .groupBy("lang", "split")
         .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_id"))
         .orderBy("lang", "split")),
@@ -1251,7 +1249,7 @@ object Queries {
     // quantizer, report members near their cluster representative —
     // the drop set of an embedding-level near-dup pass at corpus scale
     "q46_cluster_dedup" -> ((s, dir) =>
-      Sim.clusterDedup(tbl(s, dir, "embeddings"), threshold = 0.35, nlist = 16)
+      Sim.clusterDedup(Tables.read(s, dir, "embeddings"), threshold = 0.35, nlist = 16)
         .orderBy("vec_id")),
     // Three Lloyd iterations of k-means over the embedding corpus — the
     // quantizer-training step (exact-decimal means make even this
@@ -1259,7 +1257,7 @@ object Queries {
     // oracle-checkable bit-for-bit; lineage is truncated per iteration
     // so plan cost stays linear in iters)
     "q47_kmeans_refine" -> ((s, dir) =>
-      Sim.kmeansRefine(tbl(s, dir, "embeddings"), nlist = 16, iters = 3)
+      Sim.kmeansRefine(Tables.read(s, dir, "embeddings"), nlist = 16, iters = 3)
         .orderBy("cid", "dim")),
     // CCNet-style line-level boilerplate removal. The corpus has no
     // '. '-delimited structure (single word streams), so the query
@@ -1268,35 +1266,35 @@ object Queries {
     // injected lines hit df=corpus and are dropped, the real text
     // (df=1) survives — every branch of the operator exercised.
     "q64_line_dedup" -> ((s, dir) =>
-      TextAnalysis.lineDedup(tbl(s, dir, "documents"),
+      TextAnalysis.lineDedup(Tables.read(s, dir, "documents"),
         concat(lit("subscribe to our newsletter. "), col("text"),
           lit(". all rights reserved")), maxDf = 10)),
     // Model-based quality filtering (CCNet-perplexity shape): per-doc
     // average unigram log-probability under the corpus's own unigram LM
     "q58_unigram_logprob" -> ((s, dir) =>
-      TextAnalysis.unigramLogProb(tbl(s, dir, "documents"))),
+      TextAnalysis.unigramLogProb(Tables.read(s, dir, "documents"))),
     // Gopher-style repetition/boilerplate signals over the corpus
     "q44_repetition" -> ((s, dir) =>
-      TextAnalysis.repetitionSignals(tbl(s, dir, "documents"))),
+      TextAnalysis.repetitionSignals(Tables.read(s, dir, "documents"))),
     // fastText-style linear classifier filter: σ(w·x + b) over cheap
     // per-doc features with literal weights (production swaps in a
     // broadcast weight table; the plan is unchanged)
     // In-plan multinomial naive Bayes: train on even doc_ids, score
     // odd, confusion matrix out (see TextAnalysis.naiveBayes scaladoc)
     "q291_naive_bayes" -> ((s, dir) =>
-      TextAnalysis.naiveBayes(tbl(s, dir, "documents"))),
+      TextAnalysis.naiveBayes(Tables.read(s, dir, "documents"))),
     // Cohen's kappa between the stopword-vote heuristic (q25) and the
     // trained naive Bayes (q291) on the shared test half (see
     // TextAnalysis.cohensKappa scaladoc)
     "q309_cohens_kappa" -> ((s, dir) =>
-      TextAnalysis.cohensKappa(tbl(s, dir, "documents"))),
+      TextAnalysis.cohensKappa(Tables.read(s, dir, "documents"))),
     // CART depth-1 split search as one declarative plan (see
     // TextAnalysis.decisionStump scaladoc)
     "q292_decision_stump" -> ((s, dir) =>
-      TextAnalysis.decisionStump(tbl(s, dir, "documents"))),
+      TextAnalysis.decisionStump(Tables.read(s, dir, "documents"))),
     // MOSS winnowing fingerprint selection (see TextAnalysis.winnow)
     "q293_winnowing" -> ((s, dir) =>
-      TextAnalysis.winnow(tbl(s, dir, "documents"), k = 3, w = 4)),
+      TextAnalysis.winnow(Tables.read(s, dir, "documents"), k = 3, w = 4)),
     // NORMALIZATION-KEYED exact dedup — the curation stage between
     // byte-exact (q17) and fuzzy (q18/q86): case-fold, strip
     // punctuation, collapse whitespace, then hash-group on the
@@ -1310,7 +1308,7 @@ object Queries {
     // per-row codegen'd normalization + one hash-agg — identical
     // dataflow to q17, the key function is the operator.
     "q303_normalized_dedup" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents").select("doc_id", "lang", "text")
+      val docs = Tables.read(s, dir, "documents").select("doc_id", "lang", "text")
       val noisy = docs.where(pmod(col("doc_id"), lit(2L)) === 0L)
         .select((col("doc_id") + 10000000L).as("doc_id"), col("lang"),
           concat(lit("  "), upper(col("text")), lit("!!!  ")).as("text"))
@@ -1329,21 +1327,21 @@ object Queries {
     // MinHash estimator-accuracy audit: one-permutation estimate vs
     // exact Jaccard per candidate pair (see Dedup.minhashAccuracy)
     "q316_minhash_accuracy" -> ((s, dir) =>
-      Dedup.minhashAccuracy(tbl(s, dir, "documents"), "doc_id", "text",
+      Dedup.minhashAccuracy(Tables.read(s, dir, "documents"), "doc_id", "text",
         k = 3, nBuckets = 64, bandSize = 4, maxBucket = 1000)),
     // Asymmetric superset/subset near-dup: shingle containment in the
     // df-capped space (see Dedup.containmentPairs scaladoc)
     "q299_containment" -> ((s, dir) =>
-      Dedup.containmentPairs(tbl(s, dir, "documents"), "doc_id", "text",
+      Dedup.containmentPairs(Tables.read(s, dir, "documents"), "doc_id", "text",
         k = 3, dfCap = 20L, threshold = 0.5)),
     // Heaps'-law vocabulary growth curve + fitted exponent (see
     // TextAnalysis.heapsLaw scaladoc)
     "q300_heaps_law" -> ((s, dir) =>
-      TextAnalysis.heapsLaw(tbl(s, dir, "documents"), every = 50)),
+      TextAnalysis.heapsLaw(Tables.read(s, dir, "documents"), every = 50)),
     // Exact neighborhood function over the directed bigram token graph
     // — HyperBall's exact regime (see Graph.neighborhoodFunction)
     "q301_neighborhood" -> ((s, dir) => {
-      val base = tbl(s, dir, "documents")
+      val base = Tables.read(s, dir, "documents")
         .select(expr("filter(split(text, ' '), t -> t <> '')").as("ts"))
       val edges = base.select(explode(expr(
           "filter(transform(ts, (t, i) -> struct(t AS src, try_element_at(ts, i + 2) AS dst)), " +
@@ -1352,7 +1350,7 @@ object Queries {
       graft.rel.Graph.neighborhoodFunction(edges, iters = 3)
     }),
     "q88_linear_score" -> ((s, dir) =>
-      TextAnalysis.linearScore(tbl(s, dir, "documents"))),
+      TextAnalysis.linearScore(Tables.read(s, dir, "documents"))),
     // PII/URL scrub. The synthetic corpus carries no PII (verified:
     // zero '@'/'http'/digit occurrences), so the declared query injects
     // deterministic doc_id-derived fixtures (email, URL, long number)
@@ -1363,7 +1361,7 @@ object Queries {
       val injected = concat(col("text"),
         lit(" contact-"), col("doc_id"), lit("@mail.example.com see http://ex.com/p/"),
         col("doc_id"), lit(" tel "), col("doc_id") + lit(9000000L))
-      TextAnalysis.scrub(tbl(s, dir, "documents"), injected)
+      TextAnalysis.scrub(Tables.read(s, dir, "documents"), injected)
         .orderBy("doc_id")
     }),
     // E6: approximate distinct (HLL++) next to the exact count. The
@@ -1377,53 +1375,53 @@ object Queries {
     "q30_approx_distinct" -> ((s, dir) => {
       val exact = countDistinct(col("l_partkey")).cast("double")
       val approx = approx_count_distinct(col("l_partkey")).cast("double")
-      tbl(s, dir, "lineitem").agg(
+      Tables.read(s, dir, "lineitem").agg(
         countDistinct(col("l_partkey")).as("exact_parts"),
         (abs(approx - exact) / exact < 0.05).as("approx_ok"))
     }),
     // Tokenizer-planning fertility survey under the GPT-2-style
     // pretokenizer (see TextAnalysis.pretokenFertility scaladoc)
     "q321_pretokenize" -> ((s, dir) =>
-      TextAnalysis.pretokenFertility(tbl(s, dir, "documents"))),
+      TextAnalysis.pretokenFertility(Tables.read(s, dir, "documents"))),
     // SemDeDup cluster-then-compare semantic pruning (see Sim.semDedup)
     "q322_semdedup" -> ((s, dir) =>
-      Sim.semDedup(tbl(s, dir, "embeddings"), nlist = 16, tau = 0.30)),
+      Sim.semDedup(Tables.read(s, dir, "embeddings"), nlist = 16, tau = 0.30)),
     // LSH (bands, rows) planner against the corpus's empirical pair-
     // Jaccard histogram (see Dedup.lshPlan scaladoc)
     "q323_lsh_planner" -> ((s, dir) =>
-      Dedup.lshPlan(tbl(s, dir, "documents"), nSig = 128, tau = 0.5,
+      Dedup.lshPlan(Tables.read(s, dir, "documents"), nSig = 128, tau = 0.5,
         maxId = 200L)),
     // Laplace-mechanism DP count release, derandomized hash-noise
     // (see Curation.dpCounts scaladoc)
     "q324_dp_counts" -> ((s, dir) =>
-      Curation.dpCounts(tbl(s, dir, "documents"))),
+      Curation.dpCounts(Tables.read(s, dir, "documents"))),
     // DSIR importance weights toward the target-language unigram
     // profile (see Curation.dsirWeights scaladoc)
     "q325_dsir_weights" -> ((s, dir) =>
-      Curation.dsirWeights(tbl(s, dir, "documents"))),
+      Curation.dsirWeights(Tables.read(s, dir, "documents"))),
     // Beta-binomial empirical-Bayes shrinkage of per-source quality
     // rates (see TextAnalysis.betaBinomialQuality scaladoc)
     "q327_beta_binomial" -> ((s, dir) =>
-      TextAnalysis.betaBinomialQuality(tbl(s, dir, "documents"))),
+      TextAnalysis.betaBinomialQuality(Tables.read(s, dir, "documents"))),
     // Prototype-based pruning: drop the most prototypical frac of each
     // embedding cluster, keep the hard tail (see Sim.prototypePrune)
     "q328_prototype_prune" -> ((s, dir) =>
-      Sim.prototypePrune(tbl(s, dir, "embeddings"))),
+      Sim.prototypePrune(Tables.read(s, dir, "embeddings"))),
     // Mergeable KMV distinct-token sketch per source + the merged
     // corpus sketch, estimate next to exact (see TextAnalysis.kmvSketch)
     "q329_kmv_sketch" -> ((s, dir) =>
-      TextAnalysis.kmvSketch(tbl(s, dir, "documents"))),
+      TextAnalysis.kmvSketch(Tables.read(s, dir, "documents"))),
     // Water-filling token-budget allocation under a per-source epoch
     // cap, closed-form relational algebra (see Curation.tokenAllocate).
     // budget=100k: binds below total capacity at sf0.01 (mixed
     // saturated/level regime) and exceeds it at sf0.001 (all-saturated,
     // NULL lambda) — both branches gate-checked across the two sweeps.
     "q331_token_allocate" -> ((s, dir) =>
-      Curation.tokenAllocate(tbl(s, dir, "documents"), budget = 100000L)),
+      Curation.tokenAllocate(Tables.read(s, dir, "documents"), budget = 100000L)),
     // Group-DRO exponentiated reweighting toward the worst-quality
     // language groups (see Curation.groupDroWeights)
     "q332_group_dro" -> ((s, dir) =>
-      Curation.groupDroWeights(tbl(s, dir, "documents"))),
+      Curation.groupDroWeights(Tables.read(s, dir, "documents"))),
     // KMV sketch-STORE merge lifecycle (the q100 move applied to
     // sketches): the history generation's bottom-64 rows are persisted
     // state (stamped store); the batch generation is sketched per pass
@@ -1433,7 +1431,7 @@ object Queries {
     // of bottom-ks) makes store-merge ≡ from-scratch, so a lost or
     // duplicated store row fails the gate.
     "q333_kmv_merge" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
+      val docs = Tables.read(s, dir, "documents")
       val hist = stampedStore(s, dir, "kmv_hist_store", "documents")(
         TextAnalysis.kmvRows(docs.where(col("doc_id") % 2 === 0)))
       val batch = TextAnalysis.kmvRows(docs.where(col("doc_id") % 2 === 1))
@@ -1445,183 +1443,183 @@ object Queries {
     // words, Hamming candidate scan, exact rerank — the 32x-compression
     // extreme of the ANN toolbox (see Sim.binaryKnn)
     "q334_binary_knn" -> ((s, dir) =>
-      Sim.binaryKnn(tbl(s, dir, "embeddings"), nQuery = 10, k = 5)
+      Sim.binaryKnn(Tables.read(s, dir, "embeddings"), nQuery = 10, k = 5)
         .orderBy("qid", "rnk")),
     // Johnson-Lindenstrauss sign projection 64->16 + the per-pair
     // distortion audit the JL lemma bounds (see Sim.randomProjection)
     "q335_random_projection" -> ((s, dir) =>
-      Sim.randomProjection(tbl(s, dir, "embeddings"))
+      Sim.randomProjection(Tables.read(s, dir, "embeddings"))
         .orderBy("v1", "v2")),
     // Fellegi-Sunter log-likelihood-ratio record-linkage scores over
     // the q86 blocked pairs (see Dedup.fellegiSunter)
     "q336_fellegi_sunter" -> ((s, dir) =>
-      Dedup.fellegiSunter(tbl(s, dir, "documents"))
+      Dedup.fellegiSunter(Tables.read(s, dir, "documents"))
         .orderBy("d1", "d2")),
     // Two-round AdaBoost over weighted decision stumps — in-plan
     // ensemble training (see TextAnalysis.adaBoost)
     "q340_ada_boost" -> ((s, dir) =>
-      TextAnalysis.adaBoost(tbl(s, dir, "documents"))),
+      TextAnalysis.adaBoost(Tables.read(s, dir, "documents"))),
     // Greedy facility-location selection of 3 exemplars from a
     // 50-candidate pool over the whole corpus
     // (see Sim.facilityLocationSelect)
     "q341_submodular_select" -> ((s, dir) =>
-      Sim.facilityLocationSelect(tbl(s, dir, "embeddings"))),
+      Sim.facilityLocationSelect(Tables.read(s, dir, "embeddings"))),
     // Mutual-information feature ranking against the lang='en' label
     // (see TextAnalysis.miFeatureRank)
     "q342_mi_rank" -> ((s, dir) =>
-      TextAnalysis.miFeatureRank(tbl(s, dir, "documents"))),
+      TextAnalysis.miFeatureRank(Tables.read(s, dir, "documents"))),
     // Near-dup-component-atomic train/val/test split with the
     // straddle audit (see Curation.leakageSafeSplit)
     "q343_leakage_split" -> ((s, dir) =>
-      Curation.leakageSafeSplit(tbl(s, dir, "documents"))),
+      Curation.leakageSafeSplit(Tables.read(s, dir, "documents"))),
     // External clustering eval vs gold labels: pairwise P/R/F1, Rand,
     // ARI, purity from contingency sufficient statistics
     // (see Sim.clusterEval)
     "q344_cluster_eval" -> ((s, dir) =>
-      Sim.clusterEval(tbl(s, dir, "embeddings"))),
+      Sim.clusterEval(Tables.read(s, dir, "embeddings"))),
     // CCNet-style perplexity filter census over the in-corpus bigram
     // LM (see TextAnalysis.perplexityFilter)
     "q345_perplexity_filter" -> ((s, dir) =>
-      TextAnalysis.perplexityFilter(tbl(s, dir, "documents"))),
+      TextAnalysis.perplexityFilter(Tables.read(s, dir, "documents"))),
     // kNN label transfer: held-out probes adopt the majority label of
     // their 5 nearest labeled vectors (see Sim.knnClassify)
     "q348_knn_classify" -> ((s, dir) =>
-      Sim.knnClassify(tbl(s, dir, "embeddings"))),
+      Sim.knnClassify(Tables.read(s, dir, "embeddings"))),
     // Rank-biased overlap between the df and cf token rankings
     // (see TextAnalysis.rboRankings)
     "q349_rbo" -> ((s, dir) =>
-      TextAnalysis.rboRankings(tbl(s, dir, "documents"))),
+      TextAnalysis.rboRankings(Tables.read(s, dir, "documents"))),
     // Jelinek-Mercer lambda sweep with held-out perplexity
     // (see TextAnalysis.jmInterpolation)
     "q351_jm_interp" -> ((s, dir) =>
-      TextAnalysis.jmInterpolation(tbl(s, dir, "documents"))),
+      TextAnalysis.jmInterpolation(Tables.read(s, dir, "documents"))),
     // RBF-kernel MMD two-sample test between the even/odd embedding
     // halves (see Sim.mmdDrift)
     "q352_mmd_drift" -> ((s, dir) =>
-      Sim.mmdDrift(tbl(s, dir, "embeddings"))),
+      Sim.mmdDrift(Tables.read(s, dir, "embeddings"))),
     // RAKE keyphrase extraction over stopword-delimited candidate
     // phrases (see TextAnalysis.rakeKeyphrases)
     "q353_rake" -> ((s, dir) =>
-      TextAnalysis.rakeKeyphrases(tbl(s, dir, "documents"))),
+      TextAnalysis.rakeKeyphrases(Tables.read(s, dir, "documents"))),
     // kth-NN cosine-distance outliers over the bounded sample
     // (see Sim.knnOutliers)
     "q354_knn_outlier" -> ((s, dir) =>
-      Sim.knnOutliers(tbl(s, dir, "embeddings"))),
+      Sim.knnOutliers(Tables.read(s, dir, "embeddings"))),
     // InfoNCE contrastive loss per label with nearest-same-label
     // positives (see Sim.infoNce)
     "q355_infonce" -> ((s, dir) =>
-      Sim.infoNce(tbl(s, dir, "embeddings"))),
+      Sim.infoNce(Tables.read(s, dir, "embeddings"))),
     // Retrieval eval vs label relevance: MRR@10, recall@10, P@1
     // (see Sim.retrievalEval)
     "q356_retrieval_eval" -> ((s, dir) =>
-      Sim.retrievalEval(tbl(s, dir, "embeddings"))),
+      Sim.retrievalEval(Tables.read(s, dir, "embeddings"))),
     // Vocabulary coverage / OOV curve at fixed vocab budgets
     // (see TextAnalysis.vocabCoverage)
     "q357_vocab_coverage" -> ((s, dir) =>
-      TextAnalysis.vocabCoverage(tbl(s, dir, "documents"))),
+      TextAnalysis.vocabCoverage(Tables.read(s, dir, "documents"))),
     // Per-source token-distribution KL from the corpus over the shared
     // top-M support (see TextAnalysis.sourceKl)
     "q358_source_kl" -> ((s, dir) =>
-      TextAnalysis.sourceKl(tbl(s, dir, "documents"))),
+      TextAnalysis.sourceKl(Tables.read(s, dir, "documents"))),
     // k-center greedy coreset: 5 farthest-point centers + covering
     // radius per round (see Sim.kcenterSelect)
     "q359_kcenter" -> ((s, dir) =>
-      Sim.kcenterSelect(tbl(s, dir, "embeddings"))),
+      Sim.kcenterSelect(Tables.read(s, dir, "embeddings"))),
     // unigram^0.75 negative-sampling table + derandomized draw audit
     // (see TextAnalysis.negativeSamplingTable)
     "q360_negative_sampling" -> ((s, dir) =>
-      TextAnalysis.negativeSamplingTable(tbl(s, dir, "documents"))),
+      TextAnalysis.negativeSamplingTable(Tables.read(s, dir, "documents"))),
     // Dedup threshold ladder: survivors per Jaccard operating point
     // (see Dedup.dedupLadder)
     "q361_dedup_ladder" -> ((s, dir) =>
-      Dedup.dedupLadder(tbl(s, dir, "documents"))),
+      Dedup.dedupLadder(Tables.read(s, dir, "documents"))),
     // k-occurrence hubness audit of the embedding space
     // (see Sim.hubnessAudit)
     "q362_hubness" -> ((s, dir) =>
-      Sim.hubnessAudit(tbl(s, dir, "embeddings"))),
+      Sim.hubnessAudit(Tables.read(s, dir, "embeddings"))),
     // First-occurrence novelty per ingestion-order decile
     // (see TextAnalysis.noveltyCurve)
     "q363_novelty_curve" -> ((s, dir) =>
-      TextAnalysis.noveltyCurve(tbl(s, dir, "documents"))),
+      TextAnalysis.noveltyCurve(Tables.read(s, dir, "documents"))),
     // Cross-source shingle-containment matrix
     // (see Dedup.sourceOverlapMatrix)
     "q364_source_overlap" -> ((s, dir) =>
-      Dedup.sourceOverlapMatrix(tbl(s, dir, "documents"))),
+      Dedup.sourceOverlapMatrix(Tables.read(s, dir, "documents"))),
     // Hill tail-index of the token-frequency distribution at several k
     // (see TextAnalysis.hillTailIndex)
     "q365_hill_tail" -> ((s, dir) =>
-      TextAnalysis.hillTailIndex(tbl(s, dir, "documents"))),
+      TextAnalysis.hillTailIndex(Tables.read(s, dir, "documents"))),
     // Truncation/padding census per candidate max sequence length
     // (see TextAnalysis.contextLadder)
     "q366_context_ladder" -> ((s, dir) =>
-      TextAnalysis.contextLadder(tbl(s, dir, "documents"))),
+      TextAnalysis.contextLadder(Tables.read(s, dir, "documents"))),
     // Embedding anisotropy audit: mean pairwise cosine via the
     // ||sum of units||^2 identity (see Sim.anisotropyAudit)
     "q367_anisotropy" -> ((s, dir) =>
-      Sim.anisotropyAudit(tbl(s, dir, "embeddings"))),
+      Sim.anisotropyAudit(Tables.read(s, dir, "embeddings"))),
     // Perceptual (pHash-style) near-dup over the multimodal feature
     // path — the dedup family's third modality (VERDICT r10 item 2).
     // maxDist=3 makes the 4-band LSH lossless by pigeonhole, so the
     // oracle is the BRUTE-FORCE Hamming join: the gate row certifies
     // losslessness, not just parity (see Multimodal.perceptualNearDups)
     "q373_perceptual_neardup" -> ((s, dir) =>
-      Multimodal.perceptualNearDups(tbl(s, dir, "documents"), maxDist = 3)
+      Multimodal.perceptualNearDups(Tables.read(s, dir, "documents"), maxDist = 3)
         .orderBy("d1", "d2")),
     // Interpolated Kneser-Ney bigram LM held-out perplexity (D=0.75,
     // continuation distribution, q351's 5-fold split)
     // (see TextAnalysis.knBigram)
     "q376_kneser_ney" -> ((s, dir) =>
-      TextAnalysis.knBigram(tbl(s, dir, "documents"))),
+      TextAnalysis.knBigram(Tables.read(s, dir, "documents"))),
     // Good-Turing count-of-counts smoothing: adjusted counts r*,
     // per-count probability mass, unseen mass N1/N (see
     // TextAnalysis.goodTuring)
     "q414_good_turing" -> ((s, dir) =>
-      TextAnalysis.goodTuring(tbl(s, dir, "documents"))),
+      TextAnalysis.goodTuring(Tables.read(s, dir, "documents"))),
     // Moving-average TTR lexical diversity, covering-cell band join,
     // first-sight counting via keyed lag (see TextAnalysis.mattr)
     "q415_mattr" -> ((s, dir) =>
-      TextAnalysis.mattr(tbl(s, dir, "documents"))),
+      TextAnalysis.mattr(Tables.read(s, dir, "documents"))),
     // Chao1 bias-corrected species richness + Good's coverage off the
     // q414 bigram frequency spectrum (see TextAnalysis.chao1)
     "q429_chao1" -> ((s, dir) =>
-      TextAnalysis.chao1(tbl(s, dir, "documents"))),
+      TextAnalysis.chao1(Tables.read(s, dir, "documents"))),
     // PII / redaction census over document tokens + events props
     // values: email + IPv4 regex classes, Luhn-validated card-like
     // digit runs (see Curation.piiAudit)
     "q416_pii_audit" -> ((s, dir) =>
-      Curation.piiAudit(tbl(s, dir, "documents"), tbl(s, dir, "events"))),
+      Curation.piiAudit(Tables.read(s, dir, "documents"), Tables.read(s, dir, "events"))),
     // Multi-vector late-interaction (ColBERT MaxSim) top-k retrieval
     // over subvector token-vectors (see Sim.maxSimKnn)
     "q378_maxsim" -> ((s, dir) =>
-      Sim.maxSimKnn(tbl(s, dir, "embeddings"), nQuery = 10, k = 5)
+      Sim.maxSimKnn(Tables.read(s, dir, "embeddings"), nQuery = 10, k = 5)
         .orderBy("qid", "rnk")),
     // Quality-filter cascade waterfall: per-stage n_in/killed/out
     // (see Curation.filterCascade)
     "q379_filter_cascade" -> ((s, dir) =>
-      Curation.filterCascade(tbl(s, dir, "documents"))),
+      Curation.filterCascade(Tables.read(s, dir, "documents"))),
     // RM3 pseudo-relevance-feedback expansion + weighted-BM25 rerank
     // (see TextAnalysis.rm3Expansion)
     "q380_rm3_expansion" -> ((s, dir) =>
-      TextAnalysis.rm3Expansion(tbl(s, dir, "documents"))),
+      TextAnalysis.rm3Expansion(Tables.read(s, dir, "documents"))),
     // WordPiece greedy longest-match segmentation via recursive CTE
     // + per-language fertility (see Curation.wordpieceFertility)
     "q383_wordpiece_fertility" -> ((s, dir) =>
-      Curation.wordpieceFertility(tbl(s, dir, "documents"))),
+      Curation.wordpieceFertility(Tables.read(s, dir, "documents"))),
     // Blocking-quality eval: reduction ratio + pairs completeness per
     // scheme vs brute-force edit-distance truth (see Dedup.blockingEval)
     "q384_blocking_eval" -> ((s, dir) => {
-      val titled = tbl(s, dir, "documents").select(col("doc_id"),
+      val titled = Tables.read(s, dir, "documents").select(col("doc_id"),
         concat_ws(" ", slice(split(col("text"), " ", -1), 1, 5)).as("title"))
       Dedup.blockingEval(titled, "doc_id", "title")
     }),
     // Leave-one-source-out ablation of mean quality + lang entropy
     // (see Curation.sourceAblation)
     "q385_source_ablation" -> ((s, dir) =>
-      Curation.sourceAblation(tbl(s, dir, "documents"))),
+      Curation.sourceAblation(Tables.read(s, dir, "documents"))),
     // Video near-dup by frame-fingerprint containment through the
     // inverted-index join (see Multimodal.frameNearDups)
     "q388_frame_neardup" -> ((s, dir) =>
-      Multimodal.frameNearDups(tbl(s, dir, "documents"))
+      Multimodal.frameNearDups(Tables.read(s, dir, "documents"))
         .orderBy("d1", "d2")),
     // Warner randomized response with derandomized coin + debiasing
     // audit (see Curation.randomizedResponse; q324 honesty note)
@@ -1664,7 +1662,7 @@ object Queries {
     // batch×history Hamming join end to end — loss or duplication
     // across the persist/read-back boundary fails the row.
     "q392_phash_incremental" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
+      val docs = Tables.read(s, dir, "documents")
       val history = docs.where(col("doc_id") % 2 === 0)
       val fresh = docs.where(col("doc_id") % 2 === 1)
       graft.Scratch.stamped("phash_store", dir, "documents",
@@ -1685,7 +1683,7 @@ object Queries {
     // containment join end to end, so loss or duplication across the
     // persist/read-back boundary fails the row.
     "q397_frame_incremental" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
+      val docs = Tables.read(s, dir, "documents")
       val history = docs.where(col("doc_id") % 2 === 0)
       val fresh = docs.where(col("doc_id") % 2 === 1)
       graft.Scratch.stamped("frame_store", dir, "documents",
@@ -1721,7 +1719,7 @@ object Queries {
         .withColumn("nm", count(lit(1)).over(
           org.apache.spark.sql.expressions.Window.partitionBy("doc_id")))
         .where(col("r") === 1)
-        .join(tbl(s, dir, "documents").select(col("doc_id"), col("lang")),
+        .join(Tables.read(s, dir, "documents").select(col("doc_id"), col("lang")),
           "doc_id")
         .select(col("doc_id"), col("lang"),
           col("nm").cast("long").as("n_eval_matches"),
@@ -1733,57 +1731,57 @@ object Queries {
     // out of reach, the sampled-permutation estimator is the point
     // (see Curation.dataShapley; q385's LOO deltas read alongside)
     "q399_data_shapley" -> ((s, dir) =>
-      Curation.dataShapley(tbl(s, dir, "documents"))),
+      Curation.dataShapley(Tables.read(s, dir, "documents"))),
     // Valuation -> curation closure: q399's prices as executed keep
     // rates (see Curation.shapleyReweight)
     "q400_shapley_reweight" -> ((s, dir) =>
-      Curation.shapleyReweight(tbl(s, dir, "documents"))),
+      Curation.shapleyReweight(Tables.read(s, dir, "documents"))),
     // Portable Bloom-filter build over en tokens, probed per other
     // language, with the measured-vs-analytic FPR audit (see
     // TextAnalysis.bloomFilter)
     "q432_bloom_filter" -> ((s, dir) =>
-      TextAnalysis.bloomFilter(tbl(s, dir, "documents"))),
+      TextAnalysis.bloomFilter(Tables.read(s, dir, "documents"))),
     // b-bit minhash storage/accuracy tradeoff over the q18 candidate
     // pairs: full vs 1/2/4-bit corrected estimators vs exact Jaccard
     // (see Dedup.bbitMinhash)
     "q433_bbit_minhash" -> ((s, dir) =>
-      Dedup.bbitMinhash(tbl(s, dir, "documents"), "doc_id", "text")),
+      Dedup.bbitMinhash(Tables.read(s, dir, "documents"), "doc_id", "text")),
     // Reciprocal-kNN clustering over the converged NN-descent graph:
     // mutual-edge filter -> connected components -> size census
     // (see Sim.mutualKnnClusters; converged graph read back from the
     // stamped nn_graph_store — VERDICT r13 item 3)
     "q435_mutual_knn" -> ((s, dir) =>
-      Sim.mutualKnnFromStages(tbl(s, dir, "embeddings"),
+      Sim.mutualKnnFromStages(Tables.read(s, dir, "embeddings"),
         nnGraphStore(s, dir))),
     // Rendezvous-hash shard routing with the minimal-disruption audit:
     // drop shard 3, certify moved docs = its former population
     // (see Pack.rendezvousShards)
     "q437_rendezvous_shards" -> ((s, dir) =>
-      Pack.rendezvousShards(tbl(s, dir, "documents"))),
+      Pack.rendezvousShards(Tables.read(s, dir, "documents"))),
     // Lightweight-coreset sample + weighted spherical-scatter audit
     // against the full corpus on shared IVF centroids
     // (see Sim.coresetKmeans)
     "q438_coreset_kmeans" -> ((s, dir) =>
-      Sim.coresetKmeans(tbl(s, dir, "embeddings"))),
+      Sim.coresetKmeans(Tables.read(s, dir, "embeddings"))),
     // Signed feature hashing with the collision census and the exact
     // inner-product-preservation audit (see TextAnalysis.featureHashing)
     "q440_feature_hashing" -> ((s, dir) =>
-      TextAnalysis.featureHashing(tbl(s, dir, "documents"))),
+      TextAnalysis.featureHashing(Tables.read(s, dir, "documents"))),
     // SentencePiece-style unigram-LM Viterbi tokenization, DP folded
     // in-plan over per-word lookup maps (see TextAnalysis.unigramTokenize)
     "q442_unigram_tokenize" -> ((s, dir) =>
-      TextAnalysis.unigramTokenize(tbl(s, dir, "documents"))),
+      TextAnalysis.unigramTokenize(Tables.read(s, dir, "documents"))),
     // One hard-EM round of unigram-LM tokenizer training: Viterbi
     // E-step, count M-step, bottom-p multi-char prune with single-char
     // coverage, re-segment (see TextAnalysis.unigramHardEm)
     "q443_unigram_hard_em" -> ((s, dir) =>
-      TextAnalysis.unigramHardEm(tbl(s, dir, "documents"))),
+      TextAnalysis.unigramHardEm(Tables.read(s, dir, "documents"))),
     // R=2 hard-EM rounds of unigram-LM tokenizer training — three
     // Viterbi E-steps, two count-M-step+prune rounds, and the
     // per-round convergence report (vocab sizes, changed-word counts)
     // carried on every row (see TextAnalysis.unigramEmRounds)
     "q449_unigram_em_rounds" -> ((s, dir) =>
-      TextAnalysis.unigramEmRounds(tbl(s, dir, "documents"))),
+      TextAnalysis.unigramEmRounds(Tables.read(s, dir, "documents"))),
     // Lee et al. ExactSubstr: prefix-doubling position naming decides
     // exact duplicated L-token windows; per-doc run/coverage census.
     // L=6 is deliberately NON-dyadic — the chain doubles to m=4 then
@@ -1791,14 +1789,14 @@ object Queries {
     // same construction that expresses the paper's L=50 at web scale
     // (see Dedup.exactSubstrRuns / exactSubstrNamed)
     "q444_exact_substr" -> ((s, dir) =>
-      Dedup.exactSubstrRuns(tbl(s, dir, "documents"), "doc_id", "text",
+      Dedup.exactSubstrRuns(Tables.read(s, dir, "documents"), "doc_id", "text",
         windowL = 6)),
     // The ExactSubstr CUT transform: remove every non-canonical
     // duplicated span, reassemble survivors; the naming chain comes
     // from the stamped exact_substr_named_store (q444 stays the
     // from-scratch declaration — see Dedup.exactSubstrCutFromNamed)
     "q446_exact_substr_cut" -> ((s, dir) =>
-      Dedup.exactSubstrCutFromNamed(tbl(s, dir, "documents"),
+      Dedup.exactSubstrCutFromNamed(Tables.read(s, dir, "documents"),
         exactSubstrNamedStore(s, dir), "doc_id", "text", windowL = 6)),
     // Incremental exact-substring probe of a new batch against the
     // persisted gram-bucketed history store — the q75 lifecycle for
@@ -1806,7 +1804,7 @@ object Queries {
     // batch; see Dedup.incrementalExactSubstr). Store build is
     // idempotent per fixture (Scratch.stamped).
     "q448_incremental_exact_substr" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
+      val docs = Tables.read(s, dir, "documents")
       val history = docs.where(col("doc_id") % 2 === 0)
       val batch = docs.where(col("doc_id") % 2 === 1)
       // v2: 128-bit-hash store (g1, g2, n_hist) at L=6 — the version
@@ -1824,7 +1822,7 @@ object Queries {
     // MaxScore upper-bound-pruned BM25 top-k with the losslessness
     // certification columns (see TextAnalysis.maxScoreTopK)
     "q434_maxscore_topk" -> ((s, dir) =>
-      TextAnalysis.maxScoreTopK(tbl(s, dir, "documents"))),
+      TextAnalysis.maxScoreTopK(Tables.read(s, dir, "documents"))),
   )
 
   /** DuckDB twin of [[graft.functions.Fnv1a32]]: the same code-point
@@ -1837,13 +1835,6 @@ object Queries {
       s"list_transform(range(length($e)), i -> unicode(($e)[i+1:i+1]))), " +
       "(h, c) -> (xor(h, c) * 16777619) % 4294967296)"
 
-  /** DuckDB twin of [[Multimodal.perceptualNearDups]] (maxDist=3) as a
-    * BRUTE-FORCE Hamming join — deliberately not a banding replica:
-    * at maxDist ≤ 3 the 4×16-bit LSH is pigeonhole-lossless, so brute
-    * force IS the expected output and the q373 gate row certifies the
-    * losslessness claim itself. Same token stream, same
-    * fnv(tok:pj) mod 1024 − 512 coefficients, same 32nd-order-statistic
-    * median threshold, same two-word packing. */
   /** The pHash-word CTE chain (ptok → pco → pmd → pw) shared by the
     * q373 pair oracle and the q392 incremental-probe oracle. */
   private val phashWordsCtes: String =
@@ -1866,6 +1857,13 @@ object Queries {
        |      AS BIGINT) AS ph_hi
        |  FROM pco JOIN pmd USING (doc_id) GROUP BY pco.doc_id)""".stripMargin
 
+  /** DuckDB twin of [[Multimodal.perceptualNearDups]] (maxDist=3) as a
+    * BRUTE-FORCE Hamming join — deliberately not a banding replica:
+    * at maxDist ≤ 3 the 4×16-bit LSH is pigeonhole-lossless, so brute
+    * force IS the expected output and the q373 gate row certifies the
+    * losslessness claim itself. Same token stream, same
+    * fnv(tok:pj) mod 1024 − 512 coefficients, same 32nd-order-statistic
+    * median threshold, same two-word packing. */
   private val phashPairsOracle: String =
     s"""WITH $phashWordsCtes,
        |pp AS (SELECT a.doc_id AS d1, b.doc_id AS d2,
@@ -2424,22 +2422,6 @@ object Queries {
 
   private val ivfKnnOracle = ivfKnnOracleFor("true")
 
-  /** DuckDB twin of [[Sim.sq8Knn]] (nQuery=10, k=5, rerank=20): same
-    * int8 quantization, same exact integer dot, same fixed-order IEEE
-    * dequantized estimate — so the CANDIDATE SET is bit-identical
-    * across engines, and the exact-rerank tail repeats the proven q21
-    * cosine math. */
-  /** DuckDB twin of q124: the same bigram edge build, then 3 unrolled
-    * PageRank rounds. Each round's per-node sum takes the identical
-    * DECIMAL(38,12)-via-VARCHAR route as [[graft.rel.Queries.dsum]]'s
-    * oracle twin, and the teleport constant is interpolated from the
-    * very Scala double the Spark plan uses (`1.0 - 0.85` is NOT 0.15
-    * in IEEE arithmetic — see Graph.pageRank's scaladoc), so ranks are
-    * bit-identical across engines at every round. */
-  /** DuckDB twin of [[graft.rel.Graph.labelPropagation]] at 2 rounds:
-    * the same symmetrized self-loop-free bigram edges, the same
-    * weighted (wt DESC, label ASC) adoption per round, unrolled as
-    * CTEs. All-integer state — exact at every round. */
   /** The LPA CTE chain (bigram edges → sym → l0…l`iters`) shared by
     * [[labelPropOracle]] and [[modularityOracle]]. */
   private def lpaCteBody(iters: Int): String = {
@@ -2461,6 +2443,10 @@ object Queries {
        |l0 AS (SELECT DISTINCT a AS node, a AS label FROM sym)$rounds""".stripMargin
   }
 
+  /** DuckDB twin of [[graft.rel.Graph.labelPropagation]] at 2 rounds:
+    * the same symmetrized self-loop-free bigram edges, the same
+    * weighted (wt DESC, label ASC) adoption per round, unrolled as
+    * CTEs. All-integer state — exact at every round. */
   private val labelPropOracle: String =
     lpaCteBody(2) +
       """
@@ -2497,6 +2483,13 @@ object Queries {
          |ORDER BY label""".stripMargin
   }
 
+  /** DuckDB twin of q124: the same bigram edge build, then 3 unrolled
+    * PageRank rounds. Each round's per-node sum takes the identical
+    * DECIMAL(38,12)-via-VARCHAR route as [[graft.rel.Queries.dsum]]'s
+    * oracle twin, and the teleport constant is interpolated from the
+    * very Scala double the Spark plan uses (`1.0 - 0.85` is NOT 0.15
+    * in IEEE arithmetic — see Graph.pageRank's scaladoc), so ranks are
+    * bit-identical across engines at every round. */
   private val pageRankOracle: String = {
     val damping = 0.85
     def dec(x: String) =
@@ -2694,6 +2687,11 @@ object Queries {
       s"ORDER BY ${femitSql("rank")} DESC, node ASC LIMIT 20"
   }
 
+  /** DuckDB twin of [[Sim.sq8Knn]] (nQuery=10, k=5, rerank=20): same
+    * int8 quantization, same exact integer dot, same fixed-order IEEE
+    * dequantized estimate — so the CANDIDATE SET is bit-identical
+    * across engines, and the exact-rerank tail repeats the proven q21
+    * cosine math. */
   private val sq8KnnOracle = {
     val isumSql = "list_reduce(list_prepend(CAST(0 AS BIGINT), %s), (a, b) -> a + b)"
     val idot = isumSql.format(
@@ -3040,7 +3038,7 @@ object Queries {
     * from-scratch declarations. */
   private def minhashPairStore(s: SparkSession, dir: String): DataFrame =
     stampedStore(s, dir, "minhash_pair_store", "documents")(
-      Dedup.minhashNearDups(tbl(s, dir, "documents"), "doc_id", "text",
+      Dedup.minhashNearDups(Tables.read(s, dir, "documents"), "doc_id", "text",
         k = 3, nBuckets = 64, bandSize = 4, threshold = 0.1))
 
   /** q94's embedding sign-LSH near-dup pair table (τ=0.2 — see the q94
@@ -3048,7 +3046,7 @@ object Queries {
     * the from-scratch declaration. */
   private def embedLshPairStore(s: SparkSession, dir: String): DataFrame =
     stampedStore(s, dir, "embed_lsh_pair_store", "embeddings")(
-      Sim.cosineNearDupsLsh(tbl(s, dir, "embeddings"), threshold = 0.2,
+      Sim.cosineNearDupsLsh(Tables.read(s, dir, "embeddings"), threshold = 0.2,
         nTables = 16, bandPlanes = 4, dim = EmbeddingDim))
 
   /** q373's perceptual (pHash MIH) near-dup pair table (maxDist=3),
@@ -3059,7 +3057,7 @@ object Queries {
     * stays the from-scratch declaration. */
   private def phashPairStore(s: SparkSession, dir: String): DataFrame =
     stampedStore(s, dir, "phash_pair_store", "documents")(
-      Multimodal.perceptualNearDups(tbl(s, dir, "documents"), maxDist = 3))
+      Multimodal.perceptualNearDups(Tables.read(s, dir, "documents"), maxDist = 3))
 
   /** q417's NN-descent stage graphs (seed + 3 convergence rounds, each
     * edge labeled with its stage and the stage's new-edge delta),
@@ -3069,7 +3067,7 @@ object Queries {
     * the declared queries are its probes, the q94/q218/q222 pattern). */
   private def nnGraphStore(s: SparkSession, dir: String): DataFrame =
     stampedStore(s, dir, "nn_graph_store", "embeddings")(
-      Sim.nnDescentStageFrame(tbl(s, dir, "embeddings")))
+      Sim.nnDescentStageFrame(Tables.read(s, dir, "embeddings")))
 
   /** q444's named-window table (the prefix-doubling chain's output:
     * every full L-window position with its injective content label),
@@ -3078,7 +3076,7 @@ object Queries {
     * q444 stays the from-scratch declaration). */
   private def exactSubstrNamedStore(s: SparkSession, dir: String): DataFrame =
     stampedStore(s, dir, "exact_substr_named_store_l6", "documents")(
-      Dedup.exactSubstrNamed(tbl(s, dir, "documents"), "doc_id", "text",
+      Dedup.exactSubstrNamed(Tables.read(s, dir, "documents"), "doc_id", "text",
         windowL = 6))
 
   /** q132's lossless exact-Jaccard pair table, materialized ONCE per
@@ -3088,7 +3086,7 @@ object Queries {
     * the from-scratch declaration. */
   private def exactPairStore(s: SparkSession, dir: String): DataFrame =
     stampedStore(s, dir, "exact_pair_store", "documents")(
-      Dedup.prefixFilterJoin(tbl(s, dir, "documents"), "doc_id", "text",
+      Dedup.prefixFilterJoin(Tables.read(s, dir, "documents"), "doc_id", "text",
         k = 3, tauNum = 1, tauDen = 2))
 
   /** Shared truth for q139 (batch-built posting index) and q216 (the

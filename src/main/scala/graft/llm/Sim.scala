@@ -32,20 +32,44 @@ object Sim {
   def cosine(a: Column, b: Column, normA: Column, normB: Column): Column =
     dot(a, b) / (normA * normB)
 
+  /** The vector frame every search operator starts from:
+    * (vec_id, extra…, v, norm) — `v` the exact double cast of
+    * `embedding`, `norm` its sequential-fold L2 norm. */
+  private[llm] def vectors(emb: DataFrame, extra: Column*): DataFrame =
+    emb.select((col("vec_id") +: extra :+ asDouble(col("embedding")).as("v")): _*)
+      .withColumn("norm", norm(col("v")))
+
+  /** The exact-kNN rank rule: per `qid`, rank rows by (`score` desc,
+    * vec_id asc) — a score tie goes to the lower vector id, on both
+    * engines — as a BIGINT `rnk`, keeping rnk &lt;= k. */
+  private[llm] def topK(scored: DataFrame, k: Int, score: String = "sim"): DataFrame =
+    scored.withColumn("rnk", row_number().over(Window.partitionBy("qid")
+        .orderBy(col(score).desc, col("vec_id").asc)).cast("long"))
+      .where(col("rnk") <= k)
+
+  /** The IVF nearest-centroid rule: every row against the broadcast
+    * (cid, cv, cn) centroid table, csim = cosine(`vec`, cv), ranked per
+    * `id` by (csim desc, cid asc) — a tie goes to the lower centroid
+    * id — keeping the `n` nearest as r = 1..n. Input and centroid
+    * columns are all kept; callers select what they need. */
+  private[llm] def nearestCentroids(rows: DataFrame, id: String, vec: String,
+                                    norm: String, cents: DataFrame, n: Int): DataFrame =
+    rows.crossJoin(broadcast(cents))
+      .withColumn("csim", cosine(col(vec), col("cv"), col(norm), col("cn")))
+      .withColumn("r", row_number().over(
+        Window.partitionBy(id).orderBy(col("csim").desc, col("cid").asc)))
+      .where(col("r") <= n)
+
   /** Exact cosine top-k: for each query vector (vec_id &lt; nQuery), the k
     * nearest other vectors. Output: (qid, rnk, vec_id, sim). */
   def cosineKnn(emb: DataFrame, nQuery: Int, k: Int): DataFrame = {
-    val v = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("norm", norm(col("v")))
+    val v = vectors(emb)
     val q = v.select(col("vec_id").as("qid"), col("v").as("qv"), col("norm").as("qnorm"))
       .where(col("qid") < nQuery)
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("vec_id").asc)
-    v.crossJoin(broadcast(q))
+    topK(v.crossJoin(broadcast(q))
       .where(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"),
-        cosine(col("v"), col("qv"), col("norm"), col("qnorm")).as("sim"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .where(col("rnk") <= k)
+        cosine(col("v"), col("qv"), col("norm"), col("qnorm")).as("sim")), k)
       .select("qid", "rnk", "vec_id", "sim")
   }
 
@@ -65,20 +89,15 @@ object Sim {
                   langs: Seq[String], labelMod: Long): DataFrame = {
     val keep = docs.where(col("lang").isin(langs: _*))
       .select(col("doc_id").as("vec_id"))
-    val v = emb.select(col("vec_id"), col("label").cast("long").as("label"),
-        asDouble(col("embedding")).as("v"))
-      .withColumn("norm", norm(col("v")))
+    val v = vectors(emb, col("label").cast("long").as("label"))
     val corpus = v.where(col("label") % labelMod === 0L)
       .join(keep, Seq("vec_id"), "left_semi")
     val q = v.select(col("vec_id").as("qid"), col("v").as("qv"),
       col("norm").as("qnorm")).where(col("qid") < nQuery)
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("vec_id").asc)
-    corpus.crossJoin(broadcast(q))
+    topK(corpus.crossJoin(broadcast(q))
       .where(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"), col("label"),
-        cosine(col("v"), col("qv"), col("norm"), col("qnorm")).as("sim"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .where(col("rnk") <= k)
+        cosine(col("v"), col("qv"), col("norm"), col("qnorm")).as("sim")), k)
       .select("qid", "rnk", "vec_id", "label", "sim")
   }
 
@@ -100,9 +119,7 @@ object Sim {
     * interpolated into both engines' plans (the bm25 constant
     * discipline), so even the ideal curve is shared bit-for-bit. */
   def retrievalMetrics(emb: DataFrame, nQuery: Int, k: Int, mrrK: Int): DataFrame = {
-    val v = emb.select(col("vec_id"), col("label").cast("long").as("label"),
-        asDouble(col("embedding")).as("v"))
-      .withColumn("norm", norm(col("v")))
+    val v = vectors(emb, col("label").cast("long").as("label"))
     val q = v.select(col("vec_id").as("qid"), col("label").as("qlabel"),
         col("v").as("qv"), col("norm").as("qnorm"))
       .where(col("qid") < nQuery)
@@ -111,10 +128,8 @@ object Sim {
       .select(col("qid"), col("vec_id"),
         when(col("label") === col("qlabel"), 1L).otherwise(0L).as("rel"),
         cosine(col("v"), col("qv"), col("norm"), col("qnorm")).as("sim"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("vec_id").asc)
-    val ranked = cand.withColumn("rnk", row_number().over(w).cast("long"))
     val rTot = cand.groupBy("qid").agg(sum(col("rel")).as("n_rel"))
-    val agg = ranked.where(col("rnk") <= mrrK)
+    val agg = topK(cand, mrrK)
       .groupBy("qid").agg(
         sum(when(col("rnk") <= k, col("rel")).otherwise(0L)).as("hits_k"),
         min(when(col("rel") === 1L, col("rnk"))).as("first_rel"),
@@ -166,9 +181,7 @@ object Sim {
     * (queries × corpus, corpus-partitioned); everything after the
     * per-query top-k window is O(queries). */
   def errAtK(emb: DataFrame, nQuery: Int, k: Int): DataFrame = {
-    val v = emb.select(col("vec_id"), col("label").cast("long").as("label"),
-        asDouble(col("embedding")).as("v"))
-      .withColumn("norm", norm(col("v")))
+    val v = vectors(emb, col("label").cast("long").as("label"))
     val q = v.select(col("vec_id").as("qid"), col("label").as("qlabel"),
         col("v").as("qv"), col("norm").as("qnorm"))
       .where(col("qid") < nQuery)
@@ -179,9 +192,7 @@ object Sim {
           .when(abs(col("label") - col("qlabel")) === 1L, 1L)
           .otherwise(0L).as("g"),
         cosine(col("v"), col("qv"), col("norm"), col("qnorm")).as("sim"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("vec_id").asc)
-    val top = cand.withColumn("rnk", row_number().over(w).cast("long"))
-      .where(col("rnk") <= k)
+    val top = topK(cand, k)
       .withColumn("r",
         when(col("g") === 2L, lit(0.75))
           .when(col("g") === 1L, lit(0.25)).otherwise(lit(0.0)))
@@ -353,19 +364,14 @@ object Sim {
     * state per query is k rows. Same sequential-fold cosine as q21 —
     * bit-identical across engines, so sims and ranks value-oracle. */
   def hardNegatives(emb: DataFrame, nQuery: Int, k: Int): DataFrame = {
-    val v = emb.select(col("vec_id"), col("label").cast("long").as("label"),
-        asDouble(col("embedding")).as("v"))
-      .withColumn("norm", norm(col("v")))
+    val v = vectors(emb, col("label").cast("long").as("label"))
     val q = v.select(col("vec_id").as("qid"), col("label").as("qlabel"),
         col("v").as("qv"), col("norm").as("qnorm"))
       .where(col("qid") < nQuery)
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("vec_id").asc)
-    v.crossJoin(broadcast(q))
+    topK(v.crossJoin(broadcast(q))
       .where(col("label") =!= col("qlabel"))
       .select(col("qid"), col("qlabel"), col("vec_id"), col("label"),
-        cosine(col("v"), col("qv"), col("norm"), col("qnorm")).as("sim"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .where(col("rnk") <= k)
+        cosine(col("v"), col("qv"), col("norm"), col("qnorm")).as("sim")), k)
       .select("qid", "qlabel", "rnk", "vec_id", "label", "sim")
   }
 
@@ -391,17 +397,13 @@ object Sim {
   def mmrDiversify(emb: DataFrame, nQuery: Int, pool: Int, k: Int,
                    lam: Double = 0.7): DataFrame = {
     val mu = 1.0 - lam
-    val v = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("norm", norm(col("v")))
+    val v = vectors(emb)
     val q = v.select(col("vec_id").as("qid"), col("v").as("qv"),
       col("norm").as("qnorm")).where(col("qid") < nQuery)
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("vec_id").asc)
-    val cands = v.crossJoin(broadcast(q))
+    val cands = topK(v.crossJoin(broadcast(q))
       .where(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"), col("v"), col("norm"),
-        cosine(col("v"), col("qv"), col("norm"), col("qnorm")).as("sim"))
-      .withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= pool)
+        cosine(col("v"), col("qv"), col("norm"), col("qnorm")).as("sim")), pool)
       .select("qid", "vec_id", "v", "norm", "sim")
       .localCheckpoint()
     val candSim = cands.select(col("qid"), col("vec_id").as("d1"),
@@ -413,8 +415,6 @@ object Sim {
         cosine(col("v1"), col("v2"), col("n1"), col("n2")).as("dsim"))
       .localCheckpoint()
     val rel = cands.select("qid", "vec_id", "sim")
-    val pickW = Window.partitionBy("qid")
-      .orderBy(col("score").desc, col("vec_id").asc)
     var sel: DataFrame = null
     val picks = (1 to k).map { r =>
       val scored =
@@ -429,9 +429,7 @@ object Sim {
             .join(pen, Seq("qid", "vec_id"))
             .withColumn("score", col("sim") * lit(lam) - col("pen") * lit(mu))
         }
-      val pick = scored
-        .withColumn("rn", row_number().over(pickW))
-        .where(col("rn") === 1)
+      val pick = topK(scored, 1, "score")
         .select(col("qid"), col("vec_id"), col("score"), lit(r.toLong).as("rnk"))
       sel = (if (r == 1) pick.select("qid", "vec_id")
              else sel.union(pick.select("qid", "vec_id"))).localCheckpoint()
@@ -493,16 +491,13 @@ object Sim {
     * bit-identical results as [[cosineKnn]], with the per-pair math in a
     * fused whole-stage-codegen loop instead of interpreted HOF lambdas. */
   def cosineKnnNative(emb: DataFrame, nQuery: Int, k: Int): DataFrame = {
-    val v = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    val v = vectors(emb)
     val q = v.select(col("vec_id").as("qid"), col("v").as("qv"))
       .where(col("qid") < nQuery)
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("vec_id").asc)
-    v.crossJoin(broadcast(q))
+    topK(v.crossJoin(broadcast(q))
       .where(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"),
-        graft.functions.VectorExprs.cosineSim("v", "qv").as("sim"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .where(col("rnk") <= k)
+        graft.functions.VectorExprs.cosineSim("v", "qv").as("sim")), k)
       .select("qid", "rnk", "vec_id", "sim")
   }
 
@@ -528,7 +523,7 @@ object Sim {
   /** Bucket histogram — the partition-health diagnostic for the ANN path
     * (bucket skew is what kills the equi-join at scale). */
   def lshBuckets(emb: DataFrame, nPlanes: Int, dim: Int): DataFrame = {
-    val v = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    val v = vectors(emb)
     v.select(col("vec_id"), lshBucket(v, "v", nPlanes, dim).as("bucket"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_vecs"))
@@ -550,9 +545,7 @@ object Sim {
     * id-bounded cross join with the [[lshBucket]] equi-join (see
     * [[cosineNearDupsLsh]]). Output: (v1, v2, sim), v1 &lt; v2. */
   def cosineNearDups(emb: DataFrame, maxId: Long, threshold: Double): DataFrame = {
-    val v = emb.where(col("vec_id") < maxId)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("norm", norm(col("v")))
+    val v = vectors(emb.where(col("vec_id") < maxId))
     val a = v.select(col("vec_id").as("v1"), col("v").as("va"), col("norm").as("na"))
     val b = v.select(col("vec_id").as("v2"), col("v").as("vb"), col("norm").as("nb"))
     a.join(b, col("v1") < col("v2"))
@@ -616,13 +609,6 @@ object Sim {
       .where(col("sim") >= threshold)
   }
 
-  /** IVF-flat approximate kNN — the other scale path (coarse quantizer +
-    * probed inverted lists). Centroids are the first `nlist` vectors
-    * (deterministic seed set; a production pipeline would k-means-refine
-    * them — the dataflow is identical): every vector is assigned to its
-    * nearest centroid (one broadcast pass), queries probe the `nprobe`
-    * nearest lists, and exact cosine ranks within the probed union.
-    * Candidate work per query is ~nprobe/nlist of the corpus. */
   /** Deterministic coarse-quantizer centroid set: the first `nlist`
     * vectors by id (a production pipeline would k-means-refine; the
     * dataflow downstream is identical). */
@@ -630,28 +616,19 @@ object Sim {
     v.orderBy("vec_id").limit(nlist)
       .select(col("vec_id").as("cid"), col("v").as("cv"), col("norm").as("cn"))
 
-  /** Nearest-centroid assignment of `(vec_id, v, norm)` rows against an
-    * arbitrary `(cid, cv, cn)` centroid table: argmax cosine, ties to
-    * the lowest centroid id, one broadcast pass over the corpus. */
-  private def assignTo(v: DataFrame, centroids: DataFrame): DataFrame = {
-    val wAssign = Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cid").asc)
-    v.crossJoin(broadcast(centroids))
-      .select(col("vec_id"), col("v"), col("norm"), col("cid"),
-        cosine(col("v"), col("cv"), col("norm"), col("cn")).as("csim"))
-      .withColumn("r", row_number().over(wAssign))
-      .where(col("r") === 1)
-      .select(col("vec_id"), col("v"), col("norm"), col("cid"))
-  }
-
   /** Nearest-centroid assignment: (vec_id, v, norm, cid) — one broadcast
     * pass over the corpus (argmax cosine against nlist rows), ties to
     * the lowest centroid id. The shared spine of the IVF kNN and the
     * cluster-dedup paths. */
   def ivfAssign(emb: DataFrame, nlist: Int): DataFrame = {
-    val v = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("norm", norm(col("v")))
-    assignTo(v, ivfCentroids(v, nlist))
+    val v = vectors(emb)
+    ivfAssign(v, ivfCentroids(v, nlist))
   }
+
+  /** [[ivfAssign]] of a [[vectors]] frame against given centroids. */
+  private def ivfAssign(v: DataFrame, cents: DataFrame): DataFrame =
+    nearestCentroids(v, "vec_id", "v", "norm", cents, 1)
+      .select("vec_id", "v", "norm", "cid")
 
   /** Rank-biased precision (Moffat &amp; Zobel, TOIS 2008 — the
     * user-persistence ranking metric whose weights form an exact
@@ -666,9 +643,7 @@ object Sim {
     * top-k window; the metric itself is O(queries). */
   def rbpAtK(emb: DataFrame, nQuery: Int, k: Int): DataFrame = {
     import graft.rel.Queries.{dsum, femit}
-    val v = emb.select(col("vec_id"), col("label").cast("long").as("label"),
-        asDouble(col("embedding")).as("v"))
-      .withColumn("norm", norm(col("v")))
+    val v = vectors(emb, col("label").cast("long").as("label"))
     val q = v.select(col("vec_id").as("qid"), col("label").as("qlabel"),
         col("v").as("qv"), col("norm").as("qnorm"))
       .where(col("qid") < nQuery)
@@ -677,9 +652,7 @@ object Sim {
       .select(col("qid"), col("vec_id"),
         when(col("label") === col("qlabel"), 1L).otherwise(0L).as("rel"),
         cosine(col("v"), col("qv"), col("norm"), col("qnorm")).as("sim"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("vec_id").asc)
-    cand.withColumn("rnk", row_number().over(w).cast("long"))
-      .where(col("rnk") <= k)
+    topK(cand, k)
       .groupBy("qid")
       .agg(sum(col("rel")).as("n_rel_topk"),
         dsum(col("rel").cast("double")
@@ -704,21 +677,16 @@ object Sim {
     * shares are one hash-agg. */
   def exposureFairness(emb: DataFrame, nQuery: Int, k: Int): DataFrame = {
     import graft.rel.Queries.{dsum, femit}
-    val v = emb.select(col("vec_id"), col("label").cast("long").as("label"),
-        asDouble(col("embedding")).as("v"))
-      .withColumn("norm", norm(col("v")))
+    val v = vectors(emb, col("label").cast("long").as("label"))
     val corp = v.groupBy("label").agg(count(lit(1)).as("n_corpus"))
     val nTot = corp.agg(sum(col("n_corpus")).as("n_total"))
     val q = v.select(col("vec_id").as("qid"), col("v").as("qv"),
         col("norm").as("qnorm"))
       .where(col("qid") < nQuery)
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("vec_id").asc)
-    val top = v.crossJoin(broadcast(q))
+    val top = topK(v.crossJoin(broadcast(q))
       .where(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"), col("label"),
-        cosine(col("v"), col("qv"), col("norm"), col("qnorm")).as("sim"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .where(col("rnk") <= k)
+        cosine(col("v"), col("qv"), col("norm"), col("qnorm")).as("sim")), k)
     val expo = top.groupBy("label")
       .agg(dsum(lit(1.0) / log(col("rnk").cast("double") + lit(1.0)))
         .as("exposure"))
@@ -761,31 +729,24 @@ object Sim {
   def teamDraftInterleave(emb: DataFrame, nQuery: Int = 10,
       depth: Int = 10, poolK: Int = 20): DataFrame = {
     import graft.rel.Queries.femit
-    val v = emb.select(col("vec_id"), col("label").cast("long").as("label"),
-        asDouble(col("embedding")).as("v"))
-      .withColumn("norm", norm(col("v")))
-    val vt = emb.select(col("vec_id"),
-        asDouble(slice(col("embedding"), 1, 4)).as("v"))
-      .withColumn("norm", norm(col("v")))
+    val v = vectors(emb, col("label").cast("long").as("label"))
+    val vt = vectors(emb.withColumn("embedding", slice(col("embedding"), 1, 4)))
     val q = v.select(col("vec_id").as("qid"), col("label").as("qlabel"),
         col("v").as("qv"), col("norm").as("qnorm"))
       .where(col("qid") < nQuery)
     val qt = vt.select(col("vec_id").as("qid"), col("v").as("qv"),
         col("norm").as("qnorm"))
       .where(col("qid") < nQuery)
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("vec_id").asc)
     val relTab = v.crossJoin(broadcast(q.select("qid", "qlabel")))
       .where(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"),
         when(col("label") === col("qlabel"), 1L).otherwise(0L).as("rel"))
       .localCheckpoint() // click join for all steps
     def pool(side: DataFrame, queries: DataFrame): DataFrame =
-      side.crossJoin(broadcast(queries))
+      topK(side.crossJoin(broadcast(queries))
         .where(col("vec_id") =!= col("qid"))
         .select(col("qid"), col("vec_id"),
-          cosine(col("v"), col("qv"), col("norm"), col("qnorm")).as("sim"))
-        .withColumn("rnk", row_number().over(w))
-        .where(col("rnk") <= poolK)
+          cosine(col("v"), col("qv"), col("norm"), col("qnorm")).as("sim")), poolK)
         .groupBy("qid")
         .agg(transform(array_sort(collect_list(struct(col("rnk"),
           col("vec_id")))), p => p.getField("vec_id")).as("arr"))
@@ -837,57 +798,6 @@ object Sim {
       .orderBy("qid")
   }
 
-  /** NN-descent refinement TO CONVERGENCE over an IVF-seeded kNN
-    * graph (Dong, Moses &amp; Li, WWW 2011 — THE way kNN graphs are
-    * built at scale: start from any cheap approximate neighborhood,
-    * then iterate "a neighbor of my neighbor is probably my neighbor"
-    * until the update count dries up; each round is pure joins, which
-    * is why the algorithm maps to a distributed engine where
-    * graph-traversal ANN like HNSW does not): seed G₀ = per-node
-    * top-k cosine among nodes sharing either of the node's TWO
-    * nearest IVF cells (multi-assignment matters: single-cell seeding
-    * is CLOSED under the co-neighbor step — every neighbor-of-neighbor
-    * stays in the same cell and the round provably gains nothing,
-    * measured recall 0.416 → 0.416 on this fixture; with 2 cells per
-    * node the expansion chains across cell overlaps), then `maxRounds`
-    * co-neighbor rounds (VERDICT r12 item 2 — the paper's loop, not a
-    * single pass): each round symmetrizes Gᵣ, caps each middle node's
-    * adjacency at `capNbr` by similarity rank (NN-descent's ρ
-    * sampling, the hub-blowup guard), pairs every two capped
-    * neighbors of a shared middle, scores the distinct new pairs, and
-    * re-takes the per-node top-k over Gᵣ ∪ candidates.
-    *
-    * Convergence protocol: a round with delta = 0 new edges is a
-    * FIXPOINT (the next round's candidates derive only from the
-    * unchanged graph, so every later round reproduces it verbatim) —
-    * the driver stops expanding there and emits the converged stats
-    * for the remaining stage rows, while the oracle unrolls all
-    * `maxRounds` rounds and lands on the identical table. Per-round
-    * graphs are localCheckpointed (the q46 CC pacing pattern), so the
-    * lineage never re-derives a prior round.
-    *
-    * Output is the CONVERGENCE AUDIT — one row per stage (seed +
-    * every round) with the new-edge delta and recall@k against the
-    * exact top-k on the bounded audit slice (vec_id &lt; `auditN`,
-    * the JL audit-pool convention: the exact pass broadcasts only
-    * audit queries, never corpus²; at 100 TB the recall audit stays a
-    * sampled probe exactly like this) — so the gate certifies each
-    * round's gain AND the drying-up of the update stream.
-    *
-    * Scale: every step is an equi-join keyed by cell / middle node /
-    * pair — no global sort, no corpus cross join; the co-neighbor
-    * candidate volume is Σ_m deg_capped(m)² with deg ≤ capNbr by
-    * construction, and round COUNT (bounded by `maxRounds`, with the
-    * delta-0 early exit) dominates over data growth. The SEED join is
-    * O(N²/nlist), so `nlist` must scale ~√N (the standard IVF
-    * coarse-quantizer sizing rule): ScaleProbe measured the
-    * fixed-nlist failure mode directly — 8.2 s → 391 s at 10× with
-    * nlist frozen at 16 (quadratic), vs the √N-scaled configuration
-    * it now records per round.
-    * Determinism: raw-double sim ordering with id tiebreaks (the
-    * q21/q35 convention — both engines hold identical cosines), the
-    * seed∪candidate merge is a (u,w) max-agg of identical values, and
-    * the delta is an exact anti-join count. */
   /** The IVF-seeded graph loop shared by [[nnDescent]] (which audits
     * every stage) and [[mutualKnnClusters]] (which consumes only the
     * converged graph): returns the vector frame and the per-stage
@@ -897,16 +807,10 @@ object Sim {
   private def nnDescentStages(emb: DataFrame, k: Int, nlist: Int,
                               capNbr: Int, maxRounds: Int)
       : (DataFrame, Seq[(String, DataFrame, Long)]) = {
-    val v = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("norm", norm(col("v")))
+    val v = vectors(emb)
       .localCheckpoint() // centroid read + per-round vector-fetch joins
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("csim").desc, col("cid").asc)
-    val assigned = v.crossJoin(broadcast(ivfCentroids(v, nlist)))
-      .select(col("vec_id"), col("cid"),
-        cosine(col("v"), col("cv"), col("norm"), col("cn")).as("csim"))
-      .withColumn("r", row_number().over(wAssign))
-      .where(col("r") <= 2) // multi-assign: 2 nearest cells per node
+    // multi-assign: 2 nearest cells per node
+    val assigned = nearestCentroids(v, "vec_id", "v", "norm", ivfCentroids(v, nlist), 2)
       .select(col("vec_id"), col("cid"))
       .localCheckpoint() // both sides of the seed join
     val seedCand = assigned.select(col("cid"), col("vec_id").as("u"))
@@ -987,8 +891,7 @@ object Sim {
   def nnDescentAudit(emb: DataFrame, stageFrame: DataFrame, k: Int = 5,
                      auditN: Int = 50): DataFrame = {
     import graft.rel.Queries.{dsum, femit}
-    val v = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("norm", norm(col("v")))
+    val v = vectors(emb)
     // q is a cheap filtered projection — recomputed per consumer so the
     // audit plan stays scan-only (no checkpoint RDD in the probe path)
     val q = v.where(col("vec_id") < auditN)
@@ -1019,6 +922,57 @@ object Sim {
       .orderBy("stage")
   }
 
+  /** NN-descent refinement TO CONVERGENCE over an IVF-seeded kNN
+    * graph (Dong, Moses &amp; Li, WWW 2011 — THE way kNN graphs are
+    * built at scale: start from any cheap approximate neighborhood,
+    * then iterate "a neighbor of my neighbor is probably my neighbor"
+    * until the update count dries up; each round is pure joins, which
+    * is why the algorithm maps to a distributed engine where
+    * graph-traversal ANN like HNSW does not): seed G₀ = per-node
+    * top-k cosine among nodes sharing either of the node's TWO
+    * nearest IVF cells (multi-assignment matters: single-cell seeding
+    * is CLOSED under the co-neighbor step — every neighbor-of-neighbor
+    * stays in the same cell and the round provably gains nothing,
+    * measured recall 0.416 → 0.416 on this fixture; with 2 cells per
+    * node the expansion chains across cell overlaps), then `maxRounds`
+    * co-neighbor rounds (VERDICT r12 item 2 — the paper's loop, not a
+    * single pass): each round symmetrizes Gᵣ, caps each middle node's
+    * adjacency at `capNbr` by similarity rank (NN-descent's ρ
+    * sampling, the hub-blowup guard), pairs every two capped
+    * neighbors of a shared middle, scores the distinct new pairs, and
+    * re-takes the per-node top-k over Gᵣ ∪ candidates.
+    *
+    * Convergence protocol: a round with delta = 0 new edges is a
+    * FIXPOINT (the next round's candidates derive only from the
+    * unchanged graph, so every later round reproduces it verbatim) —
+    * the driver stops expanding there and emits the converged stats
+    * for the remaining stage rows, while the oracle unrolls all
+    * `maxRounds` rounds and lands on the identical table. Per-round
+    * graphs are localCheckpointed (the q46 CC pacing pattern), so the
+    * lineage never re-derives a prior round.
+    *
+    * Output is the CONVERGENCE AUDIT — one row per stage (seed +
+    * every round) with the new-edge delta and recall@k against the
+    * exact top-k on the bounded audit slice (vec_id &lt; `auditN`,
+    * the JL audit-pool convention: the exact pass broadcasts only
+    * audit queries, never corpus²; at 100 TB the recall audit stays a
+    * sampled probe exactly like this) — so the gate certifies each
+    * round's gain AND the drying-up of the update stream.
+    *
+    * Scale: every step is an equi-join keyed by cell / middle node /
+    * pair — no global sort, no corpus cross join; the co-neighbor
+    * candidate volume is Σ_m deg_capped(m)² with deg ≤ capNbr by
+    * construction, and round COUNT (bounded by `maxRounds`, with the
+    * delta-0 early exit) dominates over data growth. The SEED join is
+    * O(N²/nlist), so `nlist` must scale ~√N (the standard IVF
+    * coarse-quantizer sizing rule): ScaleProbe measured the
+    * fixed-nlist failure mode directly — 8.2 s → 391 s at 10× with
+    * nlist frozen at 16 (quadratic), vs the √N-scaled configuration
+    * it now records per round.
+    * Determinism: raw-double sim ordering with id tiebreaks (the
+    * q21/q35 convention — both engines hold identical cosines), the
+    * seed∪candidate merge is a (u,w) max-agg of identical values, and
+    * the delta is an exact anti-join count. */
   def nnDescent(emb: DataFrame, k: Int = 5, nlist: Int = 16,
                 capNbr: Int = 32, auditN: Int = 50,
                 maxRounds: Int = 3): DataFrame =
@@ -1097,18 +1051,13 @@ object Sim {
     * so the overlap flag is value-oracled too. Plan: two broadcast
     * query passes over the corpus + a k×nQuery row flag join. */
   def truncatedKnn(emb: DataFrame, nQuery: Int, k: Int, dims: Int): DataFrame = {
-    val tr = emb.select(col("vec_id"),
-      asDouble(slice(col("embedding"), 1, dims)).as("v"))
-      .withColumn("norm", norm(col("v")))
+    val tr = vectors(emb.withColumn("embedding", slice(col("embedding"), 1, dims)))
     val q = tr.select(col("vec_id").as("qid"), col("v").as("qv"),
       col("norm").as("qnorm")).where(col("qid") < nQuery)
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("vec_id").asc)
-    val trunc = tr.crossJoin(broadcast(q))
+    val trunc = topK(tr.crossJoin(broadcast(q))
       .where(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"),
-        cosine(col("v"), col("qv"), col("norm"), col("qnorm")).as("sim"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .where(col("rnk") <= k)
+        cosine(col("v"), col("qv"), col("norm"), col("qnorm")).as("sim")), k)
     val full = cosineKnn(emb, nQuery, k)
       .select(col("qid"), col("vec_id"), lit(true).as("hit"))
     trunc.join(full, Seq("qid", "vec_id"), "left_outer")
@@ -1133,11 +1082,10 @@ object Sim {
     * Output: (cid, dim, c) — refined centroid coordinates, exploded for
     * cross-engine comparability. */
   def kmeansRefine(emb: DataFrame, nlist: Int, iters: Int): DataFrame = {
-    val v = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("norm", norm(col("v")))
+    val v = vectors(emb)
     var cents = ivfCentroids(v, nlist)
     for (it <- 1 to iters) {
-      val means = assignTo(v, cents)
+      val means = nearestCentroids(v, "vec_id", "v", "norm", cents, 1)
         .select(col("cid"), posexplode(col("v")).as(Seq("dim", "x")))
         .groupBy("cid", "dim")
         .agg((graft.rel.Queries.dsum(col("x")) / count(lit(1))).as("c"))
@@ -1204,30 +1152,28 @@ object Sim {
       .where(col("sim") >= threshold)
   }
 
+  /** IVF-flat approximate kNN — the other scale path (coarse quantizer +
+    * probed inverted lists). Centroids are the first `nlist` vectors
+    * (deterministic seed set; a production pipeline would k-means-refine
+    * them — the dataflow is identical): every vector is assigned to its
+    * nearest centroid (one broadcast pass), queries probe the `nprobe`
+    * nearest lists, and exact cosine ranks within the probed union.
+    * Candidate work per query is ~nprobe/nlist of the corpus. */
   def ivfKnn(emb: DataFrame, nQuery: Int, k: Int,
              nlist: Int = 16, nprobe: Int = 4): DataFrame = {
-    val v = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("norm", norm(col("v")))
+    val v = vectors(emb)
     val centroids = ivfCentroids(v, nlist)
     val assigned = ivfAssign(emb, nlist)
     // probe lists: nprobe nearest centroids per query vector
     val q = v.where(col("vec_id") < nQuery)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("norm").as("qnorm"))
-    val wProbe = Window.partitionBy("qid").orderBy(col("csim").desc, col("cid").asc)
-    val probes = q.crossJoin(broadcast(centroids))
-      .select(col("qid"), col("qv"), col("qnorm"), col("cid"),
-        cosine(col("qv"), col("cv"), col("qnorm"), col("cn")).as("csim"))
-      .withColumn("r", row_number().over(wProbe))
-      .where(col("r") <= nprobe)
+    val probes = nearestCentroids(q, "qid", "qv", "qnorm", centroids, nprobe)
       .select(col("qid"), col("qv"), col("qnorm"), col("cid"))
     // rank exact cosine within the probed lists
-    val wRank = Window.partitionBy("qid").orderBy(col("sim").desc, col("vec_id").asc)
-    assigned.join(probes, Seq("cid"))
+    topK(assigned.join(probes, Seq("cid"))
       .where(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"),
-        cosine(col("v"), col("qv"), col("norm"), col("qnorm")).as("sim"))
-      .withColumn("rnk", row_number().over(wRank).cast("long"))
-      .where(col("rnk") <= k)
+        cosine(col("v"), col("qv"), col("norm"), col("qnorm")).as("sim")), k)
       .select("qid", "rnk", "vec_id", "sim")
   }
 
@@ -1247,8 +1193,7 @@ object Sim {
                     assignTable: String, centroidTable: String,
                     buckets: Int): Unit = {
     val s = emb.sparkSession
-    val v = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("norm", norm(col("v")))
+    val v = vectors(emb)
     graft.rel.Layout.writeBucketedBy(
       ivfAssign(emb, nlist), assignTable, buckets, "cid")
     s.sql(s"DROP TABLE IF EXISTS `$centroidTable`")
@@ -1272,11 +1217,8 @@ object Sim {
     * q100 signature-store fold-in. */
   def ivfIndexAppend(fresh: DataFrame, assignTable: String,
                      centroidTable: String, buckets: Int): Unit = {
-    val s = fresh.sparkSession
-    val v = fresh.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("norm", norm(col("v")))
-    graft.rel.Layout.appendBucketedBy(
-      assignTo(v, s.table(centroidTable)), assignTable, buckets, "cid")
+    val asg = ivfAssign(vectors(fresh), fresh.sparkSession.table(centroidTable))
+    graft.rel.Layout.appendBucketedBy(asg, assignTable, buckets, "cid")
   }
 
   /** IVF kNN probing a PERSISTED index ([[ivfIndexWrite]]) instead of
@@ -1295,23 +1237,14 @@ object Sim {
     val s = queries.sparkSession
     val centroids = s.table(centroidTable)
     val asg = s.table(assignTable)
-    val q = queries.where(col("vec_id") < nQuery)
-      .select(col("vec_id").as("qid"), asDouble(col("embedding")).as("qv"))
-      .withColumn("qnorm", norm(col("qv")))
-    val wProbe = Window.partitionBy("qid").orderBy(col("csim").desc, col("cid").asc)
-    val probes = q.crossJoin(broadcast(centroids))
-      .select(col("qid"), col("qv"), col("qnorm"), col("cid"),
-        cosine(col("qv"), col("cv"), col("qnorm"), col("cn")).as("csim"))
-      .withColumn("r", row_number().over(wProbe))
-      .where(col("r") <= nprobe)
+    val q = vectors(queries.where(col("vec_id") < nQuery))
+      .select(col("vec_id").as("qid"), col("v").as("qv"), col("norm").as("qnorm"))
+    val probes = nearestCentroids(q, "qid", "qv", "qnorm", centroids, nprobe)
       .select(col("qid"), col("qv"), col("qnorm"), col("cid"))
-    val wRank = Window.partitionBy("qid").orderBy(col("sim").desc, col("vec_id").asc)
-    asg.join(broadcast(probes), Seq("cid"))
+    topK(asg.join(broadcast(probes), Seq("cid"))
       .where(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"),
-        cosine(col("v"), col("qv"), col("norm"), col("qnorm")).as("sim"))
-      .withColumn("rnk", row_number().over(wRank).cast("long"))
-      .where(col("rnk") <= k)
+        cosine(col("v"), col("qv"), col("norm"), col("qnorm")).as("sim")), k)
       .select("qid", "rnk", "vec_id", "sim")
   }
 
@@ -1327,8 +1260,7 @@ object Sim {
     * Pure per-row projection, no shuffle. */
   private def sq8(emb: DataFrame): DataFrame = {
     val raw = array_max(transform(col("v"), x => abs(x)))
-    emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("norm", norm(col("v")))
+    vectors(emb)
       .withColumn("scale", when(raw === 0.0, lit(1.0)).otherwise(raw))
       .withColumn("qv", transform(col("v"),
         x => floor(x / col("scale") * lit(127.0) + lit(0.5))))
@@ -1364,27 +1296,20 @@ object Sim {
     val q = z.where(col("vec_id") < nQuery)
       .select(col("vec_id").as("qid"), col("qv").as("qqv"),
         col("scale").as("qscale"), col("norm").as("qnorm"))
-    val wEst = Window.partitionBy("qid").orderBy(col("est").desc, col("vec_id").asc)
-    val cand = codes.crossJoin(broadcast(q))
+    val cand = topK(codes.crossJoin(broadcast(q))
       .where(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"),
         (isum(zip_with(col("qv"), col("qqv"), (x, y) => x * y)).cast("double")
           * col("scale") * col("qscale") / lit(16129.0)
-          / (col("norm") * col("qnorm"))).as("est"))
-      .withColumn("r", row_number().over(wEst))
-      .where(col("r") <= rerank)
+          / (col("norm") * col("qnorm"))).as("est")), rerank, "est")
       .select(col("qid"), col("vec_id"))
-    val full = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("norm", norm(col("v")))
+    val full = vectors(emb)
     val qFull = full.where(col("vec_id") < nQuery)
       .select(col("vec_id").as("qid"), col("v").as("qv2"), col("norm").as("qn2"))
-    val wRank = Window.partitionBy("qid").orderBy(col("sim").desc, col("vec_id").asc)
-    full.join(broadcast(cand), "vec_id")
+    topK(full.join(broadcast(cand), "vec_id")
       .join(broadcast(qFull), "qid")
       .select(col("qid"), col("vec_id"),
-        cosine(col("v"), col("qv2"), col("norm"), col("qn2")).as("sim"))
-      .withColumn("rnk", row_number().over(wRank).cast("long"))
-      .where(col("rnk") <= k)
+        cosine(col("v"), col("qv2"), col("norm"), col("qn2")).as("sim")), k)
       .select("qid", "rnk", "vec_id", "sim")
   }
 
@@ -1428,7 +1353,7 @@ object Sim {
     * baseline is floor-pinned in RecallSpec. */
   def binaryKnn(emb: DataFrame, nQuery: Int, k: Int,
                 rerank: Int = 128): DataFrame = {
-    val v = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    val v = vectors(emb)
     // CENTERED thresholds: bit i is v_i > mu_i, not v_i > 0 — real
     // embedding dimensions carry nonzero means, and a biased dimension
     // thresholded at zero wastes its bit (always-set). Centering at
@@ -1460,17 +1385,12 @@ object Sim {
       .withColumn("r", row_number().over(wHam))
       .where(col("r") <= rerank)
       .select(col("qid"), col("vec_id"), col("ham"))
-    val full = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("norm", norm(col("v")))
-    val qFull = full.where(col("vec_id") < nQuery)
+    val qFull = v.where(col("vec_id") < nQuery)
       .select(col("vec_id").as("qid"), col("v").as("qv2"), col("norm").as("qn2"))
-    val wRank = Window.partitionBy("qid").orderBy(col("sim").desc, col("vec_id").asc)
-    full.join(broadcast(cand), "vec_id")
+    topK(v.join(broadcast(cand), "vec_id")
       .join(broadcast(qFull), "qid")
       .select(col("qid"), col("vec_id"), col("ham"),
-        cosine(col("v"), col("qv2"), col("norm"), col("qn2")).as("sim"))
-      .withColumn("rnk", row_number().over(wRank).cast("long"))
-      .where(col("rnk") <= k)
+        cosine(col("v"), col("qv2"), col("norm"), col("qn2")).as("sim")), k)
       .select("qid", "rnk", "vec_id", "ham", "sim")
   }
 
@@ -1514,8 +1434,7 @@ object Sim {
         s"cast(t DIV 64 AS STRING)), ${seed}L) % 1048576 < 524288, " +
         s"CAST(1.0 AS DOUBLE), CAST(-1.0 AS DOUBLE)))").as("sgn"))
     val scale = s"CAST(1.0 AS DOUBLE) / sqrt(CAST($dOut AS DOUBLE))"
-    val v = emb.where(col("vec_id") < maxId)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    val v = vectors(emb.where(col("vec_id") < maxId))
       .crossJoin(broadcast(sgn))
       .select(col("vec_id"), col("v"), expr(
         s"transform(sequence(0, ${dOut - 1}), j -> " +
@@ -1561,8 +1480,7 @@ object Sim {
   def facilityLocationSelect(emb: DataFrame, nCand: Long = 50,
                              k: Int = 3): DataFrame = {
     import graft.rel.Queries.{dsum, femit}
-    val v = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("norm", norm(col("v")))
+    val v = vectors(emb)
     val cand = v.where(col("vec_id") < nCand)
       .select(col("vec_id").as("cid"), col("v").as("cv"), col("norm").as("cn"))
     val sims = v.crossJoin(broadcast(cand))
@@ -1679,21 +1597,15 @@ object Sim {
   def knnClassify(emb: DataFrame, k: Int = 5,
                   maxProbe: Long = 250): DataFrame = {
     import graft.rel.Queries.femit
-    val v = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"),
-        col("label").cast("long").as("label"))
-      .withColumn("norm", norm(col("v")))
+    val v = vectors(emb, col("label").cast("long").as("label"))
     val probes = v.where(pmod(col("vec_id"), lit(5L)) === 0 &&
         col("vec_id") < maxProbe)
       .select(col("vec_id").as("qid"), col("v").as("qv"),
         col("norm").as("qn"), col("label").as("gold"))
     val store = v.where(pmod(col("vec_id"), lit(5L)) =!= 0)
-    val wRank = Window.partitionBy("qid")
-      .orderBy(col("sim").desc, col("vec_id").asc)
-    val neigh = store.crossJoin(broadcast(probes))
+    val neigh = topK(store.crossJoin(broadcast(probes))
       .select(col("qid"), col("gold"), col("vec_id"), col("label"),
-        cosine(col("v"), col("qv"), col("norm"), col("qn")).as("sim"))
-      .withColumn("rnk", row_number().over(wRank))
-      .where(col("rnk") <= k)
+        cosine(col("v"), col("qv"), col("norm"), col("qn")).as("sim")), k)
     val wVote = Window.partitionBy("qid")
       .orderBy(col("votes").desc, col("label").asc)
     neigh.groupBy("qid", "gold", "label")
@@ -1730,8 +1642,7 @@ object Sim {
   def mmdDrift(emb: DataFrame, nSample: Long = 200,
                gamma: Double = 1.0 / 64): DataFrame = {
     import graft.rel.Queries.{dsum, femit}
-    val v = emb.where(col("vec_id") < 2 * nSample)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    val v = vectors(emb.where(col("vec_id") < 2 * nSample))
       .withColumn("sq", fsum(transform(col("v"), x => x * x)))
     val x = v.where(pmod(col("vec_id"), lit(2L)) === 0)
       .select(col("vec_id").as("xid"), col("v").as("xv"), col("sq").as("xsq"))
@@ -1779,9 +1690,7 @@ object Sim {
   def knnOutliers(emb: DataFrame, k: Int = 5, nSample: Long = 400,
                   nOut: Int = 20): DataFrame = {
     import graft.rel.Queries.femit
-    val v = emb.where(col("vec_id") < nSample)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("norm", norm(col("v")))
+    val v = vectors(emb.where(col("vec_id") < nSample))
     val b = v.select(col("vec_id").as("oid"), col("v").as("ov"),
       col("norm").as("on"))
     val wRank = Window.partitionBy("vec_id")
@@ -1819,10 +1728,8 @@ object Sim {
   def infoNce(emb: DataFrame, nSample: Long = 200,
               tau: Double = 0.25): DataFrame = {
     import graft.rel.Queries.{dsum, femit}
-    val v = emb.where(col("vec_id") < nSample)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"),
-        col("label").cast("long").as("label"))
-      .withColumn("norm", norm(col("v")))
+    val v = vectors(emb.where(col("vec_id") < nSample),
+      col("label").cast("long").as("label"))
     val a = v.select(col("vec_id").as("aid"), col("v").as("av"),
       col("norm").as("an"), col("label").as("alabel"))
     val sims = v.crossJoin(broadcast(a))
@@ -1875,24 +1782,18 @@ object Sim {
   def retrievalEval(emb: DataFrame, k: Int = 10,
                     nSample: Long = 200): DataFrame = {
     import graft.rel.Queries.{dsum, femit}
-    val v = emb.where(col("vec_id") < nSample)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"),
-        col("label").cast("long").as("label"))
-      .withColumn("norm", norm(col("v")))
-    val a = v.select(col("vec_id").as("aid"), col("v").as("av"),
+    val v = vectors(emb.where(col("vec_id") < nSample),
+      col("label").cast("long").as("label"))
+    val a = v.select(col("vec_id").as("qid"), col("v").as("av"),
       col("norm").as("an"), col("label").as("alabel"))
-    val wRank = Window.partitionBy("aid")
-      .orderBy(col("sim").desc, col("vec_id").asc)
-    val top = v.crossJoin(broadcast(a))
-      .where(col("vec_id") =!= col("aid"))
-      .select(col("aid"), col("alabel"), col("vec_id"), col("label"),
-        cosine(col("v"), col("av"), col("norm"), col("an")).as("sim"))
-      .withColumn("rnk", row_number().over(wRank))
-      .where(col("rnk") <= k)
+    val top = topK(v.crossJoin(broadcast(a))
+      .where(col("vec_id") =!= col("qid"))
+      .select(col("qid"), col("alabel"), col("vec_id"), col("label"),
+        cosine(col("v"), col("av"), col("norm"), col("an")).as("sim")), k)
     val relTotal = v.groupBy("label")
       .agg((count(lit(1)) - 1).as("n_rel")) // peers excluding self
     val perProbe = top
-      .groupBy("aid", "alabel")
+      .groupBy("qid", "alabel")
       .agg(min(when(col("label") === col("alabel"), col("rnk"))).as("fr"),
         sum(when(col("label") === col("alabel"), 1L).otherwise(0L))
           .as("hits"),
@@ -1934,8 +1835,7 @@ object Sim {
     * pool. */
   def kcenterSelect(emb: DataFrame, k: Int = 5): DataFrame = {
     import graft.rel.Queries.femit
-    val v = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("norm", norm(col("v"))).localCheckpoint()
+    val v = vectors(emb).localCheckpoint()
     val seedId = 0L // vec_ids are dense from 0; the minimum id seeds
     var state = v.crossJoin(broadcast(
         v.where(col("vec_id") === seedId)
@@ -1991,9 +1891,7 @@ object Sim {
   def hubnessAudit(emb: DataFrame, k: Int = 10,
                    nSample: Long = 400): DataFrame = {
     import graft.rel.Queries.{dsum, femit}
-    val v = emb.where(col("vec_id") < nSample)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("norm", norm(col("v")))
+    val v = vectors(emb.where(col("vec_id") < nSample))
     val b = v.select(col("vec_id").as("oid"), col("v").as("ov"),
       col("norm").as("on"))
     val wRank = Window.partitionBy("vec_id")
@@ -2051,9 +1949,7 @@ object Sim {
     * hash-agg; the identity removes the n² the naive estimator pays. */
   def anisotropyAudit(emb: DataFrame, nSample: Long = 400): DataFrame = {
     import graft.rel.Queries.{dsum, femit}
-    val v = emb.where(col("vec_id") < nSample)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("norm", norm(col("v")))
+    val v = vectors(emb.where(col("vec_id") < nSample))
       .select(col("vec_id"),
         transform(col("v"), x => x / col("norm")).as("u"),
         col("v"))
@@ -2095,13 +1991,6 @@ object Sim {
         col("top_var_dim"), col("top_var"))
   }
 
-  /** Approximate kNN via multi-table banded sign-LSH: exact cosine
-    * ranking restricted to candidates colliding with the query in ≥1
-    * of nTables bucket tables (see [[cosineNearDupsLsh]] for the recall
-    * math; ≈0.86 expected at this corpus's top-5 similarities with
-    * 4×16). The query side is tiny (nQuery × nTables rows) and
-    * broadcast, so the corpus streams once with no shuffle before the
-    * top-k. Recall-tested against [[cosineKnn]] in LlmSpec. */
   /** Lloyd refinement of a PQ sub-codebook (the [[kmeansRefine]] move
     * applied per subspace): `lloyd` iterations of argmin-L2 assignment
     * of every (vec_id, j, sub) row to the current (j, cid, cv) entry
@@ -2186,8 +2075,7 @@ object Sim {
             lloyd: Int = 1): DataFrame = {
     val dsub = dim / m
     require(dsub * m == dim, s"m=$m must divide dim=$dim")
-    val base = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("norm", norm(col("v")))
+    val base = vectors(emb)
     val subs = base.select(col("vec_id"), col("norm"),
       posexplode(expr(
         s"transform(sequence(0, ${m - 1}), j -> slice(v, j * $dsub + 1, $dsub))"))
@@ -2224,25 +2112,19 @@ object Sim {
       .agg(sort_array(collect_list(struct(col("j"), col("cid"), col("d"))))
         .as("l"))
       .select(col("qid"), col("qnorm"), expr("transform(l, s -> s.d)").as("lut"))
-    val wEst = Window.partitionBy("qid").orderBy(col("est").desc, col("vec_id").asc)
-    val cand = enc.crossJoin(broadcast(lut))
+    val cand = topK(enc.crossJoin(broadcast(lut))
       .where(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"),
         (expr(s"aggregate(transform(codes, (c, j) -> " +
           s"element_at(lut, j * $ksub + c + 1)), 0D, (a, x) -> a + x)")
-          / (col("qnorm") * col("rnorm"))).as("est"))
-      .withColumn("r", row_number().over(wEst))
-      .where(col("r") <= rerank)
+          / (col("qnorm") * col("rnorm"))).as("est")), rerank, "est")
       .select(col("qid"), col("vec_id"))
     val qFull = base.where(col("vec_id") < nQuery)
       .select(col("vec_id").as("qid"), col("v").as("qv2"), col("norm").as("qn2"))
-    val wRank = Window.partitionBy("qid").orderBy(col("sim").desc, col("vec_id").asc)
-    base.join(broadcast(cand), "vec_id")
+    topK(base.join(broadcast(cand), "vec_id")
       .join(broadcast(qFull), "qid")
       .select(col("qid"), col("vec_id"),
-        cosine(col("v"), col("qv2"), col("norm"), col("qn2")).as("sim"))
-      .withColumn("rnk", row_number().over(wRank).cast("long"))
-      .where(col("rnk") <= k)
+        cosine(col("v"), col("qv2"), col("norm"), col("qn2")).as("sim")), k)
       .select("qid", "rnk", "vec_id", "sim")
   }
 
@@ -2279,18 +2161,16 @@ object Sim {
                rerank: Int = 40, lloyd: Int = 1): DataFrame = {
     val dsub = dim / m
     require(dsub * m == dim, s"m=$m must divide dim=$dim")
-    val base = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("norm", norm(col("v")))
+    val base = vectors(emb)
     val cents = ivfCentroids(base, nlist)
-    val asg = assignTo(base, cents)
-    val rsubs = asg.join(broadcast(cents), "cid")
+    val rsubs = nearestCentroids(base, "vec_id", "v", "norm", cents, 1)
       .select(col("vec_id"), col("cid"), posexplode(expr(
         s"""transform(sequence(0, ${m - 1}), j ->
            |  zip_with(slice(v, j * $dsub + 1, $dsub),
            |           slice(cv, j * $dsub + 1, $dsub), (x, y) -> x - y))"""
           .stripMargin)).as(Seq("j", "rsub")))
       // localCheckpoint: same four-consumer fan-out as pqKnn's subs —
-      // the residual explode (assign + centroid join included) must
+      // the residual explode (the centroid assignment included) must
       // not re-run per consumer
       .localCheckpoint()
     val cb0 = rsubs.where(col("vec_id") < ksub)
@@ -2311,13 +2191,9 @@ object Sim {
         expr("transform(e, s -> s.pcid)").as("codes"))
     val q = base.where(col("vec_id") < nQuery)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("norm").as("qnorm"))
-    val wProbe = Window.partitionBy("qid").orderBy(col("csim").desc, col("cid").asc)
-    val probed = q.crossJoin(broadcast(cents))
+    val probed = nearestCentroids(q, "qid", "qv", "qnorm", cents, nprobe)
       .select(col("qid"), col("cid"),
-        cosine(col("qv"), col("cv"), col("qnorm"), col("cn")).as("csim"),
         fsum(zip_with(col("qv"), col("cv"), (x, y) => x * y)).as("qcdot"))
-      .withColumn("r", row_number().over(wProbe)).where(col("r") <= nprobe)
-      .select(col("qid"), col("cid"), col("qcdot"))
     val lut = q.select(col("qid"), posexplode(expr(
         s"transform(sequence(0, ${m - 1}), j -> slice(qv, j * $dsub + 1, $dsub))"))
         .as(Seq("j", "qsub")))
@@ -2328,25 +2204,20 @@ object Sim {
       .agg(sort_array(collect_list(struct(col("j"), col("pcid"), col("d"))))
         .as("l"))
       .select(col("qid"), expr("transform(l, s -> s.d)").as("lut"))
-    val wEst = Window.partitionBy("qid").orderBy(col("est").desc, col("vec_id").asc)
-    val cand = enc.join(broadcast(probed), "cid")
+    val cand = topK(enc.join(broadcast(probed), "cid")
       .join(broadcast(lut), "qid")
       .where(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"),
         (col("qcdot") + expr(s"aggregate(transform(codes, (c, j) -> " +
           s"element_at(lut, j * $ksub + c + 1)), 0D, (a, x) -> a + x)"))
-          .as("est"))
-      .withColumn("r", row_number().over(wEst)).where(col("r") <= rerank)
+          .as("est")), rerank, "est")
       .select(col("qid"), col("vec_id"))
     val qFull = base.where(col("vec_id") < nQuery)
       .select(col("vec_id").as("qid"), col("v").as("qv2"), col("norm").as("qn2"))
-    val wRank = Window.partitionBy("qid").orderBy(col("sim").desc, col("vec_id").asc)
-    base.join(broadcast(cand), "vec_id")
+    topK(base.join(broadcast(cand), "vec_id")
       .join(broadcast(qFull), "qid")
       .select(col("qid"), col("vec_id"),
-        cosine(col("v"), col("qv2"), col("norm"), col("qn2")).as("sim"))
-      .withColumn("rnk", row_number().over(wRank).cast("long"))
-      .where(col("rnk") <= k)
+        cosine(col("v"), col("qv2"), col("norm"), col("qn2")).as("sim")), k)
       .select("qid", "rnk", "vec_id", "sim")
   }
 
@@ -2364,15 +2235,8 @@ object Sim {
     * With argmax assignment a ≤ b always, so s ∈ [0, 1] here — the
     * magnitude measures cluster separation. */
   def silhouette(emb: DataFrame, nlist: Int): DataFrame = {
-    val v = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("norm", norm(col("v")))
-    val cents = ivfCentroids(v, nlist)
-    val w = Window.partitionBy("vec_id")
-      .orderBy(col("csim").desc, col("cid").asc)
-    val ranked = v.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("cid"),
-        cosine(col("v"), col("cv"), col("norm"), col("cn")).as("csim"))
-      .withColumn("r", row_number().over(w))
+    val v = vectors(emb)
+    val ranked = nearestCentroids(v, "vec_id", "v", "norm", ivfCentroids(v, nlist), 2)
     val own = ranked.where(col("r") === 1)
       .select(col("vec_id"), col("cid"), col("csim").as("own_sim"))
     val next = ranked.where(col("r") === 2)
@@ -2393,20 +2257,24 @@ object Sim {
       .orderBy("cid")
   }
 
+  /** Approximate kNN via multi-table banded sign-LSH: exact cosine
+    * ranking restricted to candidates colliding with the query in ≥1
+    * of nTables bucket tables (see [[cosineNearDupsLsh]] for the recall
+    * math; ≈0.86 expected at this corpus's top-5 similarities with
+    * 4×16). The query side is tiny (nQuery × nTables rows) and
+    * broadcast, so the corpus streams once with no shuffle before the
+    * top-k. Recall-tested against [[cosineKnn]] in LlmSpec. */
   def annKnn(emb: DataFrame, nQuery: Int, k: Int,
              nTables: Int = 16, bandPlanes: Int = 4,
              dim: Int = 64): DataFrame = {
     val bt = banded(emb, nTables, bandPlanes, dim)
     val q = bt.where(col("vec_id") < nQuery)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("t"), col("bucket"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("vec_id").asc)
-    bt.join(broadcast(q), Seq("t", "bucket"))
+    topK(bt.join(broadcast(q), Seq("t", "bucket"))
       .where(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"),
         graft.functions.VectorExprs.cosineSim("v", "qv").as("sim"))
-      .distinct()
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .where(col("rnk") <= k)
+      .distinct(), k)
       .select("qid", "rnk", "vec_id", "sim")
   }
 
@@ -2477,16 +2345,9 @@ object Sim {
     * engines execute identically, so the strict inequalities (pair sim
     * ≥ tau, centroid-sim ordering) bind identical bit patterns. */
   def semDedup(emb: DataFrame, nlist: Int = 16, tau: Double = 0.30): DataFrame = {
-    val v = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("norm", norm(col("v")))
-    val cents = ivfCentroids(v, nlist)
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("csim").desc, col("cid").asc)
-    val asg = v.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("v"), col("norm"), col("cid"),
-        cosine(col("v"), col("cv"), col("norm"), col("cn")).as("csim"))
-      .withColumn("r", row_number().over(wAssign))
-      .where(col("r") === 1).drop("r")
+    val v = vectors(emb)
+    val asg = nearestCentroids(v, "vec_id", "v", "norm", ivfCentroids(v, nlist), 1)
+      .select("vec_id", "v", "norm", "cid", "csim")
       // localCheckpoint: the assignment feeds THREE consumers (both
       // sides of the within-cluster self-join and the final audit
       // join); without it the broadcast-assignment pass re-runs per
@@ -2532,16 +2393,9 @@ object Sim {
     * a dyadic frac through DOUBLE on both engines. */
   def prototypePrune(emb: DataFrame, nlist: Int = 16,
                      frac: Double = 0.25): DataFrame = {
-    val v = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("norm", norm(col("v")))
-    val cents = ivfCentroids(v, nlist)
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("csim").desc, col("cid").asc)
-    val asg = v.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("cid"),
-        cosine(col("v"), col("cv"), col("norm"), col("cn")).as("csim"))
-      .withColumn("r", row_number().over(wAssign))
-      .where(col("r") === 1).drop("r")
+    val v = vectors(emb)
+    val asg = nearestCentroids(v, "vec_id", "v", "norm", ivfCentroids(v, nlist), 1)
+      .select("vec_id", "cid", "csim")
     val wProto = Window.partitionBy("cid")
       .orderBy(col("csim").desc, col("vec_id").asc)
     val ranked = asg
@@ -2584,8 +2438,7 @@ object Sim {
   def coresetKmeans(emb: DataFrame, nlist: Int = 4, m: Int = 64)
       : DataFrame = {
     import graft.rel.Queries.{dsum, femit}
-    val v = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("norm", norm(col("v")))
+    val v = vectors(emb)
       .localCheckpoint() // mean agg + d2 pass + both assignments
     val n = v.count()
     val mu = v.select(posexplode(col("v")).as(Seq("j", "x")))
@@ -2607,14 +2460,8 @@ object Sim {
         / lit(4294967296.0))
       .localCheckpoint() // full + coreset assignment passes
     val cents = ivfCentroids(v, nlist)
-    val wA = Window.partitionBy("vec_id")
-      .orderBy(col("csim").desc, col("cid").asc)
-    def assigned(df: DataFrame): DataFrame = df
-      .crossJoin(broadcast(cents))
-      .withColumn("csim",
-        cosine(col("v"), col("cv"), col("norm"), col("cn")))
-      .withColumn("r", row_number().over(wA))
-      .where(col("r") === 1)
+    def assigned(df: DataFrame): DataFrame =
+      nearestCentroids(df, "vec_id", "v", "norm", cents, 1)
     val full = assigned(qed).groupBy("cid")
       .agg(count(lit(1)).as("n_full"),
         dsum(lit(1.0) - col("csim")).as("score_full"))
@@ -2647,7 +2494,7 @@ object Sim {
     * what keeps q378 a full value oracle. A real multi-vector encoder
     * swaps in at this one relation; every consumer is unchanged. */
   def tokenVectors(emb: DataFrame, maxTok: Int = 8): DataFrame = {
-    emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    vectors(emb)
       .withColumn("n_tok", lit(1L) + pmod(
         graft.functions.HashExprs
           .fnv1a32("concat(cast(vec_id as string), ':ntok')"),
@@ -2692,13 +2539,9 @@ object Sim {
         cosine(col("tv"), col("qv"), col("tnorm"), col("qn")).as("s"))
       .groupBy("qid", "qi", "vec_id")
       .agg(max(col("s").cast("decimal(38,12)")).as("ms"))
-    val wRank = Window.partitionBy("qid")
-      .orderBy(col("score").desc, col("vec_id").asc)
-    maxed.groupBy("qid", "vec_id")
+    topK(maxed.groupBy("qid", "vec_id")
       .agg(count(lit(1)).as("n_qtok"),
-        femit(sum(col("ms")).cast("double")).as("score"))
-      .withColumn("rnk", row_number().over(wRank).cast("long"))
-      .where(col("rnk") <= k)
+        femit(sum(col("ms")).cast("double")).as("score")), k, "score")
       .select("qid", "rnk", "vec_id", "n_qtok", "score")
   }
 }

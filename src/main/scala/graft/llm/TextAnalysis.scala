@@ -174,9 +174,6 @@ object TextAnalysis {
       .orderBy("lang", "rn")
   }
 
-  /** TF-IDF with languages as the document unit: tf(lang, term) ×
-    * ln(n_langs / df(term)), rounded to 6 dp for cross-engine libm
-    * stability. */
   /** Cluster labeling: the top-`topK` tokens per embedding cluster by
     * cluster-level TF-IDF — the human-readable "what is this cluster
     * about" report a curation pipeline runs right after k-means
@@ -208,6 +205,9 @@ object TextAnalysis {
       .orderBy("cid", "rnk")
   }
 
+  /** TF-IDF with languages as the document unit: tf(lang, term) ×
+    * ln(n_langs / df(term)), rounded to 6 dp for cross-engine libm
+    * stability. */
   def tfidf(docs: DataFrame): DataFrame = {
     val tok = docs.select(col("lang"), explode(split(col("text"), " ", -1)).as("tok"))
       .where(col("tok") =!= "")
@@ -1864,27 +1864,6 @@ object TextAnalysis {
       .orderBy("lang", "source")
   }
 
-  /** K-minimum-values distinct-count sketch per source, PLUS the merged
-    * corpus sketch (Bar-Yossef et al. 2002, "Counting distinct elements
-    * in a data stream"; the KMV/bottom-k form): hash every distinct
-    * 3-token shingle to the 32-bit FNV lattice, keep the `kMin`
-    * smallest hashes per source, and estimate
-    * |distinct| = (k−1)·2³² / h₍ₖ₎. The MERGE
-    * property is the point at 100 TB: the global sketch is just the
-    * kMin smallest of the UNION of the per-source sketches (≤ k·|S|
-    * rows — driver-scale), so per-shard sketches combine without
-    * re-touching the data, the property Spark's own HLL (q30) shares
-    * but KMV keeps fully inspectable and EXACTLY reproducible (the
-    * keyed FNV hash makes the sketch an oracle-checkable value, not an
-    * opaque binary). Each row carries the exact distinct count next to
-    * the estimate — the gate pins the estimator's arithmetic, the
-    * error column is honest output. Undersized groups (< kMin distinct
-    * hashes) emit NULL estimate (the sketch is exact there; consumers
-    * read n_exact).
-    *
-    * Scale: one (source, tok) distinct shuffle, a keyed rank window on
-    * the per-source distinct-hash table, and the union-merge over
-    * ≤ k·|S| rows. No global window, no collect. */
   /** The distinct (source, shingle-hash) table behind [[kmvSketch]] —
     * sketch the 3-token SHINGLE space, not the raw vocabulary: the
     * synthetic corpus draws from ~31 word types (a k=64 sketch would
@@ -1930,6 +1909,27 @@ object TextAnalysis {
           col("hk").cast("double")).as("est_distinct"))
   }
 
+  /** K-minimum-values distinct-count sketch per source, PLUS the merged
+    * corpus sketch (Bar-Yossef et al. 2002, "Counting distinct elements
+    * in a data stream"; the KMV/bottom-k form): hash every distinct
+    * 3-token shingle to the 32-bit FNV lattice, keep the `kMin`
+    * smallest hashes per source, and estimate
+    * |distinct| = (k−1)·2³² / h₍ₖ₎. The MERGE
+    * property is the point at 100 TB: the global sketch is just the
+    * kMin smallest of the UNION of the per-source sketches (≤ k·|S|
+    * rows — driver-scale), so per-shard sketches combine without
+    * re-touching the data, the property Spark's own HLL (q30) shares
+    * but KMV keeps fully inspectable and EXACTLY reproducible (the
+    * keyed FNV hash makes the sketch an oracle-checkable value, not an
+    * opaque binary). Each row carries the exact distinct count next to
+    * the estimate — the gate pins the estimator's arithmetic, the
+    * error column is honest output. Undersized groups (< kMin distinct
+    * hashes) emit NULL estimate (the sketch is exact there; consumers
+    * read n_exact).
+    *
+    * Scale: one (source, tok) distinct shuffle, a keyed rank window on
+    * the per-source distinct-hash table, and the union-merge over
+    * ≤ k·|S| rows. No global window, no collect. */
   def kmvSketch(docs: DataFrame, kMin: Int = 64): DataFrame = {
     import graft.rel.Queries.femit
     val dh = kmvHashes(docs)
@@ -2033,6 +2033,19 @@ object TextAnalysis {
               - lit(3.0) * col("tsum").cast("double")))).as("chi2"))
   }
 
+  /** Bigram-type counts-of-counts table (r, n_r) — the species-
+    * frequency spectrum shared by [[goodTuring]] and [[chao1]]. */
+  private def bigramCountOfCounts(docs: DataFrame): DataFrame = {
+    val base = docs.select(toks(col("text")).as("ts"))
+    base.select(explode(expr(
+        "filter(transform(ts, (t, i) -> struct(t AS w1," +
+          " try_element_at(ts, i + 2) AS w2)), p -> p.w2 IS NOT NULL)"))
+        .as("p"))
+      .groupBy(col("p.w1").as("w1"), col("p.w2").as("w2"))
+      .agg(count(lit(1)).as("r"))
+      .groupBy("r").agg(count(lit(1)).as("n_r"))
+  }
+
   /** Good–Turing frequency smoothing (Good 1953; the count-of-counts
     * estimator behind Katz backoff, complementing q376's Kneser–Ney
     * and q351's Jelinek–Mercer): over the corpus unigram counts,
@@ -2058,19 +2071,6 @@ object TextAnalysis {
     * adjacent-pair transform is per-row, the q120 idiom), types →
     * counts-of-counts grain (≤ max count rows) in a second; the
     * r/r+1 self-join and totals run on that tiny table. */
-  /** Bigram-type counts-of-counts table (r, n_r) — the species-
-    * frequency spectrum shared by [[goodTuring]] and [[chao1]]. */
-  private def bigramCountOfCounts(docs: DataFrame): DataFrame = {
-    val base = docs.select(toks(col("text")).as("ts"))
-    base.select(explode(expr(
-        "filter(transform(ts, (t, i) -> struct(t AS w1," +
-          " try_element_at(ts, i + 2) AS w2)), p -> p.w2 IS NOT NULL)"))
-        .as("p"))
-      .groupBy(col("p.w1").as("w1"), col("p.w2").as("w2"))
-      .agg(count(lit(1)).as("r"))
-      .groupBy("r").agg(count(lit(1)).as("n_r"))
-  }
-
   def goodTuring(docs: DataFrame, maxR: Long = 10L): DataFrame = {
     import graft.rel.Queries.femit
     val coc = bigramCountOfCounts(docs)

@@ -75,15 +75,6 @@ object Layout {
   def writePartitioned(df: DataFrame, out: String, cols: String*): Unit =
     df.write.mode("overwrite").partitionBy(cols: _*).parquet(out)
 
-  /** Small-files compaction: rewrite a parquet directory into
-    * ~`targetFiles` evenly-sized files. The 100-TB housekeeping
-    * operator — streaming ingest and over-parallel writers leave
-    * thousands of tiny files whose per-file open/footer/listing cost
-    * dominates scans. `repartition` (round-robin shuffle) rather than
-    * `coalesce`: coalesce chains the upstream partitioning into the
-    * write and skews file sizes; the shuffle is the price of even
-    * output. Row-preservation is gate-checked (q63); the file-count
-    * contract is asserted in LayoutSpec. */
   /** Range-sorted parquet layout (the zone-map / min-max-skipping
     * technique): globally range-partition on `key`, sort within each
     * file, write. Every file and row group then covers a NARROW key
@@ -117,6 +108,15 @@ object Layout {
     finally s.conf.set(k, old)
   }
 
+  /** Small-files compaction: rewrite a parquet directory into
+    * ~`targetFiles` evenly-sized files. The 100-TB housekeeping
+    * operator — streaming ingest and over-parallel writers leave
+    * thousands of tiny files whose per-file open/footer/listing cost
+    * dominates scans. `repartition` (round-robin shuffle) rather than
+    * `coalesce`: coalesce chains the upstream partitioning into the
+    * write and skews file sizes; the shuffle is the price of even
+    * output. Row-preservation is gate-checked (q63); the file-count
+    * contract is asserted in LayoutSpec. */
   def compact(spark: SparkSession, in: String, out: String,
               targetFiles: Int): Unit =
     spark.read.parquet(in).repartition(targetFiles)

@@ -42,17 +42,14 @@ object Queries {
       }
     }
 
-  private def tbl(s: SparkSession, dir: String, name: String): DataFrame =
-    normalizeTs(s.read.parquet(s"$dir/$name.parquet"))
-
   /** events.parquet: TIMESTAMP(NANOS) rounds read it as nanosecond longs
     * and truncate to a microsecond TimestampType (the same ns→µs
     * truncation DuckDB applies; the generated data is µs-grained so no
     * precision is lost); µs-NTZ rounds are handled by [[normalizeTs]]
-    * inside [[tbl]]. */
+    * inside [[Tables.read]]. */
   def events(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = tbl(s, dir, "events")
+    val raw = Tables.read(s, dir, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType => // TIMESTAMP(NANOS) read as long
         raw.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
@@ -141,7 +138,7 @@ object Queries {
 
   // E4: TPC-H Q1-shaped multi-aggregate group-by with pushed-down scan filter.
   def pricingSummary(s: SparkSession, dir: String): DataFrame =
-    tbl(s, dir, "lineitem")
+    Tables.read(s, dir, "lineitem")
       .filter(col("l_shipdate") < lit("1997-01-01 00:00:00").cast("timestamp"))
       .groupBy("l_returnflag", "l_linestatus")
       .agg(
@@ -155,7 +152,7 @@ object Queries {
 
   // E1: scan + filter + project, pushed to parquet (PushedFilters/ReadSchema).
   def filterProject(s: SparkSession, dir: String): DataFrame =
-    tbl(s, dir, "lineitem")
+    Tables.read(s, dir, "lineitem")
       .filter(col("l_quantity") >= 30 && col("l_discount") > 0.05)
       .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
       // (l_orderkey, l_linenumber) is NOT unique in the synthetic data —
@@ -165,10 +162,10 @@ object Queries {
 
   // E2: multi-way equi-join; region/nation/customer are broadcast dims.
   def joinAgg(s: SparkSession, dir: String): DataFrame = {
-    val customer = tbl(s, dir, "customer")
-    val orders = tbl(s, dir, "orders")
-    val nation = tbl(s, dir, "nation")
-    val region = tbl(s, dir, "region")
+    val customer = Tables.read(s, dir, "customer")
+    val orders = Tables.read(s, dir, "orders")
+    val nation = Tables.read(s, dir, "nation")
+    val region = Tables.read(s, dir, "region")
     // customer scales with SF — no authored broadcast (the planner
     // re-decides from stats; at 100 TB this is a shuffle join on
     // o_custkey). nation/region are spec-fixed 25/5-row dims.
@@ -183,8 +180,8 @@ object Queries {
 
   // E3: left-semi ≡ EXISTS.
   def semiJoin(s: SparkSession, dir: String): DataFrame = {
-    val orders = tbl(s, dir, "orders").filter(col("o_orderstatus") === "F")
-    tbl(s, dir, "customer")
+    val orders = Tables.read(s, dir, "orders").filter(col("o_orderstatus") === "F")
+    Tables.read(s, dir, "customer")
       .join(orders, col("c_custkey") === col("o_custkey"), "left_semi")
       .select("c_custkey", "c_name")
       .orderBy("c_custkey")
@@ -194,8 +191,8 @@ object Queries {
   // (status 'P') — every customer has some order in the synthetic data,
   // so the unfiltered form returns 0 rows and proves nothing.
   def antiJoin(s: SparkSession, dir: String): DataFrame = {
-    val orders = tbl(s, dir, "orders").filter(col("o_orderstatus") === "P")
-    tbl(s, dir, "customer")
+    val orders = Tables.read(s, dir, "orders").filter(col("o_orderstatus") === "P")
+    Tables.read(s, dir, "customer")
       .join(orders, col("c_custkey") === col("o_custkey"), "left_anti")
       .select("c_custkey", "c_name")
       .orderBy("c_custkey")
@@ -204,7 +201,7 @@ object Queries {
   // E5: rollup with subtotal rows (NULL groups coalesced to a sentinel so
   // both engines sort identically without null-ordering divergence).
   def rollupAgg(s: SparkSession, dir: String): DataFrame =
-    tbl(s, dir, "lineitem")
+    Tables.read(s, dir, "lineitem")
       .rollup("l_returnflag", "l_linestatus")
       .agg(dsum(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n"))
       .select(
@@ -215,7 +212,7 @@ object Queries {
 
   // E5: cube — all grouping-set combinations (rollup's superset).
   def cubeAgg(s: SparkSession, dir: String): DataFrame =
-    tbl(s, dir, "lineitem")
+    Tables.read(s, dir, "lineitem")
       .cube("l_returnflag", "l_linestatus")
       .agg(dsum(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n"))
       .select(
@@ -685,7 +682,7 @@ object Queries {
 
   // E6: exact distinct aggregation.
   def distinctAgg(s: SparkSession, dir: String): DataFrame =
-    tbl(s, dir, "orders")
+    Tables.read(s, dir, "orders")
       .groupBy("o_orderstatus")
       .agg(countDistinct(col("o_custkey")).as("n_cust"), count(lit(1)).as("n_orders"))
       .orderBy("o_orderstatus")
@@ -694,7 +691,7 @@ object Queries {
   def windowRank(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("o_custkey")
       .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-    tbl(s, dir, "orders")
+    Tables.read(s, dir, "orders")
       .withColumn("rn", row_number().over(w).cast("long"))
       .where(col("rn") <= 3)
       .select("o_custkey", "rn", "o_orderkey", "o_totalprice")
@@ -707,7 +704,7 @@ object Queries {
     val w = Window.partitionBy("o_custkey")
       .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    tbl(s, dir, "orders")
+    Tables.read(s, dir, "orders")
       .withColumn("running_spend",
         sum(col("o_totalprice").cast("decimal(38,12)")).over(w).cast("double"))
       .select("o_custkey", "o_orderkey", "running_spend")
@@ -723,7 +720,7 @@ object Queries {
   def rangeFrame(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("o_custkey").orderBy(col("od"))
       .rangeBetween(-432000L, 0L) // trailing 5 days, in epoch seconds
-    tbl(s, dir, "orders")
+    Tables.read(s, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"),
         unix_timestamp(col("o_orderdate")).as("od"), col("o_totalprice"))
       .withColumn("n_5d", count(lit(1)).over(w).cast("long"))
@@ -735,14 +732,14 @@ object Queries {
 
   // E9: global top-k → TakeOrderedAndProject (no full sort materialization).
   def topkOrders(s: SparkSession, dir: String): DataFrame =
-    tbl(s, dir, "orders")
+    Tables.read(s, dir, "orders")
       .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
       .select("o_orderkey", "o_custkey", "o_totalprice")
       .limit(100)
 
   // E10: intersect / except / union distinct, tagged and stacked.
   def setOps(s: SparkSession, dir: String): DataFrame = {
-    val orders = tbl(s, dir, "orders")
+    val orders = Tables.read(s, dir, "orders")
     def keys(status: String) =
       orders.filter(col("o_orderstatus") === status).select("o_custkey")
     keys("F").intersect(keys("O")).withColumn("op", lit("f_and_o"))
@@ -760,7 +757,7 @@ object Queries {
   // re-groups the multiset per (op, custkey) so the exact multiplicity
   // of every key is hash-pinned. Same hash-agg shapes as q11 at scale.
   def setOpsAll(s: SparkSession, dir: String): DataFrame = {
-    val orders = tbl(s, dir, "orders")
+    val orders = Tables.read(s, dir, "orders")
     def keys(status: String) =
       orders.filter(col("o_orderstatus") === status).select("o_custkey")
     keys("F").intersectAll(keys("O")).withColumn("op", lit("f_bag_and_o"))
@@ -776,7 +773,7 @@ object Queries {
   // inside the aggregate is engine syntax; a sorted array is one
   // semantics). Tiny result; the collect_set rides a plain hash-agg.
   def listAgg(s: SparkSession, dir: String): DataFrame =
-    tbl(s, dir, "orders")
+    Tables.read(s, dir, "orders")
       .groupBy("o_orderstatus")
       .agg(concat_ws(",", array_sort(collect_set(col("o_orderpriority"))))
         .as("priorities"),
@@ -787,7 +784,7 @@ object Queries {
   // E11: scalar function surface — date parts, string ops, math (only
   // IEEE-exact fns: abs/sqrt; no libm-divergent ln/exp in oracle outputs).
   def scalarFuncs(s: SparkSession, dir: String): DataFrame =
-    tbl(s, dir, "orders")
+    Tables.read(s, dir, "orders")
       .select(
         col("o_orderkey"),
         year(col("o_orderdate")).cast("long").as("yr"),
@@ -1072,7 +1069,7 @@ object Queries {
     val w = Window.partitionBy("o_custkey")
       .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
     val wFrame = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    tbl(s, dir, "orders")
+    Tables.read(s, dir, "orders")
       .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"),
         dense_rank().over(w).cast("long").as("drnk"),
         ntile(4).over(w).cast("long").as("quartile"),
@@ -1092,7 +1089,7 @@ object Queries {
   // median is folded into an oracle-checkable 5% bound, q30-style.
   def quantileAgg(s: SparkSession, dir: String): DataFrame = {
     val exactMed = expr("percentile(l_quantity, 0.5)")
-    tbl(s, dir, "lineitem")
+    Tables.read(s, dir, "lineitem")
       .groupBy("l_returnflag")
       .agg(
         expr("percentile(l_quantity, 0.25)").as("q25"),
@@ -1109,8 +1106,8 @@ object Queries {
   // equivalence-tested in the suite.
   def saltedJoinAgg(s: SparkSession, dir: String): DataFrame =
     Layout.saltedJoin(
-        tbl(s, dir, "orders"),
-        tbl(s, dir, "customer").select("c_custkey", "c_nationkey"),
+        Tables.read(s, dir, "orders"),
+        Tables.read(s, dir, "customer").select("c_custkey", "c_nationkey"),
         "o_custkey", "c_custkey", saltFactor = 8)
       .groupBy("c_nationkey")
       .agg(dsum(col("o_totalprice")).as("revenue"), count(lit(1)).as("n_orders"))
@@ -1128,9 +1125,9 @@ object Queries {
   // physical layout must be invisible in the results. The no-hash-
   // exchange property is plan-asserted in LayoutSpec.
   def bucketedJoinAgg(s: SparkSession, dir: String): DataFrame = {
-    Layout.writeBucketed(tbl(s, dir, "orders")
+    Layout.writeBucketed(Tables.read(s, dir, "orders")
       .withColumnRenamed("o_custkey", "custkey"), "orders_bkt", "custkey", 8)
-    Layout.writeBucketed(tbl(s, dir, "customer")
+    Layout.writeBucketed(Tables.read(s, dir, "customer")
       .withColumnRenamed("c_custkey", "custkey"), "customer_bkt", "custkey", 8)
     Layout.bucketedJoin(s, "orders_bkt", "customer_bkt", "custkey")
       .groupBy("custkey", "c_nationkey")
@@ -1146,7 +1143,7 @@ object Queries {
   // the results.
   def partitionPrunedAgg(s: SparkSession, dir: String): DataFrame = {
     val out = graft.Scratch.dir("docs_by_lang")
-    Layout.writePartitioned(tbl(s, dir, "documents"), out, "lang")
+    Layout.writePartitioned(Tables.read(s, dir, "documents"), out, "lang")
     s.read.parquet(out)
       .where(col("lang") === "de")
       .groupBy(col("lang").cast("string").as("lang"))
@@ -1165,7 +1162,7 @@ object Queries {
   def compactionAgg(s: SparkSession, dir: String): DataFrame = {
     val frag = graft.Scratch.dir("docs_fragmented")
     val out = graft.Scratch.dir("docs_compacted")
-    tbl(s, dir, "documents").repartition(64)
+    Tables.read(s, dir, "documents").repartition(64)
       .write.mode("overwrite").parquet(frag)
     Layout.compact(s, frag, out, 4)
     s.read.parquet(out)
@@ -1196,7 +1193,7 @@ object Queries {
   // zero-filled so the row set is null-free and totally ordered on both
   // engines (null-ordering defaults differ between Spark and DuckDB).
   def fullOuterCounts(s: SparkSession, dir: String): DataFrame = {
-    val orders = tbl(s, dir, "orders")
+    val orders = Tables.read(s, dir, "orders")
     def byStatus(st: String, as: String) =
       orders.filter(col("o_orderstatus") === st)
         .groupBy(col("o_custkey").as(s"${as}_key"))
@@ -1217,7 +1214,7 @@ object Queries {
   // generations' aggregates from the original table.
   def schemaEvolutionAgg(s: SparkSession, dir: String): DataFrame = {
     val out = graft.Scratch.dir("evolving_docs")
-    val docs = tbl(s, dir, "documents")
+    val docs = Tables.read(s, dir, "documents")
     docs.select(col("doc_id"), col("lang"))
       .where(col("doc_id") % 2 === 0)
       .write.mode("overwrite").parquet(s"$out/gen=1")
@@ -1241,7 +1238,7 @@ object Queries {
   // nondeterministic in BOTH engines, and DuckDB's arg_max takes only
   // scalar orderings.
   def argExtremes(s: SparkSession, dir: String): DataFrame =
-    tbl(s, dir, "documents")
+    Tables.read(s, dir, "documents")
       .select(col("doc_id"), col("lang"),
         length(col("text")).cast("long").as("n_chars"))
       .withColumn("ord", col("n_chars") * lit(4294967296L) + col("doc_id"))
@@ -1258,7 +1255,7 @@ object Queries {
   // plain posexplode would silently drop the document. 'table' occurs in
   // some documents and not others, so both branches are exercised.
   def outerExplodeCounts(s: SparkSession, dir: String): DataFrame =
-    tbl(s, dir, "documents")
+    Tables.read(s, dir, "documents")
       .select(col("doc_id"),
         posexplode_outer(expr("regexp_extract_all(text, 'table', 0)"))
           .as(Seq("pos", "hit")))
@@ -1270,7 +1267,7 @@ object Queries {
   // cousin of q67's mergeSchema: two projections with different column
   // sets and orders union into one frame without positional mixups.
   def unionByNameAgg(s: SparkSession, dir: String): DataFrame = {
-    val docs = tbl(s, dir, "documents")
+    val docs = Tables.read(s, dir, "documents")
     val v1 = docs.where(col("doc_id") % 2 === 0)
       .select(col("lang"), col("doc_id")) // reversed order on purpose
     val v2 = docs.where(col("doc_id") % 2 === 1)
@@ -1286,7 +1283,7 @@ object Queries {
 
   // E14: exact deduplication by full text content.
   def dedupExact(s: SparkSession, dir: String): DataFrame =
-    tbl(s, dir, "documents")
+    Tables.read(s, dir, "documents")
       .groupBy("text")
       .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_copies"))
       .select("doc_id", "n_copies")
@@ -1431,7 +1428,7 @@ object Queries {
   // counts in one fixed order, round(6).
   def assocRules(s: SparkSession, dir: String, minSup: Long = 3L,
                  maxBasket: Int = 64, topK: Int = 50): DataFrame = {
-    val items = tbl(s, dir, "lineitem")
+    val items = Tables.read(s, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       .distinct()
     val bounded = items
@@ -1480,7 +1477,7 @@ object Queries {
   // (NOT EXISTS dominance anti-join) — two different algorithms must
   // produce the identical frontier.
   def skyline(s: SparkSession, dir: String): DataFrame = {
-    val pts = tbl(s, dir, "part")
+    val pts = Tables.read(s, dir, "part")
       .select(col("p_partkey"),
         round(col("p_retailprice") * 100).cast("long").as("cents"),
         col("p_size").cast("long").as("sz"))
@@ -1894,7 +1891,7 @@ object Queries {
   // the balance bucket floors an IEEE division both engines compute
   // identically.
   def kAnonymity(s: SparkSession, dir: String): DataFrame =
-    tbl(s, dir, "customer")
+    Tables.read(s, dir, "customer")
       .select(col("c_nationkey"), col("c_mktsegment"),
         floor(col("c_acctbal").cast("double") / 1000.0).cast("long").as("bal_kb"))
       .groupBy("c_nationkey", "c_mktsegment", "bal_kb")
@@ -1923,7 +1920,7 @@ object Queries {
   // dense grid via cross join of the distinct classes with the literal
   // bucket range — no per-row state, no driver loop.
   def tCloseness(s: SparkSession, dir: String): DataFrame = {
-    val c = tbl(s, dir, "customer").select(
+    val c = Tables.read(s, dir, "customer").select(
       col("c_nationkey"), col("c_mktsegment"),
       greatest(least(floor(col("c_acctbal") / 1000.0).cast("long"),
         lit(9L)), lit(-1L)).as("bkt"))
@@ -2264,7 +2261,7 @@ object Queries {
   // run on every publish.
   def datasetManifest(s: SparkSession, dir: String): DataFrame = {
     val seed = graft.functions.Fnv1a32.Seed
-    tbl(s, dir, "lineitem")
+    Tables.read(s, dir, "lineitem")
       .select(col("l_returnflag"), col("l_orderkey"),
         expr("concat_ws('|', CAST(l_orderkey AS STRING), " +
           "CAST(l_linenumber AS STRING), " +
@@ -2329,7 +2326,7 @@ object Queries {
   // count(distinct) (two-phase partial agg under the hood); integer
   // arithmetic end to end.
   def lDiversity(s: SparkSession, dir: String): DataFrame =
-    tbl(s, dir, "customer")
+    Tables.read(s, dir, "customer")
       .select(col("c_nationkey"), col("c_mktsegment"),
         floor(col("c_acctbal").cast("double") / 1000.0).cast("long").as("bal_kb"))
       .groupBy("c_nationkey", "c_mktsegment")
@@ -2356,7 +2353,7 @@ object Queries {
       7 -> 0.057991946978, 8 -> 0.051152522447, 9 -> 0.045757490561)
     val expected = benfordP
       .map { case (d, p) => struct(lit(d.toLong).as("digit"), lit(p).as("p_exp")) }
-    val digits = tbl(s, dir, "orders")
+    val digits = Tables.read(s, dir, "orders")
       .select(substring(round(col("o_totalprice") * 100).cast("long")
         .cast("string"), 1, 1).cast("long").as("digit"))
       .groupBy("digit").agg(count(lit(1)).as("n"))
@@ -2543,25 +2540,6 @@ object Queries {
       .orderBy("lifetime_day")
   }
 
-  /** Two-group log-rank (Mantel–Cox) test — the hypothesis-test
-    * companion to [[kaplanMeier]] (q191 draws the curves; this says
-    * whether they differ: Mantel 1966 / Peto &amp; Peto 1972, THE
-    * standard censored-survival comparison): groups are q377's
-    * first-event-click proxy, lifetimes/censoring are exactly q191's
-    * (last-2-days horizon rule). At each day with ≥1 death the 2×2
-    * table contributes O1 += d1, E1 += d·n1/n and the hypergeometric
-    * variance V += d·(n1/n)·(n0/n)·(n−d)/(n−1); the statistic is
-    * χ² = (O1−E1)²/V (1 df).
-    *
-    * Determinism: every count is an exact long off day-grain suffix
-    * sums; E and V accumulate via dsum over fixed per-day IEEE
-    * chains; single-at-risk days (n = 1) contribute zero variance by
-    * the standard convention; femit at emission.
-    *
-    * Scale: one user-grain aggregate reduces the stream to per-user
-    * (group, day, censored); everything after is day-grain (the q194
-    * class — the unpartitioned prefix windows run over O(days) rows,
-    * never users), with the two 1-row totals broadcast. */
   /** Shared two-group survival risk table for [[logRank]] (q394) and
     * [[coxPh]] (q401): q191's lifetimes/censoring with q377's
     * first-event-click grouping, reduced to event-day cells carrying
@@ -2609,6 +2587,25 @@ object Queries {
     (risk, tot)
   }
 
+  /** Two-group log-rank (Mantel–Cox) test — the hypothesis-test
+    * companion to [[kaplanMeier]] (q191 draws the curves; this says
+    * whether they differ: Mantel 1966 / Peto &amp; Peto 1972, THE
+    * standard censored-survival comparison): groups are q377's
+    * first-event-click proxy, lifetimes/censoring are exactly q191's
+    * (last-2-days horizon rule). At each day with ≥1 death the 2×2
+    * table contributes O1 += d1, E1 += d·n1/n and the hypergeometric
+    * variance V += d·(n1/n)·(n0/n)·(n−d)/(n−1); the statistic is
+    * χ² = (O1−E1)²/V (1 df).
+    *
+    * Determinism: every count is an exact long off day-grain suffix
+    * sums; E and V accumulate via dsum over fixed per-day IEEE
+    * chains; single-at-risk days (n = 1) contribute zero variance by
+    * the standard convention; femit at emission.
+    *
+    * Scale: one user-grain aggregate reduces the stream to per-user
+    * (group, day, censored); everything after is day-grain (the q194
+    * class — the unpartitioned prefix windows run over O(days) rows,
+    * never users), with the two 1-row totals broadcast. */
   def logRank(s: SparkSession, dir: String): DataFrame = {
     val (risk, tot) = survivalRiskCells(s, dir)
     risk.agg(sum(col("d1")).as("o1"), sum(col("d0")).as("o0"),
@@ -2801,7 +2798,7 @@ object Queries {
   // single-window ntile SQL — the distributed form must reproduce it
   // exactly. PlanSpec pins the no-customer-grain-global-window shape.
   def rfmSegments(s: SparkSession, dir: String): DataFrame = {
-    val base = tbl(s, dir, "orders")
+    val base = Tables.read(s, dir, "orders")
       .groupBy("o_custkey")
       .agg(max(expr("unix_timestamp(o_orderdate) div 86400")).as("last_day"),
         count(lit(1)).as("freq"),
@@ -3077,30 +3074,6 @@ object Queries {
         femit(-col("ll") / col("n_rows").cast("double")).as("avg_nll"))
   }
 
-  /** MERGEABLE QUANTILE SUMMARY with a certified rank-error bound —
-    * the deterministic member of the GK/KLL sketch family (Greenwald
-    * &amp; Shanmugasundaram SIGMOD 2001 / Karnin-Lang-Liberty FOCS
-    * 2016; the repo's KMV/CMS/theta rows cover distinct-count and
-    * frequency — this is the missing ORDER-STATISTICS summary every
-    * engine ships for percentile pushdown): each id-range cell keeps
-    * every `step`-th local order statistic (plus its tail) with the
-    * covered-row weight, the per-cell summaries MERGE by value, and a
-    * quantile φ reads off the smallest kept value whose cumulative
-    * weight reaches ⌈φN⌉. Each cell's kept points are ≤ step apart in
-    * local rank, so the merged estimate's TRUE rank deviates from the
-    * target by at most ncells·step — and the operator measures it:
-    * every emitted row carries the estimate's EXACT rank (one
-    * count-≤-v pass over the data) next to the bound, so the gate
-    * certifies the sketch's guarantee, not just its arithmetic.
-    *
-    * Determinism: values are exact micro-unit longs; weights, ranks,
-    * targets (⌈φN⌉ through the shared IEEE multiply) and the min-v
-    * pick are all integer.
-    *
-    * Scale: the in-cell windows are keyed by cell; the merged summary
-    * is N/step rows whose prefix sum rides the q300 two-phase
-    * value-cell pattern (never a corpus-grain global window); the
-    * exact-rank audit is one broadcast join of |φ| values. */
   /** Micro-unit value stream for the q439/q441 sketch family. */
   private[graft] def sketchVals(s: SparkSession, dir: String): DataFrame =
     events(s, dir)
@@ -3169,6 +3142,30 @@ object Queries {
       .orderBy("phi")
   }
 
+  /** MERGEABLE QUANTILE SUMMARY with a certified rank-error bound —
+    * the deterministic member of the GK/KLL sketch family (Greenwald
+    * &amp; Shanmugasundaram SIGMOD 2001 / Karnin-Lang-Liberty FOCS
+    * 2016; the repo's KMV/CMS/theta rows cover distinct-count and
+    * frequency — this is the missing ORDER-STATISTICS summary every
+    * engine ships for percentile pushdown): each id-range cell keeps
+    * every `step`-th local order statistic (plus its tail) with the
+    * covered-row weight, the per-cell summaries MERGE by value, and a
+    * quantile φ reads off the smallest kept value whose cumulative
+    * weight reaches ⌈φN⌉. Each cell's kept points are ≤ step apart in
+    * local rank, so the merged estimate's TRUE rank deviates from the
+    * target by at most ncells·step — and the operator measures it:
+    * every emitted row carries the estimate's EXACT rank (one
+    * count-≤-v pass over the data) next to the bound, so the gate
+    * certifies the sketch's guarantee, not just its arithmetic.
+    *
+    * Determinism: values are exact micro-unit longs; weights, ranks,
+    * targets (⌈φN⌉ through the shared IEEE multiply) and the min-v
+    * pick are all integer.
+    *
+    * Scale: the in-cell windows are keyed by cell; the merged summary
+    * is N/step rows whose prefix sum rides the q300 two-phase
+    * value-cell pattern (never a corpus-grain global window); the
+    * exact-rank audit is one broadcast join of |φ| values. */
   def quantileSketch(s: SparkSession, dir: String, step: Int = 64)
       : DataFrame = {
     val vals = sketchVals(s, dir)
@@ -3735,7 +3732,7 @@ object Queries {
   // capped-precision rescale never fires). Per-part agg partial-
   // aggregates map-side.
   def paretoAbc(s: SparkSession, dir: String): DataFrame = {
-    val rev = tbl(s, dir, "lineitem")
+    val rev = Tables.read(s, dir, "lineitem")
       .groupBy("l_partkey")
       .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
         .as("rev"))
@@ -3923,13 +3920,13 @@ object Queries {
   // hash-agg + two broadcast joins — nothing here outgrows a 1000-
   // executor shuffle.
   def hhi(s: SparkSession, dir: String): DataFrame = {
-    val rev = tbl(s, dir, "lineitem")
+    val rev = Tables.read(s, dir, "lineitem")
       .groupBy("l_suppkey")
       .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
         .as("rev"))
-    val sup = tbl(s, dir, "supplier").select(col("s_suppkey"),
+    val sup = Tables.read(s, dir, "supplier").select(col("s_suppkey"),
       col("s_nationkey"))
-    val nat = tbl(s, dir, "nation").select(col("n_nationkey"), col("n_name"))
+    val nat = Tables.read(s, dir, "nation").select(col("n_nationkey"), col("n_name"))
     // supplier scales with SF — planner-decided join (r14 sweep catch);
     // nation stays hinted (spec-fixed 25 rows)
     val j = rev
@@ -3994,7 +3991,7 @@ object Queries {
   // a, b).
   def itemCooccur(s: SparkSession, dir: String, minSup: Long = 3L,
                   maxBasket: Int = 64, topK: Int = 50): DataFrame = {
-    val items = tbl(s, dir, "lineitem")
+    val items = Tables.read(s, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       .distinct()
     val bounded = items
@@ -4068,7 +4065,7 @@ object Queries {
   // exact integers; the only division is the final cents→currency
   // scaling, fixed-order on an exact integer.
   def weightedMedian(s: SparkSession, dir: String): DataFrame = {
-    val e = tbl(s, dir, "lineitem")
+    val e = Tables.read(s, dir, "lineitem")
       .select(col("l_returnflag").as("flag"),
         round(col("l_extendedprice") * 100).cast("long").as("cents"),
         col("l_quantity").cast("long").as("wt"))
@@ -4122,7 +4119,7 @@ object Queries {
     * capped at `maxBasket` (the wedge-blowup guard). */
   private[graft] def copurchaseEdges(s: SparkSession, dir: String,
       minCooc: Long = 2L, maxBasket: Int = 64): DataFrame = {
-    val items = tbl(s, dir, "lineitem")
+    val items = Tables.read(s, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       .distinct()
     val bounded = items
@@ -4214,7 +4211,7 @@ object Queries {
     // customer scales with SF — the segment map must not be pinned into
     // executors by an authored hint (r14 broadcast-sweep catch)
     matched
-      .join(tbl(s, dir, "customer")
+      .join(Tables.read(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment").as("segment")),
         col("user_id") === col("c_custkey"))
       .groupBy("segment")
@@ -4287,7 +4284,7 @@ object Queries {
   // tiebreak; skew = (max_freq·n_distinct)/n_rows — exact int64
   // product (< 2⁵³) over one fixed-order division.
   def skewAudit(s: SparkSession, dir: String): DataFrame =
-    tbl(s, dir, "lineitem")
+    Tables.read(s, dir, "lineitem")
       .selectExpr("stack(3, 'l_orderkey', l_orderkey, 'l_partkey', " +
         "l_partkey, 'l_suppkey', l_suppkey) AS (col_name, key)")
       .groupBy("col_name", "key").agg(count(lit(1)).as("f"))
@@ -4422,11 +4419,11 @@ object Queries {
   // equi-join (AQE-splittable), one part-keyed hash-agg,
   // TakeOrderedAndProject(20) under (score DESC, partkey).
   def decayPopularity(s: SparkSession, dir: String): DataFrame = {
-    val o = tbl(s, dir, "orders")
+    val o = Tables.read(s, dir, "orders")
       .select(col("o_orderkey"),
         expr("unix_micros(o_orderdate) DIV 86400000000").as("oday"))
     val horizon = o.agg(max(col("oday")).as("hday"))
-    tbl(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
+    Tables.read(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
       .join(o, col("l_orderkey") === col("o_orderkey"))
       .crossJoin(broadcast(horizon))
       .select(col("l_partkey"),
@@ -4583,7 +4580,7 @@ object Queries {
   // degenerates; the filter drops whole partitions, so surviving
   // windows are unchanged).
   def windowExtras(s: SparkSession, dir: String): DataFrame = {
-    val o = tbl(s, dir, "orders").where(col("o_custkey") < 50)
+    val o = Tables.read(s, dir, "orders").where(col("o_custkey") < 50)
       .select("o_custkey", "o_orderkey", "o_totalprice")
     val w = Window.partitionBy("o_custkey")
       .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
@@ -5614,7 +5611,7 @@ object Queries {
     * a union of independent aggregates (a profiler batches per
     * column-pair; no cross-candidate state exists). */
   def fdAudit(s: SparkSession, dir: String): DataFrame = {
-    val docs = tbl(s, dir, "documents")
+    val docs = Tables.read(s, dir, "documents")
     val ev = events(s, dir)
     def audit(df: DataFrame, fd: String, lhs: String,
               rhs: String): DataFrame = {
@@ -5888,7 +5885,7 @@ object Queries {
     * Scale: everything after the one corpus scan runs on the
     * |buckets|×|langs| cell table. */
   def raking(s: SparkSession, dir: String): DataFrame = {
-    val docs = tbl(s, dir, "documents")
+    val docs = Tables.read(s, dir, "documents")
     val cells = docs.select(
         expr("CAST(substr(source, 4) AS BIGINT) % 4").as("sb"),
         col("lang"))
@@ -5950,7 +5947,7 @@ object Queries {
     * pre-bins exactly like a GBDT histogram), so it broadcasts into a
     * range join. One scan, two hash-aggs, one broadcast join. */
   def quantileNorm(s: SparkSession, dir: String): DataFrame = {
-    val d = tbl(s, dir, "documents")
+    val d = Tables.read(s, dir, "documents")
       .select(col("doc_id"), col("source"), col("n_chars"))
     val bySrc = Window.partitionBy("source")
       .orderBy(col("n_chars").asc, col("doc_id").asc)
@@ -6695,25 +6692,6 @@ object Queries {
         (femit(col("lo")) > 0.5).as("separable_at_95"))
   }
 
-  /** STL-style decomposition STRENGTH diagnostics for the daily event
-    * series (Cleveland et al. 1990's trend/seasonal/remainder split in
-    * its closed moving-average form; the strength statistics are
-    * Wang, Smith &amp; Hyndman 2006's F_trend = max(0, 1 −
-    * Var(R)/Var(T+R)) and F_seasonal = max(0, 1 − Var(R)/Var(S+R)) —
-    * the two numbers a forecasting pipeline reads before choosing a
-    * model class, complementing q272's Holt–Winters fit and q193's
-    * raw seasonal index): trend = centered 7-day moving average over
-    * the gap-filled day spine (edges with incomplete windows dropped —
-    * the classic convention), seasonal = day-of-week means of the
-    * detrended series re-centered to sum 0, remainder = the rest.
-    *
-    * Determinism: the spine is exact epoch-day integers (q129/q128);
-    * the MA, dow means, recentering, and all three variances ride
-    * dsum; the two F statistics are fixed-order chains femit'd.
-    *
-    * Scale: one day-grain aggregate (map-side combined); every window
-    * after that runs on the bounded day spine (the q194 class — days,
-    * not rows). */
   /** Shared per-day STL components for [[stlStrength]] (q387) and
     * [[stlAnomalies]] (q391): (day, y, t, d, dow, sv, r) over the
     * complete-MA-window days. */
@@ -6748,6 +6726,25 @@ object Queries {
       .localCheckpoint() // variance aggregates / anomaly scan below
   }
 
+  /** STL-style decomposition STRENGTH diagnostics for the daily event
+    * series (Cleveland et al. 1990's trend/seasonal/remainder split in
+    * its closed moving-average form; the strength statistics are
+    * Wang, Smith &amp; Hyndman 2006's F_trend = max(0, 1 −
+    * Var(R)/Var(T+R)) and F_seasonal = max(0, 1 − Var(R)/Var(S+R)) —
+    * the two numbers a forecasting pipeline reads before choosing a
+    * model class, complementing q272's Holt–Winters fit and q193's
+    * raw seasonal index): trend = centered 7-day moving average over
+    * the gap-filled day spine (edges with incomplete windows dropped —
+    * the classic convention), seasonal = day-of-week means of the
+    * detrended series re-centered to sum 0, remainder = the rest.
+    *
+    * Determinism: the spine is exact epoch-day integers (q129/q128);
+    * the MA, dow means, recentering, and all three variances ride
+    * dsum; the two F statistics are fixed-order chains femit'd.
+    *
+    * Scale: one day-grain aggregate (map-side combined); every window
+    * after that runs on the bounded day spine (the q194 class — days,
+    * not rows). */
   def stlStrength(s: SparkSession, dir: String): DataFrame = {
     val comp = stlComponents(s, dir)
     def varOf(c: Column) = {
@@ -6827,7 +6824,7 @@ object Queries {
   def recsysEval(s: SparkSession, dir: String, k: Int = 10,
                  minSup: Long = 2L, maxBasket: Int = 64,
                  nbrK: Int = 50): DataFrame = {
-    val oi = tbl(s, dir, "orders")
+    val oi = Tables.read(s, dir, "orders")
       .select(col("o_orderkey").as("ok"), col("o_custkey").as("cust"),
         col("o_orderdate").as("od"))
       .withColumn("rn", row_number().over(Window.partitionBy("cust")
@@ -6835,7 +6832,7 @@ object Queries {
       .withColumn("n_orders",
         count(lit(1)).over(Window.partitionBy("cust")))
       .where(col("n_orders") >= 2)
-      .join(tbl(s, dir, "lineitem")
+      .join(Tables.read(s, dir, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .distinct(), "ok")
       .localCheckpoint() // feeds train, test, and the co model
@@ -7086,7 +7083,7 @@ object Queries {
     // (see Layout.joinSizeEstimate)
     "q339_join_size_estimate" -> ((s, dir) =>
       Layout.joinSizeEstimate(events(s, dir), "user_id",
-        tbl(s, dir, "orders"), "o_custkey")),
+        Tables.read(s, dir, "orders"), "o_custkey")),
     "q296_tpch_q12" -> (tpchQ12 _),
     "q297_tpch_q14" -> (tpchQ14 _),
     "q298_tpch_q19" -> (tpchQ19 _),
@@ -7152,7 +7149,7 @@ object Queries {
   // production cost shape. try_divide's double zero-divisor path is
   // exception-free and stays corpus-wide.
   def tryArithmetic(s: SparkSession, dir: String): DataFrame =
-    tbl(s, dir, "orders")
+    Tables.read(s, dir, "orders")
       .select(col("o_orderstatus").as("status"),
         expr("try_divide(o_totalprice, o_orderkey % 3)").as("d"),
         expr("try_add(9223372036854775807, " +
@@ -7183,7 +7180,7 @@ object Queries {
   // (doc_id, k, v) rows per FIXTURES §3 (no top-level map columns in
   // dumped results; DuckDB map ordering differs).
   def mapFuncs(s: SparkSession, dir: String): DataFrame =
-    tbl(s, dir, "documents")
+    Tables.read(s, dir, "documents")
       .select(col("doc_id"),
         map_from_arrays(
           array(lit("n_chars"), lit("n_toks")),
@@ -7204,8 +7201,8 @@ object Queries {
   // correlated aggregate is an exact COUNT, so no float accumulation
   // crosses the engine boundary.
   def correlatedSubquery(s: SparkSession, dir: String): DataFrame = {
-    tbl(s, dir, "customer").createOrReplaceTempView("q89_customer")
-    tbl(s, dir, "orders").createOrReplaceTempView("q89_orders")
+    Tables.read(s, dir, "customer").createOrReplaceTempView("q89_customer")
+    Tables.read(s, dir, "orders").createOrReplaceTempView("q89_orders")
     s.sql("""
       SELECT c_custkey, c_nationkey,
         (SELECT count(*) FROM q89_orders o
@@ -7223,8 +7220,8 @@ object Queries {
   // check is an ordinary agg/anti-join (AQE-splittable); nothing
   // collects.
   def qualityReport(s: SparkSession, dir: String): DataFrame = {
-    val orders = tbl(s, dir, "orders")
-    val customer = tbl(s, dir, "customer")
+    val orders = Tables.read(s, dir, "orders")
+    val customer = Tables.read(s, dir, "customer")
     val dupKeys = orders.groupBy("o_orderkey").agg(count(lit(1)).as("cnt"))
       .where(col("cnt") > 1)
     val orphans = orders.join(customer,
@@ -7253,8 +7250,8 @@ object Queries {
   // join removes them). Pruning power and the no-false-negative set
   // property are additionally pinned in LayoutSpec.
   def bloomPrunedJoin(s: SparkSession, dir: String): DataFrame = {
-    val li = tbl(s, dir, "lineitem")
-    val dim = tbl(s, dir, "orders")
+    val li = Tables.read(s, dir, "lineitem")
+    val dim = Tables.read(s, dir, "orders")
       .where(col("o_orderpriority") === "1-URGENT" && col("o_orderstatus") === "F")
       .select("o_orderkey")
     val pruned = Layout.bloomPrune(li, "l_orderkey", dim, "o_orderkey")
@@ -7284,7 +7281,7 @@ object Queries {
   // histograms + an nlist-row full-outer join; the quantile sketch is
   // a mergeable partial aggregate — nothing collects.
   def qualityDrift(s: SparkSession, dir: String): DataFrame = {
-    val orders = tbl(s, dir, "orders")
+    val orders = Tables.read(s, dir, "orders")
     val prior = orders.where(col("o_orderdate") < lit("1998-01-01").cast("date"))
     val burst = orders
       .where(col("o_orderstatus") === "O" && col("o_orderkey") % 5 === 0)
@@ -7352,7 +7349,7 @@ object Queries {
   // IS the declared operator.
   def zorderLayoutAgg(s: SparkSession, dir: String): DataFrame = {
     val out = graft.Scratch.dir("lineitem_zorder")
-    Layout.writeZOrdered(tbl(s, dir, "lineitem"), out, 16,
+    Layout.writeZOrdered(Tables.read(s, dir, "lineitem"), out, 16,
       "l_orderkey", "l_partkey")
     s.read.parquet(out)
       .where(col("l_orderkey").between(3000, 3999) &&
@@ -7372,7 +7369,7 @@ object Queries {
   // k rows per (group, map partition) cross the wire, and NO WindowExec
   // appears (PlanSpec pins both properties).
   def topkPerKey(s: SparkSession, dir: String): DataFrame = {
-    tbl(s, dir, "orders")
+    Tables.read(s, dir, "orders")
       .groupBy("o_orderpriority")
       .agg(graft.functions.TopKAgg.topkRows(
         "named_struct('negprice', -o_totalprice, 'o_orderkey', o_orderkey)", 5)
@@ -7836,7 +7833,7 @@ object Queries {
   // aggregate. The array is built from scalar columns (deterministic),
   // every result folds to scalars (no top-level arrays in the dump).
   def arrayFuncs(s: SparkSession, dir: String): DataFrame =
-    tbl(s, dir, "orders")
+    Tables.read(s, dir, "orders")
       .select(col("o_orderkey"),
         sequence(lit(1L), pmod(col("o_orderkey"), lit(5L)) + lit(1L)).as("sq"),
         array(col("o_totalprice"), col("o_totalprice") * 2, lit(0.0)).as("pr"))
@@ -7856,7 +7853,7 @@ object Queries {
   // truncation, month arithmetic, day diffs, boundary lookups. All
   // calendar ops (no timezone arithmetic: o_orderdate is a civil date).
   def dateArith(s: SparkSession, dir: String): DataFrame =
-    tbl(s, dir, "orders")
+    Tables.read(s, dir, "orders")
       .select(col("o_orderkey"),
         date_trunc("month", col("o_orderdate")).cast("date").as("month_start"),
         add_months(col("o_orderdate").cast("date"), 3).as("plus3m"),
@@ -7875,7 +7872,7 @@ object Queries {
   def mapZipFuncs(s: SparkSession, dir: String): DataFrame = {
     val nChars = length(col("text")).cast("long")
     val nToks = size(split(col("text"), " ", -1)).cast("long")
-    tbl(s, dir, "documents")
+    Tables.read(s, dir, "documents")
       .select(col("doc_id"),
         map_from_arrays(array(lit("chars"), lit("toks")),
           array(nChars, nToks)).as("m1"),
@@ -7897,7 +7894,7 @@ object Queries {
   // oracle-checked bounds (the q30 pattern): a drifting sketch turns
   // the row red instead of hiding behind no_oracle.
   def hllMergeAgg(s: SparkSession, dir: String): DataFrame = {
-    val tok = tbl(s, dir, "documents")
+    val tok = Tables.read(s, dir, "documents")
       .select(col("lang"), explode(split(col("text"), " ", -1)).as("tok"))
       .where(col("tok") =!= "")
     val perLang = tok.groupBy("lang")
@@ -7931,10 +7928,10 @@ object Queries {
         .select(lit(name).as("fk_edge"), col("child_rows"),
           col("parent_rows"), col("orphans"))
     }
-    val li = tbl(s, dir, "lineitem"); val o = tbl(s, dir, "orders")
-    val c = tbl(s, dir, "customer"); val su = tbl(s, dir, "supplier")
-    val p = tbl(s, dir, "part"); val n = tbl(s, dir, "nation")
-    val r = tbl(s, dir, "region")
+    val li = Tables.read(s, dir, "lineitem"); val o = Tables.read(s, dir, "orders")
+    val c = Tables.read(s, dir, "customer"); val su = Tables.read(s, dir, "supplier")
+    val p = Tables.read(s, dir, "part"); val n = Tables.read(s, dir, "nation")
+    val r = Tables.read(s, dir, "region")
     edge("lineitem->orders", li, "l_orderkey", o, "o_orderkey")
       .unionAll(edge("lineitem->part", li, "l_partkey", p, "p_partkey"))
       .unionAll(edge("lineitem->supplier", li, "l_suppkey", su, "s_suppkey"))
@@ -7991,7 +7988,7 @@ object Queries {
   // derived from the corpus (gen1 = q82's update/delete/insert batch
   // applied), mirrored verbatim in the oracle.
   def tableDiff(s: SparkSession, dir: String): DataFrame = {
-    val docs = tbl(s, dir, "documents")
+    val docs = Tables.read(s, dir, "documents")
     val gen0 = docs.where(col("doc_id") % 2 === 0)
       .select(col("doc_id"), col("text"), col("lang"))
     val gen1 = gen0.where(col("doc_id") % 10 =!= 0) // deletes
@@ -8152,7 +8149,7 @@ object Queries {
   // deletes: % 10 = 0; inserts: the odd % 10 = 1 rows, which are absent
   // from the even-id base) and mirrored verbatim in the oracle.
   def mergeUpsert(s: SparkSession, dir: String): DataFrame = {
-    val docs = tbl(s, dir, "documents")
+    val docs = Tables.read(s, dir, "documents")
     val base = docs.where(col("doc_id") % 2 === 0)
       .select(col("doc_id"), col("text"), col("lang"))
     val changes = base.where(col("doc_id") % 10 === 2)

@@ -17,6 +17,12 @@ object Tables {
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, String]())
 
+  /** One input table, `$dir/$name.parquet`, with its timestamps
+    * normalized at the read boundary ([[Queries.normalizeTs]]). Every
+    * fixture read goes through here. */
+  def read(spark: SparkSession, dir: String, name: String): DataFrame =
+    Queries.normalizeTs(spark.read.parquet(s"$dir/$name.parquet"))
+
   /** Register every table under its bare name; events gets the µs-
     * truncated timestamp treatment. Idempotent and cached per
     * (session, dir) — only the first call per directory pays the
@@ -25,7 +31,7 @@ object Tables {
     if (dir == lastDir.get(spark)) return
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     names.foreach { n =>
-      val df = Queries.normalizeTs(spark.read.parquet(s"$dir/$n.parquet"))
+      val df = read(spark, dir, n)
       val fixed =
         if (n == "events" && df.schema("ts").dataType == org.apache.spark.sql.types.LongType)
           df.withColumn("ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts DIV 1000)"))

@@ -56,21 +56,6 @@ object Temporal {
           payload.map(p => col(s"__match.$p").as(s"m_$p")): _*)
   }
 
-  /** Banded range self-join: all row pairs sharing `key` whose `tsUs`
-    * values differ by at most `widthUs`, each pair emitted exactly once
-    * in (ts, id) order. Output columns: the key, `a_`/`b_` id columns,
-    * and the gap.
-    *
-    * A naive `a.ts BETWEEN b.ts - w AND b.ts + w` theta-join has no
-    * equi-key, so Spark plans a nested-loop join — quadratic per key.
-    * This buckets time into `widthUs`-wide cells and equi-joins on
-    * (key, cell): a qualifying pair (gap in [0, w]) spans at most one
-    * cell boundary, so probing cell and cell+1 from the earlier row
-    * finds every pair exactly once (the probed cells are distinct, and
-    * the later row lives in exactly one of them). Shuffle volume is
-    * 2·|rows|, candidates are cell-local, and hot cells are plain
-    * equi-join skew — AQE-splittable, never quadratic in the key's
-    * row count. */
   /** Interval-OVERLAP self-join: all pairs of rows sharing `keys` whose
     * [start, end] intervals intersect (inclusive ends), each pair
     * emitted exactly once with its overlap length. The interval
@@ -107,6 +92,21 @@ object Temporal {
           - greatest(col(s"a.$sCol"), col(s"b.$sCol"))).as("overlap_us")): _*)
   }
 
+  /** Banded range self-join: all row pairs sharing `key` whose `tsUs`
+    * values differ by at most `widthUs`, each pair emitted exactly once
+    * in (ts, id) order. Output columns: the key, `a_`/`b_` id columns,
+    * and the gap.
+    *
+    * A naive `a.ts BETWEEN b.ts - w AND b.ts + w` theta-join has no
+    * equi-key, so Spark plans a nested-loop join — quadratic per key.
+    * This buckets time into `widthUs`-wide cells and equi-joins on
+    * (key, cell): a qualifying pair (gap in [0, w]) spans at most one
+    * cell boundary, so probing cell and cell+1 from the earlier row
+    * finds every pair exactly once (the probed cells are distinct, and
+    * the later row lives in exactly one of them). Shuffle volume is
+    * 2·|rows|, candidates are cell-local, and hot cells are plain
+    * equi-join skew — AQE-splittable, never quadratic in the key's
+    * row count. */
   def bandJoin(df: DataFrame, key: String, tsUs: String, idCol: String,
                widthUs: Long): DataFrame = {
     val cell = (c: String) => expr(s"$c DIV ${widthUs}L")

@@ -90,19 +90,6 @@ object Sessions extends Serializable {
     * per-user state. */
   case class OpenSession(startUs: Long, endUs: Long, n: Long)
 
-  /** E13 with FULLY custom state: the gap sessionizer re-implemented on
-    * `flatMapGroupsWithState` + event-time timeout — the API a pipeline
-    * reaches for when `session_window` can't express its semantics
-    * (e.g. per-session early results, value-dependent gaps, capped
-    * session length). Semantics here intentionally match [[sessionAgg]]
-    * so the MemoryStream spec can assert equality against the
-    * oracle-checked batch plan.
-    *
-    * Mechanics: per user, open sessions merge arriving events by the
-    * ≥gap rule; a session is EMITTED (append mode) only once the
-    * watermark passes its end + gap — the point it can no longer grow —
-    * via `GroupState.setTimeoutTimestamp`. State per key is O(open
-    * sessions within the watermark horizon), evicted on emission. */
   /** The ≥gap merge shared by [[sessionizeWithState]] and
     * [[TwsSessionizer]]: fold event times into the open-session list,
     * coalescing any session/event pair closer than `gapUs`. */
@@ -117,6 +104,19 @@ object Sessions extends Serializable {
     }.reverse
   }
 
+  /** E13 with FULLY custom state: the gap sessionizer re-implemented on
+    * `flatMapGroupsWithState` + event-time timeout — the API a pipeline
+    * reaches for when `session_window` can't express its semantics
+    * (e.g. per-session early results, value-dependent gaps, capped
+    * session length). Semantics here intentionally match [[sessionAgg]]
+    * so the MemoryStream spec can assert equality against the
+    * oracle-checked batch plan.
+    *
+    * Mechanics: per user, open sessions merge arriving events by the
+    * ≥gap rule; a session is EMITTED (append mode) only once the
+    * watermark passes its end + gap — the point it can no longer grow —
+    * via `GroupState.setTimeoutTimestamp`. State per key is O(open
+    * sessions within the watermark horizon), evicted on emission. */
   def sessionizeWithState(events: DataFrame,
                           gapUs: Long = 1800L * 1000000L,
                           late: String = "1 hour")

@@ -241,6 +241,39 @@ class SimSpec extends SparkSpec {
     assert(got == expected)
   }
 
+  test("topK ranks an exact score tie to the lower vec_id, as a BIGINT rnk") {
+    // 2, 3 and 4 are one duplicated embedding: their sims to query 0 are equal
+    val emb = Seq(0L -> Seq(1f, 0f), 1L -> Seq(0f, 1f), 4L -> Seq(1f, 1f),
+      3L -> Seq(1f, 1f), 2L -> Seq(1f, 1f), 5L -> Seq(1f, 0f)).toDF("vec_id", "embedding")
+    val v = Sim.vectors(emb)
+    assert(v.columns.toSeq == Seq("vec_id", "v", "norm"))
+    val q = v.where(col("vec_id") === 0L)
+      .select(col("vec_id").as("qid"), col("v").as("qv"), col("norm").as("qn"))
+    val top = Sim.topK(v.crossJoin(q).where(col("vec_id") =!= col("qid"))
+      .select(col("qid"), col("vec_id"),
+        Sim.cosine(col("v"), col("qv"), col("norm"), col("qn")).as("sim")), 3)
+    assert(top.schema("rnk").dataType == org.apache.spark.sql.types.LongType)
+    val got = top.orderBy("rnk").collect().map(r => (r.getAs[Long]("rnk"), r.getAs[Long]("vec_id")))
+    assert(got.toSeq == Seq(1L -> 5L, 2L -> 2L, 3L -> 3L))
+    val est = Seq((0L, 9L, 0.5), (0L, 7L, 0.5), (0L, 8L, 0.9)).toDF("qid", "vec_id", "est")
+    val cut = Sim.topK(est, 2, "est").orderBy("rnk").collect().map(_.getAs[Long]("vec_id"))
+    assert(cut.toSeq == Seq(8L, 7L))
+  }
+
+  test("nearestCentroids breaks an exact csim tie to the lower cid") {
+    // (1, 1) is equidistant from centroids 3 and 5; centroid 1 is opposite
+    val rows = Sim.vectors(Seq(0L -> Seq(1f, 1f)).toDF("vec_id", "embedding"))
+    val cents = Seq((5L, Seq(0.0, 1.0), 1.0), (1L, Seq(-1.0, 0.0), 1.0),
+      (3L, Seq(1.0, 0.0), 1.0)).toDF("cid", "cv", "cn")
+    def nearest(n: Int): Seq[(Int, Long)] =
+      Sim.nearestCentroids(rows, "vec_id", "v", "norm", cents, n)
+        .orderBy("r").collect().map(r => (r.getAs[Int]("r"), r.getAs[Long]("cid"))).toSeq
+    assert(nearest(1) == Seq(1 -> 3L))
+    assert(nearest(2) == Seq(1 -> 3L, 2 -> 5L))
+    val kept = Sim.nearestCentroids(rows, "vec_id", "v", "norm", cents, 1).columns.toSet
+    assert(Set("vec_id", "v", "norm", "cid", "cv", "cn", "csim", "r").subsetOf(kept))
+  }
+
   test("mmrDiversify equals a plain-Scala greedy MMR on random vectors") {
     val rnd = new scala.util.Random(11)
     val vecs = (0L until 30L).map(i => i -> Seq.fill(8)(rnd.nextFloat() * 2 - 1))
