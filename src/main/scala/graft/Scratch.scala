@@ -39,16 +39,28 @@ object Scratch {
     * by a crash mid-write never equals a stamp, so a plain write is
     * enough. Reuse costs one fingerprint walk and one marker read. */
   def stamped(name: String, dir: String, table: String,
-              present: Boolean = true)(build: => Unit): Unit = {
+              present: Boolean = true)(build: => Unit): Unit =
+    stampedValue(name, dir, table, present) { build; "" }
+
+  /** [[stamped]] for a build with a small string result (a stream
+    * source's event-time bounds): the marker keeps the result AHEAD of
+    * the stamp, so a marker torn mid-write still never ends with a
+    * stamp, and a reuse returns the kept result without running
+    * `build`. */
+  def stampedValue(name: String, dir: String, table: String,
+                   present: Boolean = true)(build: => String): String = {
     val marker = Paths.get(s"$root/${name}_marker")
-    val stamp = dir + "\n" + fingerprint(s"$dir/$table.parquet")
-    val fresh = present && Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8") == stamp
-    if (!fresh) {
+    val stamp = "\n" + dir + "\n" + fingerprint(s"$dir/$table.parquet")
+    val held =
+      if (present && Files.exists(marker)) new String(Files.readAllBytes(marker), "UTF-8")
+      else ""
+    if (held.endsWith(stamp)) held.dropRight(stamp.length)
+    else {
       Files.deleteIfExists(marker)
-      build
+      val value = build
       Files.createDirectories(marker.getParent)
-      Files.write(marker, stamp.getBytes("UTF-8"))
+      Files.write(marker, (value + stamp).getBytes("UTF-8"))
+      value
     }
   }
 

@@ -39,12 +39,14 @@ object Sim {
     emb.select((col("vec_id") +: extra :+ asDouble(col("embedding")).as("v")): _*)
       .withColumn("norm", norm(col("v")))
 
-  /** The exact-kNN rank rule: per `qid`, rank rows by (`score` desc,
-    * vec_id asc) — a score tie goes to the lower vector id, on both
-    * engines — as a BIGINT `rnk`, keeping rnk &lt;= k. */
-  private[llm] def topK(scored: DataFrame, k: Int, score: String = "sim"): DataFrame =
-    scored.withColumn("rnk", row_number().over(Window.partitionBy("qid")
-        .orderBy(col(score).desc, col("vec_id").asc)).cast("long"))
+  /** The exact-kNN rank rule: per `by` (default `qid`), rank rows by
+    * (`score` desc, `tie` asc; default tie `vec_id`) — a score tie goes
+    * to the lower id, on both engines — as a BIGINT `rnk`, keeping
+    * rnk &lt;= k. */
+  private[llm] def topK(scored: DataFrame, k: Int, score: String = "sim",
+                        by: String = "qid", tie: String = "vec_id"): DataFrame =
+    scored.withColumn("rnk", row_number().over(Window.partitionBy(by)
+        .orderBy(col(score).desc, col(tie).asc)).cast("long"))
       .where(col("rnk") <= k)
 
   /** The IVF nearest-centroid rule: every row against the broadcast
@@ -824,25 +826,21 @@ object Sim {
         col("norm").as("wn")), Seq("w"))
       .select(col("u"), col("w"),
         cosine(col("uv"), col("wv"), col("un"), col("wn")).as("sim"))
-    val wTop = Window.partitionBy("u").orderBy(col("sim").desc, col("w").asc)
-    val g0 = score(seedCand).withColumn("rnk", row_number().over(wTop))
-      .where(col("rnk") <= k).select("u", "w", "sim")
+    def top(g: DataFrame, n: Int): DataFrame = topK(g, n, by = "u", tie = "w")
+    val g0 = top(score(seedCand), k).select("u", "w", "sim")
       .localCheckpoint() // reused: round 1, merge, audit
     def round(g: DataFrame): DataFrame = {
       val und = g.select(col("u"), col("w"), col("sim"))
         .unionAll(g.select(col("w").as("u"), col("u").as("w"), col("sim")))
-      val wCap = Window.partitionBy("u").orderBy(col("sim").desc, col("w").asc)
-      val capped = und.withColumn("r", row_number().over(wCap))
-        .where(col("r") <= capNbr)
+      val capped = top(und, capNbr)
         .select(col("u").as("m"), col("w").as("nbr"))
       val cand = capped.select(col("m"), col("nbr").as("a"))
         .join(capped.select(col("m"), col("nbr").as("b")), Seq("m"))
         .where(col("a") =!= col("b"))
         .select(col("a").as("u"), col("b").as("w")).distinct()
-      g.unionAll(score(cand))
-        .groupBy("u", "w").agg(max(col("sim")).as("sim"))
-        .withColumn("rnk", row_number().over(wTop))
-        .where(col("rnk") <= k).select("u", "w", "sim")
+      top(g.unionAll(score(cand))
+        .groupBy("u", "w").agg(max(col("sim")).as("sim")), k)
+        .select("u", "w", "sim")
         .localCheckpoint() // delta count + next round + audit
     }
     // Zero-padded stage labels (ADVICE r13): "r10" < "r2" in string
@@ -896,13 +894,11 @@ object Sim {
     // audit plan stays scan-only (no checkpoint RDD in the probe path)
     val q = v.where(col("vec_id") < auditN)
       .select(col("vec_id").as("u"), col("v").as("qv"), col("norm").as("qn"))
-    val wEx = Window.partitionBy("u").orderBy(col("sim").desc, col("w").asc)
-    val exact = v.crossJoin(broadcast(q))
+    val exact = topK(v.crossJoin(broadcast(q))
       .where(col("vec_id") =!= col("u"))
       .select(col("u"), col("vec_id").as("w"),
-        cosine(col("v"), col("qv"), col("norm"), col("qn")).as("sim"))
-      .withColumn("rnk", row_number().over(wEx))
-      .where(col("rnk") <= k).select("u", "w")
+        cosine(col("v"), col("qv"), col("norm"), col("qn")).as("sim")),
+      k, by = "u", tie = "w").select("u", "w")
     val stageMeta = stageFrame.groupBy("stage")
       .agg(count(lit(1)).as("n_edges"), min(col("delta_edges")).as("delta_edges"))
     val hits = stageFrame.where(col("u") < auditN)
@@ -1693,13 +1689,11 @@ object Sim {
     val v = vectors(emb.where(col("vec_id") < nSample))
     val b = v.select(col("vec_id").as("oid"), col("v").as("ov"),
       col("norm").as("on"))
-    val wRank = Window.partitionBy("vec_id")
-      .orderBy(col("sim").desc, col("oid").asc)
-    v.crossJoin(broadcast(b))
+    topK(v.crossJoin(broadcast(b))
       .where(col("vec_id") =!= col("oid"))
       .select(col("vec_id"), col("oid"),
-        cosine(col("v"), col("ov"), col("norm"), col("on")).as("sim"))
-      .withColumn("rnk", row_number().over(wRank))
+        cosine(col("v"), col("ov"), col("norm"), col("on")).as("sim")),
+      k, by = "vec_id", tie = "oid")
       .where(col("rnk") === k)
       .select(col("vec_id"), col("oid").as("kth_neighbor"),
         femit(lit(1.0) - col("sim")).as("knn_dist"))
@@ -1738,11 +1732,8 @@ object Sim {
         (cosine(col("v"), col("av"), col("norm"), col("an")) / lit(tau))
           .as("s"))
       .localCheckpoint() // feeds the positive argmax AND the lse
-    val wPos = Window.partitionBy("aid")
-      .orderBy(col("s").desc, col("vec_id").asc)
-    val pos = sims.where(col("label") === col("alabel"))
-      .withColumn("pr", row_number().over(wPos))
-      .where(col("pr") === 1)
+    val pos = topK(sims.where(col("label") === col("alabel")), 1,
+        score = "s", by = "aid")
       .select(col("aid"), col("s").as("spos"))
     val mx = sims.groupBy("aid").agg(max(col("s")).as("m"))
     val lse = sims.join(broadcast(mx), "aid")
@@ -1894,14 +1885,11 @@ object Sim {
     val v = vectors(emb.where(col("vec_id") < nSample))
     val b = v.select(col("vec_id").as("oid"), col("v").as("ov"),
       col("norm").as("on"))
-    val wRank = Window.partitionBy("vec_id")
-      .orderBy(col("sim").desc, col("oid").asc)
-    val occ = v.crossJoin(broadcast(b))
+    val occ = topK(v.crossJoin(broadcast(b))
       .where(col("vec_id") =!= col("oid"))
       .select(col("vec_id"), col("oid"),
-        cosine(col("v"), col("ov"), col("norm"), col("on")).as("sim"))
-      .withColumn("rnk", row_number().over(wRank))
-      .where(col("rnk") <= k)
+        cosine(col("v"), col("ov"), col("norm"), col("on")).as("sim")),
+      k, by = "vec_id", tie = "oid")
       .groupBy(col("oid")).agg(count(lit(1)).as("nk"))
     val full = v.select(col("vec_id").as("oid"))
       .join(occ, Seq("oid"), "left")

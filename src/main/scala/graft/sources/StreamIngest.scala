@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** Incremental file ingestion — the Structured Streaming file source →
@@ -44,11 +44,20 @@ object StreamIngest {
     *    manager (state deltas, offsets, commits, source and sink logs,
     *    and their `.crc` sidecars). The replacement writes the same
     *    files, modes and checksums with JDK calls. The key names only
-    *    the `file` scheme; every other scheme keeps its stock class. */
+    *    the `file` scheme; every other scheme keeps its stock class.
+    *  - `spark.sql.artifact.isolation.enabled` = false. A streaming
+    *    query runs in a cloned session with a new session UUID; with
+    *    isolation on, the executor builds one classloader per UUID,
+    *    and the codegen cache keys on (classloader, source), so every
+    *    drain recompiled its task-side generated classes (about 9 for
+    *    q102) and ran them cold. graft adds no session artifacts, and
+    *    the parent session's own artifact state is computed once and
+    *    keeps isolation on. */
   private def drain[T](spark: SparkSession, provider: Option[String] = None)(body: => T): T = {
     val settings = Seq(
       "spark.sql.shuffle.partitions" -> "8",
-      "fs.AbstractFileSystem.file.impl" -> classOf[LocalCheckpointFs].getName) ++
+      "fs.AbstractFileSystem.file.impl" -> classOf[LocalCheckpointFs].getName,
+      "spark.sql.artifact.isolation.enabled" -> "false") ++
       provider.map("spark.sql.streaming.stateStore.providerClass" -> _)
     val saved = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
     settings.foreach { case (k, v) => spark.conf.set(k, v) }
@@ -56,6 +65,25 @@ object StreamIngest {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  /** The parquet-sink drain, inside [[drain]]: build `frame`, start it
+    * with `Trigger.AvailableNow` into the checkpointed exactly-once
+    * parquet sink at `out` in append mode, await it, and read the sink
+    * back with `frame`'s schema — a known schema skips the
+    * schema-inference job a bare `read.parquet` runs on every call.
+    * Returns the sink and the finished query (for its progress). */
+  private def drainToParquet(spark: SparkSession, out: String, ckpt: String,
+                             provider: Option[String] = None)(
+      frame: => DataFrame): (DataFrame, StreamingQuery) = drain(spark, provider) {
+    val f = frame
+    val q = f.writeStream.format("parquet")
+      .option("checkpointLocation", ckpt)
+      .outputMode("append")
+      .trigger(Trigger.AvailableNow())
+      .start(out)
+    q.awaitTermination()
+    (spark.read.schema(f.schema).parquet(out), q)
   }
 
   private def rm(spark: SparkSession, p: String): Unit = {
@@ -98,24 +126,22 @@ object StreamIngest {
     * events straddle the two runs must be emitted once, complete. */
   def windowedAggParquetResume(spark: SparkSession, in: String,
                                schema: StructType, out: String, ckpt: String,
-                               filesPerTrigger: Int = 2): DataFrame = drain(spark) {
+                               filesPerTrigger: Int = 2): DataFrame =
+    drainToParquet(spark, out, ckpt)(
+      hourWindows(spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", filesPerTrigger.toString)
+        .parquet(in)))._1
+
+  /** The q87 plan: 1-hour tumbling windows on a 1-hour watermark,
+    * count + exact-decimal sum per window, keyed by its start second. */
+  private def hourWindows(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger.toString)
-      .parquet(in)
-      .withWatermark("ts", "1 hour")
+    events.withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(38,12)")).as("dec_sum"))
       .select(unix_timestamp(col("window.start")).as("win_start"),
         col("n"), col("dec_sum"))
-      .writeStream.format("parquet")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(out)
-    q.awaitTermination()
-    spark.read.parquet(out)
   }
 
   /** RocksDB state-store provider class name (shipped in the Spark 4
@@ -151,18 +177,12 @@ object StreamIngest {
     * read-back — q144's rule). */
   def sessionWindowParquet(spark: SparkSession, in: String,
                            schema: StructType, out: String,
-                           ckpt: String): DataFrame = drain(spark) {
+                           ckpt: String): DataFrame = {
     rm(spark, out); rm(spark, ckpt)
-    val sess = graft.streaming.Sessions.sessionAgg(
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2").parquet(in))
-    val q = sess.writeStream.format("parquet")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(out)
-    q.awaitTermination()
-    spark.read.parquet(out)
+    drainToParquet(spark, out, ckpt)(
+      graft.streaming.Sessions.sessionAgg(
+        spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "2").parquet(in)))._1
   }
 
   /** The Spark 4 `transformWithState` sessionizer at the gate
@@ -172,21 +192,14 @@ object StreamIngest {
     * state API is implemented against RocksDB's column families). */
   def twsSessionizeParquet(spark: SparkSession, in: String,
                            schema: StructType, out: String,
-                           ckpt: String): DataFrame =
-    drain(spark, Some(RocksDbProvider)) {
-      rm(spark, out); rm(spark, ckpt)
-      val sessions = graft.streaming.Sessions.sessionizeTws(
+                           ckpt: String): DataFrame = {
+    rm(spark, out); rm(spark, ckpt)
+    drainToParquet(spark, out, ckpt, Some(RocksDbProvider))(
+      graft.streaming.Sessions.sessionizeTws(
           spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "2").parquet(in))
-        .toDF("user_id", "sess_start_us", "sess_end_us", "n_events")
-      val q = sessions.writeStream.format("parquet")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start(out)
-      q.awaitTermination()
-      spark.read.parquet(out)
-    }
+        .toDF("user_id", "sess_start_us", "sess_end_us", "n_events"))._1
+  }
 
   /** The MapState profile accumulator at the gate
     * ([[graft.streaming.Sessions.TwsUserProfiles]]): same drain shape
@@ -214,19 +227,11 @@ object StreamIngest {
   def userProfilesParquetResume(spark: SparkSession, in: String,
                                 schema: StructType, out: String,
                                 ckpt: String, flushMs: Long): DataFrame =
-    drain(spark, Some(RocksDbProvider)) {
-      val profiles = graft.streaming.Sessions.userProfilesTws(
+    drainToParquet(spark, out, ckpt, Some(RocksDbProvider))(
+      graft.streaming.Sessions.userProfilesTws(
           spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "2").parquet(in), flushMs)
-        .toDF("event_type", "user_id", "n_events", "sum_vu")
-      val q = profiles.writeStream.format("parquet")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start(out)
-      q.awaitTermination()
-      spark.read.parquet(out)
-    }
+        .toDF("event_type", "user_id", "n_events", "sum_vu"))._1
 
   /** The q87 stateful drain instrumented for OBSERVABILITY: returns
     * the streaming engine's own late-data accounting alongside the
@@ -241,24 +246,11 @@ object StreamIngest {
     * windows that already closed). Returns (sink rows, dropped). */
   def windowedAggParquetWithLateMetrics(
       spark: SparkSession, in: String, schema: StructType, out: String,
-      ckpt: String): (DataFrame, Long) = drain(spark) {
-    import org.apache.spark.sql.functions._
+      ckpt: String): (DataFrame, Long) = {
     rm(spark, out); rm(spark, ckpt)
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "2")
-      .parquet(in)
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(38,12)")).as("dec_sum"))
-      .select(unix_timestamp(col("window.start")).as("win_start"),
-        col("n"), col("dec_sum"))
-      .writeStream.format("parquet")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(out)
-    q.awaitTermination()
+    val (sink, q) = drainToParquet(spark, out, ckpt)(
+      hourWindows(spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "2").parquet(in)))
     // Total source rows the engine READ, per its own progress
     // accounting. (numRowsDroppedByWatermark is NOT usable as the late
     // count here: the watermark predicate is pushed into the scan, so
@@ -266,8 +258,7 @@ object StreamIngest {
     // sees them and the per-operator counter undercounts — measured 1
     // of 21 at the gate. The balance identity input − emitted −
     // retained is exact regardless of where the filter runs.)
-    val inputRows = q.recentProgress.map(_.numInputRows).sum
-    (spark.read.parquet(out), inputRows)
+    (sink, q.recentProgress.map(_.numInputRows).sum)
   }
 
   /** The FULLY-custom-state path at the gate: drain a (user_id, ts)
@@ -284,19 +275,13 @@ object StreamIngest {
     * stay open and are discarded at drain end. */
   def sessionizeParquet(spark: SparkSession, in: String,
                         schema: StructType, out: String,
-                        ckpt: String): DataFrame = drain(spark) {
+                        ckpt: String): DataFrame = {
     rm(spark, out); rm(spark, ckpt)
-    val sessions = graft.streaming.Sessions.sessionizeWithState(
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "2").parquet(in))
-      .toDF("user_id", "sess_start_us", "sess_end_us", "n_events")
-    val q = sessions.writeStream.format("parquet")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(out)
-    q.awaitTermination()
-    spark.read.parquet(out)
+    drainToParquet(spark, out, ckpt)(
+      graft.streaming.Sessions.sessionizeWithState(
+          spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "2").parquet(in))
+        .toDF("user_id", "sess_start_us", "sess_end_us", "n_events"))._1
   }
 
   /** Streaming EXACT DEDUP at the gate (E14's unbounded form): drain a
@@ -312,19 +297,13 @@ object StreamIngest {
     * which is what the q102 layout (originals first, duplicate copies
     * in a LATER file) exercises. */
   def dedupParquet(spark: SparkSession, in: String, schema: StructType,
-                   out: String, ckpt: String): DataFrame = drain(spark) {
+                   out: String, ckpt: String): DataFrame = {
     rm(spark, out); rm(spark, ckpt)
-    val q = graft.streaming.Sessions.streamingDedup(
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(in), "text")
-      .select("doc_id", "lang")
-      .writeStream.format("parquet")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(out)
-    q.awaitTermination()
-    spark.read.parquet(out)
+    drainToParquet(spark, out, ckpt)(
+      graft.streaming.Sessions.streamingDedup(
+          spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1").parquet(in), "text")
+        .select("doc_id", "lang"))._1
   }
 
   /** STREAM-STREAM JOIN at the gate: view-to-click attribution joining
@@ -347,9 +326,27 @@ object StreamIngest {
     * ordered-layout contract exists to prevent). */
   def streamJoinParquet(spark: SparkSession, in: String,
                         schema: StructType, out: String, ckpt: String,
-                        filesPerTrigger: Int = 2): DataFrame = drain(spark) {
+                        filesPerTrigger: Int = 2): DataFrame = {
     import org.apache.spark.sql.functions._
     rm(spark, out); rm(spark, ckpt)
+    drainToParquet(spark, out, ckpt) {
+      val (views, clicks) = viewsAndClicks(spark, in, schema, filesPerTrigger)
+      clicks.join(views,
+          col("user_id") === col("v_user") &&
+            col("cts") >= col("vts") &&
+            col("cts") <= col("vts") + expr("INTERVAL 30 MINUTES"))
+        .select(col("user_id"), col("view_id"), col("click_id"),
+          (unix_timestamp(col("cts")) - unix_timestamp(col("vts")))
+            .as("lag_sec"))
+    }._1
+  }
+
+  /** The two watermarked branches of one event file-source stream the
+    * stream-stream joins read: views (v_user, view_id, vts) and clicks
+    * (user_id, click_id, cts), each on a 1-hour watermark. */
+  private def viewsAndClicks(spark: SparkSession, in: String, schema: StructType,
+                             filesPerTrigger: Int): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.functions._
     val src = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", filesPerTrigger.toString)
       .parquet(in)
@@ -361,20 +358,7 @@ object StreamIngest {
       .select(col("user_id"), col("event_id").as("click_id"),
         col("ts").as("cts"))
       .withWatermark("cts", "1 hour")
-    val q = clicks.join(views,
-        col("user_id") === col("v_user") &&
-          col("cts") >= col("vts") &&
-          col("cts") <= col("vts") + expr("INTERVAL 30 MINUTES"))
-      .select(col("user_id"), col("view_id"), col("click_id"),
-        (unix_timestamp(col("cts")) - unix_timestamp(col("vts")))
-          .as("lag_sec"))
-      .writeStream.format("parquet")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(out)
-    q.awaitTermination()
-    spark.read.parquet(out)
+    (views, clicks)
   }
 
   /** Watermarked stream-stream LEFT OUTER join — the state-EXPIRY
@@ -399,41 +383,26 @@ object StreamIngest {
     * window on both sides; keyed shuffles are per micro-batch. */
   def streamOuterJoinParquet(spark: SparkSession, in: String,
                              schema: StructType, out: String, ckpt: String,
-                             filesPerTrigger: Int = 2): DataFrame = drain(spark) {
+                             filesPerTrigger: Int = 2): DataFrame = {
     import org.apache.spark.sql.functions._
     rm(spark, out); rm(spark, ckpt)
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger.toString)
-      .parquet(in)
-    val views = src.where(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
-        col("ts").as("vts"))
-      .withWatermark("vts", "1 hour")
-    val clicks = src.where(col("event_type") === "click")
-      .select(col("user_id"), col("event_id").as("click_id"),
-        col("ts").as("cts"))
-      .withWatermark("cts", "1 hour")
     // No sentinel filter inside the streaming plan: a predicate on the
     // views-side column would be PUSHED below the views watermark node,
     // silently removing the sentinel before it can advance the
     // watermark — the whole flush mechanism dies (observed: the last
     // ~1.5 h of unmatched views stay in state forever). Sentinels are
     // filtered on the batch read-back below instead.
-    val q = views.join(clicks,
-        col("user_id") === col("v_user") &&
-          col("cts") >= col("vts") &&
-          col("cts") <= col("vts") + expr("INTERVAL 30 MINUTES"),
-        "leftOuter")
-      .select(col("v_user").as("user_id"), col("view_id"), col("click_id"),
-        (unix_timestamp(col("cts")) - unix_timestamp(col("vts")))
-          .as("lag_sec"))
-      .writeStream.format("parquet")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(out)
-    q.awaitTermination()
-    spark.read.parquet(out).where(col("user_id") >= 0)
+    drainToParquet(spark, out, ckpt) {
+      val (views, clicks) = viewsAndClicks(spark, in, schema, filesPerTrigger)
+      views.join(clicks,
+          col("user_id") === col("v_user") &&
+            col("cts") >= col("vts") &&
+            col("cts") <= col("vts") + expr("INTERVAL 30 MINUTES"),
+          "leftOuter")
+        .select(col("v_user").as("user_id"), col("view_id"), col("click_id"),
+          (unix_timestamp(col("cts")) - unix_timestamp(col("vts")))
+            .as("lag_sec"))
+    }._1.where(col("user_id") >= 0)
   }
 
   /** Streaming CDC UPSERT at the gate — the `foreachBatch` idiom (the
@@ -489,24 +458,28 @@ object StreamIngest {
       fs.delete(pointer, false)
       fs.rename(tmp, pointer)
     }
-    val q = spark.readStream.schema(schema)
+    // per-key (count, latest event) of a batch; a state version has
+    // its schema, so every state read skips schema inference
+    def reduce(events: DataFrame): DataFrame = events
+      .select(col("user_id"), unix_micros(col("ts")).as("us"),
+        col("event_id"), col("value"))
+      .groupBy("user_id")
+      .agg(count(lit(1)).as("n_events"),
+        max(struct(col("us"), col("event_id"), col("value"))).as("last"))
+    val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", filesPerTrigger.toString)
       .parquet(in)
-      .writeStream
+    val stateSchema = reduce(stream).schema
+    val q = stream.writeStream
       .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val cur = readPointer()
         if (cur.forall(_._1 < batchId)) { // idempotent-replay guard
-          val bAgg = batch
-            .select(col("user_id"), unix_micros(col("ts")).as("us"),
-              col("event_id"), col("value"))
-            .groupBy("user_id")
-            .agg(count(lit(1)).as("n_events"),
-              max(struct(col("us"), col("event_id"), col("value"))).as("last"))
+          val bAgg = reduce(batch)
           val merged = cur match {
             case None => bAgg
             case Some((_, path)) =>
-              val st = batch.sparkSession.read.parquet(path)
+              val st = batch.sparkSession.read.schema(stateSchema).parquet(path)
                 .select(col("user_id"), col("n_events").as("s_n"),
                   col("last").as("s_last"))
               st.join(bAgg.select(col("user_id"), col("n_events").as("b_n"),
@@ -530,7 +503,7 @@ object StreamIngest {
     q.awaitTermination()
     val fin = readPointer().getOrElse(
       throw new IllegalStateException("cdc drain produced no state version"))
-    spark.read.parquet(fin._2)
+    spark.read.schema(stateSchema).parquet(fin._2)
       .select(col("user_id"), col("n_events"),
         col("last.us").as("last_us"), col("last.value").as("last_value"))
   }
@@ -543,19 +516,13 @@ object StreamIngest {
     * without watermark). */
   def ingestParquet(spark: SparkSession, in: String, glob: String,
                     schema: StructType, out: String, ckpt: String,
-                    transform: DataFrame => DataFrame): DataFrame = drain(spark) {
+                    transform: DataFrame => DataFrame): DataFrame = {
     rm(spark, out); rm(spark, ckpt)
-    val q = transform(
+    drainToParquet(spark, out, ckpt)(
+      transform(
         spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1")
-          .option("pathGlobFilter", glob).parquet(in))
-      .writeStream.format("parquet")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(out)
-    q.awaitTermination()
-    spark.read.parquet(out)
+          .option("pathGlobFilter", glob).parquet(in)))._1
   }
 
   /** Continuously-refreshed MATERIALIZED VIEW: a complete-mode global
@@ -575,11 +542,11 @@ object StreamIngest {
                      agg: DataFrame => DataFrame,
                      filesPerTrigger: Int = 2): DataFrame = drain(spark) {
     rm(spark, out); rm(spark, ckpt)
-    val q = agg(
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", filesPerTrigger.toString)
-          .parquet(in))
-      .writeStream
+    val view = agg(
+      spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", filesPerTrigger.toString)
+        .parquet(in))
+    val q = view.writeStream
       .option("checkpointLocation", ckpt)
       .outputMode("complete")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
@@ -588,6 +555,6 @@ object StreamIngest {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(out)
+    spark.read.schema(view.schema).parquet(out)
   }
 }

@@ -1,17 +1,17 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.FileTime
 
 import scala.jdk.CollectionConverters._
-
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the marker-cache invalidation contract of [[Scratch.fingerprint]]:
   * a regenerated store with the SAME file sizes and SAME mtimes (the
   * `cp -p` / deterministic-rewriter case) must still change the stamp,
   * because the stamp samples content (head+tail bytes), not metadata
-  * alone. */
-class ScratchSpec extends AnyFunSuite {
+  * alone. Also pins the stamped stream sources: a drain row writes its
+  * source once per fixture generation and replays it after. */
+class ScratchSpec extends SparkSpec {
 
   private def withTempDir(f: Path => Unit): Unit = {
     val d = Files.createTempDirectory("scratch_spec")
@@ -79,5 +79,80 @@ class ScratchSpec extends AnyFunSuite {
       assert(Scratch.fingerprint(d.toString) != one,
         "adding an empty file must change the stamp")
     }
+  }
+
+  test("a repeated q102 replays its stamped source; new documents rewrite it") {
+    withTempDir { d =>
+      // a private fixture dir, so its documents can be re-stamped
+      Files.write(d.resolve("documents.parquet"),
+        Files.readAllBytes(Paths.get(sf0001, "documents.parquet")))
+      val q102 = SparkEntry.queries("q102_stream_dedup")
+      val src = Paths.get(Scratch.dir("stream_dedup_src"))
+      def files(): Map[String, FileTime] = Files.list(src).iterator().asScala
+        .map(f => f.getFileName.toString -> Files.getLastModifiedTime(f)).toMap
+      val first = q102(spark, d.toString).collect().toSeq
+      val written = files()
+      assert(written.keys.count(_.endsWith(".parquet")) == 2, "originals, then copies")
+      assert(q102(spark, d.toString).collect().toSeq == first)
+      assert(files() == written, "a second execution must replay the source, not rewrite it")
+      val doc = d.resolve("documents.parquet")
+      Files.setLastModifiedTime(doc,
+        FileTime.fromMillis(Files.getLastModifiedTime(doc).toMillis + 5000))
+      assert(q102(spark, d.toString).collect().toSeq == first)
+      assert(!files().keys.exists(f => f.endsWith(".parquet") && written.contains(f)),
+        "a re-fingerprinted documents table must rewrite the source")
+    }
+  }
+
+  test("stream sources are written only through stampedSource") {
+    val entry = Paths.get("src/main/scala/graft/SparkEntry.scala")
+    assert(Files.exists(entry), s"run from the repo root, not ${entry.toAbsolutePath}")
+    // code text: comment lines blanked, line structure kept
+    val lines = Files.readAllLines(entry).asScala.toVector.map { l =>
+      val t = l.trim
+      if (t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")) "" else l
+    }
+    val text = lines.mkString("\n")
+    /** Offset of the bracket closing the one opened at `at`. */
+    def close(at: Int): Int = {
+      var (i, depth, inStr) = (at, 0, false)
+      while (i < text.length) {
+        val c = text(i)
+        if (inStr) { if (c == '\\') i += 1 else if (c == '"') inStr = false }
+        else if (c == '"') inStr = true
+        else if (c == '(' || c == '{') depth += 1
+        else if (c == ')' || c == '}') { depth -= 1; if (depth == 0) return i }
+        i += 1
+      }
+      text.length
+    }
+    def next(from: Int): Int = text.indexWhere(c => c == '(' || c == '{', from)
+    // a stampedSource call's two argument lists, and the bodies of
+    // stampedSource and writeTimeSlices
+    val calls = """(?<!def )stampedSource\(""".r.findAllMatchIn(text).map { m =>
+      (m.start, close(next(close(next(m.start)) + 1)))
+    }.toList
+    val defs = """private def (stampedSource|writeTimeSlices)\b""".r.findAllMatchIn(text)
+      .map(m => (m.start, close(text.indexOf("= {", m.start) + 2))).toList
+    assert(calls.nonEmpty && defs.size == 2)
+    // The two-phase resume rows append their second phase after the
+    // first drain, so their source cannot be written once per fixture.
+    val resumeRows = Map(
+      "q101_stream_resume" -> "slices 3-5 arrive between the two drains",
+      "q282_stream_state_resume" -> "slices 3-5 and the sentinel arrive between the two drains")
+    val rows = resumeRows.keys.toList.map { k =>
+      val at = text.indexOf("\"" + k + "\" ->")
+      assert(at >= 0, s"allow-listed row $k is not declared")
+      (at, close(text.indexOf('{', at)))
+    }
+    val writes = """Scratch\.dir\("\w+_src"\)|\.parquet\(src\)|\bwriteTimeSlices\(""".r
+    val bad = writes.findAllMatchIn(text)
+      .filterNot(m => (calls ++ defs ++ rows).exists { case (a, b) => a <= m.start && m.start < b })
+      .map { m =>
+        val i = text.substring(0, m.start).count(_ == '\n')
+        s"$entry:${i + 1}: ${lines(i).trim}"
+      }.toList
+    assert(bad.isEmpty,
+      "lay a stream source out inside SparkEntry.stampedSource:\n" + bad.mkString("\n"))
   }
 }

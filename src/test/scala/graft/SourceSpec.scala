@@ -43,10 +43,11 @@ class SourceSpec extends AnyFunSuite {
     // a helper body runs from its def line to the next blank line
     val inHelper = starts.flatMap(s => s until src.indexWhere(_.trim.isEmpty, s)).toSet
     // topK's rule under any score name (a per-qid window ordered by
-    // (score desc, vec_id asc)), the sim/est spellings under any
-    // partitioning, and the nearest-centroid rule
+    // (score desc, vec_id asc)), its sim/est/s spellings under any
+    // partitioning and any of the id tiebreaks vec_id/oid/w, and the
+    // nearest-centroid rule
     val rule = ("""partitionBy\("qid"\)\s*\.orderBy\(col\("\w+"\)\.desc,\s*col\("vec_id"\)\.asc\)|""" +
-      """orderBy\(col\("(sim|est)"\)\.desc,\s*col\("vec_id"\)\.asc\)|""" +
+      """orderBy\(col\("(sim|est|s)"\)\.desc,\s*col\("(vec_id|oid|w)"\)\.asc\)|""" +
       """orderBy\(col\("csim"\)\.desc,\s*col\("cid"\)\.asc\)|def assignTo\b""").r
     val text = src.mkString("\n")
     val bad = rule.findAllMatchIn(text).map(m => text.substring(0, m.start).count(_ == '\n'))

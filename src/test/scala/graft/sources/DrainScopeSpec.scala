@@ -4,14 +4,17 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.functions.{lit, timestamp_seconds}
 
 /** Source guard for StreamIngest's one drain scope: every streaming
   * query in `src/main/scala` starts inside a `drain(spark…) { … }`
   * block of StreamIngest, and nothing else sets the settings that scope
   * owns. A drain started elsewhere would silently run with the session's
-  * shuffle-partition count and the process-spawning local filesystem. */
-class DrainScopeSpec extends AnyFunSuite {
+  * shuffle-partition count, the process-spawning local filesystem and a
+  * fresh executor classloader (so freshly compiled generated code) per
+  * run. */
+class DrainScopeSpec extends graft.SparkSpec {
 
   private val main = Paths.get("src/main/scala")
   private val ingestFile = "StreamIngest.scala"
@@ -70,7 +73,7 @@ class DrainScopeSpec extends AnyFunSuite {
   test("only StreamIngest.drain sets the drain settings") {
     val owned = Seq("spark.sql.shuffle.partitions", "SHUFFLE_PARTITIONS",
       "spark.sql.streaming.stateStore.providerClass", "STATE_STORE_PROVIDER_CLASS",
-      "fs.AbstractFileSystem.file.impl")
+      "fs.AbstractFileSystem.file.impl", "spark.sql.artifact.isolation.enabled")
     val offenders = sources.flatMap { case (p, lines) =>
       val text = lines.mkString("\n")
       val helper =
@@ -91,8 +94,36 @@ class DrainScopeSpec extends AnyFunSuite {
       }
     }
     assert(offenders.isEmpty,
-      "shuffle partitions, state-store provider and the file AbstractFileSystem " +
-        "are set only by StreamIngest.drain (or a session builder's .config):\n" +
-        offenders.mkString("\n"))
+      "shuffle partitions, state-store provider, the file AbstractFileSystem and " +
+        "artifact isolation are set only by StreamIngest.drain (or a session " +
+        "builder's .config):\n" + offenders.mkString("\n"))
+  }
+
+  test("a repeated drain reuses its generated code") {
+    import spark.implicits._
+    val d = Files.createTempDirectory("drain_scope")
+    try {
+      val in = d.resolve("in").toString
+      Seq(Seq((1L, "alpha", "en"), (2L, "beta", "de")), Seq((3L, "alpha", "fr")))
+        .zipWithIndex.foreach { case (rows, i) =>
+          rows.toDF("doc_id", "text", "lang")
+            .withColumn("ts", timestamp_seconds(lit(1700000000L + i)))
+            .coalesce(1).write.mode("append").parquet(in)
+        }
+      val schema = spark.read.parquet(in).schema
+      def run(): Set[(Long, String)] =
+        StreamIngest.dedupParquet(spark, in, schema, s"$d/out", s"$d/ckpt")
+          .as[(Long, String)].collect().toSet
+      val first = run()
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val second = run()
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      assert(first == Set((1L, "en"), (2L, "de")) && second == first)
+      assert(compiles == 0,
+        s"the second drain compiled $compiles generated classes: its stream clone " +
+          "must run on the executor classloader the first one used")
+    } finally {
+      Files.walk(d).sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+    }
   }
 }
